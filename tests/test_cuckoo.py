@@ -75,3 +75,24 @@ def test_insert_many_matches_sequential_insert():
         assert bat.tobytes() == seq.tobytes()
         if n_buckets == 1 << 2:
             assert d_seq > 0  # the tiny table actually overflowed
+
+
+def test_probe_cuckoo_rederives_a_foreign_partition_id(spark):
+    """link_candidates clustered for a bloom of P partitions carries
+    partition_id = pmod(url_hash, P). A cuckoo config with another
+    partition count must still probe every key in its own filter (no
+    false negatives), and the caller's column passes through."""
+    from texting_robots_spark.plans.superstep import link_candidates
+
+    links = spark.createDataFrame(
+        [(f"https://h{i % 7}.example/p/{i}", 0) for i in range(600)],
+        "url string, depth int",
+    )
+    cands = link_candidates(links, cluster_partitions=4)
+    cfg = CuckooConfig(n_partitions=3, n_buckets=1 << 10)
+    filters = build_cuckoo(cands, cfg).cache()
+    probed = probe_cuckoo(cands, filters, cfg)
+    assert probed.columns == cands.columns + ["maybe_seen"]
+    rows = probed.collect()
+    assert len(rows) == 600 and all(r["maybe_seen"] for r in rows)
+    assert all(r["partition_id"] == r["url_hash"] % 4 for r in rows)

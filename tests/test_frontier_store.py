@@ -87,3 +87,13 @@ def test_compaction_preserves_content_and_resets_chain(spark, tmp_path):
     }
     rows_b = {tuple(r) for r in b.read_frontier(spark).collect()}
     assert rows_a == rows_b == _expected(5)
+
+
+def test_delta_ddl_is_frontier_minus_salt():
+    from pyspark.sql.types import StructType
+
+    from texting_robots_spark.sources.frontier_store import DELTA_DDL, FRONTIER_DDL
+
+    frontier = StructType.fromDDL(FRONTIER_DDL)
+    delta = StructType.fromDDL(DELTA_DDL)
+    assert list(delta) == [f for f in frontier if f.name != "partition_salt"]

@@ -2,6 +2,8 @@
 Catalyst actually picks — broadcast joins where intended, filter/column
 pushdown into parquet scans, no Python row-path in native operators."""
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -196,3 +198,105 @@ def test_read_keys_is_column_pruned_union(spark, tmp_path):
     # and it is equivalent to the merged frontier's key set
     merged = {r["url_hash"] for r in store.read_frontier(spark).select("url_hash").collect()}
     assert {r["url_hash"] for r in keys.collect()} == merged
+
+
+# physical operators that run a Python evaluation over their rows
+_PYTHON_NODE = re.compile(
+    r"\b(?:ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|"
+    r"FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|AggregateInPandas|"
+    r"WindowInPandas)\b"
+)
+
+
+def _python_nodes(plan: str) -> set:
+    """Distinct Python nodes of a plan. An adaptive plan prints its final
+    and initial forms, so a node is one distinct line, not one match."""
+    return {
+        line.lstrip(" +-:*()0123456789")
+        for line in plan.splitlines()
+        if _PYTHON_NODE.search(line)
+    }
+
+
+def test_link_candidates_canonicalize_in_one_python_pass(spark):
+    """link_candidates canonicalizes every link row in ONE Python node.
+    A UDF column with an isNotNull filter plans two: Catalyst pushes the
+    filter below the projection and evaluates the UDF on both sides."""
+    from texting_robots_spark.plans.superstep import link_candidates
+
+    links = spark.createDataFrame(
+        [("https://A.example/x", 0), ("/relative", 1), (None, 2)],
+        "url string, depth int",
+    )
+    for cluster in (None, 4):
+        out = link_candidates(links, cluster_partitions=cluster)
+        assert len(_python_nodes(_plan(out))) == 1, _plan(out)
+        assert [r["url"] for r in out.collect()] == ["https://a.example/x"]
+
+
+def test_seed_frontier_one_python_pass_and_no_rdd_scan(spark):
+    """A seed list becomes a LocalTableScan (no PythonRDD deserialize
+    behind it) feeding exactly one canonicalize node."""
+    from texting_robots_spark.plans.superstep import CrawlConfig, seed_frontier
+
+    plan = _plan(seed_frontier(spark, ["https://a.example/", "nope"], CrawlConfig()))
+    assert len(_python_nodes(plan)) == 1, plan
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_schedule_recrawl_rows_one_python_pass(spark, tmp_path, monkeypatch):
+    """The requeue rows schedule_recrawl merges into the frontier come
+    from a local frame through exactly one canonicalize node."""
+    from texting_robots_spark.operators.cuckoo import CuckooConfig
+    from texting_robots_spark.plans.recrawl import compact_frontier, schedule_recrawl
+    from texting_robots_spark.plans.superstep import CrawlConfig, init_crawl
+    from texting_robots_spark.sources.frontier_store import FrontierStore
+
+    ck = CuckooConfig(n_partitions=2, n_buckets=1 << 8)
+    store = FrontierStore(str(tmp_path / "s"), n_buckets=2)
+    urls = [f"https://h{i}.example/p" for i in range(6)]
+    init_crawl(spark, store, urls, CrawlConfig())
+    compact_frontier(spark, store, ck)
+    plans = []
+    merge = FrontierStore.merge_frontier
+
+    def capture(frontier, rows):
+        plans.append(_plan(rows))
+        return merge(frontier, rows)
+
+    monkeypatch.setattr(FrontierStore, "merge_frontier", staticmethod(capture))
+    assert schedule_recrawl(spark, store, urls[:3] + ["nope"], ck) == 3
+    (plan,) = plans
+    assert len(_python_nodes(plan)) == 1, plan
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_driver_built_frames_are_local_table_scans(spark, tmp_path):
+    """The crawl-delay table and the empty-store reads plan as a
+    LocalTableScan: scanning them starts no Python worker."""
+    from texting_robots_spark.operators.gate import RulesBroadcast, build_rules
+    from texting_robots_spark.plans.recrawl import stale_archived
+    from texting_robots_spark.sources.frontier_store import FrontierStore
+
+    raw = spark.createDataFrame(
+        [
+            ("h.example", bytearray(b"User-agent: *\nCrawl-delay: 2\n")),
+            ("g.example", bytearray(b"User-agent: *\nDisallow: /x\n")),
+        ],
+        "host string, body binary",
+    )
+    delays = RulesBroadcast(spark, build_rules(raw, "BobBot")).delay_df()
+    assert sorted(map(tuple, delays.collect())) == [
+        ("g.example", None),
+        ("h.example", 2.0),
+    ]
+    store = FrontierStore(str(tmp_path / "empty"), n_buckets=2)
+    for df in (
+        delays,
+        store.read_frontier(spark),
+        store.read_keys(spark),
+        stale_archived(spark, store, 0.0),
+    ):
+        plan = _plan(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        assert not _python_nodes(plan), plan

@@ -364,6 +364,8 @@ def test_seed_frontier_dataframe_equals_list(spark):
     from_df = {tuple(r) for r in seed_frontier(spark, seeds_df, cfg).collect()}
     assert from_df == from_list
     assert len(from_df) == 3  # dup collapsed, non-URL dropped
+    from_gen = {tuple(r) for r in seed_frontier(spark, iter(seeds), cfg).collect()}
+    assert from_gen == from_list  # any iterable, not only a list
 
 
 def test_refresh_every_in_crawl_loop(spark, universe, tmp_path):

@@ -1,12 +1,15 @@
-"""Vectorized pandas/Arrow UDFs — the only places Python touches row data.
+"""Vectorized pandas/Arrow kernels for the robots gate and URL handling.
 
-Three UDF families (SURVEY.md §2.B "UDF surface"):
+Four families (SURVEY.md §2.B "UDF surface"):
 
 - ``make_parse_robots_udf(agent)``: binary robots.txt body -> compiled
   per-host rules struct (runs once per host, amortized over the crawl).
 - ``make_allowed_udf(bc, ...)``: (host, url) -> allowed boolean, driven by
-  a broadcast rules table + per-executor compiled-matcher cache.
-- ``canonicalize_udf`` / ``prepare_path_udf``: URL normalization.
+  a broadcast rules table + per-executor compiled-matcher cache
+  (``cached_matcher`` is the sharded gate's twin of that cache).
+- ``canonicalize_urls(df)``: URL normalization as one Arrow-batch pass
+  that also drops the URLs that do not canonicalize.
+- ``robots_url_udf``: page URL -> its robots.txt URL.
 
 Everything else in the engine is native Spark SQL expressions; no
 row-at-a-time Python UDF exists anywhere in the hot path.
@@ -19,24 +22,21 @@ from collections import OrderedDict
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import pandas as pd
+import pyarrow as pa
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..robots_core import RobotsParseError, compile_robots, _STAR_RUN
-from ..urltools import (
-    prepare_url,
-    prepare_url_fast,
-    prepare_urls_batch,
-)
+from ..urltools import canonicalize_urls_batch, prepare_urls_batch
 
 __all__ = [
     "RULES_SCHEMA",
     "HostMatcher",
     "make_parse_robots_udf",
     "make_allowed_udf",
-    "canonicalize_udf",
-    "prepare_path_udf",
+    "canonicalize_urls",
     "robots_url_udf",
 ]
 
@@ -352,30 +352,33 @@ def make_allowed_udf(rules_bc, on_parse_error: str = "disallow"):
     return robots_allowed
 
 
-@F.pandas_udf(T.StringType())
-def canonicalize_udf(url: pd.Series) -> pd.Series:
-    """Canonical URL for the seen-set key (north_rule): lowercase host,
-    default-port drop, sorted query, fragment strip. None for
-    relative/non-http(s) links (they are dropped from the frontier).
-    One C-level sweep for the already-canonical majority, per-row
-    parser for the rest (urltools.canonicalize_urls_batch — measured
-    ~4x on plain link batches; this UDF runs on every extracted link
-    of every fetched page, the candidate path's biggest Python cost
-    after the gate)."""
-    from ..urltools import canonicalize_urls_batch
+def canonicalize_urls(df: DataFrame) -> DataFrame:
+    """Replace the ``url`` column with the canonical URL for the
+    seen-set key (north_rule): lowercase host, default-port drop,
+    sorted query, fragment strip. Rows whose URL does not canonicalize
+    (relative or non-http(s) links) are dropped in the same pass; every
+    other column passes through unchanged, so callers select only the
+    columns they need first (each one crosses the Arrow boundary).
 
-    return pd.Series(
-        canonicalize_urls_batch(url.to_numpy()), index=url.index, dtype=object
-    )
+    One ``mapInArrow`` kernel is the whole Python boundary. A scalar
+    UDF column followed by an ``isNotNull`` filter would plan two
+    Python evaluations over the same rows: Catalyst pushes the filter
+    below the projection and keeps the UDF on both sides. Inside the
+    kernel ``urltools.canonicalize_urls_batch`` does one C-level sweep
+    for the already-canonical majority and parses the rest per row."""
+    idx = df.columns.index("url")
 
+    def kernel(batches):
+        for batch in batches:
+            urls = pa.array(
+                canonicalize_urls_batch(
+                    batch.column(idx).to_numpy(zero_copy_only=False)
+                ),
+                pa.string(),
+            )
+            yield batch.set_column(idx, "url", urls).filter(urls.is_valid())
 
-@F.pandas_udf(T.StringType())
-def prepare_path_udf(url: pd.Series) -> pd.Series:
-    """path[?query][#fragment] slice used for robots matching
-    (reference lib.rs:504-518)."""
-    if url.isna().any():
-        return url.map(lambda u: prepare_url_fast(u) if u is not None else None)
-    return pd.Series(prepare_urls_batch(url.to_numpy()), index=url.index)
+    return df.mapInArrow(kernel, df.schema)
 
 
 @F.pandas_udf(T.StringType())

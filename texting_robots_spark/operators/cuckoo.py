@@ -33,6 +33,8 @@ from .seen import _splitmix64, with_partition_id
 __all__ = ["CuckooConfig", "build_cuckoo", "probe_cuckoo", "delete_cuckoo"]
 
 CUCKOO_DDL = "partition_id int, table binary, n_items long, n_dropped long"
+# probe_cuckoo's internal filter-partition key (never a caller column)
+_PROBE_KEY = "__trs_cuckoo_pid"
 
 _FP_MIX = np.uint64(0x5BD1E995)
 
@@ -229,7 +231,13 @@ def build_cuckoo(df: DataFrame, cfg: CuckooConfig, hash_col: str = "url_hash") -
 def probe_cuckoo(
     candidates: DataFrame, filters: DataFrame, cfg: CuckooConfig, hash_col: str = "url_hash"
 ) -> DataFrame:
-    """Annotate candidates with ``maybe_seen`` (no false negatives)."""
+    """Annotate candidates with ``maybe_seen`` (no false negatives).
+
+    The cogroup keys on its own ``pmod(hash, cfg.n_partitions)`` column.
+    A ``partition_id`` the candidates already carry is plain data here:
+    it may be taken modulo another partition count (``link_candidates``
+    clusters on the bloom's), and probing by it would look keys up in
+    the wrong filter, a false negative."""
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
     )
@@ -237,7 +245,7 @@ def probe_cuckoo(
     cols = [f.name for f in candidates.schema.fields]
 
     def _probe(key, cand: pd.DataFrame, filt: pd.DataFrame) -> pd.DataFrame:
-        cand = cand.drop(columns=["partition_id"])
+        cand = cand.drop(columns=[_PROBE_KEY])
         if len(cand) == 0:
             return cand.assign(maybe_seen=pd.Series([], dtype=bool))
         if len(filt) == 0:
@@ -245,9 +253,11 @@ def probe_cuckoo(
         table = _CuckooTable(cfg, bytes(filt["table"].iloc[0]))
         return cand.assign(maybe_seen=table.contains_many(_hashes(cand, hash_col)))
 
-    keyed = with_partition_id(candidates, cfg, hash_col)
+    keyed = candidates.withColumn(
+        _PROBE_KEY, F.pmod(F.col(hash_col), F.lit(cfg.n_partitions)).cast("int")
+    )
     return (
-        keyed.groupBy("partition_id")
+        keyed.groupBy(_PROBE_KEY)
         .cogroup(filters.groupBy("partition_id"))
         .applyInPandas(_probe, out_schema)
         .select(*cols, "maybe_seen")

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import make_allowed_udf, make_parse_robots_udf
+from ..sources.local import local_frame
 
 __all__ = [
     "build_rules",
@@ -86,16 +87,20 @@ class RulesBroadcast:
 
     def delay_df(self) -> DataFrame:
         """Small (host, crawl_delay) DataFrame for native broadcast
-        joins. Built once and reused: every superstep joins it, and the
-        event-log profile (tools/step_profile.py) showed the per-step
-        ``parallelize`` re-creation as avoidable driver+stage cost."""
+        joins, built once from the driver-side table and reused by
+        every superstep. It is a local frame (``sources.local``): its
+        rows sit in the plan as a LocalTableScan, so the per-step scan
+        starts no Python worker, where a ``createDataFrame(list)`` frame
+        re-ran a PythonRDD deserialize in every slice on every step."""
         if self._delay_df is None:
-            rows = [
-                (h, float(d) if d is not None else None)
-                for h, (_, d, _) in self.broadcast.value.items()
-            ]
-            self._delay_df = self._spark.createDataFrame(
-                rows, "host string, crawl_delay double"
+            table = self.broadcast.value
+            self._delay_df = local_frame(
+                self._spark,
+                "host string, crawl_delay double",
+                {
+                    "host": list(table),
+                    "crawl_delay": [d for _, d, _ in table.values()],
+                },
             )
         return self._delay_df
 

@@ -21,9 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import canonicalize_udf
+from ..functions.udfs import canonicalize_urls
 from ..operators.cuckoo import CuckooConfig, build_cuckoo, delete_cuckoo, probe_cuckoo
 from ..sources.frontier_store import FrontierStore
+from ..sources.local import local_frame
+from .superstep import _with_keys
 
 __all__ = [
     "compact_frontier",
@@ -120,7 +122,7 @@ def stale_archived(
     column-pruned archive scan, no driver data. Feed the result
     straight to ``schedule_recrawl`` (it accepts the DataFrame)."""
     if not os.path.exists(_archive_dir(store)):
-        return spark.createDataFrame([], "url string")
+        return local_frame(spark, "url string")
     return (
         spark.read.parquet(_archive_dir(store))
         .where(
@@ -134,7 +136,7 @@ def stale_archived(
 def schedule_recrawl(
     spark: SparkSession,
     store: FrontierStore,
-    urls,  # list[str] | single-column DataFrame of raw URLs
+    urls,  # iterable of str | single-column DataFrame of raw URLs
     cfg: CuckooConfig,
     priority: float = 2.0,
 ) -> int:
@@ -144,25 +146,21 @@ def schedule_recrawl(
     'queued' rows into the frontier (upsert on url_hash, so rows still
     present in the hot frontier are reset rather than duplicated).
 
-    ``urls`` is a list[str] (small operator-supplied sets) OR a
-    single-column DataFrame of raw URLs — the distributed form: a
-    TTL-driven recrawl of 10^8 stale URLs (``stale_archived``) must
+    ``urls`` is an iterable of URL strings (small operator-supplied
+    sets) OR a single-column DataFrame of raw URLs — the distributed
+    form: a TTL-driven recrawl of 10^8 stale URLs (``stale_archived``) must
     never round-trip through a driver-side Python list. Both paths
     produce identical rows (pinned in tests/test_recrawl.py).
     """
     if isinstance(urls, DataFrame):
-        raw = urls.select(F.col(urls.columns[0]).alias("raw"))
+        raw = urls.select(F.col(urls.columns[0]).alias("url"))
     else:
-        raw = spark.createDataFrame([(u,) for u in urls], "raw string")
+        raw = local_frame(spark, "url string", {"url": list(urls)})
     # three consumers below (known-inserted screen, MERGE, return count):
-    # cache so the canonicalize UDF + dedup aggregate run once (round 7)
+    # cache so the canonicalize kernel + dedup aggregate run once (round 7)
     rows = (
-        raw.withColumn("url", canonicalize_udf("raw"))
-        .where(F.col("url").isNotNull())
-        .withColumn("url_hash", F.xxhash64("url"))
-        .withColumn(
-            "host", F.regexp_extract("url", r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)", 1)
-        )
+        canonicalize_urls(raw)
+        .transform(_with_keys)
         .select(
             "url_hash",
             "url",

@@ -1,7 +1,7 @@
 """The frontier superstep — one crawl round as a single declarative plan.
 
-Shape per step (SURVEY.md §3.4), all DataFrame-native except the two
-pandas UDFs (robots gate, URL canonicalization):
+Shape per step (SURVEY.md §3.4), all DataFrame-native except two
+Python boundaries (the robots gate UDF and the canonicalize kernel):
 
     frontier (queued, host eligible by politeness clock)
       -> per-host top-k window (priority desc, url_hash)   [shuffle: host]
@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.udfs import canonicalize_udf
+from ..functions.udfs import canonicalize_urls
 from ..operators.gate import (
     RulesBroadcast,
     RulesTable,
@@ -60,6 +60,7 @@ from ..operators.gate import (
 from ..operators.links import extract_links
 from ..operators.seen import BloomConfig, build_bloom, probe_bloom
 from ..sources.frontier_store import FrontierStore
+from ..sources.local import local_frame
 
 __all__ = [
     "CrawlConfig",
@@ -228,28 +229,16 @@ def _with_keys(
 def seed_frontier(spark: SparkSession, seeds, cfg: CrawlConfig) -> DataFrame:
     """Canonicalized, deduped seed rows (state='queued', depth=0).
 
-    ``seeds`` is a list[str] (small seed lists) OR a single-column
-    DataFrame of raw URLs — the distributed form: a 10^8-row seed set
-    must never round-trip through a driver-side Python list."""
+    ``seeds`` is an iterable of URL strings (small seed lists; a
+    generator is fine) OR a single-column DataFrame of raw URLs — the
+    distributed form: a 10^8-row seed set must never round-trip through
+    a driver-side Python list."""
     if isinstance(seeds, DataFrame):
-        raw = seeds.select(F.col(seeds.columns[0]).alias("raw_url"))
+        raw = seeds.select(F.col(seeds.columns[0]).alias("url"))
     else:
-        # size the parallelize to the DATA, not the core count: a small
-        # operator-supplied seed list split across defaultParallelism
-        # slices pays one Arrow/worker round-trip per core for
-        # microseconds of canonicalize work each (round 7; ~4k URLs per
-        # task keeps even a 10^5-seed list parallel)
-        slices = max(
-            1,
-            min(len(seeds) // 4096 + 1, spark.sparkContext.defaultParallelism),
-        )
-        raw = spark.createDataFrame(
-            spark.sparkContext.parallelize([(s,) for s in seeds], slices),
-            "raw_url string",
-        )
+        raw = local_frame(spark, "url string", {"url": list(seeds)})
     return (
-        raw.withColumn("url", canonicalize_udf("raw_url"))
-        .where(F.col("url").isNotNull())
+        canonicalize_urls(raw)
         .transform(_with_keys)
         .groupBy("url_hash")
         .agg(F.min("url").alias("url"), F.min("host").alias("host"))
@@ -275,11 +264,9 @@ def sitemap_seeds(rules_df: DataFrame, base_hash: str = "xxhash64") -> DataFrame
 
     ``base_hash='md5'`` is the DuckDB-replayable twin used by the
     driver's ``sitemap_seed_frontier`` oracle."""
-    urls = rules_df.select(F.explode("sitemaps").alias("raw_url"))
+    urls = rules_df.select(F.explode("sitemaps").alias("url"))
     return (
-        urls.withColumn("url", canonicalize_udf("raw_url"))
-        .where(F.col("url").isNotNull())
-        .select("url")
+        canonicalize_urls(urls)
         .transform(lambda df: _with_keys(df, base_hash=base_hash))
         .groupBy("url_hash")
         .agg(F.min("url").alias("url"), F.min("host").alias("host"))
@@ -298,12 +285,12 @@ def sitemap_seeds(rules_df: DataFrame, base_hash: str = "xxhash64") -> DataFrame
 def init_crawl(
     spark: SparkSession,
     store: FrontierStore,
-    seeds,  # list[str] | DataFrame of raw URLs (see seed_frontier)
+    seeds,  # iterable of str | DataFrame of raw URLs (see seed_frontier)
     cfg: CrawlConfig,
 ) -> int:
     """Write snapshot v0: seed frontier + its bloom filter. The seed
     frontier is cached across its two consumers (frontier write + bloom
-    build) so the canonicalize UDF and seed dedup run once, not twice."""
+    build) so the canonicalize kernel and seed dedup run once, not twice."""
     _mark = _tracer()
     frontier = seed_frontier(spark, seeds, cfg).cache()
     try:
@@ -439,11 +426,8 @@ def link_candidates(
     The output then carries the extra ``partition_id`` column, which
     ``probe_bloom``/``with_partition_id`` reuse as-is. Same rows, same
     values, one candidate-set shuffle fewer per superstep."""
-    keyed = (
-        links.withColumn("url_c", canonicalize_udf("url"))
-        .where(F.col("url_c").isNotNull())
-        .select(F.col("url_c").alias("url"), "depth")
-        .transform(lambda df: _with_keys(df, base_hash=base_hash))
+    keyed = canonicalize_urls(links.select("url", "depth")).transform(
+        lambda df: _with_keys(df, base_hash=base_hash)
     )
     if cluster_partitions:
         keyed = keyed.withColumn(
@@ -497,9 +481,7 @@ def refresh_priorities(
     ``priority_refresh`` oracle); production stays xxhash64.
     """
     indeg = (
-        links.withColumn("url_c", canonicalize_udf("url"))
-        .where(F.col("url_c").isNotNull())
-        .select(F.col("url_c").alias("url"))
+        canonicalize_urls(links.select("url"))
         .transform(lambda df: _with_keys(df, base_hash=base_hash))
         .groupBy("url_hash")
         .agg(F.count(F.lit(1)).alias("indeg"))
@@ -951,7 +933,7 @@ def run_crawl(
     store: FrontierStore,
     docs: DataFrame,
     robots_raw: DataFrame,
-    seeds,  # list[str] | DataFrame of raw URLs (see seed_frontier)
+    seeds,  # iterable of str | DataFrame of raw URLs (see seed_frontier)
     cfg: CrawlConfig,
     n_steps: int,
     rules=None,

@@ -27,6 +27,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .local import local_frame
+
 __all__ = ["FrontierStore", "FRONTIER_DDL"]
 
 FRONTIER_DDL = (
@@ -34,7 +36,9 @@ FRONTIER_DDL = (
     "state string, not_before double, partition_salt int"
 )
 # delta commits carry the frontier columns minus the bucketing salt
-DELTA_DDL = FRONTIER_DDL.rsplit(", ", 1)[0]
+DELTA_DDL = ", ".join(
+    c for c in FRONTIER_DDL.split(", ") if not c.startswith("partition_salt ")
+)
 HOST_STATE_DDL = "host string, next_allowed double"
 # Store reads pass these schemas explicitly (spark.read.schema(...)):
 # the store owns its layout, so per-read parquet schema inference — a
@@ -267,13 +271,13 @@ class FrontierStore:
         manifest = self._read_manifest()
         v = manifest["current"] if version is None else version
         if v < 0:
-            return spark.createDataFrame([], FRONTIER_DDL)
+            return local_frame(spark, FRONTIER_DDL)
         base = manifest.get("base", v)
         deltas = [d for d in manifest.get("deltas", []) if d <= v]
         if version is not None and version == base:
             deltas = []
         if base < 0:
-            full = spark.createDataFrame([], FRONTIER_DDL)
+            full = local_frame(spark, FRONTIER_DDL)
         else:
             full = spark.read.schema(FRONTIER_DDL).parquet(
                 self._snap_dir(base, "frontier")
@@ -341,7 +345,7 @@ class FrontierStore:
         )
         paths += [self._snap_dir(d, "delta") for d in manifest.get("deltas", [])]
         if not paths:
-            return spark.createDataFrame([], "url_hash long")
+            return local_frame(spark, "url_hash long")
         # single multi-path scan, column-pruned to url_hash by the
         # explicit schema (parquet reads by name, so the base's extra
         # partition_salt column never has to line up with the deltas)

@@ -40,6 +40,7 @@ from ..operators.dedup import (
     lsh_band_index,
     minhash_signature,
 )
+from ..sources.local import local_frame
 from .loop import _is_complete, _mark_committed, _prior_epoch_paths
 
 __all__ = ["run_stream_dedup", "compact_dedup_index", "DOC_DDL"]
@@ -90,7 +91,7 @@ def run_stream_dedup(
         if prior:
             base_index = spark.read.parquet(*prior)
         else:
-            base_index = spark.createDataFrame([], index_ddl)
+            base_index = local_frame(spark, index_ddl)
         batch = batch_df.select("doc_id", "text")
         # the batch's band index has two consumers (the pairing step and
         # the epoch write below): compute the shingling+hashing — the
