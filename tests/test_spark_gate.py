@@ -143,3 +143,86 @@ def test_robots_url_udf(spark):
         None,
         None,
     ]
+
+
+_WORKER_CACHE_PROBE = r'''
+import json
+import os
+
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from texting_robots_spark.operators.gate import RulesBroadcast, build_rules, gate
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.python.worker.reuse", "true")
+    .getOrCreate()
+)
+raw = spark.createDataFrame(
+    [("h.example", bytearray(b"User-agent: *\nDisallow: /private\n"))],
+    "host string, body binary",
+)
+rules = RulesBroadcast(spark, build_rules(raw, "TRSBot"))
+cand = spark.range(0, 800, numPartitions=8).select(
+    F.lit("h.example").alias("host"),
+    F.concat(
+        F.lit("https://h.example/"),
+        F.when(F.col("id") % 2 == 0, F.lit("private/")).otherwise(F.lit("p/")),
+        F.col("id").cast("string"),
+    ).alias("url"),
+)
+n_allowed = gate(cand, rules, with_delay=False).where("allowed").count()
+
+
+def probe(batches):
+    import pandas as pd
+
+    from texting_robots_spark.functions import udfs
+
+    for _ in batches:
+        pass
+    hit = any(key[0] == "h.example" for key in udfs._matcher_lru)
+    yield pd.DataFrame({"pid": [os.getpid()], "hit": [hit]})
+
+
+rows = (
+    spark.range(0, 8, numPartitions=8)
+    .mapInPandas(probe, "pid long, hit boolean")
+    .collect()
+)
+print(json.dumps({"allowed": n_allowed, "hits": [r["hit"] for r in rows]}))
+spark.stop()
+'''
+
+
+def test_broadcast_gate_compiles_matcher_once_per_worker(tmp_path):
+    """The broadcast gate keeps each host's compiled matcher in the
+    per-worker ``cached_matcher`` LRU, so a worker compiles it once and
+    reuses it in every later task — a cache private to the UDF closure
+    is unpickled empty for every task. A fresh local[2] session (a known
+    pool of two reused Python workers) gates one host over 8 partitions;
+    a follow-up mapInPandas probe on the same pool must find the host's
+    key in the module-level LRU."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "probe.py"
+    script.write_text(_WORKER_CACHE_PROBE)
+    env = dict(os.environ, PYTHONPATH=root, PYSPARK_PYTHON=sys.executable)
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        capture_output=True,
+        text=True,
+        cwd=root,
+        env=env,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["allowed"] == 400  # the odd ids, under /p/
+    assert any(res["hits"]), res

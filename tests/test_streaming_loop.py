@@ -23,15 +23,29 @@ from texting_robots_spark.sources.synth import (
 from texting_robots_spark.streaming.loop import run_stream_crawl
 
 
-@pytest.mark.parametrize("gate_mode", ["broadcast", "sharded"])
-def test_stream_crawl_loop_matches_batch_crawl(spark, tmp_path, gate_mode):
+@pytest.mark.parametrize(
+    "gate_mode,docs_url_hash",
+    [
+        pytest.param("broadcast", False, id="broadcast"),
+        pytest.param("sharded", False, id="sharded"),
+        pytest.param("broadcast", True, id="broadcast-docs_url_hash"),
+    ],
+)
+def test_stream_crawl_loop_matches_batch_crawl(
+    spark, tmp_path, gate_mode, docs_url_hash
+):
     """Both gate modes (round-5 verdict: the streaming path used to be
     broadcast-only): the sharded RulesTable cogroup gate must reproduce
-    the batch crawl bit-for-bit exactly like the broadcast gate."""
+    the batch crawl bit-for-bit exactly like the broadcast gate. The
+    docs_url_hash case fetches through docs that carry a precomputed
+    (conformant) url_hash, which both drivers join on as is."""
     documents, robots, seeds = synth_universe(
         n_hosts=10, n_docs=200, n_seeds=16, seed=7
     )
-    docs_df = synth_documents_df(spark, documents).cache()
+    docs_df = synth_documents_df(spark, documents)
+    if docs_url_hash:
+        docs_df = docs_df.withColumn("url_hash", F.xxhash64("url"))
+    docs_df = docs_df.cache()
     robots_df = synth_robots_df(spark, robots)
     cfg = CrawlConfig(
         agent="TRSBot",
@@ -89,6 +103,38 @@ def test_stream_crawl_loop_matches_batch_crawl(spark, tmp_path, gate_mode):
         ).parquet(res["src"], res["discovered"]).collect()
     }
     assert discovered == batch_urls
+
+
+def test_stream_crawl_rejects_docs_url_hash_off_convention(spark, tmp_path):
+    """A precomputed docs.url_hash that is not xxhash64(url) would make
+    the fetch join match nothing. The streaming loop runs the batch
+    step's step-0 check and raises the same ValueError as frontier_step,
+    out of run_stream_crawl and without waiting out the stream
+    timeout."""
+    documents, robots, seeds = synth_universe(
+        n_hosts=4, n_docs=40, n_seeds=6, seed=7
+    )
+    docs_df = synth_documents_df(spark, documents).withColumn(
+        "url_hash", F.xxhash64("doc_id")
+    )
+    robots_df = synth_robots_df(spark, robots)
+    cfg = CrawlConfig(
+        per_host_k=3,
+        step_seconds=10.0,
+        bloom=BloomConfig(n_partitions=4, n_bits=1 << 16, n_hashes=4),
+    )
+    rules = RulesBroadcast(spark, build_rules(robots_df, cfg.agent))
+    match = r"docs\.url_hash does not follow the frontier's xxhash64\(url\)"
+
+    store = FrontierStore(str(tmp_path / "crawl"), n_buckets=4)
+    with pytest.raises(ValueError, match=match) as batch_err:
+        run_crawl(spark, store, docs_df, robots_df, seeds, cfg, n_steps=1, rules=rules)
+    with pytest.raises(ValueError, match=match) as stream_err:
+        run_stream_crawl(
+            spark, docs_df, rules, seeds, cfg, n_steps=2,
+            workdir=str(tmp_path / "loop"), timeout_sec=120.0,
+        )
+    assert str(stream_err.value) == str(batch_err.value)
 
 
 def test_stream_crawl_exact_backstop_survives_tiny_bloom(spark, tmp_path):
@@ -227,14 +273,15 @@ def test_crash_replay_mid_commit_reproduces_batch_crawl(spark, tmp_path, gate_mo
     """Crash-injection proof of full-batch idempotence (round-4 ADVICE +
     VERDICT r5 item: the epoch redesign must be DEMONSTRATED, not
     reasoned). Drives the real foreachBatch function directly via
-    make_batch_processor and kills it mid-commit twice:
+    make_batch_processor and kills it mid-commit at every fail_after
+    point:
 
-    - batch 0 crashes AFTER the seen + out writes but BEFORE feedback/
-      pending/host_state (the exact round-4 hazard window: 'between the
-      seen append and the pending swap');
+    - batch 0 crashes after its seen, then its out (the exact round-4
+      hazard window: 'between the seen append and the pending swap'),
+      then its feedback write;
     - batch 1 crashes AFTER its pending write but BEFORE host_state —
       so its replay must ignore its own half-committed epoch=1 pending
-      dir and re-read epoch=0.
+      dir and re-read epoch=0 — and then after its host_state write.
 
     Each crash is followed by a replay under the SAME batch_id (what
     foreachBatch does), and the final out/ + discovered sets must equal
@@ -322,13 +369,16 @@ def test_crash_replay_mid_commit_reproduces_batch_crawl(spark, tmp_path, gate_mo
             .withColumn("maybe_seen", F.lit(True))
         )
 
+    # every fail_after point, each attempt a same-id replay of the last
     b0 = load(0)
-    with pytest.raises(RuntimeError, match="injected crash after out"):
-        proc(fail_after="out")(b0, 0)
+    for phase in ("seen", "out", "feedback"):
+        with pytest.raises(RuntimeError, match=f"injected crash after {phase}"):
+            proc(fail_after=phase)(b0, 0)
     proc()(b0, 0)  # foreachBatch replay: same batch_id
     b1 = load(1)
-    with pytest.raises(RuntimeError, match="injected crash after pending"):
-        proc(fail_after="pending")(b1, 1)
+    for phase in ("pending", "host_state"):
+        with pytest.raises(RuntimeError, match=f"injected crash after {phase}"):
+            proc(fail_after=phase)(b1, 1)
     proc()(b1, 1)
     assert state["done"] == 2
 

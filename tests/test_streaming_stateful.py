@@ -1,131 +1,7 @@
-"""The stateful streaming scheduler (applyInPandasWithState) must
-reproduce a 2-step BATCH crawl's fetch set exactly: same (url_hash,
-fetch_time) pairs, with per-host politeness carried in group state
-across micro-batches instead of the host_state side table."""
+"""The streaming URL-seen set (``stateful.stream_seen_filter``): bloom
+bits carried in group state across micro-batches."""
 
-import glob
-import os
-import shutil
 import time
-
-from pyspark.sql import functions as F
-
-from texting_robots_spark.operators.gate import RulesBroadcast, build_rules, gate
-from texting_robots_spark.operators.seen import BloomConfig
-from texting_robots_spark.plans.superstep import CrawlConfig, run_crawl
-from texting_robots_spark.sources.frontier_store import FrontierStore
-from texting_robots_spark.sources.synth import (
-    synth_documents_df,
-    synth_robots_df,
-    synth_universe,
-)
-from texting_robots_spark.streaming.stateful import (
-    SCHED_INPUT_DDL,
-    stream_politeness_schedule,
-)
-
-
-def test_streaming_schedule_reproduces_batch_fetch_set(spark, tmp_path):
-    documents, robots, seeds = synth_universe(
-        n_hosts=10, n_docs=200, n_seeds=16, seed=7
-    )
-    docs_df = synth_documents_df(spark, documents).cache()
-    robots_df = synth_robots_df(spark, robots)
-    cfg = CrawlConfig(
-        agent="TRSBot",
-        per_host_k=3,
-        step_seconds=10.0,
-        default_delay=2.0,
-        bloom=BloomConfig(n_partitions=4, n_bits=1 << 16, n_hashes=4),
-    )
-    rules = RulesBroadcast(spark, build_rules(robots_df, cfg.agent))
-
-    # --- batch reference: 2 supersteps --------------------------------
-    store = FrontierStore(str(tmp_path / "crawl"), n_buckets=4)
-    run_crawl(spark, store, docs_df, robots_df, seeds, cfg, n_steps=2, rules=rules)
-    delays = rules.delay_df().withColumn(
-        "crawl_delay", F.coalesce("crawl_delay", F.lit(cfg.default_delay))
-    )
-    batch_fetch = {
-        (r["url_hash"], round(r["not_before"] - r["crawl_delay"], 6))
-        for r in (
-            store.read_frontier(spark)
-            .where(F.col("state") == "fetched")
-            .join(F.broadcast(delays), "host", "left")
-            .withColumn(
-                "crawl_delay",
-                F.coalesce("crawl_delay", F.lit(cfg.default_delay)),
-            )
-            .select("url_hash", "not_before", "crawl_delay")
-            .collect()
-        )
-    }
-    assert len(batch_fetch) > 5
-
-    # --- replay each step's eligible set as one micro-batch ------------
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    for s in (0, 1):
-        t0 = s * cfg.step_seconds
-        eligible = (
-            store.read_frontier(spark, version=s)
-            .where(
-                (F.col("state") == "queued")
-                & (F.col("not_before") <= F.lit(t0))
-                & (F.col("depth") <= F.lit(cfg.max_depth))
-            )
-        )
-        feed = (
-            gate(
-                eligible,
-                rules,
-                with_delay=True,
-                default_delay=cfg.default_delay,
-                on_parse_error=cfg.on_parse_error,
-            )
-            .select(
-                "host",
-                "url",
-                "url_hash",
-                F.col("priority").cast("double").alias("priority"),
-                F.col("depth").cast("int").alias("depth"),
-                "crawl_delay",
-                "allowed",
-                F.lit(s).cast("int").alias("step"),
-            )
-        )
-        stage = tmp_path / f"stage{s}"
-        feed.coalesce(1).write.parquet(str(stage))
-        part = glob.glob(str(stage / "part-*.parquet"))[0]
-        shutil.copy(part, str(src / f"step{s}.parquet"))
-        time.sleep(1.1)  # distinct mtimes -> one file per micro-batch
-
-    # --- stream it -----------------------------------------------------
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    cand = (
-        spark.readStream.schema(SCHED_INPUT_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    scheduled = stream_politeness_schedule(
-        cand, per_host_k=cfg.per_host_k, step_seconds=cfg.step_seconds
-    )
-    q = (
-        scheduled.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    got = {
-        (r["url_hash"], round(r["fetch_time"], 6))
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    assert got == batch_fetch
 
 
 def test_stream_seen_filter_dedups_across_batches(spark, tmp_path):
@@ -182,52 +58,3 @@ def test_stream_seen_filter_dedups_across_batches(spark, tmp_path):
     by_id = {r["url_hash"]: r for r in got}
     assert all(by_id[i]["step"] == 0 for i in range(60))
     assert all(by_id[i]["step"] == 1 for i in range(60, 90))
-
-
-def test_stream_schedule_emit_blocked(spark, tmp_path):
-    """Blocked-step rows are dropped by default (replay semantics) but
-    emitted with fetch_time NULL under emit_blocked=True, so a live
-    deployment can requeue them (ADVICE r2)."""
-    # delay 12 > step_seconds 10: step 0 schedules one row and advances
-    # next_allowed to 12, blocking the host for step 1 entirely
-    rows = [
-        ("h.example", "https://h.example/0", 0, 1.0, 0, 12.0, True, 0),
-        ("h.example", "https://h.example/1", 1, 0.5, 0, 12.0, True, 0),
-        ("h.example", "https://h.example/2", 2, 1.0, 0, 12.0, True, 1),
-        ("h.example", "https://h.example/3", 3, 0.5, 0, 12.0, True, 1),
-    ]
-    src = tmp_path / "blk_src"
-    src.mkdir()
-    df = spark.createDataFrame(rows, SCHED_INPUT_DDL)
-    stage = tmp_path / "blk_stage"
-    df.coalesce(1).write.parquet(str(stage))
-    part = glob.glob(str(stage / "part-*.parquet"))[0]
-    shutil.copy(part, str(src / "b0.parquet"))
-
-    def run(emit_blocked, tag):
-        out_dir = str(tmp_path / f"blk_out_{tag}")
-        q = (
-            stream_politeness_schedule(
-                spark.readStream.schema(SCHED_INPUT_DDL).parquet(str(src)),
-                per_host_k=3,
-                step_seconds=10.0,
-                emit_blocked=emit_blocked,
-            )
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", str(tmp_path / f"blk_ckpt_{tag}"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-        return spark.read.parquet(out_dir).collect()
-
-    got = run(True, "on")
-    sched = {r["url_hash"]: r["fetch_time"] for r in got if r["fetch_time"] is not None}
-    blocked = {r["url_hash"] for r in got if r["fetch_time"] is None}
-    assert sched == {0: 0.0}  # priority 1.0 wins; allowance floor(10/12)->1
-    assert blocked == {2, 3}
-
-    got_default = run(False, "off")
-    assert {r["url_hash"] for r in got_default} == {0}

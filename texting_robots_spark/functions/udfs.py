@@ -4,9 +4,11 @@ Four families (SURVEY.md §2.B "UDF surface"):
 
 - ``make_parse_robots_udf(agent)``: binary robots.txt body -> compiled
   per-host rules struct (runs once per host, amortized over the crawl).
-- ``make_allowed_udf(bc, ...)``: (host, url) -> allowed boolean, driven by
-  a broadcast rules table + per-executor compiled-matcher cache
-  (``cached_matcher`` is the sharded gate's twin of that cache).
+- ``make_allowed_udf(bc, ...)``: (host, url) -> allowed boolean over a
+  broadcast rules table. It and the sharded gate's cogroup
+  (``operators.gate.gate_sharded``) both run the one per-host kernel,
+  ``_host_allowed``, over the one per-worker matcher LRU,
+  ``cached_matcher``.
 - ``canonicalize_urls(df)``: URL normalization as one Arrow-batch pass
   that also drops the URLs that do not canonicalize.
 - ``robots_url_udf``: page URL -> its robots.txt URL.
@@ -21,6 +23,7 @@ import re
 from collections import OrderedDict
 from typing import Dict, List, Optional, Sequence, Tuple
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 
@@ -139,7 +142,7 @@ def make_parse_robots_udf(agent: Optional[str] = None):
 
 
 # ---------------------------------------------------------------------------
-# Host matcher: one compiled artifact per (host), cached per executor
+# Host matcher: one compiled artifact per (host), cached per python worker
 # ---------------------------------------------------------------------------
 
 _CHUNK = 512  # alternation groups per compiled regex chunk
@@ -252,13 +255,11 @@ class HostMatcher:
                 return self._allows[idxs[li - 1]]
         return True  # no rule matched -> allowed
 
-    def allowed_batch(self, paths: Sequence[str]) -> "object":
+    def allowed_batch(self, paths: Sequence[str]) -> np.ndarray:
         """Allow/deny for a batch of prepared paths; returns a numpy
         bool array aligned with ``paths``. The guard dispatch makes the
         per-row call one dict lookup + one anchored C regex match, which
         measured faster than any joined-string finditer variant."""
-        import numpy as np
-
         res = np.ones(len(paths), dtype=bool)
         if self.empty:
             return res
@@ -269,20 +270,20 @@ class HostMatcher:
         return res
 
 
-# Per-worker LRU of compiled matchers for the sharded (broadcast-free)
-# gate: gate_sharded's cogroup re-receives each host's rules every task
-# of every step, and recompiling costs ~50us/host — real CPU at 10^8
-# hosts x hundreds of steps. Keyed by (host, rules tuple) so a changed
-# rules version naturally misses; bounded so adversarial host spreads
-# cannot grow worker memory.
+# Per-worker LRU of compiled matchers for both gates: the broadcast
+# UDF's closure is unpickled afresh for every task and gate_sharded's
+# cogroup re-receives each host's rules every task of every step, so a
+# module-level cache is the only one that outlives a task; recompiling
+# costs ~50us/host — real CPU at 10^8 hosts x hundreds of steps. Keyed
+# by (host, rules tuple) so a changed rules version naturally misses;
+# bounded so adversarial host spreads cannot grow worker memory.
 _MATCHER_LRU_MAX = 4096
 _matcher_lru: "OrderedDict[tuple, HostMatcher]" = OrderedDict()
 
 
 def cached_matcher(host: str, rules: Tuple[Tuple[str, bool], ...]) -> "HostMatcher":
     """Fetch-or-compile the HostMatcher for one host's rules, cached for
-    the lifetime of the python worker (same idea as make_allowed_udf's
-    closure cache, shared across gate_sharded tasks)."""
+    the lifetime of the python worker and shared across its tasks."""
     key = (host, rules)
     m = _matcher_lru.get(key)
     if m is None:
@@ -295,58 +296,56 @@ def cached_matcher(host: str, rules: Tuple[Tuple[str, bool], ...]) -> "HostMatch
     return m
 
 
+def _host_allowed(
+    cache_key: str, entry: Optional[tuple], urls: np.ndarray, error_allows: bool
+) -> np.ndarray:
+    """Allow/deny for one host's URLs — the gate kernel both gates call
+    once per host group. ``entry`` is the host's rules-table entry
+    ``(rules tuple, delay, parse_error)``; ``None`` means the host has
+    no robots.txt, so everything is allowed. A parse error applies the
+    caller's policy to every row; under real rules a null URL is not
+    allowed. ``cache_key`` is the host (plus agent, in the sharded
+    multi-agent mode) under which ``cached_matcher`` keeps the compile."""
+    res = np.ones(len(urls), dtype=bool)
+    if entry is None:
+        return res
+    rules, _delay, parse_error = entry
+    if parse_error:
+        return np.full(len(urls), error_allows)
+    matcher = cached_matcher(cache_key, rules)
+    if matcher.empty:
+        return res
+    valid = ~pd.isna(urls)
+    res[~valid] = False
+    if valid.any():
+        # two C-level sweeps over the whole group: batched prepare,
+        # then the guard-dispatched matcher (see HostMatcher)
+        res[valid] = matcher.allowed_batch(prepare_urls_batch(urls[valid]))
+    return res
+
+
 def make_allowed_udf(rules_bc, on_parse_error: str = "disallow"):
     """Scalar pandas UDF ``(host, url) -> allowed`` over broadcast rules.
 
     ``rules_bc`` is a SparkContext broadcast of
     ``{host: (rules_tuple, delay, parse_error)}`` (see operators.gate).
-    Matchers compile lazily per executor and live in a closure cache for
-    the lifetime of the python worker — rules are broadcast once, compiled
-    once per executor, reused across every batch (SURVEY.md §4.3).
+    Rows are grouped by host so each host's matcher is fetched from
+    ``cached_matcher`` once per batch; it is compiled once per python
+    worker and reused across every later task and step.
 
     Hosts absent from the table have no robots.txt -> everything allowed.
     ``on_parse_error``: 'disallow' (safe default) or 'allow' — the
     reference leaves this policy to the caller (lib.rs error return).
     """
     error_allows = on_parse_error == "allow"
-    matcher_cache: Dict[str, HostMatcher] = {}
 
     @F.pandas_udf(T.BooleanType())
     def robots_allowed(host: pd.Series, url: pd.Series) -> pd.Series:
-        import numpy as np
-
         table = rules_bc.value
         out = np.ones(len(host), dtype=bool)
         urls = url.to_numpy()
-        # group by host (positional indices) so each matcher is
-        # fetched/compiled once per batch
         for h, pos in host.groupby(host, sort=False).indices.items():
-            entry = table.get(h)
-            if entry is None:
-                continue  # no robots.txt for this host -> allowed
-            rules, _delay, parse_error = entry
-            if parse_error:
-                out[pos] = error_allows
-                continue
-            matcher = matcher_cache.get(h)
-            if matcher is None:
-                matcher = HostMatcher(rules)
-                if len(matcher_cache) > 50_000:
-                    matcher_cache.clear()  # crude bound; rules re-compile
-                matcher_cache[h] = matcher
-            if matcher.empty:
-                continue
-            sub = urls[pos]
-            none_mask = pd.isna(sub)
-            if none_mask.any():
-                out[pos[none_mask]] = False  # null URL -> not allowed
-                pos = pos[~none_mask]
-                sub = sub[~none_mask]
-                if len(sub) == 0:
-                    continue
-            # two C-level sweeps over the whole group: batched prepare,
-            # then the fused multiline matcher (see HostMatcher)
-            out[pos] = matcher.allowed_batch(prepare_urls_batch(sub))
+            out[pos] = _host_allowed(h, table.get(h), urls[pos], error_allows)
         return pd.Series(out)
 
     return robots_allowed

@@ -21,7 +21,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import make_allowed_udf, make_parse_robots_udf
+from ..functions.udfs import _host_allowed, make_allowed_udf, make_parse_robots_udf
 from ..sources.local import local_frame
 
 __all__ = [
@@ -178,9 +178,10 @@ def gate_sharded(
     Shape: candidates shuffle on (host, salt); rules rows are replicated
     ``n_salts`` times (one robots.txt per host — tiny next to the
     candidate side) and cogrouped with their candidates, so each task
-    compiles its host's matcher once and runs the same batched
-    ``allowed_batch`` sweep as the broadcast path. The salt bounds the
-    hottest host's candidates to ~1/n_salts of its rows per task.
+    runs the broadcast path's per-host kernel (``udfs._host_allowed``,
+    over the same per-worker matcher LRU) once per cogroup. The salt
+    bounds the hottest host's candidates to ~1/n_salts of its rows per
+    task.
 
     Output and semantics are identical to ``gate`` (verified by the
     equivalence test on the conformance corpus): hosts absent from
@@ -203,9 +204,6 @@ def gate_sharded(
     """
     import pandas as pd
 
-    from ..functions.udfs import cached_matcher
-    from ..urltools import prepare_urls_batch
-
     error_allows = on_parse_error == "allow"
     if _SALT_COL in candidates.columns:
         raise ValueError(
@@ -221,49 +219,28 @@ def gate_sharded(
     cand_cols = [f.name for f in candidates.schema.fields]
 
     def _gate(key, cand: pd.DataFrame, rdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
         cand = cand.drop(columns=[_SALT_COL])
-        n = len(cand)
-        if n == 0:
+        if len(cand) == 0:
             out = cand.assign(allowed=pd.Series([], dtype=bool))
             return out.assign(crawl_delay=pd.Series([], dtype=float)) if with_delay else out
-        delay = None
-        if len(rdf) == 0:
-            res = np.ones(n, dtype=bool)  # no robots.txt -> allowed
-        else:
+        entry = delay = None
+        if len(rdf):
             row = rdf.iloc[0]
             delay = row["delay"]
-            if bool(row["parse_error"]):
-                res = np.full(n, error_allows)
-            else:
-                rrows = row["rules"]  # numpy array of dicts (Arrow struct)
-                rules = tuple(
-                    (x["pattern"], x["is_allow"])
-                    for x in (rrows if rrows is not None else ())
-                )
-                # per-worker LRU: compile once per (host[, agent], rules
-                # version), reuse across every task and superstep on
-                # this worker. The agent rides the cache key as a
-                # NUL-joined suffix (NUL cannot appear in a hostname).
-                cache_key = (
-                    key[0] if agent_col is None else f"{key[0]}\x00{key[1]}"
-                )
-                matcher = cached_matcher(cache_key, rules)
-                if matcher.empty:
-                    res = np.ones(n, dtype=bool)
-                else:
-                    urls = cand[url_col].to_numpy()
-                    none_mask = pd.isna(urls)
-                    res = np.ones(n, dtype=bool)
-                    if none_mask.any():
-                        res[none_mask] = False
-                        urls = urls[~none_mask]
-                    if len(urls):
-                        res[~none_mask] = matcher.allowed_batch(
-                            prepare_urls_batch(urls)
-                        )
-        out = cand.assign(allowed=res)
+            rrows = row["rules"]  # numpy array of dicts (Arrow struct)
+            rules = tuple(
+                (x["pattern"], x["is_allow"])
+                for x in (rrows if rrows is not None else ())
+            )
+            entry = (rules, delay, bool(row["parse_error"]))
+        # the agent rides the matcher cache key as a NUL-joined suffix
+        # (NUL cannot appear in a hostname)
+        cache_key = key[0] if agent_col is None else f"{key[0]}\x00{key[1]}"
+        out = cand.assign(
+            allowed=_host_allowed(
+                cache_key, entry, cand[url_col].to_numpy(), error_allows
+            )
+        )
         if with_delay:
             if delay is not None and delay == delay:  # not None, not NaN
                 d = float(delay)

@@ -3,13 +3,16 @@
 Shape per step (SURVEY.md §3.4), all DataFrame-native except two
 Python boundaries (the robots gate UDF and the canonicalize kernel):
 
-    frontier (queued, host eligible by politeness clock)
+    step_plan — shared by frontier_step and the streaming foreachBatch:
+      queued rows, host eligible by politeness clock (blocked-host anti-join)
       -> per-host top-k window (priority desc, url_hash)   [shuffle: host]
       -> politeness schedule  fetch_time = t0 + (rank-1)*delay
-      -> robots gate (broadcast rules, no shuffle)
+      -> robots gate (broadcast rules, no shuffle; or the sharded cogroup)
       -> "fetch" = join to documents on the 8-byte url_hash key
       -> posexplode spans -> link extraction -> canonicalize -> url_hash
       -> in-batch dedup (groupBy url_hash)                 [shuffle: hash]
+      -> host_state' = host_state merged with this step's politeness advance
+    frontier_step only (the store-backed seen set and commit):
       -> bloom probe (cogroup, partition-aligned)
       -> exact anti-join for maybe_seen remainder          [shuffle: hash]
       -> MERGE INTO frontier, bloom increment, metrics, lineage, checkpoint
@@ -43,9 +46,9 @@ import os
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import List, Optional
+from typing import List, NamedTuple, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -70,6 +73,9 @@ __all__ = [
     "schedule_batch",
     "join_strategy_scope",
     "window_group_limit_scope",
+    "step_scope",
+    "StepPlan",
+    "step_plan",
     "link_candidates",
     "refresh_priorities",
     "apply_indegree_refresh",
@@ -142,6 +148,20 @@ def window_group_limit_scope(spark: SparkSession, k: int):
         yield
     finally:
         spark.conf.set(_WGL_KEY, prev)
+
+
+@contextmanager
+def step_scope(spark: SparkSession, cfg: "CrawlConfig"):
+    """The session conf one crawl step runs under, for its plan build
+    AND its actions: ``window_group_limit_scope`` keeps the map-side
+    skew guard for a per_host_k above the session threshold, and
+    ``join_strategy_scope`` lets bounded build sides take shuffled-hash
+    joins. frontier_step and the streaming foreachBatch both enter
+    ``step_plan`` through it."""
+    with window_group_limit_scope(spark, cfg.per_host_k), join_strategy_scope(
+        spark
+    ):
+        yield
 
 
 # When set to a dict, _tracer accumulates per-phase wall seconds into it
@@ -574,68 +594,75 @@ def _verify_docs_hash_convention(docs: DataFrame) -> None:
             )
 
 
-def frontier_step(
-    spark: SparkSession,
-    store: FrontierStore,
+class StepPlan(NamedTuple):
+    """The lazy plan of one crawl step, as ``step_plan`` builds it."""
+
+    # every scheduled row plus its ``allowed`` flag; cached and observed
+    gated: DataFrame
+    # fires with the first action over ``gated``: n (scheduled), f
+    # (fetched) and, up to _OBS_LINEAGE_MAX bloom partitions, the
+    # per-partition lineage arrays larr/aarr
+    obs: Observation
+    # canonical, in-batch-deduped links of the fetched documents
+    candidates: DataFrame
+    # host_state with this step's politeness advance merged in
+    host_state: DataFrame
+
+
+# Per-partition lineage counters ride the gate Observation as TWO
+# array-valued columns up to this many bloom partitions (round 7;
+# previously 2 x n_partitions scalar columns = 64 F.expr py4j calls and
+# 64 analyzer-visible aggregates per step — the array form is one parse
+# per side and collapses the plan-build cost to O(1) columns). Past it
+# a dedicated lineage agg job (one groupBy-collect over the cached gate
+# output) is the better trade.
+_OBS_LINEAGE_MAX = 64
+
+
+def step_plan(
+    rows: DataFrame,
+    host_state: Optional[DataFrame],
     docs: DataFrame,
     rules,  # RulesBroadcast | RulesTable (sharded, broadcast-free)
     cfg: CrawlConfig,
-) -> dict:
-    """Run one superstep against the current snapshot; returns metrics.
+    step: int,
+    cluster_partitions: Optional[int] = None,
+) -> StepPlan:
+    """Build one crawl step over ``rows`` — the frontier rows, or
+    streaming candidates — at the virtual clock ``t0 = step *
+    step_seconds``: eligibility, schedule, gate, fetch, link candidates
+    and the politeness advance. The batch superstep and the streaming
+    loop both call it (inside ``step_scope``), so their crawl order is
+    one code path; each driver keeps only its own state: the store's
+    seen set and commit, or the stream's epoch tables.
 
-    The whole step (plan build AND the committing action) runs inside
-    window_group_limit_scope so per_host_k above the session's
-    windowGroupLimitThreshold keeps the map-side skew guard without
-    permanently mutating session conf, and inside join_strategy_scope
-    so bounded build sides take shuffled-hash joins instead of paying
-    per-step sorts (round 7)."""
-    with window_group_limit_scope(spark, cfg.per_host_k), join_strategy_scope(
-        spark
-    ):
-        return _frontier_step_impl(spark, store, docs, rules, cfg)
-
-
-def _frontier_step_impl(
-    spark: SparkSession,
-    store: FrontierStore,
-    docs: DataFrame,
-    rules,
-    cfg: CrawlConfig,
-) -> dict:
-    _mark = _tracer()
-    meta = store.meta()
-    step = int(meta.get("step", -1)) + 1
+    ``rows`` carries (url_hash, url, host, priority, depth, state,
+    not_before); ``host_state`` is (host, next_allowed) or None.
+    ``cluster_partitions`` pre-clusters the candidates for the bloom
+    probe (see link_candidates). The stage functions are called through
+    this module's globals, which is where perfbench's ``--trace 1``
+    wraps them to time plan building."""
     t0 = step * cfg.step_seconds
 
-    frontier = store.read_frontier(spark)
-    filters = store.read_filters(spark)
-    host_state = store.read_host_state(spark)  # (host, next_allowed) or None
-    _mark("snapshot reads")
-
     # --- 1. eligible queued rows (politeness clock per host) -------------
-    eligible = eligible_slice(frontier, host_state, t0, cfg)
+    eligible = eligible_slice(rows, host_state, t0, cfg)
 
     # --- 2. per-host top-k + politeness schedule --------------------------
     # No dedicated count job: the scheduled count rides the gate
-    # Observation below and is collected by the step-compute action —
+    # Observation below and is collected by the first action over it —
     # the schedule is computed exactly once, inside the main pipeline.
-    if isinstance(rules, RulesTable):
-        delays, bcast = rules.delay_frame(), False
-    else:
-        delays, bcast = rules.delay_df(), True
+    sharded = isinstance(rules, RulesTable)
+    delays = rules.delay_frame() if sharded else rules.delay_df()
     scheduled = schedule_batch(
-        eligible, delays, cfg, t0, broadcast_delays=bcast
+        eligible, delays, cfg, t0, broadcast_delays=not sharded
     )
 
     # --- 3. robots gate ----------------------------------------------------
     # fetched/disallowed counters — and, below the partition-count
     # threshold, the whole per-partition lineage — ride the plan as one
     # Observation: collected by the FIRST action that computes `gated`
-    # (the step-compute cache fill), no dedicated aggregate jobs per step
-    from pyspark.sql import Observation
-
-    obs_gate = Observation()
-    if isinstance(rules, RulesTable):
+    # (the cache fill), no dedicated aggregate jobs per step
+    if sharded:
         gated_raw = gate_sharded(
             scheduled,
             rules.rules_df,
@@ -646,21 +673,13 @@ def _frontier_step_impl(
         gated_raw = gate(
             scheduled, rules, with_delay=False, on_parse_error=cfg.on_parse_error
         )
+    obs = Observation()
     obs_cols = [
         F.sum(F.col("allowed").cast("long")).alias("f"),
         F.count(F.lit(1)).alias("n"),
     ]
-    # Per-partition lineage counters ride the plan as TWO array-valued
-    # Observation columns (round 7; previously 2 x n_partitions scalar
-    # columns = 64 F.expr py4j calls and 64 analyzer-visible aggregates
-    # per step — the array form is one parse per side and collapses the
-    # plan-build cost to O(1) columns). Cheap as Observation columns up
-    # to a few dozen partitions; past that a dedicated lineage agg job
-    # (one groupBy-collect over the cached gate output) is the better
-    # trade.
-    obs_lineage = cfg.bloom.n_partitions <= 64
-    if obs_lineage:
-        P = cfg.bloom.n_partitions
+    P = cfg.bloom.n_partitions
+    if P <= _OBS_LINEAGE_MAX:
         l_terms = ",".join(
             f"sum(CASE WHEN pmod(url_hash,{P})={i} THEN 1 ELSE 0 END)"
             for i in range(P)
@@ -672,14 +691,15 @@ def _frontier_step_impl(
         )
         obs_cols.append(F.expr(f"array({l_terms}) AS larr"))
         obs_cols.append(F.expr(f"array({a_terms}) AS aarr"))
-    gated = gated_raw.observe(obs_gate, *obs_cols).cache()
-    fetched_batch = gated.where(F.col("allowed"))
-    disallowed_batch = gated.where(~F.col("allowed"))
+    # observe BEFORE cache, and build everything below from the cached
+    # frame: a subtree over an un-observed copy would not match the
+    # cached plan and would run the gate UDF a second time
+    gated = gated_raw.observe(obs, *obs_cols).cache()
 
     # --- 4. fetch: join scheduled URLs to their documents ------------------
     # Keyed on the 8-byte url_hash, NOT the url string: this is the
-    # superstep's biggest join (the docs side carries the spans payload)
-    # and the crawl is measured byte-bound — shuffling/sorting/comparing
+    # step's biggest join (the docs side carries the spans payload) and
+    # the crawl is measured byte-bound — shuffling/sorting/comparing
     # 60-100 B URL strings as the join key is the largest avoidable byte
     # cost at 100 TB (VERDICT r4 #2). A content store bucketed by
     # url_hash makes the docs side shuffle-free every step
@@ -693,18 +713,15 @@ def _frontier_step_impl(
     if "url_hash" in docs.columns:
         if cfg.verify_docs_hash and step == 0:
             _verify_docs_hash_convention(docs)
-        docs_keyed = docs.select(
-            "url_hash", F.col("url").alias("_doc_url"), "doc_id", "spans"
-        )
+        doc_key = F.col("url_hash")
     else:
-        docs_keyed = docs.select(
-            F.xxhash64("url").alias("url_hash"),
-            F.col("url").alias("_doc_url"),
-            "doc_id",
-            "spans",
-        )
+        doc_key = F.xxhash64("url").alias("url_hash")
+    docs_keyed = docs.select(
+        doc_key, F.col("url").alias("_doc_url"), "doc_id", "spans"
+    )
     fetched_docs = (
-        fetched_batch.select("url_hash", "url", "depth")
+        gated.where(F.col("allowed"))
+        .select("url_hash", "url", "depth")
         .join(docs_keyed, "url_hash", "inner")
         .where(F.col("url") == F.col("_doc_url"))
         .drop("_doc_url")
@@ -715,13 +732,72 @@ def _frontier_step_impl(
     links = extract_links(
         fetched_docs.select("doc_id", "depth", "spans"), passthrough=("depth",)
     )
+    candidates = link_candidates(links, cluster_partitions=cluster_partitions)
+
+    # --- 6. politeness advance ---------------------------------------------
+    # from the rows actually scheduled, not the cap. It stays a DataFrame
+    # end to end — no collect() of per-host rows and no createDataFrame
+    # round-trip, so the update set scales to millions of active hosts
+    # per step (it shuffles on host and MERGEs into host_state like any
+    # other table). crawl_delay is constant per host (delay join +
+    # coalesce), so max() just picks it.
+    state_updates = gated.groupBy("host").agg(
+        (F.lit(t0) + F.count("*") * F.max("crawl_delay")).alias("next_allowed")
+    )
+    if host_state is not None:
+        state_updates = host_state.join(
+            state_updates.select("host"), "host", "left_anti"
+        ).unionByName(state_updates)
+    return StepPlan(gated, obs, candidates, state_updates)
+
+
+def frontier_step(
+    spark: SparkSession,
+    store: FrontierStore,
+    docs: DataFrame,
+    rules,  # RulesBroadcast | RulesTable (sharded, broadcast-free)
+    cfg: CrawlConfig,
+) -> dict:
+    """Run one superstep against the current snapshot; returns metrics.
+
+    The whole step (plan build AND the committing action) runs inside
+    ``step_scope``, so per_host_k above the session's
+    windowGroupLimitThreshold keeps the map-side skew guard without
+    permanently mutating session conf."""
+    with step_scope(spark, cfg):
+        return _frontier_step_impl(spark, store, docs, rules, cfg)
+
+
+def _frontier_step_impl(
+    spark: SparkSession,
+    store: FrontierStore,
+    docs: DataFrame,
+    rules,
+    cfg: CrawlConfig,
+) -> dict:
+    _mark = _tracer()
+    meta = store.meta()
+    step = int(meta.get("step", -1)) + 1
+
+    frontier = store.read_frontier(spark)
+    filters = store.read_filters(spark)
+    host_state = store.read_host_state(spark)  # (host, next_allowed) or None
+    _mark("snapshot reads")
+
+    # --- 1-6. step_plan: eligible -> schedule -> gate -> fetch -> links ---
     # pre-cluster the candidate dedup on the bloom partition key so the
     # dedup groupBy and the probe cogroup share ONE exchange (round 7;
     # see link_candidates) — only when the bloom path will consume it
-    candidates = link_candidates(
-        links,
+    plan = step_plan(
+        frontier,
+        host_state,
+        docs,
+        rules,
+        cfg,
+        step,
         cluster_partitions=cfg.bloom.n_partitions if filters is not None else None,
     )
+    gated, candidates = plan.gated, plan.candidates
     if cfg.refresh_every:
         # record this step's in-degree increment for the periodic
         # priority refresh (run_crawl). Cached so the write (the first
@@ -732,7 +808,7 @@ def _frontier_step_impl(
             os.path.join(store.root, "indeg", f"step={step}")
         )
 
-    # --- 6. seen-set dedup: bloom prefilter + exact anti-join --------------
+    # --- 7. seen-set dedup: bloom prefilter + exact anti-join --------------
     # the exact check probes the frontier's KEY SET (store.read_keys:
     # base + delta url_hash columns, no merge-on-read join chain — at
     # scale a single-column parquet scan, not k anti-joins of full rows).
@@ -755,8 +831,6 @@ def _frontier_step_impl(
         new_rows = definite_new.unionByName(confirmed_new)
     else:
         new_rows = candidates.join(seen_keys, "url_hash", "left_anti")
-    from pyspark.sql import Observation
-
     obs_new = Observation()
     new_rows = (
         new_rows.select(
@@ -772,8 +846,8 @@ def _frontier_step_impl(
         .cache()
     )
 
-    # --- 7. state updates + MERGE + bloom increment -------------------------
-    done = fetched_batch.select(
+    # --- 8. state updates + MERGE + bloom increment -------------------------
+    done = gated.where(F.col("allowed")).select(
         "url_hash",
         "url",
         "host",
@@ -782,7 +856,7 @@ def _frontier_step_impl(
         F.lit("fetched").alias("state"),
         (F.col("fetch_time") + F.col("crawl_delay")).alias("not_before"),
     )
-    denied = disallowed_batch.select(
+    denied = gated.where(~F.col("allowed")).select(
         "url_hash",
         "url",
         "host",
@@ -821,23 +895,7 @@ def _frontier_step_impl(
             return None
         return build_bloom(uncovered, cfg.bloom)
 
-    # --- 8. politeness state, metrics, lineage, checkpoint ------------------
-    # politeness advance from the rows actually scheduled, not the cap.
-    # state_updates stays a DataFrame end to end — no collect() of
-    # per-host rows and no createDataFrame round-trip, so the update set
-    # scales to millions of active hosts per step (it shuffles on host
-    # and MERGEs into host_state like any other table). crawl_delay is
-    # constant per host (broadcast delay join + coalesce), so max() just
-    # picks it.
-    state_updates = gated.groupBy("host").agg(
-        (F.lit(t0) + F.count("*") * F.max("crawl_delay")).alias("next_allowed")
-    )
-    if host_state is not None:
-        new_host_state = host_state.join(
-            state_updates.select("host"), "host", "left_anti"
-        ).unionByName(state_updates)
-    else:
-        new_host_state = state_updates
+    # --- 9. metrics, lineage, checkpoint ------------------------------------
     _mark("plan built")
     # Materialize the step's caches BEFORE committing: one count over
     # new_rows computes the whole schedule+gate+fetch+links+seen
@@ -850,7 +908,7 @@ def _frontier_step_impl(
     # aggregate, honest phase boundaries.
     new_rows.count()
     _mark("step compute (schedule+gate+fetch+links+seen)")
-    vals = obs_gate.get
+    vals = plan.obs.get
     n_scheduled = int(vals["n"] or 0)
     n_fetched = int(vals["f"] or 0)
     n_disallowed = n_scheduled - n_fetched
@@ -876,7 +934,7 @@ def _frontier_step_impl(
         updates,
         filters_increment,
         meta={"step": step},
-        host_state=new_host_state,
+        host_state=plan.host_state,
     )
     _mark("commit_step")
     if n_scheduled > 0:
@@ -886,7 +944,7 @@ def _frontier_step_impl(
         store.append_metrics_rows(
             [(step, n_scheduled, n_fetched, n_disallowed, n_new)]
         )
-        if obs_lineage:
+        if cfg.bloom.n_partitions <= _OBS_LINEAGE_MAX:
             larr, aarr = vals["larr"], vals["aarr"]
             store.append_lineage_rows(
                 [

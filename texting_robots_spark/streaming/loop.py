@@ -7,10 +7,11 @@ module closes the loop (NOTES_r2 caveat 5). Architecture:
         -> stream_seen_filter          [stateful: bloom bits in group state]
         -> foreachBatch:
              union with the PENDING side table (politeness leftovers)
-             -> schedule_batch          [the batch superstep's exact code]
-             -> robots gate             [broadcast rules, stationary]
-             -> fetched rows appended to out/
-             -> link extraction -> link_candidates  [superstep's exact code]
+             -> superstep.step_plan     [the batch superstep's step core:
+                                         eligibility, schedule, gate,
+                                         fetch, link candidates,
+                                         politeness advance]
+             -> fetched rows written to out/
              -> NEW candidate file written back into src/   <-- feedback
 
 One micro-batch == one crawl step (maxFilesPerTrigger=1; every step
@@ -20,11 +21,12 @@ loop — while per-host politeness state and the unscheduled-leftover
 ("pending") set are side parquet tables swapped atomically per batch,
 exactly the batch superstep's host_state mechanics.
 
-Semantics match run_crawl step for step: scheduling, gating, candidate
-derivation, and politeness arithmetic are the same functions
-(schedule_batch / link_candidates / make_allowed_udf), so a 2-step
-batch crawl and this loop produce the identical (url_hash, fetch_time)
-fetch set AND the identical discovered-URL set (pinned in pytest).
+Semantics match run_crawl step for step: both drivers build the step
+with the same ``step_plan`` call, so a 2-step batch crawl and this loop
+produce the identical (url_hash, fetch_time) fetch set AND the
+identical discovered-URL set (pinned in pytest). What stays here is
+what the stream keeps instead of a frontier store: the seen-epoch
+backstop, the pending/host_state epochs and the feedback file.
 
 Scale notes: the seen set is bounded group state (n_bits/8 bytes per
 hash partition); pending/host_state are O(frontier backlog) and
@@ -79,16 +81,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import make_allowed_udf
-from ..operators.links import extract_links
-from ..plans.superstep import (
-    CrawlConfig,
-    join_strategy_scope,
-    link_candidates,
-    schedule_batch,
-    seed_frontier,
-    window_group_limit_scope,
-)
+from ..plans.superstep import CrawlConfig, seed_frontier, step_plan, step_scope
 from .stateful import stream_seen_filter
 
 __all__ = ["run_stream_crawl", "make_batch_processor", "CAND_DDL"]
@@ -210,27 +203,6 @@ def make_batch_processor(
     hstate_dir = os.path.join(workdir, "host_state")
     seen_dir = os.path.join(workdir, "seen")
     discovered = os.path.join(workdir, "discovered")
-    # dual gate modes, mirroring the batch superstep (round-5 verdict
-    # "what's missing" #3: the streaming path used to be broadcast-only,
-    # inheriting the driver/broadcast rules ceiling the sharded gate was
-    # built to remove). RulesBroadcast: per-batch gate is the broadcast
-    # allowed-UDF, delays join as an explicit tiny broadcast.
-    # RulesTable: rules stay a DataFrame, the gate runs as the
-    # (host, salt) cogroup (gate_sharded) inside foreachBatch, and the
-    # delay join strategy is left to the planner — the 10^7-10^8-host
-    # streaming mode.
-    from ..operators.gate import RulesTable, gate_sharded
-
-    sharded = isinstance(rules, RulesTable)
-    if sharded:
-        allowed_udf = None
-        delays = rules.delay_frame()
-    else:
-        allowed_udf = make_allowed_udf(
-            rules.broadcast, on_parse_error=cfg.on_parse_error
-        )
-        delays = rules.delay_df()
-    docs_slim = docs.select(F.col("url").alias("url"), "doc_id", "spans")
     if state is None:
         state = {}
 
@@ -239,11 +211,7 @@ def make_batch_processor(
             raise RuntimeError(f"injected crash after {phase} write (test hook)")
 
     def _process_body(batch_df: DataFrame, batch_id: int) -> None:
-        # virtual clock from the DURABLE batch_id: an in-memory step
-        # counter resets on driver restart while the checkpoint resumes
-        # batch ids mid-sequence, silently rewinding politeness time
-        t0 = batch_id * cfg.step_seconds
-        # exact backstop (batch superstep §6): rows the bloom flags
+        # exact backstop (batch superstep §7): rows the bloom flags
         # maybe_seen are re-checked against the seen log — only the
         # maybe slice pays the join, and a false positive can't drop a
         # new URL. definite-new rows skip the exact check.
@@ -260,7 +228,7 @@ def make_batch_processor(
         else:
             rescued = maybe
         fresh = definite.unionByName(rescued).cache()
-        scheduled = gated = None
+        plan = None
         try:
             # record this batch's admissions BEFORE they can re-enter
             # the loop via feedback (epoch overwrite = replay-idempotent)
@@ -274,57 +242,38 @@ def make_batch_processor(
                 cands = spark.read.parquet(prev_pending).unionByName(fresh)
             else:
                 cands = fresh
-            # politeness eligibility (batch superstep §1): hosts whose
-            # clock exceeds this step's t0 sit out; rows stay pending
-            eligible = cands.where(F.col("depth") <= F.lit(cfg.max_depth))
             prev_hs = _latest_epoch_path(hstate_dir, batch_id)
-            if prev_hs:
-                host_state = spark.read.parquet(prev_hs)
-                # no broadcast hint — host_state is parquet-backed, so
-                # the planner picks broadcast vs shuffle from size
-                # stats (same rationale as superstep.eligible_slice)
-                blocked = host_state.where(
-                    F.col("next_allowed") > F.lit(t0)
-                ).select("host")
-                eligible = eligible.join(blocked, "host", "left_anti")
-            else:
-                host_state = None
-            scheduled = schedule_batch(
-                eligible, delays, cfg, t0, broadcast_delays=not sharded
-            ).cache()
-            if sharded:
-                gated = gate_sharded(
-                    scheduled,
-                    rules.rules_df,
-                    with_delay=False,
-                    on_parse_error=cfg.on_parse_error,
-                ).cache()
-            else:
-                gated = scheduled.withColumn(
-                    "allowed", allowed_udf(F.col("host"), F.col("url"))
-                ).cache()
-            fetched = gated.where(F.col("allowed"))
+            host_state = spark.read.parquet(prev_hs) if prev_hs else None
+            # the step core at the virtual clock of the DURABLE batch_id:
+            # an in-memory step counter resets on driver restart while
+            # the checkpoint resumes batch ids mid-sequence, silently
+            # rewinding politeness time. Candidates are queued rows that
+            # carry no per-row politeness hold; hosts whose clock
+            # exceeds t0 sit out inside step_plan and stay pending.
+            plan = step_plan(
+                cands.withColumns(
+                    {"state": F.lit("queued"), "not_before": F.lit(0.0)}
+                ),
+                host_state,
+                docs,
+                rules,
+                cfg,
+                batch_id,
+            )
             # fetched rows out (the crawl-order artifact): per-epoch
             # overwrite — a replayed batch can never append duplicates
-            fetched.select(
+            plan.gated.where(F.col("allowed")).select(
                 "url_hash", "url", "host", "depth", "fetch_time",
                 F.lit(batch_id).alias("step"),
             ).coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(out, f"epoch={batch_id}")
             )
             _fail("out")
-            # feedback: extract -> canonical candidates; the stateful
+            # feedback: the canonical link candidates; the stateful
             # bloom upstream drops everything already seen, so this
             # file may feed zero fresh rows — the NEXT batch still
             # fires (one file = one step) and schedules the backlog
-            fetched_docs = fetched.select("url", "depth").join(
-                docs_slim, "url", "inner"
-            )
-            links = extract_links(
-                fetched_docs.select("doc_id", "depth", "spans"),
-                passthrough=("depth",),
-            )
-            feedback = link_candidates(links).select(
+            feedback = plan.candidates.select(
                 "url_hash", "url", "host", "priority", "depth",
                 F.lit(batch_id + 1).alias("step"),
             )
@@ -340,38 +289,25 @@ def make_batch_processor(
                 os.path.join(dest, f"step{batch_id + 1}.parquet"),
             )
             _fail("feedback")
-            # pending' = candidates not scheduled this step (leftovers
-            # keep priority/depth and retry next step — batch §7)
+            # pending' = candidates not scheduled this step (gated holds
+            # every scheduled row; leftovers keep priority/depth and
+            # retry next step — batch §8)
             cands.join(
-                scheduled.select("url_hash"), "url_hash", "left_anti"
+                plan.gated.select("url_hash"), "url_hash", "left_anti"
             ).write.mode("overwrite").parquet(
                 os.path.join(pending_dir, f"epoch={batch_id}")
             )
             _mark_committed(os.path.join(pending_dir, f"epoch={batch_id}"))
             _fail("pending")
-            # politeness advance from the rows actually scheduled (§8)
-            state_updates = gated.groupBy("host").agg(
-                (F.lit(t0) + F.count("*") * F.max("crawl_delay")).alias(
-                    "next_allowed"
-                )
-            )
-            if host_state is not None:
-                new_hs = host_state.join(
-                    state_updates.select("host"), "host", "left_anti"
-                ).unionByName(state_updates)
-            else:
-                new_hs = state_updates
-            new_hs.write.mode("overwrite").parquet(
+            plan.host_state.write.mode("overwrite").parquet(
                 os.path.join(hstate_dir, f"epoch={batch_id}")
             )
             _mark_committed(os.path.join(hstate_dir, f"epoch={batch_id}"))
             _fail("host_state")
         finally:
             fresh.unpersist()
-            if scheduled is not None:
-                scheduled.unpersist()
-            if gated is not None:
-                gated.unpersist()
+            if plan is not None:
+                plan.gated.unpersist()
         # this batch is fully committed; epochs < batch_id-1 can no
         # longer be read by any future (re)attempt
         _prune_epochs(pending_dir, batch_id - 1)
@@ -379,16 +315,11 @@ def make_batch_processor(
         state["done"] = batch_id + 1  # completion sentinel (stop-safety)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # schedule_batch's map-side skew guard needs the raised
-        # windowGroupLimitThreshold in effect when the batch's ACTIONS
-        # run, and the override must not leak into other queries on the
-        # session — scope the whole batch body (round-5 ADVICE). The
-        # join-strategy scope mirrors the batch superstep (round 7):
-        # bounded build sides take shuffled-hash joins, no per-batch
-        # sorts.
-        with window_group_limit_scope(spark, cfg.per_host_k), join_strategy_scope(
-            spark
-        ):
+        # the batch superstep's conf scope, over the whole batch body:
+        # schedule_batch's skew guard needs it in effect when the
+        # batch's ACTIONS run, and it must not leak into other queries
+        # on the session (round-5 ADVICE).
+        with step_scope(spark, cfg):
             _process_body(batch_df, batch_id)
 
     return _process
@@ -409,11 +340,13 @@ def run_stream_crawl(
     {"out": fetched-rows parquet dir, "discovered": discovered-candidate
     parquet glob, "steps": steps executed}.
 
-    ``docs`` is the fetch stand-in corpus (url, doc_id, spans);
-    ``rules`` a RulesBroadcast (low-latency; rules fit one broadcast)
-    or a RulesTable (sharded cogroup gate — the 10^7-10^8-host mode,
-    same dual-mode contract as the batch run_crawl). The caller owns
-    ``workdir``.
+    ``docs`` is the fetch stand-in corpus (url, doc_id, spans, and
+    optionally a precomputed url_hash, checked on step 0 exactly as
+    frontier_step checks it); ``rules`` a RulesBroadcast (low-latency;
+    rules fit one broadcast) or a RulesTable (sharded cogroup gate — the
+    10^7-10^8-host mode, same dual-mode contract as the batch
+    run_crawl). The caller owns ``workdir``. An exception raised by a
+    batch stops the stream and is re-raised here.
 
     RESUMABLE: calling again with the same ``workdir`` (and the same
     n_steps — it fixes which step's feedback lands in discovered/)
@@ -461,6 +394,16 @@ def run_stream_crawl(
         spark, docs, rules, cfg, workdir, n_steps, state=state
     )
 
+    def _run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # keep a failing batch's exception, so the caller gets it as
+        # raised (e.g. the step-0 docs.url_hash check's ValueError)
+        # instead of waiting out the timeout
+        try:
+            _process(batch_df, batch_id)
+        except Exception as e:
+            state["error"] = e
+            raise
+
     stream = (
         spark.readStream.schema(CAND_DDL)
         .option("maxFilesPerTrigger", 1)
@@ -468,7 +411,7 @@ def run_stream_crawl(
     )
     deduped = stream_seen_filter(stream, cfg.bloom, emit_maybe=True)
     query = (
-        deduped.writeStream.foreachBatch(_process)
+        deduped.writeStream.foreachBatch(_run_batch)
         .option("checkpointLocation", ckpt)
         .trigger(processingTime="1 second")
         .start()
@@ -479,11 +422,21 @@ def run_stream_crawl(
     try:
         # wait on the completion sentinel (set at the END of each
         # foreachBatch), so stop() can never kill a half-written step
-        while state.get("done", 0) < target and time.time() < deadline:
+        while (
+            state.get("done", 0) < target
+            and "error" not in state
+            and time.time() < deadline
+        ):
             time.sleep(0.5)
     finally:
+        # read before stop(): a batch that stop() interrupts fails too,
+        # and the checkpoint replays it on resume
+        failed = "error" in state and state.get("done", 0) < target
         query.stop()
-        query.awaitTermination(60)
+        if not failed:
+            query.awaitTermination(60)
+    if failed:
+        raise state["error"]
     return {
         "out": out,
         "src": src,

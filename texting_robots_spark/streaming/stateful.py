@@ -1,130 +1,18 @@
-"""Stateful streaming frontier: per-host politeness via
-``applyInPandasWithState`` (SURVEY.md §2.B — the piece scoped out of the
-round-1 minimum slice).
+"""Stateful streaming operators: the crawl loop's URL-seen set in
+Structured Streaming GROUP STATE (``applyInPandasWithState``).
 
-The batch superstep holds politeness in the ``host_state`` side table and
-re-reads it every step. Here the same per-host clock lives in Structured
-Streaming GROUP STATE: candidate batches arrive as micro-batches (one
-per crawl step), each host group schedules its top-k under its own
-``next_allowed`` clock, emits (url, fetch_time) rows, and persists the
-advanced clock in state — no side table, no re-read, exactly-once under
-checkpointing.
-
-Scheduling semantics are the batch superstep's, verbatim
-(plans/superstep.py §2): rank by (priority desc, url_hash asc);
-allowance = min(per_host_k, max(1, floor(step_seconds / delay)));
-fetch_time = t0 + (rank-1)*delay over ALL scheduled rows (disallowed
-slots consume politeness budget); next_allowed = t0 + n*delay. The
-equivalence test replays a 2-step batch crawl's eligible sets through
-this operator and asserts the identical fetch set.
+Per-host politeness is not kept here: the streaming crawl loop
+(streaming/loop.py) runs the batch superstep's step core, whose
+politeness clock is the host_state table, checkpointed per epoch.
 """
 
 from __future__ import annotations
-
-import math
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 
-__all__ = [
-    "SCHED_INPUT_DDL",
-    "SCHED_OUTPUT_DDL",
-    "SEEN_INPUT_DDL",
-    "SEEN_OUTPUT_DDL",
-    "stream_politeness_schedule",
-    "stream_seen_filter",
-]
-
-# caller attaches crawl_delay (broadcast delay join, default coalesced)
-# and allowed (the stationary streaming gate) before grouping
-SCHED_INPUT_DDL = (
-    "host string, url string, url_hash long, priority double, depth int, "
-    "crawl_delay double, allowed boolean, step int"
-)
-SCHED_OUTPUT_DDL = (
-    "host string, url string, url_hash long, priority double, depth int, "
-    "fetch_time double, step int"
-)
-_STATE_DDL = "next_allowed double"
-
-
-def stream_politeness_schedule(
-    candidates: DataFrame,
-    per_host_k: int,
-    step_seconds: float,
-    emit_blocked: bool = False,
-) -> DataFrame:
-    """Schedule a streaming candidate feed under per-host politeness state.
-
-    ``candidates`` is a streaming DataFrame with SCHED_INPUT_DDL columns.
-    Returns the scheduled-and-allowed rows with their virtual fetch_time.
-    State per host is ONE double (the politeness clock) — bounded by the
-    active-host count, not the frontier size, which is what makes this
-    viable at 10^8 hosts (8 bytes/host of state).
-
-    SCHED drop semantics: when a host's ``next_allowed`` clock exceeds a
-    step's t0, that step's candidates for the host are NOT scheduled. In
-    the batch superstep those rows simply stay queued in the frontier and
-    retry next step; this operator has no frontier behind it, so by
-    default blocked-step rows are DROPPED from the output — correct for
-    the replay/equivalence use (eligibility is pre-filtered upstream),
-    lossy for a live deployment. Pass ``emit_blocked=True`` to emit
-    blocked rows too, marked with ``fetch_time = NULL`` (same schema), so
-    a real streaming pipeline can route them to a requeue sink with
-    ``WHERE fetch_time IS NULL``.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def schedule(key, pdfs, state):
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        next_allowed = state.get[0] if state.exists else float("-inf")
-        outs = []
-        out_cols = [
-            "host", "url", "url_hash", "priority", "depth", "fetch_time", "step",
-        ]
-        # a micro-batch normally carries one step; sorted-step iteration
-        # also keeps semantics right if the source coalesces several
-        for step in sorted(rows["step"].unique()):
-            t0 = float(step) * step_seconds
-            if next_allowed is not None and next_allowed > t0:
-                # host blocked this step (batch §1 eligibility); see
-                # SCHED drop semantics in the docstring
-                if emit_blocked:
-                    blocked = rows[rows["step"] == step]
-                    if len(blocked):
-                        outs.append(
-                            blocked.assign(fetch_time=float("nan"))[out_cols]
-                        )
-                continue
-            sub = rows[rows["step"] == step]
-            if len(sub) == 0:
-                continue
-            sub = sub.sort_values(
-                ["priority", "url_hash"], ascending=[False, True]
-            )
-            delay = float(sub["crawl_delay"].iloc[0])
-            allowance = min(
-                per_host_k,
-                max(1, math.floor(step_seconds / max(delay, 1e-9))),
-            )
-            take = sub.head(int(allowance)).reset_index(drop=True)
-            take = take.assign(fetch_time=t0 + take.index.to_numpy() * delay)
-            next_allowed = t0 + len(take) * delay
-            emitted = take[take["allowed"].astype(bool)]
-            if len(emitted):
-                outs.append(emitted[out_cols])
-        state.update((float(next_allowed),))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    return candidates.groupBy("host").applyInPandasWithState(
-        schedule,
-        outputStructType=SCHED_OUTPUT_DDL,
-        stateStructType=_STATE_DDL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+__all__ = ["SEEN_INPUT_DDL", "SEEN_OUTPUT_DDL", "stream_seen_filter"]
 
 
 # ---------------------------------------------------------------------------
