@@ -1323,7 +1323,7 @@ def _recrawl_requeue(spark, sf_dir):
     _nd = F.lit(None).cast("double")
     _nl = F.lit(None).cast("long")
     _ns = F.lit(None).cast("string")
-    archived = spark.read.parquet(os.path.join(store.root, "archive")).select(
+    archived = spark.read.parquet(store.archive_dir).select(
         F.lit("archived").alias("section"),
         "url",
         "host",

@@ -1,19 +1,24 @@
-"""The fast regex parser must be byte-for-byte identical to the
-transliterated byte-at-a-time parser — on the corpus and on random
-fuzz-ish inputs (keyword-dictionary-guided like the reference's fuzzer,
-fuzz/keywords.dict)."""
+"""The statement scanner ``compile_robots`` runs (``scan_statements``)
+must equal the byte-at-a-time reference parser with raw lines removed —
+on the corpus and on random fuzz-ish inputs (keyword-dictionary-guided
+like the reference's fuzzer, fuzz/keywords.dict), every line-terminator
+form included."""
 
+import os
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from texting_robots_spark.conformance import CORPUS
-from texting_robots_spark.robots_core import parse_robots_txt, parse_robots_txt_slow
+from texting_robots_spark.robots_core import (
+    RAW,
+    compile_robots,
+    parse_robots_txt,
+    scan_statements,
+)
 
-
-def test_identical_on_corpus():
-    for case in CORPUS:
-        data = case.robots.replace(b"\x00", b"\n")
-        assert parse_robots_txt(data) == parse_robots_txt_slow(data), case.case_id
+FIXTURES = os.path.join(os.path.dirname(__file__), "..", "fixtures", "robots")
 
 
 _KEYWORDS = [
@@ -39,6 +44,8 @@ _KEYWORDS = [
     b"\n",
     b"\r",
     b"\r\n",
+    b"\n\r",
+    b"\r\r\n",
     b"#",
     b"/",
     b"*",
@@ -55,6 +62,13 @@ _KEYWORDS = [
 ]
 
 
+def test_scan_equals_parse_on_corpus():
+    for case in CORPUS:
+        data = case.robots.replace(b"\x00", b"\n")
+        want = [ln for ln in parse_robots_txt(data) if ln[0] != RAW]
+        assert scan_statements(data) == want, case.case_id
+
+
 @settings(max_examples=1500, deadline=None)
 @given(
     st.lists(
@@ -65,36 +79,17 @@ _KEYWORDS = [
         max_size=24,
     )
 )
-def test_identical_on_fuzzed_inputs(parts):
-    data = b"".join(parts)
-    assert parse_robots_txt(data) == parse_robots_txt_slow(data), repr(data)
-
-
-# --- scan_statements: the '\r'-free one-sweep statement scanner ---------
-
-from texting_robots_spark.robots_core import RAW, scan_statements
-
-
-def test_scan_equals_parse_on_corpus():
-    for case in CORPUS:
-        data = case.robots.replace(b"\x00", b"\n")
-        if b"\r" in data:
-            continue  # scanner contract: '\r'-free bodies only
-        want = [ln for ln in parse_robots_txt(data) if ln[0] != RAW]
-        assert scan_statements(data) == want, case.case_id
-
-
-@settings(max_examples=1500, deadline=None)
-@given(
-    st.lists(
-        st.one_of(
-            st.sampled_from([k for k in _KEYWORDS if b"\r" not in k]),
-            st.binary(max_size=6).filter(lambda b: b"\r" not in b),
-        ),
-        max_size=24,
-    )
-)
 def test_scan_equals_parse_on_fuzzed_inputs(parts):
     data = b"".join(parts).replace(b"\x00", b"\n")
     want = [ln for ln in parse_robots_txt(data) if ln[0] != RAW]
     assert scan_statements(data) == want, repr(data)
+
+
+@pytest.mark.parametrize("name", sorted(os.listdir(FIXTURES)))
+def test_compile_robots_ignores_terminator_form(name):
+    with open(os.path.join(FIXTURES, name), "rb") as f:
+        lf = f.read()
+    for agent in ("TRSBot", "Googlebot"):
+        want = compile_robots(agent, lf)
+        for sep in (b"\r\n", b"\r"):
+            assert compile_robots(agent, lf.replace(b"\n", sep)) == want, (agent, sep)

@@ -75,31 +75,6 @@ def test_q1_is_whole_stage_codegen_with_partial_agg(spark):
     assert "Exchange" in plan
 
 
-def test_ivf_index_scan_prunes_partitions(spark, tmp_path):
-    """ivf_topk_indexed must read ONLY the probed cells' partition
-    directories (PartitionFilters on cell), and its results must equal
-    the in-memory ivf_topk with the same centroids/probes."""
-    from texting_robots_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_indexed,
-        ivf_train,
-        ivf_write_index,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = ivf_train(emb, n_cells=8, n_iters=3)
-    path = str(tmp_path / "ivf_index")
-    ivf_write_index(emb, cents, path)
-    queries = emb.where(F.col("vec_id") < 5)
-    got = ivf_topk_indexed(spark, path, queries, cents, k=3, n_probes=2)
-    plan = _plan(got)
-    scan = plan.split("PartitionFilters:")
-    assert len(scan) > 1, plan  # the scan carries partition filters
-    assert "cell" in scan[1].split("]")[0]
-    want = ivf_topk(emb, queries, centroids=cents, k=3, n_probes=2)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
 def test_gate_sharded_single_shuffle_per_side(spark):
     """gate_sharded's plan: one exchange per cogroup side (candidates on
     (host, salt), replicated rules on (host, salt)) and no extra joins."""

@@ -79,6 +79,43 @@ def test_compact_then_recrawl_roundtrip(spark, tmp_path):
     assert refetched > 0
 
 
+def test_archived_urls_stay_seen_after_compaction(spark, tmp_path):
+    """compact_frontier moves fetched and disallowed rows to the archive
+    and drops the bloom filters, so the next supersteps' seen check is
+    the exact anti-join against store.read_keys alone. Without the
+    archive's keys in that set, archived URLs read as new: re-queued by
+    the first step after compaction and fetched again by the next."""
+    documents, robots, seeds = synth_universe(n_hosts=8, n_docs=150, n_seeds=12, seed=42)
+    docs_df = synth_documents_df(spark, documents).cache()
+    robots_df = synth_robots_df(spark, robots)
+    cfg = CrawlConfig(
+        agent="TRSBot",
+        per_host_k=4,
+        step_seconds=10.0,
+        default_delay=0.5,
+        bloom=BloomConfig(n_partitions=4, n_bits=1 << 16, n_hashes=4),
+    )
+    store = FrontierStore(str(tmp_path / "crawl"), n_buckets=4)
+    rules = RulesBroadcast(spark, build_rules(robots_df, cfg.agent))
+    run_crawl(spark, store, docs_df, robots_df, seeds, cfg, n_steps=3, rules=rules)
+    assert compact_frontier(spark, store, CK)["archived"] > 0
+    archived = spark.read.parquet(store.archive_dir).select("url_hash")
+
+    def back_from_archive(state):
+        return (
+            store.read_frontier(spark)
+            .where(F.col("state") == state)
+            .join(archived, "url_hash", "left_semi")
+            .count()
+        )
+
+    frontier_step(spark, store, docs_df, rules, cfg)
+    assert back_from_archive("queued") == 0
+    frontier_step(spark, store, docs_df, rules, cfg)
+    assert back_from_archive("queued") == 0
+    assert back_from_archive("fetched") == 0
+
+
 def test_ttl_recrawl_dataframe_path_equals_list_path(spark, tmp_path):
     """TTL-driven recrawl at scale: stale_archived selects the archived
     fetched rows older than the cutoff as a DataFrame (column-pruned

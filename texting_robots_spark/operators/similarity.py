@@ -17,8 +17,6 @@ partitionings.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
 import numpy as np
 import pandas as pd
 
@@ -30,15 +28,12 @@ from pyspark.sql.window import Window
 from .dedup import capped_bucket_pairs
 
 __all__ = [
-    "with_unit_norm",
     "cosine_topk",
     "lsh_topk",
     "ivf_train",
     "ivf_train_local",
     "ivf_assign",
     "ivf_topk",
-    "ivf_write_index",
-    "ivf_topk_indexed",
     "embedding_near_dups",
 ]
 
@@ -58,14 +53,6 @@ def _norm(a):
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
-    )
-
-
-def with_unit_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    n = _norm(F.col(vec_col))
-    return df.withColumn(
-        "_unit",
-        F.transform(F.col(vec_col), lambda x: x.cast("double") / n),
     )
 
 
@@ -393,78 +380,6 @@ def ivf_topk(
         F.col(vec_col).alias("q_vec"),
         _norm(F.col(vec_col)).alias("q_norm"),
         F.explode(_probe_udf(centroids, n_probes)(F.col(vec_col))).alias("cell"),
-    )
-    sim = F.round(
-        _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
-        round_digits,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        c.join(F.broadcast(q), "cell")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
-
-
-def ivf_write_index(
-    embeddings: DataFrame,
-    centroids,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Persist the IVF index partitioned by cell: each coarse cell is its
-    own parquet partition directory, so probing reads ONLY the probed
-    cells' files (partition pruning does the candidate filtering — the
-    scan never touches the other ~n_cells-n_probes/n_cells of the
-    corpus)."""
-    ivf_assign(embeddings, centroids, vec_col=vec_col).write.partitionBy(
-        "cell"
-    ).mode("overwrite").parquet(path)
-
-
-def ivf_topk_indexed(
-    spark,
-    index_path: str,
-    queries: DataFrame,
-    centroids,
-    k: int = 5,
-    n_probes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """Approximate top-k over a PERSISTED ivf_write_index directory.
-
-    The probed cell set (n_queries x n_probes ints — tiny) is collected
-    and pushed as a literal ``cell IN (...)`` predicate, which Spark
-    turns into PartitionFilters on the partitioned parquet scan: files
-    of unprobed cells are never read. This is the 10^9-vector serving
-    shape — candidate filtering via storage layout, not compute.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-        F.explode(_probe_udf(centroids, n_probes)(F.col(vec_col))).alias("cell"),
-    )
-    # collect the probed cells from an UNcached plan: the probe UDF runs
-    # once more for the join below, but the query side is small by
-    # contract, and a cache here would leak blocks across repeated
-    # serving calls in a long-lived session
-    cells = sorted(r["cell"] for r in q.select("cell").distinct().collect())
-    c = (
-        spark.read.parquet(index_path)
-        .where(F.col("cell").isin(cells))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            _norm(F.col(vec_col)).alias("c_norm"),
-            "cell",
-        )
     )
     sim = F.round(
         _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),

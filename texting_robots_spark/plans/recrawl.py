@@ -18,6 +18,8 @@ Flow:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,12 +35,6 @@ __all__ = [
     "schedule_recrawl",
     "dedup_candidates_cuckoo",
 ]
-
-import os
-
-
-def _archive_dir(store: FrontierStore) -> str:
-    return os.path.join(store.root, "archive")
 
 
 def compact_frontier(
@@ -75,7 +71,7 @@ def compact_frontier(
                 f"increase CuckooConfig.n_buckets or n_partitions"
             )
         done.write.mode("append").option("compression", store.codec).parquet(
-            _archive_dir(store)
+            store.archive_dir
         )
         n_q, n_a = queued.count(), done.count()
         store.write_snapshot(
@@ -121,10 +117,10 @@ def stale_archived(
     recrawl driver — "re-fetch everything older than the TTL" — as a
     column-pruned archive scan, no driver data. Feed the result
     straight to ``schedule_recrawl`` (it accepts the DataFrame)."""
-    if not os.path.exists(_archive_dir(store)):
+    if not os.path.exists(store.archive_dir):
         return local_frame(spark, "url string")
     return (
-        spark.read.parquet(_archive_dir(store))
+        spark.read.parquet(store.archive_dir)
         .where(
             (F.col("state") == "fetched")
             & (F.col("not_before") <= F.lit(float(older_than)))
@@ -183,23 +179,20 @@ def schedule_recrawl(
     # another URL's entry on a fingerprint collision (violating
     # delete_cuckoo's contract), so arbitrary user URLs are narrowed two
     # ways: (1) a semi-join against the set of hashes KNOWN to have been
-    # inserted (frontier + archive — the filter was built from exactly
-    # these), and (2) a probe, which skips hashes already deleted by an
-    # earlier recrawl. The probe alone would not suffice — its false
-    # positives (fingerprint collisions) still pass — but combined with
-    # the known-inserted join only genuinely-inserted keys reach
-    # delete_cuckoo; the residual risk is a same-fingerprint collision
-    # BETWEEN two inserted keys, which delete handles by removing one
-    # copy per insert.
-    known = store.read_frontier(spark).select("url_hash")
-    if os.path.exists(_archive_dir(store)):
-        known = known.unionByName(
-            spark.read.schema("url_hash long").parquet(_archive_dir(store))
-        )
+    # inserted (store.read_keys: frontier + archive — the filter was
+    # built from exactly these), and (2) a probe, which skips hashes
+    # already deleted by an earlier recrawl. The probe alone would not
+    # suffice — its false positives (fingerprint collisions) still
+    # pass — but combined with the known-inserted join only
+    # genuinely-inserted keys reach delete_cuckoo; the residual risk is
+    # a same-fingerprint collision BETWEEN two inserted keys, which
+    # delete handles by removing one copy per insert.
     # no distinct on the semi-join's right side: semi-join semantics
     # dedup it for free, and the distinct was a whole extra shuffle of
     # the frontier+archive key set (round 7)
-    inserted = rows.select("url_hash").join(known, "url_hash", "left_semi")
+    inserted = rows.select("url_hash").join(
+        store.read_keys(spark), "url_hash", "left_semi"
+    )
     present = (
         probe_cuckoo(inserted, filters, cfg)
         .where(F.col("maybe_seen"))

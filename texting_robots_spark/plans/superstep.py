@@ -71,9 +71,7 @@ __all__ = [
     "sitemap_seeds",
     "eligible_slice",
     "schedule_batch",
-    "join_strategy_scope",
     "window_group_limit_scope",
-    "step_scope",
     "StepPlan",
     "step_plan",
     "link_candidates",
@@ -87,40 +85,6 @@ __all__ = [
 HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]+)"
 
 _WGL_KEY = "spark.sql.optimizer.windowGroupLimitThreshold"
-
-
-@contextmanager
-def join_strategy_scope(spark: SparkSession):
-    """Scope ``spark.sql.join.preferSortMergeJoin=false`` over one
-    superstep (build AND action — Catalyst reads the conf at action
-    time), restoring the previous value on exit.
-
-    Guide §3.1/§9: with the preference off the planner picks a
-    shuffled-hash join WHEN ITS SIZE CONDITIONS ARE MET — it is not
-    forced, so an oversized build side still falls back to sort-merge.
-    HONEST SCOPE (round 7, measured): at sandbox scale this is a no-op
-    — every step join is broadcast (the step-plan capture shows 6
-    BroadcastHashJoin, zero SMJ/SHJ) and order-controlled A/B pairs
-    read within window noise in both directions (12.6-15.2 vs
-    11.0-14.1 one order, 12.7 vs 13.1 reversed). The setting targets
-    the scale regime where the fetch join's docs side exceeds the
-    broadcast threshold: there SHJ's bounded build sides (fetched
-    batch: hosts x per_host_k rows; seen-key slices: ~8 B/key per
-    partition) skip two per-step sorts of shuffled data, and the
-    stats gate keeps the fallback safe."""
-    key = "spark.sql.join.preferSortMergeJoin"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 @contextmanager
@@ -150,20 +114,6 @@ def window_group_limit_scope(spark: SparkSession, k: int):
         spark.conf.set(_WGL_KEY, prev)
 
 
-@contextmanager
-def step_scope(spark: SparkSession, cfg: "CrawlConfig"):
-    """The session conf one crawl step runs under, for its plan build
-    AND its actions: ``window_group_limit_scope`` keeps the map-side
-    skew guard for a per_host_k above the session threshold, and
-    ``join_strategy_scope`` lets bounded build sides take shuffled-hash
-    joins. frontier_step and the streaming foreachBatch both enter
-    ``step_plan`` through it."""
-    with window_group_limit_scope(spark, cfg.per_host_k), join_strategy_scope(
-        spark
-    ):
-        yield
-
-
 # When set to a dict, _tracer accumulates per-phase wall seconds into it
 # (label -> total across steps). bench.py points this at a dict so the
 # driver-visible BENCH JSON carries phase-level crawl timings — a bench
@@ -172,25 +122,19 @@ TRACE_SINK: Optional[dict] = None
 
 
 def _tracer():
-    """Phase timing: prints under SPARK_GRAFT_TRACE=1, accumulates into
-    TRACE_SINK when set (see above). Zero cost when both are off."""
-    trace_print = os.environ.get("SPARK_GRAFT_TRACE") == "1"
+    """Phase timing: accumulates into TRACE_SINK when set (see above).
+    Zero cost when it is not."""
     sink = TRACE_SINK
-    if not trace_print and sink is None:
+    if sink is None:
         return lambda label: None
     state = {"t": time.time()}
 
     def mark(label):
         now = time.time()
-        dt = now - state["t"]
-        if trace_print:
-            print(f"    [{label}] {dt:.2f}s", flush=True)
-        if sink is not None:
-            sink[label] = round(sink.get(label, 0.0) + dt, 3)
+        sink[label] = round(sink.get(label, 0.0) + now - state["t"], 3)
         state["t"] = now
 
     return mark
-
 
 
 @dataclass
@@ -632,9 +576,9 @@ def step_plan(
     streaming candidates — at the virtual clock ``t0 = step *
     step_seconds``: eligibility, schedule, gate, fetch, link candidates
     and the politeness advance. The batch superstep and the streaming
-    loop both call it (inside ``step_scope``), so their crawl order is
-    one code path; each driver keeps only its own state: the store's
-    seen set and commit, or the stream's epoch tables.
+    loop both call it (inside ``window_group_limit_scope``), so their
+    crawl order is one code path; each driver keeps only its own state:
+    the store's seen set and commit, or the stream's epoch tables.
 
     ``rows`` carries (url_hash, url, host, priority, depth, state,
     not_before); ``host_state`` is (host, next_allowed) or None.
@@ -761,10 +705,10 @@ def frontier_step(
     """Run one superstep against the current snapshot; returns metrics.
 
     The whole step (plan build AND the committing action) runs inside
-    ``step_scope``, so per_host_k above the session's
+    ``window_group_limit_scope``, so per_host_k above the session's
     windowGroupLimitThreshold keeps the map-side skew guard without
     permanently mutating session conf."""
-    with step_scope(spark, cfg):
+    with window_group_limit_scope(spark, cfg.per_host_k):
         return _frontier_step_impl(spark, store, docs, rules, cfg)
 
 

@@ -3,9 +3,15 @@
 Reimplements (from scratch, in Python) the observable semantics of the
 reference Rust library ``texting_robots`` v0.2.2:
 
-- line parser       -> reference /root/reference/src/parser.rs:48-179
-- 3-tier matcher    -> reference /root/reference/src/minregex.rs:38-126
-- Robot build/allow -> reference /root/reference/src/lib.rs:351-558
+- line parser       -> reference src/parser.rs:48-179
+- 3-tier matcher    -> reference src/minregex.rs:38-126
+- Robot build/allow -> reference src/lib.rs:351-558
+
+There is one statement parser, ``scan_statements``: a single regex sweep
+that ``compile_robots`` (and so every gate) runs on each body.
+``parse_robots_txt`` is the byte-at-a-time transliteration of the
+reference grammar, raw lines included; it is the oracle the scanner is
+differential-tested against, not a production path.
 
 Behavioral contract (each item cites the reference spec it reproduces):
 
@@ -198,10 +204,14 @@ def _raw_line(data: bytes, i: int) -> Tuple[int, Line]:
     return m, (RAW, value)
 
 
-def parse_robots_txt_slow(data: bytes) -> List[Line]:
-    """Byte-at-a-time parser — the direct transliteration of the
-    reference grammar. Kept as the differential-testing twin of the fast
-    regex parser below (hypothesis asserts they are identical)."""
+def parse_robots_txt(data: bytes) -> List[Line]:
+    """Parse robots.txt bytes into a list of typed lines.
+
+    Byte-at-a-time transliteration of robots_txt_parse (parser.rs:168-179)
+    — the reference the statement scanner is differential-tested
+    against. Never fails: any unrecognized line becomes a Raw line. Line
+    terminators are a run of '\\r' plus an optional '\\n'
+    (parser.rs:60-64), so lone '\\r' also terminates a line."""
     i = 0
     # BOM strip: each of \xef \xbb \xbf individually optional, in order,
     # so truncated BOM prefixes are also skipped (parser.rs:170-173).
@@ -222,63 +232,22 @@ def parse_robots_txt_slow(data: bytes) -> List[Line]:
     return lines
 
 
-# Fast parser: one split on line terminators + one compiled alternation
-# regex per line. The alternation lists keys in the reference's parser
-# order (parser.rs:175-176 / §1.3 aliases); regex backtracking across
-# alternatives reproduces nom's alt() behavior (a key whose separator is
-# missing falls through to the next key, then to Raw).
+# The reference's line terminator: a run of '\r' plus an optional '\n'
+# (parser.rs:60-64). scan_statements rewrites each one to a single '\n'.
 _LINE_SPLIT = re.compile(rb"\r*\n|\r+")
-_STMT_RE = re.compile(
-    rb"^[ \t]*"
-    rb"(user-agent|user agent|useragent"
-    rb"|allow"
-    rb"|disallow|dissallow|dissalow|disalow|diasllow|disallaw"
-    rb"|sitemap|site-map|site map"
-    rb"|crawl-delay|crawl delay|crawldelay)"
-    rb"(?:[ \t]*:|[ \t])"
-    rb"([^#]*)(?:#.*)?$",
-    re.IGNORECASE | re.DOTALL,
-)
 _KIND_OF_KEY = {}
 for _kind, _tags in _KEY_GROUPS:
     for _tag in _tags:
         _KIND_OF_KEY[_tag] = _kind
 
 
-def parse_robots_txt(data: bytes) -> List[Line]:
-    """Parse robots.txt bytes into a list of typed lines.
-
-    Equivalent to robots_txt_parse (parser.rs:168-179). Never fails: any
-    unrecognized line becomes a Raw line. Line terminators are a run of
-    '\\r' plus an optional '\\n' (parser.rs:60-64), so lone '\\r' also
-    terminates a line. Differentially tested against
-    parse_robots_txt_slow.
-    """
-    if data[:1] == b"\xef":
-        data = data[1:]
-    if data[:1] == b"\xbb":
-        data = data[1:]
-    if data[:1] == b"\xbf":
-        data = data[1:]
-    if not data:
-        return []
-    if b"\r" not in data:
-        raw_lines = data.split(b"\n")  # C fast path (no \r anywhere)
-        if raw_lines[-1] == b"":
-            raw_lines.pop()
-        return _parse_lines(raw_lines)
-    raw_lines = _LINE_SPLIT.split(data)
-    if raw_lines and raw_lines[-1] == b"" and data[-1:] in (b"\n", b"\r"):
-        # data ended with a terminator: no trailing empty line
-        raw_lines.pop()
-    return _parse_lines(raw_lines)
-
-
-# Multiline twin of _STMT_RE: one finditer over the whole body collects
-# every typed statement in order, skipping raw lines entirely (raw lines
-# never influence compile_robots — they are filtered before grouping,
-# lib.rs:386-392). Only valid for '\r'-free bodies where '\n' line
-# semantics equal the reference's '\r*\n|\r+' terminators.
+# One multiline finditer over the whole body collects every typed
+# statement in order, skipping raw lines entirely (raw lines never
+# influence compile_robots — they are filtered before grouping,
+# lib.rs:386-392). The alternation lists keys in the reference's parser
+# order (parser.rs:175-176); regex backtracking across alternatives
+# reproduces nom's alt() (a key whose separator is missing falls through
+# to the next key, then to Raw). '\n' is the only terminator it knows.
 _STMT_SCAN_RE = re.compile(
     rb"^[ \t]*"
     rb"(user-agent|user agent|useragent"
@@ -293,16 +262,19 @@ _STMT_SCAN_RE = re.compile(
 
 
 def scan_statements(data: bytes) -> List[Line]:
-    """Typed statements of a '\\r'-free robots.txt body in ONE C-level
-    regex sweep — equivalent to ``[ln for ln in parse_robots_txt(data)
-    if ln[0] != RAW]`` (differential-tested). A failed Crawl-Delay parse
-    is dropped (it would have demoted to Raw, parser.rs:147-165)."""
+    """Typed statements of a robots.txt body in ONE C-level regex sweep
+    — equivalent to ``[ln for ln in parse_robots_txt(data) if ln[0] !=
+    RAW]`` (differential-tested). Bodies containing '\\r' first have
+    every terminator rewritten to '\\n'. A failed Crawl-Delay parse is
+    dropped (it would have demoted to Raw, parser.rs:147-165)."""
     if data[:1] == b"\xef":
         data = data[1:]
     if data[:1] == b"\xbb":
         data = data[1:]
     if data[:1] == b"\xbf":
         data = data[1:]
+    if b"\r" in data:
+        data = _LINE_SPLIT.sub(b"\n", data)
     lines: List[Line] = []
     append = lines.append
     kinds = _KIND_OF_KEY
@@ -313,31 +285,6 @@ def scan_statements(data: bytes) -> List[Line]:
         if kind == DELAY:
             delay = _parse_delay_value(value)
             if delay is not None:
-                append((DELAY, delay))
-        elif kind == DISALLOW and not value:
-            append((ALLOW, b"/"))
-        else:
-            append((kind, value))
-    return lines
-
-
-def _parse_lines(raw_lines: List[bytes]) -> List[Line]:
-    match = _STMT_RE.match
-    kinds = _KIND_OF_KEY
-    lines: List[Line] = []
-    append = lines.append
-    for raw in raw_lines:
-        m = match(raw)
-        if m is None:
-            append((RAW, raw))
-            continue
-        kind = kinds[m.group(1).lower()]
-        value = m.group(2).strip()
-        if kind == DELAY:
-            delay = _parse_delay_value(value)
-            if delay is None:
-                append((RAW, raw))
-            else:
                 append((DELAY, delay))
         elif kind == DISALLOW and not value:
             append((ALLOW, b"/"))
@@ -509,13 +456,9 @@ def compile_robots(
     # NUL scrub (lib.rs:353-357)
     if b"\x00" in txt:
         txt = txt.replace(b"\x00", b"\n")
-    if b"\r" in txt:
-        lines = parse_robots_txt(txt)
-    else:
-        # '\r'-free fast path (the overwhelming majority of real files):
-        # one finditer sweep collects the typed statements; raw lines are
-        # irrelevant to compilation (filtered before grouping anyway)
-        lines = scan_statements(txt)
+    # typed statements only: raw lines are irrelevant to compilation
+    # (filtered before grouping anyway)
+    lines = scan_statements(txt)
 
     # Sitemaps are global; non-UTF-8 entries dropped (lib.rs:373-384)
     sitemaps: List[str] = []

@@ -15,6 +15,8 @@ Layout under ``root/``:
     snapshots/v000N/filters/       bloom filter bits (FILTERS_DDL)
     metrics/                       append-only per-step metrics parquet
     lineage/                       append-only per-partition lineage
+    archive/                       rows compacted out of the frontier
+                                   (plans.recrawl.compact_frontier)
 """
 
 from __future__ import annotations
@@ -75,6 +77,7 @@ class FrontierStore:
         # bench crawl line vs snappy, and the gap widens wherever
         # storage bandwidth is the scarcer resource.
         self.root = root
+        self.archive_dir = os.path.join(root, "archive")
         self.n_buckets = n_buckets
         self.compact_every = compact_every
         self.codec = codec
@@ -320,22 +323,24 @@ class FrontierStore:
         )
 
     def read_keys(self, spark: SparkSession, deltas_only: bool = False) -> DataFrame:
-        """All url_hash keys present in the frontier (base + deltas).
+        """Every url_hash the store has seen: the frontier's (base +
+        deltas) and, after a recrawl compaction, the archive's.
 
         Membership-only view for seen-checks: deltas UPSERT rows and
-        never delete keys (recrawl compaction rewrites the BASE), so the
-        key set is the plain union of the base's and every delta's
-        url_hash column — no merge-on-read join chain. The scan is
-        column-pruned to url_hash (at scale: one parquet column instead
-        of k anti-joins over full rows). May contain duplicates; fine
-        for anti-join/semi-join probes.
+        never delete keys, and compaction moves rows from the base to
+        the archive, so the key set is the plain union of the base's,
+        every delta's and the archive's url_hash column — no
+        merge-on-read join chain. The scan is column-pruned to url_hash
+        (at scale: one parquet column instead of k anti-joins over full
+        rows). May contain duplicates; fine for anti-join/semi-join
+        probes.
 
         ``deltas_only=True`` returns just the keys the delta chain added
-        since the base — the slice the base bloom filters do NOT cover
-        under the deferred-increment policy (see commit_step): the
-        superstep anti-joins its bloom-negative candidates against this
-        small set, and compaction builds one catch-up bloom increment
-        from it. O(compact_every x batch) rows by construction."""
+        since the base (never the archive's) — the slice the base bloom
+        filters do NOT cover under the deferred-increment policy (see
+        commit_step): the superstep anti-joins its bloom-negative
+        candidates against this small set, and compaction builds one
+        catch-up bloom increment from it. O(compact_every x batch) rows by construction."""
         manifest = self._read_manifest()
         base = manifest.get("base", manifest["current"])
         paths = (
@@ -344,6 +349,8 @@ class FrontierStore:
             else [self._snap_dir(base, "frontier")]
         )
         paths += [self._snap_dir(d, "delta") for d in manifest.get("deltas", [])]
+        if not deltas_only and os.path.exists(self.archive_dir):
+            paths.append(self.archive_dir)
         if not paths:
             return local_frame(spark, "url_hash long")
         # single multi-path scan, column-pruned to url_hash by the
@@ -396,12 +403,6 @@ class FrontierStore:
         )
 
     # -- append-only side tables -------------------------------------------
-    def append_metrics(self, metrics: DataFrame) -> None:
-        metrics.write.mode("append").parquet(os.path.join(self.root, "metrics"))
-
-    def append_lineage(self, lineage: DataFrame) -> None:
-        lineage.write.mode("append").parquet(os.path.join(self.root, "lineage"))
-
     def _append_local(self, dirname: str, table) -> None:
         """Driver-side parquet append for tiny per-step side rows (a
         handful of already-collected counters): one pyarrow file write

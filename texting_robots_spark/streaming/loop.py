@@ -81,7 +81,12 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import CrawlConfig, seed_frontier, step_plan, step_scope
+from ..plans.superstep import (
+    CrawlConfig,
+    seed_frontier,
+    step_plan,
+    window_group_limit_scope,
+)
 from .stateful import stream_seen_filter
 
 __all__ = ["run_stream_crawl", "make_batch_processor", "CAND_DDL"]
@@ -319,7 +324,7 @@ def make_batch_processor(
         # schedule_batch's skew guard needs it in effect when the
         # batch's ACTIONS run, and it must not leak into other queries
         # on the session (round-5 ADVICE).
-        with step_scope(spark, cfg):
+        with window_group_limit_scope(spark, cfg.per_host_k):
             _process_body(batch_df, batch_id)
 
     return _process
