@@ -4,8 +4,10 @@ must produce the identical crawl ordering and URL-seen set).
 A real two-cluster comparison is impossible in-process, so this test
 varies every parallelism-shaped knob available inside one session —
 shuffle partition count and frontier bucket count — and requires
-bit-identical crawl order + seen set. The bench harness completes the
-evidence by running the same job in separate local[8] / local[32] JVMs.
+bit-identical crawl order + seen set. An advisory partition size of one
+byte makes the engine's sized fan-out (sized_shuffle_scope) equal the
+session count, so the narrow and wide runs really run 2 and 16 ways; a
+third run at the default advisory size takes the sized fan-out.
 """
 
 from pyspark.sql import functions as F
@@ -21,9 +23,14 @@ from texting_robots_spark.sources.synth import (
 )
 
 
-def _run(spark, tmpdir, shuffle_partitions, n_buckets):
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+def _run(spark, tmpdir, shuffle_partitions, n_buckets, advisory="1b"):
     documents, robots, seeds = synth_universe(n_hosts=10, n_docs=250, n_seeds=15, seed=42)
-    docs_df = synth_documents_df(spark, documents).repartition(shuffle_partitions)
+    # cached and counted, so the planner has the docs' size
+    docs_df = synth_documents_df(spark, documents).repartition(shuffle_partitions).cache()
+    docs_df.count()
     robots_df = synth_robots_df(spark, robots)
     cfg = CrawlConfig(
         agent="TRSBot",
@@ -34,6 +41,8 @@ def _run(spark, tmpdir, shuffle_partitions, n_buckets):
     )
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    if advisory is not None:
+        spark.conf.set(_ADVISORY, advisory)
     try:
         store = FrontierStore(tmpdir, n_buckets=n_buckets)
         rules = RulesBroadcast(spark, build_rules(robots_df, cfg.agent))
@@ -45,10 +54,15 @@ def _run(spark, tmpdir, shuffle_partitions, n_buckets):
         return order, seen
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.unset(_ADVISORY)
+        docs_df.unpersist()
 
 
 def test_crawl_order_and_seen_set_identical_across_parallelism(spark, tmp_path):
     order_a, seen_a = _run(spark, str(tmp_path / "narrow"), shuffle_partitions=2, n_buckets=4)
     order_b, seen_b = _run(spark, str(tmp_path / "wide"), shuffle_partitions=16, n_buckets=16)
-    assert seen_a == seen_b
-    assert order_a == order_b
+    order_c, seen_c = _run(
+        spark, str(tmp_path / "sized"), shuffle_partitions=16, n_buckets=16, advisory=None
+    )
+    assert seen_a == seen_b == seen_c
+    assert order_a == order_b == order_c

@@ -244,8 +244,8 @@ def test_schedule_topk_skew_guard_survives_adversarial_skew(spark):
 def test_skew_guard_holds_past_default_window_group_limit_threshold(spark):
     """ADVICE r4 (medium): InferWindowGroupLimit only fires when the
     literal rank bound is <= spark.sql.optimizer.windowGroupLimitThreshold
-    (default 1000) — per_host_k=1024+ (tools/cluster_bench.py's CB_K
-    default) would silently lose the map-side skew guard. Round-5 ADVICE:
+    (default 1000) — a per_host_k above it would silently lose the
+    map-side skew guard. Round-5 ADVICE:
     schedule_batch no longer mutates session conf (Catalyst reads the
     threshold at ACTION time, so a planner-local override can't be
     scoped); instead it fails loud, and callers wrap build+action in
@@ -499,3 +499,120 @@ def test_refresh_step_folds_delta_keys_into_bloom(spark, universe, tmp_path):
         .count()
     )
     assert missed == 0  # delta-added keys are covered post-refresh
+
+
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+@pytest.mark.parametrize(
+    "make, advisory, sized",
+    [
+        # spark.range(1000) is estimated at 8,000 bytes
+        (lambda spark: spark.range(1000), None, "1"),
+        (lambda spark: spark.range(1000), "3000b", "3"),
+        # estimated past advisory x session partitions, never materialized
+        (lambda spark: spark.range(10**10), None, None),
+        # an RDD scan has no estimate: the default size keeps the fan-out
+        (
+            lambda spark: spark.createDataFrame(
+                spark.sparkContext.parallelize([(1,)]), "x long"
+            ),
+            None,
+            None,
+        ),
+    ],
+    ids=["tiny", "three_advisory_sizes", "past_session_fan_out", "no_estimate"],
+)
+def test_sized_shuffle_scope_follows_input_size(spark, make, advisory, sized):
+    """The fan-out is ceil(estimate / advisory size), clamped to
+    [1, the session's value] (None: the session's value), and the
+    session's value is back after the block."""
+    from texting_robots_spark.plans.superstep import sized_shuffle_scope
+
+    session = spark.conf.get(_SHUFFLE)
+    if advisory is not None:
+        spark.conf.set(_ADVISORY, advisory)
+    try:
+        with sized_shuffle_scope(spark, make(spark)):
+            inside = spark.conf.get(_SHUFFLE)
+    finally:
+        spark.conf.unset(_ADVISORY)
+    assert inside == (sized or session)
+    assert spark.conf.get(_SHUFFLE) == session
+
+
+@pytest.fixture(scope="module")
+def tiny_universe(spark):
+    """Docs and rules small enough that a step sizes to one task; the
+    docs are one cached partition, so the planner has their size."""
+    documents, robots, seeds = synth_universe(
+        n_hosts=6, n_docs=120, n_seeds=10, seed=7
+    )
+    docs_df = synth_documents_df(spark, documents).coalesce(1).cache()
+    docs_df.count()
+    rules = RulesBroadcast(spark, build_rules(synth_robots_df(spark, robots), "TRSBot"))
+    yield docs_df, rules, seeds
+    docs_df.unpersist()
+
+
+def _tiny_store(spark, tmp_path, seeds):
+    from texting_robots_spark.plans.superstep import init_crawl
+
+    store = FrontierStore(str(tmp_path / "tiny"), n_buckets=1)
+    init_crawl(spark, store, seeds, _cfg())
+    return store
+
+
+def _stage_tasks(spark, fn):
+    """Run ``fn``; return its result and the task count of every stage
+    that ran in the jobs it started. Job ids come from the DAG
+    scheduler, so jobs the store starts from writer threads count too."""
+    sc = spark.sparkContext._jsc.sc()
+    job0 = sc.dagScheduler().nextJobId()
+    out = fn()
+    job1 = sc.dagScheduler().nextJobId()
+    sc.listenerBus().waitUntilEmpty()
+    tracker = spark.sparkContext.statusTracker()
+    stages = {sid for j in range(job0, job1) for sid in tracker.getJobInfo(j).stageIds}
+    infos = [tracker.getStageInfo(sid) for sid in sorted(stages)]
+    # a skipped stage (its shuffle output already written) ran no task;
+    # the status store evicts skipped stages first once it holds
+    # spark.ui.retainedStages, so one may be gone already
+    return out, [i.numTasks for i in infos if i is not None and i.numCompletedTasks]
+
+
+def test_small_step_runs_one_task_per_stage(spark, tiny_universe, tmp_path):
+    """A step over a few hundred rows sizes its fan-out to 1: every
+    stage of frontier_step runs one task, where the session's 8
+    partitions would run 8."""
+    docs_df, rules, seeds = tiny_universe
+    store = _tiny_store(spark, tmp_path, seeds)
+    m, tasks = _stage_tasks(
+        spark, lambda: frontier_step(spark, store, docs_df, rules, _cfg())
+    )
+    assert m["fetched"] > 0 and m["new_urls"] > 0
+    assert len(tasks) >= 5 and set(tasks) == {1}, tasks
+
+
+def test_step_restores_shuffle_partitions_when_it_raises(
+    spark, tiny_universe, tmp_path, monkeypatch
+):
+    """The sized fan-out is in effect while the step plans, and the
+    session's value is back after the step raises."""
+    from texting_robots_spark.plans import superstep
+
+    docs_df, rules, seeds = tiny_universe
+    store = _tiny_store(spark, tmp_path, seeds)
+    session = spark.conf.get(_SHUFFLE)
+    inside = []
+
+    def failing_plan(*args, **kwargs):
+        inside.append(spark.conf.get(_SHUFFLE))
+        raise RuntimeError("plan failed")
+
+    monkeypatch.setattr(superstep, "step_plan", failing_plan)
+    with pytest.raises(RuntimeError, match="plan failed"):
+        frontier_step(spark, store, docs_df, rules, _cfg())
+    assert inside == ["1"]
+    assert spark.conf.get(_SHUFFLE) == session

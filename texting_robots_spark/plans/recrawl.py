@@ -27,7 +27,7 @@ from ..functions.udfs import canonicalize_urls
 from ..operators.cuckoo import CuckooConfig, build_cuckoo, delete_cuckoo, probe_cuckoo
 from ..sources.frontier_store import FrontierStore
 from ..sources.local import local_frame
-from .superstep import _with_keys
+from .superstep import _with_keys, sized_shuffle_scope
 
 __all__ = [
     "compact_frontier",
@@ -44,46 +44,52 @@ def compact_frontier(
 
     Writes: archive parquet (append), new snapshot whose frontier holds
     only queued rows, and cuckoo filters covering EVERY url_hash ever
-    seen (queued + archived). Returns counts.
+    seen (queued + archived). Returns counts. Runs inside
+    sized_shuffle_scope over the frontier, so the fan-out of the cuckoo
+    build and of the archive write follows the frontier's size.
     """
-    # The reconstructed frontier (merge-on-read: base + delta chain +
-    # latest-wins window) has FIVE consumers below — the cuckoo build,
-    # the archive write, both counts, and the queued-only snapshot.
-    # Cache it so the reconstruction runs once instead of once per
-    # consumer (round 7: the uncached shape recomputed the union+window
-    # five times and dominated the recrawl cycle's wall time).
-    frontier = store.read_frontier(spark).cache()
-    queued = frontier.where(F.col("state") == "queued")
-    done = frontier.where(F.col("state") != "queued")
-    # Build + CHECK the filters BEFORE any destructive write: a dropped
-    # key would be a silent false negative on every later probe (a seen
-    # URL re-entering the frontier), and a retry after a partial compact
-    # would rebuild filters from the already-compacted (queued-only)
-    # frontier, permanently losing the archived keys' seen-ness. Failing
-    # here leaves the old snapshot, archive, and filters intact so the
-    # caller can resize CuckooConfig and simply call again.
-    filters = build_cuckoo(frontier.select("url_hash"), cfg).cache()
-    try:
-        n_dropped = filters.agg(F.sum("n_dropped")).collect()[0][0] or 0
-        if n_dropped:
-            raise ValueError(
-                f"cuckoo filter over capacity: {n_dropped} keys dropped — "
-                f"increase CuckooConfig.n_buckets or n_partitions"
+    frontier = store.read_frontier(spark)
+    with sized_shuffle_scope(spark, frontier):
+        # The reconstructed frontier (merge-on-read: base + delta chain +
+        # latest-wins window) has FIVE consumers below — the cuckoo
+        # build, the archive write, both counts, and the queued-only
+        # snapshot. Cache it so the reconstruction runs once instead of
+        # once per consumer (round 7: the uncached shape recomputed the
+        # union+window five times and dominated the recrawl cycle's
+        # wall time).
+        frontier = frontier.cache()
+        queued = frontier.where(F.col("state") == "queued")
+        done = frontier.where(F.col("state") != "queued")
+        # Build + CHECK the filters BEFORE any destructive write: a
+        # dropped key would be a silent false negative on every later
+        # probe (a seen URL re-entering the frontier), and a retry after
+        # a partial compact would rebuild filters from the
+        # already-compacted (queued-only) frontier, permanently losing
+        # the archived keys' seen-ness. Failing here leaves the old
+        # snapshot, archive, and filters intact so the caller can resize
+        # CuckooConfig and simply call again.
+        filters = build_cuckoo(frontier.select("url_hash"), cfg).cache()
+        try:
+            n_dropped = filters.agg(F.sum("n_dropped")).collect()[0][0] or 0
+            if n_dropped:
+                raise ValueError(
+                    f"cuckoo filter over capacity: {n_dropped} keys dropped — "
+                    f"increase CuckooConfig.n_buckets or n_partitions"
+                )
+            done.write.mode("append").option("compression", store.codec).parquet(
+                store.archive_dir
             )
-        done.write.mode("append").option("compression", store.codec).parquet(
-            store.archive_dir
-        )
-        n_q, n_a = queued.count(), done.count()
-        store.write_snapshot(
-            queued, filters=None, meta={**store.meta(), "compacted": True}
-        )
-        # cuckoo filters live beside the snapshot's bloom slot
-        filters.write.mode("overwrite").option("compression", store.codec).parquet(
-            os.path.join(store.root, "cuckoo_filters")
-        )
-    finally:
-        filters.unpersist()
-        frontier.unpersist()
+            n_q, n_a = queued.count(), done.count()
+            store.write_snapshot(
+                queued, filters=None, meta={**store.meta(), "compacted": True}
+            )
+            # cuckoo filters live beside the snapshot's bloom slot
+            filters.write.mode("overwrite").option(
+                "compression", store.codec
+            ).parquet(os.path.join(store.root, "cuckoo_filters"))
+        finally:
+            filters.unpersist()
+            frontier.unpersist()
     return {"queued": n_q, "archived": n_a, "dropped": int(n_dropped)}
 
 
@@ -102,7 +108,10 @@ def dedup_candidates_cuckoo(
     cfg: CuckooConfig,
 ) -> DataFrame:
     """Post-compaction seen-check: cuckoo probe replaces the bloom +
-    frontier anti-join (the frontier no longer holds archived keys)."""
+    frontier anti-join (the frontier no longer holds archived keys).
+
+    Returns a lazy frame, so sized_shuffle_scope cannot size it: the
+    caller's action plans it, at the session's fan-out."""
     filters = _read_cuckoo(spark, store)
     probed = probe_cuckoo(candidates, filters, cfg)
     return probed.where(~F.col("maybe_seen")).drop("maybe_seen")
@@ -147,73 +156,78 @@ def schedule_recrawl(
     form: a TTL-driven recrawl of 10^8 stale URLs (``stale_archived``) must
     never round-trip through a driver-side Python list. Both paths
     produce identical rows (pinned in tests/test_recrawl.py).
+
+    Runs inside sized_shuffle_scope over its inputs: the URLs, the
+    store's key set, the cuckoo filters and the frontier.
     """
     if isinstance(urls, DataFrame):
         raw = urls.select(F.col(urls.columns[0]).alias("url"))
     else:
         raw = local_frame(spark, "url string", {"url": list(urls)})
-    # three consumers below (known-inserted screen, MERGE, return count):
-    # cache so the canonicalize kernel + dedup aggregate run once (round 7)
-    rows = (
-        canonicalize_urls(raw)
-        .transform(_with_keys)
-        .select(
-            "url_hash",
-            "url",
-            "host",
-            F.lit(float(priority)).alias("priority"),
-            F.lit(0).alias("depth"),
-            F.lit("queued").alias("state"),
-            F.lit(0.0).alias("not_before"),
-        )
-        .groupBy("url_hash")
-        .agg(
-            *[
-                F.min(c).alias(c)
-                for c in ("url", "host", "priority", "depth", "state", "not_before")
-            ]
-        )
-    ).cache()
+    keys = store.read_keys(spark)
     filters = _read_cuckoo(spark, store)
-    # Screen before deleting. Deleting a never-inserted hash can evict
-    # another URL's entry on a fingerprint collision (violating
-    # delete_cuckoo's contract), so arbitrary user URLs are narrowed two
-    # ways: (1) a semi-join against the set of hashes KNOWN to have been
-    # inserted (store.read_keys: frontier + archive — the filter was
-    # built from exactly these), and (2) a probe, which skips hashes
-    # already deleted by an earlier recrawl. The probe alone would not
-    # suffice — its false positives (fingerprint collisions) still
-    # pass — but combined with the known-inserted join only
-    # genuinely-inserted keys reach delete_cuckoo; the residual risk is
-    # a same-fingerprint collision BETWEEN two inserted keys, which
-    # delete handles by removing one copy per insert.
-    # no distinct on the semi-join's right side: semi-join semantics
-    # dedup it for free, and the distinct was a whole extra shuffle of
-    # the frontier+archive key set (round 7)
-    inserted = rows.select("url_hash").join(
-        store.read_keys(spark), "url_hash", "left_semi"
-    )
-    present = (
-        probe_cuckoo(inserted, filters, cfg)
-        .where(F.col("maybe_seen"))
-        .select("url_hash")
-    )
-    updated = delete_cuckoo(filters, present, cfg)
-    updated.write.mode("overwrite").option("compression", store.codec).parquet(
-        os.path.join(store.root, "cuckoo_filters_next")
-    )
-    # atomic-ish swap via rename (same idea as the manifest commit)
-    import shutil
+    frontier = store.read_frontier(spark)
+    with sized_shuffle_scope(spark, raw, keys, filters, frontier):
+        # three consumers below (known-inserted screen, MERGE, return
+        # count): cache so the canonicalize kernel + dedup aggregate run
+        # once (round 7)
+        rows = (
+            canonicalize_urls(raw)
+            .transform(_with_keys)
+            .select(
+                "url_hash",
+                "url",
+                "host",
+                F.lit(float(priority)).alias("priority"),
+                F.lit(0).alias("depth"),
+                F.lit("queued").alias("state"),
+                F.lit(0.0).alias("not_before"),
+            )
+            .groupBy("url_hash")
+            .agg(
+                *[
+                    F.min(c).alias(c)
+                    for c in ("url", "host", "priority", "depth", "state", "not_before")
+                ]
+            )
+        ).cache()
+        # Screen before deleting. Deleting a never-inserted hash can
+        # evict another URL's entry on a fingerprint collision (violating
+        # delete_cuckoo's contract), so arbitrary user URLs are narrowed
+        # two ways: (1) a semi-join against the set of hashes KNOWN to
+        # have been inserted (store.read_keys: frontier + archive — the
+        # filter was built from exactly these), and (2) a probe, which
+        # skips hashes already deleted by an earlier recrawl. The probe
+        # alone would not suffice — its false positives (fingerprint
+        # collisions) still pass — but combined with the known-inserted
+        # join only genuinely-inserted keys reach delete_cuckoo; the
+        # residual risk is a same-fingerprint collision BETWEEN two
+        # inserted keys, which delete handles by removing one copy per
+        # insert.
+        # no distinct on the semi-join's right side: semi-join semantics
+        # dedup it for free, and the distinct was a whole extra shuffle
+        # of the frontier+archive key set (round 7)
+        inserted = rows.select("url_hash").join(keys, "url_hash", "left_semi")
+        present = (
+            probe_cuckoo(inserted, filters, cfg)
+            .where(F.col("maybe_seen"))
+            .select("url_hash")
+        )
+        updated = delete_cuckoo(filters, present, cfg)
+        updated.write.mode("overwrite").option("compression", store.codec).parquet(
+            os.path.join(store.root, "cuckoo_filters_next")
+        )
+        # atomic-ish swap via rename (same idea as the manifest commit)
+        import shutil
 
-    shutil.rmtree(os.path.join(store.root, "cuckoo_filters"))
-    os.replace(
-        os.path.join(store.root, "cuckoo_filters_next"),
-        os.path.join(store.root, "cuckoo_filters"),
-    )
-    try:
-        frontier = store.read_frontier(spark)
-        merged = FrontierStore.merge_frontier(frontier, rows)
-        store.write_snapshot(merged, filters=None, meta=store.meta())
-        return rows.count()
-    finally:
-        rows.unpersist()
+        shutil.rmtree(os.path.join(store.root, "cuckoo_filters"))
+        os.replace(
+            os.path.join(store.root, "cuckoo_filters_next"),
+            os.path.join(store.root, "cuckoo_filters"),
+        )
+        try:
+            merged = FrontierStore.merge_frontier(frontier, rows)
+            store.write_snapshot(merged, filters=None, meta=store.meta())
+            return rows.count()
+        finally:
+            rows.unpersist()

@@ -27,12 +27,21 @@ Scale notes:
   3's manual salted two-level top-k — same bound, one shuffle fewer).
 - AQE note: because the skew handling above is explicit, adaptive
   re-planning changes nothing in this plan while charging a stage
-  materialization per shuffle (~30 stages/step). Run the crawl with
-  spark.sql.adaptive.enabled=false (interleaved A/B at sandbox scale:
-  AQE off wins every pair, ~20-25% wall, bit-identical output);
+  materialization per shuffle (a step runs ~26 stages). Run the crawl
+  with spark.sql.adaptive.enabled=false (interleaved A/B at sandbox
+  scale: AQE off wins every pair, ~20-25% wall, bit-identical output);
   re-enable AQE for ad-hoc queries in the same session. bench.py /
-  jobs/crawl_job.py / the scaling harnesses all scope the setting to
-  the crawl this way.
+  jobs/crawl_job.py / perfbench scope the setting to the crawl this way.
+- fan-out: every store-backed entry point (init_crawl, frontier_step,
+  refresh_step, recrawl's compact_frontier and schedule_recrawl) runs
+  inside sized_shuffle_scope, which sets spark.sql.shuffle.partitions
+  from the planner's size estimate of its inputs: ceil(bytes / the
+  advisory partition size), clamped to [1, the session's value]. A
+  sandbox step (a few hundred rows) runs one task per stage, where a
+  task, not a row, is the unit of cost; a 10^10-row frontier, or an
+  input the planner cannot size, keeps the session's full fan-out. This
+  is AQE's coalescing decided once, before planning, so it adds no
+  stage materialization.
 - politeness state is a per-host side table (host, next_allowed)
   checkpointed with each snapshot — never a per-row update across the
   10^10-row frontier, never a driver-side blob.
@@ -72,6 +81,7 @@ __all__ = [
     "eligible_slice",
     "schedule_batch",
     "window_group_limit_scope",
+    "sized_shuffle_scope",
     "StepPlan",
     "step_plan",
     "link_candidates",
@@ -112,6 +122,41 @@ def window_group_limit_scope(spark: SparkSession, k: int):
         yield
     finally:
         spark.conf.set(_WGL_KEY, prev)
+
+
+_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+
+
+@contextmanager
+def sized_shuffle_scope(spark: SparkSession, *inputs: DataFrame):
+    """Set ``spark.sql.shuffle.partitions`` for the block to the fan-out
+    its inputs need, and restore the session's value on exit (also on
+    an exception).
+
+    The fan-out is ``ceil(sum of the inputs' size estimates /
+    spark.sql.adaptive.advisoryPartitionSizeInBytes)``, clamped to
+    ``[1, the session's value]``. The estimate is the one the planner
+    uses for its broadcast decisions (``optimizedPlan().stats()``); an
+    input it cannot size (an RDD scan) gets spark.sql.defaultSizeInBytes,
+    which keeps the full fan-out. Outputs depend only on keys, never on
+    partitioning (north_rule), so the count is free to choose.
+
+    Like window_group_limit_scope, the conf is read when a plan is
+    physically planned, so the scope must wrap plan build AND every
+    action over it, caches included."""
+    prev = spark.conf.get(_SHUFFLE_KEY)
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    size = sum(
+        int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        for df in inputs
+    )
+    spark.conf.set(_SHUFFLE_KEY, str(max(1, min(int(prev), -(-size // advisory)))))
+    try:
+        yield
+    finally:
+        spark.conf.set(_SHUFFLE_KEY, prev)
 
 
 # When set to a dict, _tracer accumulates per-phase wall seconds into it
@@ -254,16 +299,19 @@ def init_crawl(
 ) -> int:
     """Write snapshot v0: seed frontier + its bloom filter. The seed
     frontier is cached across its two consumers (frontier write + bloom
-    build) so the canonicalize kernel and seed dedup run once, not twice."""
+    build) so the canonicalize kernel and seed dedup run once, not twice.
+    Runs inside sized_shuffle_scope over the seed frame."""
     _mark = _tracer()
-    frontier = seed_frontier(spark, seeds, cfg).cache()
-    try:
-        filters = build_bloom(frontier, cfg.bloom)
-        v = store.write_snapshot(frontier, filters, meta={"step": -1})
-        _mark("init_crawl (seed+bloom+snapshot)")
-        return v
-    finally:
-        frontier.unpersist()
+    frontier = seed_frontier(spark, seeds, cfg)
+    with sized_shuffle_scope(spark, frontier):
+        frontier = frontier.cache()
+        try:
+            filters = build_bloom(frontier, cfg.bloom)
+            v = store.write_snapshot(frontier, filters, meta={"step": -1})
+            _mark("init_crawl (seed+bloom+snapshot)")
+            return v
+        finally:
+            frontier.unpersist()
 
 
 def schedule_batch(
@@ -381,15 +429,19 @@ def link_candidates(
     ``superstep_one_step`` driver oracle); production stays xxhash64.
 
     ``cluster_partitions`` (round 7): when set to the bloom config's
-    ``n_partitions``, the dedup aggregate is pre-clustered on
-    ``partition_id = pmod(url_hash, P)`` — one exchange that BOTH the
-    dedup groupBy (partition_id is functionally dependent on url_hash,
-    so grouping by the pair is the same grouping) and the downstream
-    bloom-probe cogroup then satisfy, instead of one url_hash exchange
-    for the dedup plus a second partition_id exchange for the probe.
-    The output then carries the extra ``partition_id`` column, which
-    ``probe_bloom``/``with_partition_id`` reuse as-is. Same rows, same
-    values, one candidate-set shuffle fewer per superstep."""
+    ``n_partitions``, it is the modulus of ``partition_id =
+    pmod(url_hash, P)``, and the dedup aggregate is pre-clustered on
+    that column — one exchange that BOTH the dedup groupBy
+    (partition_id is functionally dependent on url_hash, so grouping by
+    the pair is the same grouping) and the downstream bloom-probe
+    cogroup then satisfy, instead of one url_hash exchange for the
+    dedup plus a second partition_id exchange for the probe. It sets
+    only the modulus: the exchange has ``spark.sql.shuffle.partitions``
+    tasks, the step's fan-out (sized_shuffle_scope), and the probe's
+    filter side is shuffled to match. The output carries the extra
+    ``partition_id`` column, which ``probe_bloom``/``with_partition_id``
+    reuse as-is. Same rows, same values, one candidate-set shuffle fewer
+    per superstep."""
     keyed = canonicalize_urls(links.select("url", "depth")).transform(
         lambda df: _with_keys(df, base_hash=base_hash)
     )
@@ -397,7 +449,7 @@ def link_candidates(
         keyed = keyed.withColumn(
             "partition_id",
             F.pmod(F.col("url_hash"), F.lit(int(cluster_partitions))).cast("int"),
-        ).repartition(int(cluster_partitions), "partition_id")
+        ).repartition("partition_id")
         grouped = keyed.groupBy("partition_id", "url_hash")
     else:
         grouped = keyed.groupBy("url_hash")
@@ -646,11 +698,11 @@ def step_plan(
     # the crawl is measured byte-bound — shuffling/sorting/comparing
     # 60-100 B URL strings as the join key is the largest avoidable byte
     # cost at 100 TB (VERDICT r4 #2). A content store bucketed by
-    # url_hash makes the docs side shuffle-free every step
-    # (tools/cluster_bench.py CB_BUCKETED). Docs lacking a url_hash
-    # column get xxhash64(url) computed in-scan (the frontier's
-    # production hash — seed_frontier/link_candidates default); a
-    # precomputed docs url_hash MUST follow the same convention. The
+    # url_hash makes the docs side shuffle-free every step. Docs
+    # lacking a url_hash column get xxhash64(url) computed in-scan (the
+    # frontier's production hash — seed_frontier/link_candidates
+    # default); a precomputed docs url_hash MUST follow the same
+    # convention. The
     # url-equality post-filter costs string compares only on hash-equal
     # pairs and makes a 64-bit collision (expected ~3 at 10^10 URLs)
     # drop the collided row instead of fetching the wrong document.
@@ -707,14 +759,20 @@ def frontier_step(
     The whole step (plan build AND the committing action) runs inside
     ``window_group_limit_scope``, so per_host_k above the session's
     windowGroupLimitThreshold keeps the map-side skew guard without
-    permanently mutating session conf."""
-    with window_group_limit_scope(spark, cfg.per_host_k):
-        return _frontier_step_impl(spark, store, docs, rules, cfg)
+    permanently mutating session conf, and inside
+    ``sized_shuffle_scope`` over the frontier and ``docs``, so the
+    step's fan-out follows its input size."""
+    frontier = store.read_frontier(spark)
+    with window_group_limit_scope(spark, cfg.per_host_k), sized_shuffle_scope(
+        spark, frontier, docs
+    ):
+        return _frontier_step_impl(spark, store, frontier, docs, rules, cfg)
 
 
 def _frontier_step_impl(
     spark: SparkSession,
     store: FrontierStore,
+    frontier: DataFrame,
     docs: DataFrame,
     rules,
     cfg: CrawlConfig,
@@ -723,7 +781,6 @@ def _frontier_step_impl(
     meta = store.meta()
     step = int(meta.get("step", -1)) + 1
 
-    frontier = store.read_frontier(spark)
     filters = store.read_filters(spark)
     host_state = store.read_host_state(spark)  # (host, next_allowed) or None
     _mark("snapshot reads")
@@ -968,43 +1025,41 @@ def refresh_step(spark: SparkSession, store: FrontierStore, cfg: CrawlConfig) ->
     chain, so dropping them would lose seen-ness and politeness state —
     same carry-forward as commit_step's compaction). One map-side-
     combinable sum + one join on the store's own bucketing key: no
-    content re-scan, no window, no skew point."""
+    content re-scan, no window, no skew point. Runs inside
+    sized_shuffle_scope over the increments and the frontier."""
     path = os.path.join(store.root, "indeg")
     if not os.path.exists(path):
         return
-    indeg = (
-        spark.read.parquet(path)
-        .groupBy("url_hash")
-        .agg(F.sum("n_refs").alias("indeg"))
-    )
-    refreshed = apply_indegree_refresh(
-        store.read_frontier(spark), indeg, cfg.refresh_alpha
-    )
-    filters = store.read_filters(spark)
-    if filters is not None:
-        from ..operators.seen import build_bloom, merge_bloom
+    increments = spark.read.parquet(path)
+    frontier = store.read_frontier(spark)
+    with sized_shuffle_scope(spark, increments, frontier):
+        indeg = increments.groupBy("url_hash").agg(F.sum("n_refs").alias("indeg"))
+        refreshed = apply_indegree_refresh(frontier, indeg, cfg.refresh_alpha)
+        filters = store.read_filters(spark)
+        if filters is not None:
+            from ..operators.seen import merge_bloom
 
-        if store.pending_deltas():
-            # Deferred-increment catch-up (round-7 ADVICE, high): under
-            # the r6 deferral policy the carried filters cover BASE keys
-            # only, and write_snapshot resets the delta chain — so the
-            # uncompacted deltas' keys must fold into the bloom here
-            # (mirroring commit_step's compaction catch-up) or the next
-            # frontier_step probes them definitely-new and re-queues
-            # already-fetched URLs over their fetched rows.
-            filters = merge_bloom(
-                filters,
-                build_bloom(store.read_keys(spark, deltas_only=True), cfg.bloom),
-            )
-        else:
-            filters = merge_bloom(filters, filters.limit(0))  # one row/partition
-    store.write_snapshot(
-        refreshed,
-        filters,
-        meta=store.meta(),
-        host_state=store.read_host_state(spark),
-    )
-
+            if store.pending_deltas():
+                # Deferred-increment catch-up (round-7 ADVICE, high):
+                # under the r6 deferral policy the carried filters cover
+                # BASE keys only, and write_snapshot resets the delta
+                # chain — so the uncompacted deltas' keys must fold into
+                # the bloom here (mirroring commit_step's compaction
+                # catch-up) or the next frontier_step probes them
+                # definitely-new and re-queues already-fetched URLs over
+                # their fetched rows.
+                filters = merge_bloom(
+                    filters,
+                    build_bloom(store.read_keys(spark, deltas_only=True), cfg.bloom),
+                )
+            else:
+                filters = merge_bloom(filters, filters.limit(0))  # one row/partition
+        store.write_snapshot(
+            refreshed,
+            filters,
+            meta=store.meta(),
+            host_state=store.read_host_state(spark),
+        )
 
 def crawl_order(spark: SparkSession, store: FrontierStore) -> DataFrame:
     """The reproducible crawl order: fetched rows sorted by the virtual

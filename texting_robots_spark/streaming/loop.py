@@ -323,7 +323,9 @@ def make_batch_processor(
         # the batch superstep's conf scope, over the whole batch body:
         # schedule_batch's skew guard needs it in effect when the
         # batch's ACTIONS run, and it must not leak into other queries
-        # on the session (round-5 ADVICE).
+        # on the session (round-5 ADVICE). Micro-batches keep the
+        # session's shuffle fan-out: they plan in the stream's session,
+        # and the batch superstep's sized_shuffle_scope does not apply.
         with window_group_limit_scope(spark, cfg.per_host_k):
             _process_body(batch_df, batch_id)
 
