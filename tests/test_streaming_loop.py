@@ -3,6 +3,10 @@ URLs — not replay pre-computed eligible sets — and still reproduce the
 batch crawl exactly: same (url_hash, fetch_time) fetch set across both
 steps AND the same discovered-URL set (NOTES_r2 caveat 5 closed)."""
 
+import os
+import time
+from types import SimpleNamespace
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -20,6 +24,7 @@ from texting_robots_spark.sources.synth import (
     synth_robots_df,
     synth_universe,
 )
+from texting_robots_spark.streaming import loop
 from texting_robots_spark.streaming.loop import run_stream_crawl
 
 
@@ -87,6 +92,9 @@ def test_stream_crawl_loop_matches_batch_crawl(
         workdir=str(tmp_path / "loop"),
     )
     assert res["steps"] == 2
+    # the query is stateless: admission rides the exact seen log, so
+    # the checkpoint holds no state store
+    assert not (tmp_path / "loop" / "ckpt" / "state").exists()
     out = spark.read.parquet(res["out"])
     got_fetch = {
         (r["url_hash"], round(r["fetch_time"], 6)) for r in out.collect()
@@ -139,12 +147,12 @@ def test_stream_crawl_rejects_docs_url_hash_off_convention(spark, tmp_path):
 
 def test_stream_crawl_exact_backstop_survives_tiny_bloom(spark, tmp_path):
     """Adversarial bloom sizing: 256 bits per partition over hundreds of
-    URLs guarantees heavy false-positive rates. Drop-mode streaming
-    would lose discoveries; the annotate-mode filter + exact anti-join
-    backstop (streaming/loop.py seen/ table) must still reproduce the
-    batch crawl's fetch set and discovered set bit-for-bit (the batch
-    path has its own exact backstop, so it is ground truth at ANY
-    bloom size)."""
+    URLs guarantees heavy false-positive rates in the BATCH step's
+    bloom prefilter. The batch step's exact key-set backstop must
+    still rescue every false positive: the stream, whose exact seen
+    log is the seen-set with no bloom in front of it, is the ground
+    truth here, and the batch crawl must reproduce its fetch set and
+    discovered set bit-for-bit."""
     documents, robots, seeds = synth_universe(
         n_hosts=10, n_docs=200, n_seeds=16, seed=11
     )
@@ -189,7 +197,7 @@ def test_stream_crawl_exact_backstop_survives_tiny_bloom(spark, tmp_path):
     assert discovered == batch_urls
 
 
-def test_stream_crawl_restart_resumes_from_checkpoint(spark, tmp_path):
+def test_stream_crawl_restart_resumes_from_checkpoint(spark, tmp_path, monkeypatch):
     """Driver-restart resume (north rule: resumable from checkpoint):
     run ONE step of a 3-step crawl, stop the query, then start a NEW
     query on the same checkpoint + workdir. The resumed query's batch
@@ -198,7 +206,9 @@ def test_stream_crawl_restart_resumes_from_checkpoint(spark, tmp_path):
     straight 3-step batch crawl — fetch times included. The round-4
     shape fails this: its in-memory step counter reset to 0 on restart
     while batch ids resumed, rewinding t0 and double-scheduling
-    blocked hosts."""
+    blocked hosts. The first session polls slowly, so the trigger
+    after its one step fires before stop(): it must still stop at
+    exactly one step and leave that batch to the resume."""
     documents, robots, seeds = synth_universe(
         n_hosts=10, n_docs=200, n_seeds=16, seed=13
     )
@@ -231,10 +241,23 @@ def test_stream_crawl_restart_resumes_from_checkpoint(spark, tmp_path):
     }
 
     wd = str(tmp_path / "loop")
-    first = run_stream_crawl(
-        spark, docs_df, rules, seeds, cfg, n_steps=3, workdir=wd, stop_after=1
-    )
+
+    def late_poll(s):
+        # the loop notices its step only once the next trigger has
+        # fired and has had the time to run a whole batch
+        for _ in range(240):
+            if os.path.exists(os.path.join(wd, "ckpt", "offsets", "1")):
+                break
+            time.sleep(s)
+        time.sleep(10)
+
+    with monkeypatch.context() as m:
+        m.setattr(loop, "time", SimpleNamespace(time=time.time, sleep=late_poll))
+        first = run_stream_crawl(
+            spark, docs_df, rules, seeds, cfg, n_steps=3, workdir=wd, stop_after=1
+        )
     assert first["steps"] == 1  # stopped mid-crawl
+    assert os.listdir(os.path.join(wd, "out")) == ["epoch=0"]
     # explicit generous stream timeout: under full-suite load this
     # resumed query has flaked past the 300s default (observed once in
     # a 476-test sweep); the assertion is about RESUME semantics, not
@@ -287,11 +310,11 @@ def test_crash_replay_mid_commit_reproduces_batch_crawl(spark, tmp_path, gate_mo
     foreachBatch does), and the final out/ + discovered sets must equal
     the batch crawl's EXACTLY — including row COUNTS, which the round-4
     shape fails (append-mode out/ duplicates the crashed attempt's
-    fetched rows). Candidates enter with maybe_seen=True for every row
-    (a degenerate bloom with FPR 1.0): admission then rides entirely on
-    the epoch-partitioned exact backstop, the surface under test.
-    Parametrized over both gate modes: the sharded cogroup gate's
-    replay behavior must match the broadcast gate's."""
+    fetched rows). Each batch is the raw candidate file, exactly what
+    the stream delivers, and admission rides on the epoch-partitioned
+    exact seen log, the surface under test. Parametrized over both gate
+    modes: the sharded cogroup gate's replay behavior must match the
+    broadcast gate's."""
     import os
 
     import pytest
@@ -363,10 +386,8 @@ def test_crash_replay_mid_commit_reproduces_batch_crawl(spark, tmp_path, gate_mo
         )
 
     def load(step):
-        return (
-            spark.read.schema(CAND_DDL)
-            .parquet(os.path.join(workdir, "src", f"step{step}.parquet"))
-            .withColumn("maybe_seen", F.lit(True))
+        return spark.read.schema(CAND_DDL).parquet(
+            os.path.join(workdir, "src", f"step{step}.parquet")
         )
 
     # every fail_after point, each attempt a same-id replay of the last

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.udfs import canonicalize_urls
 from ..operators.cuckoo import CuckooConfig, build_cuckoo, delete_cuckoo, probe_cuckoo
-from ..sources.frontier_store import FrontierStore
+from ..sources.frontier_store import CODEC, FrontierStore
 from ..sources.local import local_frame
 from .superstep import _with_keys, sized_shuffle_scope
 
@@ -76,7 +76,7 @@ def compact_frontier(
                     f"cuckoo filter over capacity: {n_dropped} keys dropped — "
                     f"increase CuckooConfig.n_buckets or n_partitions"
                 )
-            done.write.mode("append").option("compression", store.codec).parquet(
+            done.write.mode("append").option("compression", CODEC).parquet(
                 store.archive_dir
             )
             n_q, n_a = queued.count(), done.count()
@@ -84,9 +84,9 @@ def compact_frontier(
                 queued, filters=None, meta={**store.meta(), "compacted": True}
             )
             # cuckoo filters live beside the snapshot's bloom slot
-            filters.write.mode("overwrite").option(
-                "compression", store.codec
-            ).parquet(os.path.join(store.root, "cuckoo_filters"))
+            filters.write.mode("overwrite").option("compression", CODEC).parquet(
+                os.path.join(store.root, "cuckoo_filters")
+            )
         finally:
             filters.unpersist()
             frontier.unpersist()
@@ -214,7 +214,7 @@ def schedule_recrawl(
             .select("url_hash")
         )
         updated = delete_cuckoo(filters, present, cfg)
-        updated.write.mode("overwrite").option("compression", store.codec).parquet(
+        updated.write.mode("overwrite").option("compression", CODEC).parquet(
             os.path.join(store.root, "cuckoo_filters_next")
         )
         # atomic-ish swap via rename (same idea as the manifest commit)

@@ -186,24 +186,11 @@ def _tracer():
 class CrawlConfig:
     agent: str = "TRSBot"
     per_host_k: int = 8
-    # optional GLOBAL cap on a step's batch. None (default) skips the
-    # global ordered limit entirely: per-host allowances already bound
-    # the batch to hosts x per_host_k, and the global sort costs a
-    # range-partitioning sampling pass per step at scale.
-    batch_size: Optional[int] = None
     step_seconds: float = 60.0
     default_delay: float = 0.25
     max_depth: int = 50
     bloom: BloomConfig = field(default_factory=BloomConfig)
     on_parse_error: str = "disallow"
-    # On the first step of a crawl session, sample a few docs rows and
-    # verify a PRECOMPUTED docs.url_hash actually equals xxhash64(url)
-    # (the frontier's convention): a docs table hashed with a different
-    # convention (e.g. this repo's md5 oracle twin) would make the fetch
-    # inner join silently match nothing (round-5 ADVICE). Cost: one
-    # 16-row job once per crawl. Set False only when the docs store is
-    # known-conformant and the scan head is expensive.
-    verify_docs_hash: bool = True
     # link-graph priority refresh cadence: every k supersteps, re-weight
     # QUEUED frontier priorities by observed in-degree (refresh_priorities
     # formula, alpha=refresh_alpha). None (default) = off. When set,
@@ -384,7 +371,7 @@ def schedule_batch(
     else:
         delay_join = eligible.join(delays, "host", "left")
     w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_hash"))
-    ranked = (
+    return (
         delay_join
         .withColumn(
             "crawl_delay", F.coalesce("crawl_delay", F.lit(float(cfg.default_delay)))
@@ -406,13 +393,6 @@ def schedule_batch(
         )
         .withColumn("fetch_time", F.lit(t0) + (F.col("rank") - 1) * F.col("crawl_delay"))
     )
-    # optional global batch cap: deterministic total order; per-host
-    # top-k already bounded the row count so this sort is small
-    if cfg.batch_size is not None:
-        return ranked.orderBy(F.desc("priority"), F.asc("url_hash")).limit(
-            cfg.batch_size
-        )
-    return ranked
 
 
 def link_candidates(
@@ -568,7 +548,9 @@ def _verify_docs_hash_convention(docs: DataFrame) -> None:
     frontier's xxhash64(url) convention (round-5 ADVICE: a docs table
     hashed differently makes the fetch join silently fetch nothing).
     Reads the head of one partition (limit before the check, so the
-    job never scans past the first 16 usable rows)."""
+    job never scans past the first 16 usable rows). It runs on step 0
+    of every crawl session, with no switch to skip it: docs are outside
+    input, and the check costs one 16-row job."""
     sample = (
         docs.select("url", "url_hash")
         .where(F.col("url").isNotNull() & F.col("url_hash").isNotNull())
@@ -583,10 +565,8 @@ def _verify_docs_hash_convention(docs: DataFrame) -> None:
                 f"xxhash64(url) convention (url={r['url']!r} carries "
                 f"url_hash={r['url_hash']}, xxhash64 gives "
                 f"{r['_expect']}): the fetch join would match nothing. "
-                f"Recompute the column (or drop it and let frontier_step "
-                f"derive it in-scan), or set "
-                f"CrawlConfig.verify_docs_hash=False only if the store "
-                f"is known-conformant."
+                f"Recompute the column, or drop it and let frontier_step "
+                f"derive it in-scan."
             )
 
 
@@ -707,7 +687,7 @@ def step_plan(
     # pairs and makes a 64-bit collision (expected ~3 at 10^10 URLs)
     # drop the collided row instead of fetching the wrong document.
     if "url_hash" in docs.columns:
-        if cfg.verify_docs_hash and step == 0:
+        if step == 0:
             _verify_docs_hash_convention(docs)
         doc_key = F.col("url_hash")
     else:

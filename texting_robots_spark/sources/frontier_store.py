@@ -46,6 +46,12 @@ HOST_STATE_DDL = "host string, next_allowed double"
 # the store owns its layout, so per-read parquet schema inference — a
 # driver-side footer read on every file of every snapshot table, paid
 # three tables x every superstep — is pure overhead (guide §6/§7.3).
+# Every store write, and plans/recrawl.py's archive and cuckoo writes,
+# use zstd: the crawl is measured byte-bound (BENCH/BASELINE.md
+# host-ceiling analysis) and every store write is on the step's critical
+# path — zstd deltas measured ~6% off the bench crawl line vs snappy,
+# and the gap widens wherever storage bandwidth is the scarcer resource.
+CODEC = "zstd"
 
 
 class FrontierStore:
@@ -69,18 +75,11 @@ class FrontierStore:
         root: str,
         n_buckets: int = 32,
         compact_every: int = 4,
-        codec: str = "zstd",
     ):
-        # zstd by default: the crawl is measured byte-bound (BENCH/
-        # BASELINE.md host-ceiling analysis) and every store write is on
-        # the step's critical path — zstd deltas measured ~6% off the
-        # bench crawl line vs snappy, and the gap widens wherever
-        # storage bandwidth is the scarcer resource.
         self.root = root
         self.archive_dir = os.path.join(root, "archive")
         self.n_buckets = n_buckets
         self.compact_every = compact_every
-        self.codec = codec
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
 
     # -- manifest ---------------------------------------------------------
@@ -139,7 +138,7 @@ class FrontierStore:
                 )
                 .repartition(self.n_buckets, "partition_salt")
                 .write.mode("overwrite")
-                .option("compression", self.codec)
+                .option("compression", CODEC)
                 .parquet(self._snap_dir(version, "frontier"))
             )
 
@@ -154,13 +153,13 @@ class FrontierStore:
         if filters is not None:
             side_writes.append(
                 lambda: filters.write.mode("overwrite")
-                .option("compression", self.codec)
+                .option("compression", CODEC)
                 .parquet(self._snap_dir(version, "filters"))
             )
         if host_state is not None:
             side_writes.append(
                 lambda: host_state.write.mode("overwrite")
-                .option("compression", self.codec)
+                .option("compression", CODEC)
                 .parquet(self._snap_dir(version, "host_state"))
             )
         if side_writes:
@@ -220,9 +219,9 @@ class FrontierStore:
         # Only the filters increment must WAIT for the delta write: its
         # callable may consult Observation counters that action fires.
         def _delta_write():
-            updates.write.mode("overwrite").option(
-                "compression", self.codec
-            ).parquet(self._snap_dir(version, "delta"))
+            updates.write.mode("overwrite").option("compression", CODEC).parquet(
+                self._snap_dir(version, "delta")
+            )
 
         if host_state is not None:
             from concurrent.futures import ThreadPoolExecutor
@@ -230,9 +229,9 @@ class FrontierStore:
             with ThreadPoolExecutor(2) as pool:
                 d = pool.submit(_delta_write)
                 h = pool.submit(
-                    lambda: host_state.write.mode("overwrite").option(
-                        "compression", self.codec
-                    ).parquet(self._snap_dir(version, "host_state"))
+                    lambda: host_state.write.mode("overwrite")
+                    .option("compression", CODEC)
+                    .parquet(self._snap_dir(version, "host_state"))
                 )
                 d.result()
                 _mark("delta write")
@@ -244,7 +243,7 @@ class FrontierStore:
             filters_increment = filters_increment()
         if filters_increment is not None:
             filters_increment.write.mode("overwrite").option(
-                "compression", self.codec
+                "compression", CODEC
             ).parquet(self._snap_dir(version, "filters"))
         _mark("side writes (filters/host_state)")
         manifest["current"] = version

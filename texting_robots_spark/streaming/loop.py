@@ -4,8 +4,8 @@ Round-2's streaming layer replayed pre-computed eligible sets; this
 module closes the loop (NOTES_r2 caveat 5). Architecture:
 
     candidate files (src/)  ->  readStream
-        -> stream_seen_filter          [stateful: bloom bits in group state]
         -> foreachBatch:
+             anti-join against the SEEN log (epochs < batchId)
              union with the PENDING side table (politeness leftovers)
              -> superstep.step_plan     [the batch superstep's step core:
                                          eligibility, schedule, gate,
@@ -15,29 +15,29 @@ module closes the loop (NOTES_r2 caveat 5). Architecture:
              -> NEW candidate file written back into src/   <-- feedback
 
 One micro-batch == one crawl step (maxFilesPerTrigger=1; every step
-produces exactly one candidate file). The URL-seen set lives in
-STREAMING GROUP STATE — rows the bloom has seen never re-enter the
-loop — while per-host politeness state and the unscheduled-leftover
-("pending") set are side parquet tables swapped atomically per batch,
-exactly the batch superstep's host_state mechanics.
+produces exactly one candidate file, url_hash-unique because
+seed_frontier and link_candidates both group by url_hash). The query
+is stateless: it keeps no Structured Streaming state store and runs no
+stateful operator. The URL-seen set is the ``seen/`` log, one parquet
+file of admitted url_hashes per epoch, and every candidate is
+anti-joined against it exactly; per-host politeness state and the
+unscheduled-leftover ("pending") set are side parquet tables swapped
+atomically per batch, exactly the batch superstep's host_state
+mechanics.
 
 Semantics match run_crawl step for step: both drivers build the step
 with the same ``step_plan`` call, so a 2-step batch crawl and this loop
 produce the identical (url_hash, fetch_time) fetch set AND the
 identical discovered-URL set (pinned in pytest). What stays here is
-what the stream keeps instead of a frontier store: the seen-epoch
-backstop, the pending/host_state epochs and the feedback file.
+what the stream keeps instead of a frontier store: the seen log, the
+pending/host_state epochs and the feedback file.
 
-Scale notes: the seen set is bounded group state (n_bits/8 bytes per
-hash partition); pending/host_state are O(frontier backlog) and
-O(active hosts) parquet tables; the feedback file is O(per-step
-discoveries). The stateful bloom runs in ANNOTATE mode (emit_maybe):
-maybe_seen rows go through an exact anti-join against the ``seen/``
-side table (url_hash of every row ever admitted) inside foreachBatch —
-the same bloom-prefilter + exact-backstop shape as the batch superstep
-(operators/seen.py), so a bloom false positive can NOT drop a
-genuinely-new URL at any n_bits. The anti-join probe side is only the
-maybe_seen slice (FPR + true repeats), not the stream.
+Scale notes: the seen log is O(discovered URLs) 8-byte keys;
+pending/host_state are O(frontier backlog) and O(active hosts) parquet
+tables; the feedback file is O(per-step discoveries). No bloom sits in
+front of the seen anti-join: every maybe-seen row would still need the
+exact check against the whole log, so a prefilter cannot save the
+key-side scan, only trim the batch-sized probe side.
 
 Crash-replay safety — EVERY batch artifact is keyed on the batchId
 (round 5; foreachBatch replays a failed batch under the SAME id, and
@@ -62,8 +62,11 @@ Superseded pending/host_state epochs (< batchId-1) are pruned at the
 end of each batch — a replay of batch b only ever reads epoch b-1 —
 so the directory listing stays O(1) over long crawls. The seen log
 keeps one small file of NEW hashes per epoch (the exact-membership
-record; at 10^10 scale, compact it periodically like the batch
-store's bloom increments).
+record), so its listing grows by one file per step.
+
+Every epoch table is read with its schema passed explicitly, as the
+frontier store reads its own: the loop owns the layout, so no batch
+pays a footer read per prior epoch to infer one.
 
 The whole per-batch step is built by ``make_batch_processor`` —
 module-level so the crash-injection test drives it directly with a
@@ -87,14 +90,16 @@ from ..plans.superstep import (
     step_plan,
     window_group_limit_scope,
 )
-from .stateful import stream_seen_filter
+from ..sources.frontier_store import HOST_STATE_DDL
 
 __all__ = ["run_stream_crawl", "make_batch_processor", "CAND_DDL"]
 
-CAND_DDL = (
-    "url_hash long, url string, host string, priority double, depth int, "
-    "step int"
+# pending rows are admitted candidates: the candidate columns minus step
+PENDING_DDL = (
+    "url_hash long, url string, host string, priority double, depth int"
 )
+CAND_DDL = PENDING_DDL + ", step int"
+SEEN_DDL = "url_hash long"
 
 
 def _write_one_file(df: DataFrame, stage_dir: str, dest: str) -> None:
@@ -127,34 +132,34 @@ def _is_complete(epoch_dir: str) -> bool:
     return os.path.exists(os.path.join(epoch_dir, _COMMIT_MARKER))
 
 
-def _prior_epoch_paths(seen_dir: str, batch_id: int) -> List[str]:
-    """Seen-log partitions STRICTLY below ``batch_id``. A replayed
-    micro-batch (foreachBatch re-runs a failed batch under the same id)
-    must never anti-join against its own epoch's half-committed rows —
-    excluding ``epoch=batch_id`` (and anything later) makes the
-    read/write sets disjoint and the replay lossless. Completeness is
-    keyed on the _COMMITTED marker, not part-file presence."""
-    return sorted(
+def _epoch(epoch_dir: str) -> int:
+    return int(os.path.basename(epoch_dir).split("=", 1)[1])
+
+
+def _prior_epoch_paths(table_dir: str, batch_id: float) -> List[str]:
+    """Complete epoch partitions STRICTLY below ``batch_id``, in epoch
+    order. A replayed micro-batch (foreachBatch re-runs a failed batch
+    under the same id) must never anti-join against its own epoch's
+    half-committed rows — excluding ``epoch=batch_id`` (and anything
+    later) makes the read/write sets disjoint and the replay lossless.
+    Completeness is keyed on the _COMMITTED marker, not part-file
+    presence."""
+    return [
         d
-        for d in glob.glob(os.path.join(seen_dir, "epoch=*"))
-        if int(os.path.basename(d).split("=", 1)[1]) < batch_id
-        and _is_complete(d)
-    )
+        for d in sorted(glob.glob(os.path.join(table_dir, "epoch=*")), key=_epoch)
+        if _epoch(d) < batch_id and _is_complete(d)
+    ]
 
 
-def _latest_epoch_path(table_dir: str, batch_id: int) -> Optional[str]:
+def _latest_epoch_path(table_dir: str, batch_id: float) -> Optional[str]:
     """The most recent COMPLETE epoch partition strictly below
     ``batch_id`` — how a batch reads its predecessor's pending/
     host_state checkpoint. Its own epoch (a crashed attempt's
     half-state) and unmarked dirs (crash between the parquet write and
     the _COMMITTED marker) are never candidates, so a replay sees
     exactly what the first attempt saw."""
-    best = -1
-    for d in glob.glob(os.path.join(table_dir, "epoch=*")):
-        e = int(os.path.basename(d).split("=", 1)[1])
-        if e < batch_id and e > best and _is_complete(d):
-            best = e
-    return None if best < 0 else os.path.join(table_dir, f"epoch={best}")
+    prior = _prior_epoch_paths(table_dir, batch_id)
+    return prior[-1] if prior else None
 
 
 def _completed_steps(workdir: str) -> int:
@@ -163,12 +168,8 @@ def _completed_steps(workdir: str) -> int:
     write, so its highest committed epoch is the last completed batch).
     Lets a resumed run whose target is already met return immediately
     instead of waiting out the stream timeout (round-5 ADVICE)."""
-    best = -1
-    for d in glob.glob(os.path.join(workdir, "host_state", "epoch=*")):
-        e = int(os.path.basename(d).split("=", 1)[1])
-        if e > best and _is_complete(d):
-            best = e
-    return best + 1
+    last = _latest_epoch_path(os.path.join(workdir, "host_state"), float("inf"))
+    return 0 if last is None else _epoch(last) + 1
 
 
 def _prune_epochs(table_dir: str, below: int) -> None:
@@ -176,7 +177,7 @@ def _prune_epochs(table_dir: str, below: int) -> None:
     ever reads epoch b-1, so older pending/host_state checkpoints are
     dead weight and the listing stays O(1) over long crawls."""
     for d in glob.glob(os.path.join(table_dir, "epoch=*")):
-        if int(os.path.basename(d).split("=", 1)[1]) < below:
+        if _epoch(d) < below:
             shutil.rmtree(d, ignore_errors=True)
 
 
@@ -216,23 +217,19 @@ def make_batch_processor(
             raise RuntimeError(f"injected crash after {phase} write (test hook)")
 
     def _process_body(batch_df: DataFrame, batch_id: int) -> None:
-        # exact backstop (batch superstep §7): rows the bloom flags
-        # maybe_seen are re-checked against the seen log — only the
-        # maybe slice pays the join, and a false positive can't drop a
-        # new URL. definite-new rows skip the exact check.
-        probed = batch_df.select(
-            "url_hash", "url", "host", "priority", "depth", "maybe_seen"
-        )
-        definite = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
+        # admission: the batch's candidates minus every url_hash an
+        # earlier epoch admitted — the exact seen-set, one path for
+        # every row. The batch is one url_hash-unique candidate file,
+        # so nothing needs deduping within it.
+        fresh = batch_df.select("url_hash", "url", "host", "priority", "depth")
         prior_epochs = _prior_epoch_paths(seen_dir, batch_id)
         if prior_epochs:
-            rescued = maybe.join(
-                spark.read.parquet(*prior_epochs), "url_hash", "left_anti"
+            fresh = fresh.join(
+                spark.read.schema(SEEN_DDL).parquet(*prior_epochs),
+                "url_hash",
+                "left_anti",
             )
-        else:
-            rescued = maybe
-        fresh = definite.unionByName(rescued).cache()
+        fresh = fresh.cache()
         plan = None
         try:
             # record this batch's admissions BEFORE they can re-enter
@@ -244,11 +241,19 @@ def make_batch_processor(
             _fail("seen")
             prev_pending = _latest_epoch_path(pending_dir, batch_id)
             if prev_pending:
-                cands = spark.read.parquet(prev_pending).unionByName(fresh)
+                cands = (
+                    spark.read.schema(PENDING_DDL)
+                    .parquet(prev_pending)
+                    .unionByName(fresh)
+                )
             else:
                 cands = fresh
             prev_hs = _latest_epoch_path(hstate_dir, batch_id)
-            host_state = spark.read.parquet(prev_hs) if prev_hs else None
+            host_state = (
+                spark.read.schema(HOST_STATE_DDL).parquet(prev_hs)
+                if prev_hs
+                else None
+            )
             # the step core at the virtual clock of the DURABLE batch_id:
             # an in-memory step counter resets on driver restart while
             # the checkpoint resumes batch ids mid-sequence, silently
@@ -274,8 +279,8 @@ def make_batch_processor(
                 os.path.join(out, f"epoch={batch_id}")
             )
             _fail("out")
-            # feedback: the canonical link candidates; the stateful
-            # bloom upstream drops everything already seen, so this
+            # feedback: the canonical link candidates; the next batch's
+            # seen anti-join drops everything already admitted, so this
             # file may feed zero fresh rows — the NEXT batch still
             # fires (one file = one step) and schedules the backlog
             feedback = plan.candidates.select(
@@ -373,18 +378,14 @@ def run_stream_crawl(
     os.makedirs(src, exist_ok=True)
     os.makedirs(out, exist_ok=True)
     os.makedirs(discovered, exist_ok=True)
+    dirs = {"out": out, "src": src, "discovered": discovered}
 
     # resume fast-path: if the durable epoch markers already record the
     # target as met, don't start (and then time out) an idle stream
     target = n_steps if stop_after is None else min(int(stop_after), n_steps)
     already = _completed_steps(workdir)
     if already >= target:
-        return {
-            "out": out,
-            "src": src,
-            "discovered": discovered,
-            "steps": already,
-        }
+        return {**dirs, "steps": already}
 
     # step 0's candidate file: the canonicalized, deduped seed set.
     # Written only when absent: on a resume the checkpoint has already
@@ -402,6 +403,14 @@ def run_stream_crawl(
     )
 
     def _run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # the trigger after the target step can fire before stop()
+        # lands, and a batch that starts runs to completion: fail it
+        # unrun instead, so the checkpoint replays it on resume and the
+        # session completes exactly ``target`` steps
+        if batch_id >= target:
+            raise RuntimeError(
+                f"batch {batch_id} is past this session's {target} steps"
+            )
         # keep a failing batch's exception, so the caller gets it as
         # raised (e.g. the step-0 docs.url_hash check's ValueError)
         # instead of waiting out the timeout
@@ -416,9 +425,8 @@ def run_stream_crawl(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    deduped = stream_seen_filter(stream, cfg.bloom, emit_maybe=True)
     query = (
-        deduped.writeStream.foreachBatch(_run_batch)
+        stream.writeStream.foreachBatch(_run_batch)
         .option("checkpointLocation", ckpt)
         .trigger(processingTime="1 second")
         .start()
@@ -440,15 +448,12 @@ def run_stream_crawl(
         # and the checkpoint replays it on resume
         failed = "error" in state and state.get("done", 0) < target
         query.stop()
-        if not failed:
+        # a met target stands: the query may have died on the trigger
+        # past it, failed on purpose above
+        if not failed and state.get("done", 0) < target:
             query.awaitTermination(60)
     if failed:
         raise state["error"]
-    return {
-        "out": out,
-        "src": src,
-        "discovered": discovered,
-        # absolute completed steps: the in-memory sentinel when batches
-        # ran this session, else what the durable markers already held
-        "steps": max(state.get("done", 0), already),
-    }
+    # absolute completed steps: the in-memory sentinel when batches ran
+    # this session, else what the durable markers already held
+    return {**dirs, "steps": max(state.get("done", 0), already)}
