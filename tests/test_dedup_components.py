@@ -4,16 +4,20 @@ candidate PAIRS into GROUPS. The driver oracle (dedup_components)
 pins the full LSH->components pipeline against a DuckDB recursive-CTE
 closure; these tests pin the operator semantics directly: agreement
 with union-find ground truth, O(log n)-round chain convergence, input
-normalization, and determinism under repartitioning."""
+normalization, determinism under repartitioning and across fan-out, the
+max_iter warning, and the job and task budget of a small graph."""
 
+import logging
 import random
 
 from pyspark.sql import functions as F
 
+from test_superstep import _stage_tasks
 from texting_robots_spark.operators.dedup import (
     connected_components,
     resolve_duplicates,
 )
+from texting_robots_spark.sources.local import local_frame
 
 
 def _union_find_expected(edges):
@@ -130,3 +134,94 @@ def test_connected_components_deterministic_under_repartition(spark):
         for r in connected_components(df.repartition(13)).collect()
     }
     assert first == again
+
+
+_LOGGER = "texting_robots_spark.operators.dedup"
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+def _frame(spark, edges):
+    """Pairs as a LocalTableScan, which the planner can size (a
+    createDataFrame(list) RDD scan keeps the full fan-out)."""
+    return local_frame(
+        spark,
+        "id_a string, id_b string",
+        {"id_a": [a for a, _ in edges], "id_b": [b for _, b in edges]},
+    )
+
+
+def _chain(n):
+    return [(f"n{i:04d}", f"n{i+1:04d}") for i in range(n)]
+
+
+def test_connected_components_warns_at_max_iter(spark, caplog):
+    """A 201-node chain cannot contract to stars in one round: the
+    max_iter exit logs the warning instead of returning silently."""
+    with caplog.at_level(logging.WARNING, logger=_LOGGER):
+        connected_components(_frame(spark, _chain(200)), max_iter=1).collect()
+    assert any("did not converge" in r.getMessage() for r in caplog.records)
+
+
+def test_connected_components_converged_chain_logs_nothing(spark, caplog):
+    with caplog.at_level(logging.WARNING, logger=_LOGGER):
+        out = connected_components(_frame(spark, _chain(200))).collect()
+    assert {r["component"] for r in out} == {"n0000"}
+    assert not [r for r in caplog.records if r.name == _LOGGER]
+
+
+def test_connected_components_empty_pairs(spark, caplog):
+    with caplog.at_level(logging.WARNING, logger=_LOGGER):
+        out = connected_components(_frame(spark, [])).collect()
+    assert out == []
+    assert not [r for r in caplog.records if r.name == _LOGGER]
+
+
+# jobs connected_components runs on the two-groups graph, with the
+# collect of its output: one checkpoint of the edge set, then one job
+# set per round, with the fingerprint observed on the checkpoint
+_CC_JOB_BUDGET = 20
+
+
+def test_connected_components_job_budget(spark):
+    """A five-pair graph runs every stage as one task (the rounds sit in
+    the sized fan-out) and stays within the job budget (the fingerprint
+    rides each round's checkpoint job, with no aggregate job of its own)."""
+    pairs = _frame(
+        spark, [("d2", "d1"), ("d2", "d3"), ("d4", "d3"), ("d5", "d4"), ("d8", "d9")]
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = dag.nextJobId()
+    rows, tasks = _stage_tasks(spark, lambda: connected_components(pairs).collect())
+    jobs = dag.nextJobId() - job0
+    assert {r["node"]: r["component"] for r in rows} == {
+        "d2": "d1", "d3": "d1", "d4": "d1", "d5": "d1", "d9": "d8"
+    }
+    assert tasks and set(tasks) == {1}, tasks
+    assert jobs <= _CC_JOB_BUDGET, jobs
+
+
+def test_components_identical_sized_and_full_fan_out(spark):
+    """The sized fan-out (one task per stage here) and the session's
+    full fan-out (an advisory partition size of one byte) give the same
+    components and survivors."""
+    rnd = random.Random(5)
+    edges = [
+        (f"z{rnd.randrange(400):03d}", f"z{rnd.randrange(400):03d}")
+        for _ in range(300)
+    ]
+    pairs = _frame(spark, edges)
+    docs = local_frame(spark, "doc_id string", {"doc_id": [f"z{i:03d}" for i in range(400)]})
+
+    def run():
+        comp = sorted(tuple(r) for r in connected_components(pairs).collect())
+        res = sorted(tuple(r) for r in resolve_duplicates(docs, pairs).collect())
+        return comp, res
+
+    sized = run()
+    spark.conf.set(_ADVISORY, "1b")
+    try:
+        full = run()
+    finally:
+        spark.conf.unset(_ADVISORY)
+    assert sized == full
+    assert sized[0] and len(sized[1]) == 400

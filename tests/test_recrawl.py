@@ -49,6 +49,8 @@ def test_compact_then_recrawl_roundtrip(spark, tmp_path):
     assert counts["queued"] + counts["archived"] == n_total
     hot = store.read_frontier(spark)
     assert hot.where(F.col("state") != "queued").count() == 0
+    assert counts["queued"] == hot.count()
+    assert counts["archived"] == spark.read.parquet(store.archive_dir).count()
 
     # seen-check now runs against the cuckoo filters: every archived URL
     # still reads as seen

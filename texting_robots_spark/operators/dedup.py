@@ -24,7 +24,7 @@ from typing import List, Optional, Sequence, Tuple
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -569,6 +569,11 @@ def simhash_near_dups(
     )
 
 
+def _edge(hi: str, lo: str) -> Column:
+    """One (hi, lo) edge struct, for emitting several edges per row."""
+    return F.struct(F.col(hi).alias("hi"), F.col(lo).alias("lo"))
+
+
 def connected_components(
     pairs: DataFrame,
     src_col: str = "id_a",
@@ -592,9 +597,15 @@ def connected_components(
     rounds where naive min-label propagation needs 10^4. Per round the
     shuffle key is the node id, payload two ids per edge: O(edges)
     bytes, no collect, no driver state beyond a convergence
-    fingerprint (count + hash-sum aggregate, one scalar row per
-    round). Node ids order by their natural type ordering; any total
+    fingerprint (count + hash-sum, an Observation on the round's
+    checkpoint, so a round is one job set with no separate aggregate
+    job). Node ids order by their natural type ordering; any total
     order works — min is just a canonical representative.
+
+    The rounds run inside sized_shuffle_scope over ``pairs``: a few
+    thousand pairs run one task per stage, where a task, not a row, is
+    the unit of cost; a 10^10-edge graph (or pairs the planner cannot
+    size) keeps the session's fan-out. Output does not depend on it.
 
     Components at web scale are near-dup clusters: typically tiny, but
     boilerplate can chain millions of docs into one component — star
@@ -602,100 +613,111 @@ def connected_components(
     per-round skew (the representative's degree grows, which is
     exactly the AQE skew-join shape; the hot key carries 2 ids/row).
     """
+    from ..plans.superstep import sized_shuffle_scope
+
     # canonical undirected edges (hi, lo), self-loops dropped
     hi = F.greatest(F.col(src_col), F.col(dst_col)).alias("hi")
     lo = F.least(F.col(src_col), F.col(dst_col)).alias("lo")
-    edges = (
-        pairs.select(hi, lo).where(F.col("hi") != F.col("lo")).distinct()
-    ).persist()
-    # NOTE (round 7): an eager cache-fill (edges.count()) before the
-    # first round was A/B-tested and LOSES (~12.5s vs ~17.6s on the
-    # sf1.0 resolve line): the lazy fill lets round 0's union branches
-    # populate the cache inside one wide stage, while a dedicated count
-    # job serializes a full extra pass. Left lazy deliberately.
-    prev_fp = None
-    converged = False
-    for _ in range(max_iter):
-        # large-star(E): symmetrize; every center u points its LARGER
-        # neighbors v at m = min(Γ(u) ∪ {u}); edges stay (hi, lo)
-        # because m <= u < v.
-        # Plan shape (round 7): ONE explicit repartition on the center
-        # key feeds both the min-aggregate and the join — exchange reuse
-        # executes the upstream subtree once per round instead of once
-        # per consumer (the old shape recomputed `dirs` for the join
-        # side and the whole large-star pipeline twice inside
-        # small-star: ~6 exchanges and duplicated joins per round, now
-        # 3 exchanges).
-        dirs = (
-            edges.select("hi", "lo")
-            .union(edges.select(F.col("lo").alias("hi"), F.col("hi").alias("lo")))
-            .repartition("hi")
-        )
-        mins = dirs.groupBy("hi").agg(
-            F.least(F.min("lo"), F.first("hi")).alias("m")
-        )
-        # no mid-round distinct: duplicates here are a bounded multiset
-        # (several centers pointing v at the same m) that the min
-        # aggregate below ignores and the end-of-round distinct
-        # collapses — dropping it removes a full (hi, lo) exchange per
-        # round without changing the edge SET semantics the published
-        # algorithm is defined on.
-        large = (
-            dirs.join(mins, "hi")
-            .where(F.col("lo") > F.col("hi"))
-            .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
+    with sized_shuffle_scope(pairs.sparkSession, pairs):
+        # NOTE: checkpointed eagerly, before round 0. The lazy persist
+        # this replaced left the pairs -> distinct subtree inside round
+        # 0's plan: round 0's checkpoint ran 28 jobs to round 1's 7. On
+        # fleet_dedup's 3,591 pairs (4 cores) the eager checkpoint, the
+        # observed fingerprint and the sized fan-out take the operator
+        # from 39 jobs to 14 (2 + 6 per round, two rounds), warm wall
+        # time from 3.3 s to 1.5 s and the dedup part's CPU from 12.6 s
+        # to 8.6 s. On the sf0.1 resolve line of bench.py (lazy pairs)
+        # best-of-3 went from 6.4/5.2 s to 3.0/3.3 s with identical
+        # survivors: the round-7 finding that an eager fill loses (on
+        # sf1.0, where the fill was a separate count job over a lazy
+        # persist) does not hold for this shape at sf0.1 on 4 cores.
+        edges = (
+            pairs.select(hi, lo)
             .where(F.col("hi") != F.col("lo"))
-            .repartition("hi")
-        )
-        # small-star(large-star(E)) — sequential composition per the
-        # published algorithm: edges already point larger -> smaller;
-        # every center points its smaller neighbors AND itself at
-        # their min
-        mins2 = large.groupBy("hi").agg(F.min("lo").alias("m"))
-        small = (
-            large.join(mins2, "hi")
-            .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
-            .union(mins2.select(F.col("hi"), F.col("m").alias("lo")))
-        )
-        # localCheckpoint (eager) truncates lineage: the iterated plan
-        # would otherwise grow geometrically (edges referenced 3x per
-        # round) and OOM the planner after ~8 rounds. Driver-fault
-        # recovery is not needed mid-operator — the input is
-        # deterministic, a failed run reruns from pairs.
-        new_edges = (
-            small.where(F.col("hi") != F.col("lo"))
             .distinct()
             .localCheckpoint(eager=True)
         )
-        # order-independent edge-set fingerprint; pmod bounds each term
-        # so the sum cannot overflow ANSI long arithmetic below ~4e9
-        # edges per partition-set
-        fp = new_edges.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.pmod(F.xxhash64("hi", "lo"), F.lit(1 << 31))).alias("h"),
-        ).collect()[0]
-        edges.unpersist()
-        edges = new_edges
-        if prev_fp == (fp["n"], fp["h"]):
-            converged = True
-            break
-        prev_fp = (fp["n"], fp["h"])
-    if not converged:
-        # Downstream consumers (resolve_duplicates' left join) assume one
-        # row per non-isolated node, which only per-component stars
-        # guarantee — surface a max_iter exit loudly instead of returning
-        # a silently-partial contraction (round-7 ADVICE).
-        _LOG.warning(
-            "connected_components: edge-set fingerprint did not converge "
-            "within max_iter=%d rounds — output may not be per-component "
-            "stars (multiple rows per node possible downstream). Re-run "
-            "with a larger max_iter.",
-            max_iter,
-        )
-    out = edges.select(
-        F.col("hi").alias("node"), F.col("lo").alias("component")
-    )
-    return out
+        prev_fp = None
+        for _ in range(max_iter):
+            # large-star(E): symmetrize; every center u points its LARGER
+            # neighbors v at m = min(Γ(u) ∪ {u}); edges stay (hi, lo)
+            # because m <= u < v.
+            # Plan shape (round 7): ONE explicit repartition on the center
+            # key feeds both the min-aggregate and the join — exchange
+            # reuse executes the upstream subtree once per round instead
+            # of once per consumer (the old shape recomputed `dirs` for
+            # the join side and the whole large-star pipeline twice inside
+            # small-star: ~6 exchanges and duplicated joins per round, now
+            # 3 exchanges). Both directions of an edge come out of one
+            # generator over one scan, not a union of two: a union's
+            # stage runs a task per partition of each branch, two tasks
+            # where the sized fan-out asks for one.
+            dirs = edges.select(
+                F.inline(F.array(_edge("hi", "lo"), _edge("lo", "hi")))
+            ).repartition("hi")
+            mins = dirs.groupBy("hi").agg(
+                F.least(F.min("lo"), F.first("hi")).alias("m")
+            )
+            # no mid-round distinct: duplicates here are a bounded
+            # multiset (several centers pointing v at the same m) that the
+            # min aggregate below ignores and the end-of-round distinct
+            # collapses — dropping it removes a full (hi, lo) exchange per
+            # round without changing the edge SET semantics the published
+            # algorithm is defined on.
+            large = (
+                dirs.join(mins, "hi")
+                .where(F.col("lo") > F.col("hi"))
+                .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
+                .where(F.col("hi") != F.col("lo"))
+                .repartition("hi")
+            )
+            # small-star(large-star(E)) — sequential composition per the
+            # published algorithm: edges already point larger -> smaller;
+            # every center points its smaller neighbors AND itself at
+            # their min. One generator emits both edges per joined row,
+            # so a center's own edge repeats once per neighbor; the
+            # distinct below (partial aggregation, map side) collapses it.
+            mins2 = large.groupBy("hi").agg(F.min("lo").alias("m"))
+            small = large.join(mins2, "hi").select(
+                F.inline(F.array(_edge("lo", "m"), _edge("hi", "m")))
+            )
+            # order-independent edge-set fingerprint, collected by the
+            # checkpoint job itself; pmod bounds each term so the sum
+            # cannot overflow ANSI long arithmetic below ~4e9 edges
+            obs = Observation()
+            # localCheckpoint (eager) truncates lineage: the iterated plan
+            # would otherwise grow geometrically (edges referenced 3x per
+            # round) and OOM the planner after ~8 rounds. Driver-fault
+            # recovery is not needed mid-operator — the input is
+            # deterministic, a failed run reruns from pairs.
+            edges = (
+                small.where(F.col("hi") != F.col("lo"))
+                .distinct()
+                .observe(
+                    obs,
+                    F.count(F.lit(1)).alias("n"),
+                    F.sum(F.pmod(F.xxhash64("hi", "lo"), F.lit(1 << 31))).alias("h"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            vals = obs.get
+            fp = (vals["n"], vals["h"])
+            if fp == prev_fp:
+                break
+            prev_fp = fp
+        else:
+            # Downstream consumers (resolve_duplicates' left join) assume
+            # one row per non-isolated node, which only per-component
+            # stars guarantee — surface a max_iter exit loudly instead of
+            # returning a silently-partial contraction (round-7 ADVICE).
+            _LOG.warning(
+                "connected_components: edge-set fingerprint did not converge "
+                "within max_iter=%d rounds — output may not be per-component "
+                "stars (multiple rows per node possible downstream). Re-run "
+                "with a larger max_iter.",
+                max_iter,
+            )
+    return edges.select(F.col("hi").alias("node"), F.col("lo").alias("component"))
 
 
 def resolve_duplicates(
@@ -712,8 +734,11 @@ def resolve_duplicates(
     (true for exactly one doc per component — the min id, a
     deterministic RNG-free pick). Filtering ``is_survivor`` yields the
     deduplicated corpus; keeping all rows yields the group map for
-    audit. One broadcast-or-shuffle left join of docs against the
-    (small: non-isolated nodes only) component map."""
+    audit. The components run eagerly here, one job set per round at
+    the fan-out ``pairs`` needs (see connected_components); the result
+    is lazy: one broadcast-or-shuffle left join of docs against the
+    (small: non-isolated nodes only) checkpointed component map, run by
+    the caller's action at the session's fan-out."""
     comp = connected_components(pairs, src_col, dst_col, max_iter)
     out = (
         docs.join(comp, docs[id_col] == comp["node"], "left")

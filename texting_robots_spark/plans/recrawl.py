@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.udfs import canonicalize_urls
@@ -51,15 +51,22 @@ def compact_frontier(
     frontier = store.read_frontier(spark)
     with sized_shuffle_scope(spark, frontier):
         # The reconstructed frontier (merge-on-read: base + delta chain +
-        # latest-wins window) has FIVE consumers below — the cuckoo
-        # build, the archive write, both counts, and the queued-only
-        # snapshot. Cache it so the reconstruction runs once instead of
-        # once per consumer (round 7: the uncached shape recomputed the
-        # union+window five times and dominated the recrawl cycle's
+        # latest-wins window) has three consumers below — the cuckoo
+        # build, the archive write, and the queued-only snapshot. Cache
+        # it so the reconstruction runs once instead of once per
+        # consumer (round 7: the uncached shape recomputed the
+        # union+window per consumer and dominated the recrawl cycle's
         # wall time).
         frontier = frontier.cache()
         queued = frontier.where(F.col("state") == "queued")
-        done = frontier.where(F.col("state") != "queued")
+        # both counts ride the archive write: observed on the cached
+        # frontier before the state filter, so no count job of their own
+        counts = Observation()
+        done = frontier.observe(
+            counts,
+            F.count_if(F.col("state") == "queued").alias("queued"),
+            F.count_if(F.col("state") != "queued").alias("archived"),
+        ).where(F.col("state") != "queued")
         # Build + CHECK the filters BEFORE any destructive write: a
         # dropped key would be a silent false negative on every later
         # probe (a seen URL re-entering the frontier), and a retry after
@@ -79,7 +86,7 @@ def compact_frontier(
             done.write.mode("append").option("compression", CODEC).parquet(
                 store.archive_dir
             )
-            n_q, n_a = queued.count(), done.count()
+            n_q, n_a = counts.get["queued"], counts.get["archived"]
             store.write_snapshot(
                 queued, filters=None, meta={**store.meta(), "compacted": True}
             )

@@ -33,8 +33,9 @@ Scale notes:
   re-enable AQE for ad-hoc queries in the same session. bench.py /
   jobs/crawl_job.py / perfbench scope the setting to the crawl this way.
 - fan-out: every store-backed entry point (init_crawl, frontier_step,
-  refresh_step, recrawl's compact_frontier and schedule_recrawl) runs
-  inside sized_shuffle_scope, which sets spark.sql.shuffle.partitions
+  refresh_step, recrawl's compact_frontier and schedule_recrawl) and the
+  dedup connected_components rounds (sized over their candidate pairs)
+  run inside sized_shuffle_scope, which sets spark.sql.shuffle.partitions
   from the planner's size estimate of its inputs: ceil(bytes / the
   advisory partition size), clamped to [1, the session's value]. A
   sandbox step (a few hundred rows) runs one task per stage, where a
