@@ -4,6 +4,8 @@ hosts, null URLs, parse errors, and the delay column — and must work
 with a rules table larger than spark.sql.autoBroadcastJoinThreshold
 would allow to broadcast-join comfortably."""
 
+from contextlib import contextmanager
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -17,6 +19,20 @@ from texting_robots_spark.operators.gate import (
 )
 
 CASES = [c for c in CORPUS if c.allowed and not c.parse_error]
+
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+
+@contextmanager
+def advisory_size(spark, value):
+    """Run the block at advisory partition size ``value`` (None: the
+    session's). At "1b" every input needs the session's full fan-out."""
+    if value is not None:
+        spark.conf.set(_ADVISORY, value)
+    try:
+        yield
+    finally:
+        spark.conf.unset(_ADVISORY)
 
 
 @pytest.fixture(scope="module")
@@ -36,6 +52,9 @@ def corpus_frames(spark):
         ],
         "host string, url string",
     ).cache()
+    # fill both caches before any gate plans over them: the planner
+    # sizes a frame from its cache only once the cache is filled
+    rules_df.count(), cand.count()
     return rules_df, cand
 
 
@@ -47,11 +66,46 @@ def test_sharded_equals_broadcast_on_corpus(spark, corpus_frames):
     rules_df, cand = corpus_frames
     bc = RulesBroadcast(spark, rules_df)
     want = _as_map(gate(cand, bc, with_delay=True).collect())
-    for n_salts in (1, 8):
-        got = _as_map(
-            gate_sharded(cand, rules_df, with_delay=True, n_salts=n_salts).collect()
-        )
-        assert got == want, f"n_salts={n_salts}"
+    # the small corpus sizes to one partition, and so to one salt; at a
+    # 1-byte advisory size it keeps the full fan-out and n_salts=8 runs
+    # 8 salts
+    for advisory in (None, "1b"):
+        with advisory_size(spark, advisory):
+            for n_salts in (1, 8):
+                got = _as_map(
+                    gate_sharded(
+                        cand, rules_df, with_delay=True, n_salts=n_salts
+                    ).collect()
+                )
+                assert got == want, f"advisory={advisory} n_salts={n_salts}"
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_gates_equal_at_sized_and_full_fan_out(spark, corpus_frames):
+    """Both gates give the same rows at the sized fan-out (one
+    partition for the corpus) and at the session's full fan-out."""
+    rules_df, cand = corpus_frames
+    bc = RulesBroadcast(spark, rules_df)
+    # no delay column: its local frame carries a Coalesce of its own
+    gates = {
+        "gate": (lambda: gate(cand, bc, with_delay=False), "Coalesce 1"),
+        "sharded": (
+            lambda: gate_sharded(cand, rules_df, with_delay=False),
+            "REPARTITION_BY_NUM",
+        ),
+    }
+    for name, (run, sized_node) in gates.items():
+        sized = run()
+        assert sized_node in _plan(sized), name
+        want = {(r["host"], r["url"]): r["allowed"] for r in sized.collect()}
+        with advisory_size(spark, "1b"):
+            full = run()
+            assert sized_node not in _plan(full), name
+            got = {(r["host"], r["url"]): r["allowed"] for r in full.collect()}
+            assert got == want, name
 
 
 def test_sharded_no_delay_column(spark, corpus_frames):
@@ -160,6 +214,23 @@ def test_sharded_rejects_internal_salt_collision(spark):
     )
     with pytest.raises(ValueError, match="_trs_salt"):
         gate_sharded(cand, rules_df)
+
+
+@pytest.mark.parametrize("n_salts", [0, -3])
+def test_sharded_rejects_salt_counts_below_one(spark, corpus_frames, n_salts):
+    """n_salts=-3 used to replicate each rules row zero times, so every
+    host gated as if it had no robots.txt; n_salts=0 failed inside a
+    task on a modulo by zero. Both are rejected at call time."""
+    rules_df, cand = corpus_frames
+    with pytest.raises(ValueError, match="n_salts"):
+        gate_sharded(cand, rules_df, n_salts=n_salts)
+
+
+def test_sharded_rejects_unknown_parse_error_policy(spark, corpus_frames):
+    """A misspelt policy used to mean disallow silently."""
+    rules_df, cand = corpus_frames
+    with pytest.raises(ValueError, match="on_parse_error"):
+        gate_sharded(cand, rules_df, on_parse_error="Allow")
 
 
 def test_cached_matcher_reuses_compiles():

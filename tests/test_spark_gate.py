@@ -119,6 +119,29 @@ def test_gate_parse_error_policy(spark):
     )
 
 
+def test_gate_rejects_unknown_parse_error_policy(spark):
+    """A misspelt policy used to mean disallow silently."""
+    raw = spark.createDataFrame(
+        [("h.example", bytearray(b"User-agent: *\nDisallow: /x"))],
+        "host string, body binary",
+    )
+    bc = RulesBroadcast(spark, build_rules(raw, "BobBot"))
+    cand = spark.createDataFrame(
+        [("h.example", "https://h.example/")], "host string, url string"
+    )
+    with pytest.raises(ValueError, match="on_parse_error"):
+        gate(cand, bc, on_parse_error="Allow")
+
+
+def test_allowed_udf_rejects_unknown_parse_error_policy(spark):
+    from texting_robots_spark.functions.udfs import make_allowed_udf
+
+    bc = spark.sparkContext.broadcast({})
+    with pytest.raises(ValueError, match="on_parse_error"):
+        make_allowed_udf(bc, on_parse_error="deny")
+    bc.unpersist()
+
+
 def test_robots_url_udf(spark):
     from texting_robots_spark.functions.udfs import robots_url_udf
     from pyspark.sql import functions as F

@@ -324,6 +324,13 @@ def _host_allowed(
     return res
 
 
+def _parse_error_allows(on_parse_error: str) -> bool:
+    """True for 'allow', False for 'disallow'; any other policy raises."""
+    if on_parse_error not in ("allow", "disallow"):
+        raise ValueError(f"on_parse_error: 'allow' or 'disallow', not {on_parse_error!r}")
+    return on_parse_error == "allow"
+
+
 def make_allowed_udf(rules_bc, on_parse_error: str = "disallow"):
     """Scalar pandas UDF ``(host, url) -> allowed`` over broadcast rules.
 
@@ -337,7 +344,7 @@ def make_allowed_udf(rules_bc, on_parse_error: str = "disallow"):
     ``on_parse_error``: 'disallow' (safe default) or 'allow' — the
     reference leaves this policy to the caller (lib.rs error return).
     """
-    error_allows = on_parse_error == "allow"
+    error_allows = _parse_error_allows(on_parse_error)
 
     @F.pandas_udf(T.BooleanType())
     def robots_allowed(host: pd.Series, url: pd.Series) -> pd.Series:

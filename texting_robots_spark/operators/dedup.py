@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..sizing import sized_shuffle_scope
+
 __all__ = [
     "exact_dedup_groups",
     "tokenize",
@@ -613,8 +615,6 @@ def connected_components(
     per-round skew (the representative's degree grows, which is
     exactly the AQE skew-join shape; the hot key carries 2 ids/row).
     """
-    from ..plans.superstep import sized_shuffle_scope
-
     # canonical undirected edges (hi, lo), self-loops dropped
     hi = F.greatest(F.col(src_col), F.col(dst_col)).alias("hi")
     lo = F.least(F.col(src_col), F.col(dst_col)).alias("lo")

@@ -21,7 +21,13 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import _host_allowed, make_allowed_udf, make_parse_robots_udf
+from ..functions.udfs import (
+    _host_allowed,
+    _parse_error_allows,
+    make_allowed_udf,
+    make_parse_robots_udf,
+)
+from ..sizing import sized_fan_out
 from ..sources.local import local_frame
 
 __all__ = [
@@ -145,8 +151,13 @@ def gate(
 
     One narrow stage: the allowed UDF reads broadcast rules (no shuffle);
     the delay column comes from an explicitly-broadcast tiny join.
+    Below the session's fan-out it runs the ``sizing.sized_fan_out``
+    count of tasks: one Python task for a small batch.
     """
     allowed = make_allowed_udf(rules.broadcast, on_parse_error=on_parse_error)
+    n, full = sized_fan_out(candidates.sparkSession, candidates)
+    if n < full:
+        candidates = candidates.coalesce(n)
     out = candidates.withColumn("allowed", allowed(F.col(host_col), F.col(url_col)))
     if with_delay:
         delays = rules.delay_df()
@@ -181,7 +192,9 @@ def gate_sharded(
     runs the broadcast path's per-host kernel (``udfs._host_allowed``,
     over the same per-worker matcher LRU) once per cogroup. The salt
     bounds the hottest host's candidates to ~1/n_salts of its rows per
-    task.
+    task; below the session's fan-out, at ``n = sizing.sized_fan_out``
+    of both sides, ``min(n_salts, n)`` salts and ``n`` partitions per
+    side, since a group then holds about one advisory size at most.
 
     Output and semantics are identical to ``gate`` (verified by the
     equivalence test on the conformance corpus): hosts absent from
@@ -204,7 +217,9 @@ def gate_sharded(
     """
     import pandas as pd
 
-    error_allows = on_parse_error == "allow"
+    error_allows = _parse_error_allows(on_parse_error)
+    if n_salts < 1:
+        raise ValueError(f"gate_sharded: n_salts must be >= 1, got {n_salts}")
     if _SALT_COL in candidates.columns:
         raise ValueError(
             f"gate_sharded: candidates already carry the internal column "
@@ -251,6 +266,9 @@ def gate_sharded(
             out = out.assign(crawl_delay=d)
         return out
 
+    n, full = sized_fan_out(candidates.sparkSession, candidates, rules_df)
+    if n < full:
+        n_salts = min(n_salts, n)
     salted = candidates.withColumn(
         _SALT_COL, F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts)).cast("int")
     )
@@ -274,6 +292,10 @@ def gate_sharded(
     rules_salted = rules_salted.select(
         *[F.col(c).alias(f"__gs_{c}") for c in _rcols]
     ).select(*[F.col(f"__gs_{c}").alias(c) for c in _rcols])
+    if n < full:
+        # on the cogroup key, so each side keeps its one exchange
+        salted = salted.repartition(n, *key_cols, _SALT_COL)
+        rules_salted = rules_salted.repartition(n, *key_cols, _SALT_COL)
     return (
         salted.groupBy(*key_cols, _SALT_COL)
         .cogroup(rules_salted.groupBy(*key_cols, _SALT_COL))

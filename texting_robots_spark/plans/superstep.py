@@ -34,15 +34,15 @@ Scale notes:
   jobs/crawl_job.py / perfbench scope the setting to the crawl this way.
 - fan-out: every store-backed entry point (init_crawl, frontier_step,
   refresh_step, recrawl's compact_frontier and schedule_recrawl) and the
-  dedup connected_components rounds (sized over their candidate pairs)
-  run inside sized_shuffle_scope, which sets spark.sql.shuffle.partitions
-  from the planner's size estimate of its inputs: ceil(bytes / the
-  advisory partition size), clamped to [1, the session's value]. A
-  sandbox step (a few hundred rows) runs one task per stage, where a
-  task, not a row, is the unit of cost; a 10^10-row frontier, or an
-  input the planner cannot size, keeps the session's full fan-out. This
-  is AQE's coalescing decided once, before planning, so it adds no
-  stage materialization.
+  dedup connected_components rounds run inside sized_shuffle_scope, and
+  both gates put the same count into their plan (the rule is in
+  sizing.py: ceil(estimated bytes / the advisory partition size),
+  clamped to [1, the session's value]). A small step (a few hundred
+  rows) runs one task per stage and one Python task in the gate, where
+  a task, not a row, is the unit of cost; a 10^10-row frontier, or an
+  input the planner cannot size, keeps the session's full fan-out and
+  the unsized plans. This is AQE's coalescing decided once, before
+  planning, so it adds no stage materialization.
 - politeness state is a per-host side table (host, next_allowed)
   checkpointed with each snapshot — never a per-row update across the
   10^10-row frontier, never a driver-side blob.
@@ -72,6 +72,7 @@ from ..operators.gate import (
 )
 from ..operators.links import extract_links
 from ..operators.seen import BloomConfig, build_bloom, probe_bloom
+from ..sizing import sized_shuffle_scope
 from ..sources.frontier_store import FrontierStore
 from ..sources.local import local_frame
 
@@ -123,41 +124,6 @@ def window_group_limit_scope(spark: SparkSession, k: int):
         yield
     finally:
         spark.conf.set(_WGL_KEY, prev)
-
-
-_SHUFFLE_KEY = "spark.sql.shuffle.partitions"
-
-
-@contextmanager
-def sized_shuffle_scope(spark: SparkSession, *inputs: DataFrame):
-    """Set ``spark.sql.shuffle.partitions`` for the block to the fan-out
-    its inputs need, and restore the session's value on exit (also on
-    an exception).
-
-    The fan-out is ``ceil(sum of the inputs' size estimates /
-    spark.sql.adaptive.advisoryPartitionSizeInBytes)``, clamped to
-    ``[1, the session's value]``. The estimate is the one the planner
-    uses for its broadcast decisions (``optimizedPlan().stats()``); an
-    input it cannot size (an RDD scan) gets spark.sql.defaultSizeInBytes,
-    which keeps the full fan-out. Outputs depend only on keys, never on
-    partitioning (north_rule), so the count is free to choose.
-
-    Like window_group_limit_scope, the conf is read when a plan is
-    physically planned, so the scope must wrap plan build AND every
-    action over it, caches included."""
-    prev = spark.conf.get(_SHUFFLE_KEY)
-    advisory = spark._jsparkSession.sessionState().conf().getConf(
-        spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
-    )
-    size = sum(
-        int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        for df in inputs
-    )
-    spark.conf.set(_SHUFFLE_KEY, str(max(1, min(int(prev), -(-size // advisory)))))
-    try:
-        yield
-    finally:
-        spark.conf.set(_SHUFFLE_KEY, prev)
 
 
 # When set to a dict, _tracer accumulates per-phase wall seconds into it
