@@ -115,6 +115,40 @@ def test_sharded_no_delay_column(spark, corpus_frames):
     assert out.count() == cand.count()
 
 
+def test_multi_agent_delay_per_host_and_agent(spark):
+    """With ``agent_col``, each row's ``crawl_delay`` (and verdict) is
+    its own (host, agent) group's: two bots on one host get their own
+    delays, an agent no group names gets NULL, and so does a host
+    without rules."""
+    body = (
+        b"User-agent: AlphaBot\nCrawl-delay: 3\nDisallow: /a\n\n"
+        b"User-agent: BetaBot\nCrawl-delay: 7\nDisallow: /b\n"
+    )
+    raw = spark.createDataFrame(
+        [("m.example", bytearray(body), a) for a in ("AlphaBot", "BetaBot", "GammaBot")]
+        + [("n.example", bytearray(b"User-agent: *\nCrawl-delay: 1.5\n"), "AlphaBot")],
+        "host string, body binary, agent string",
+    )
+    want = {
+        ("m.example", "AlphaBot", "https://m.example/a/1"): (False, 3.0),
+        ("m.example", "AlphaBot", "https://m.example/b/1"): (True, 3.0),
+        ("m.example", "BetaBot", "https://m.example/b/1"): (False, 7.0),
+        ("m.example", "BetaBot", "https://m.example/a/1"): (True, 7.0),
+        ("m.example", "GammaBot", "https://m.example/a/1"): (True, None),
+        ("n.example", "AlphaBot", "https://n.example/a/1"): (True, 1.5),
+        ("unknown.example", "AlphaBot", "https://unknown.example/a"): (True, None),
+    }
+    cand = spark.createDataFrame(list(want), "host string, agent string, url string")
+    out = gate_sharded(
+        cand, build_rules_per_agent(raw), with_delay=True, agent_col="agent"
+    )
+    got = {
+        (r["host"], r["agent"], r["url"]): (r["allowed"], r["crawl_delay"])
+        for r in out.collect()
+    }
+    assert got == want
+
+
 def test_sharded_beyond_broadcast_scale(spark):
     """A wide synthetic rules table (more hosts than one would want to
     collect) gates correctly: every host's own /private is denied, /ok

@@ -212,9 +212,9 @@ def test_link_candidates_canonicalize_in_one_python_pass(spark):
 def test_seed_frontier_one_python_pass_and_no_rdd_scan(spark):
     """A seed list becomes a LocalTableScan (no PythonRDD deserialize
     behind it) feeding exactly one canonicalize node."""
-    from texting_robots_spark.plans.superstep import CrawlConfig, seed_frontier
+    from texting_robots_spark.plans.superstep import seed_frontier
 
-    plan = _plan(seed_frontier(spark, ["https://a.example/", "nope"], CrawlConfig()))
+    plan = _plan(seed_frontier(spark, ["https://a.example/", "nope"]))
     assert len(_python_nodes(plan)) == 1, plan
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 

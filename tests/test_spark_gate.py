@@ -91,13 +91,15 @@ def test_gate_unknown_host_allowed_and_delay_join(spark):
     )
     rows = {
         (r["host"], r["url"]): r
-        for r in gate(cand, bc, default_delay=1.0).collect()
+        for r in gate(cand, bc).collect()
     }
     assert rows[("known.example", "https://known.example/x/1")]["allowed"] is False
     assert rows[("known.example", "https://known.example/ok")]["allowed"] is True
     assert rows[("unknown.example", "https://unknown.example/anything")]["allowed"] is True
     assert rows[("known.example", "https://known.example/ok")]["crawl_delay"] == 2.5
-    assert rows[("unknown.example", "https://unknown.example/anything")]["crawl_delay"] == 1.0
+    # a host without robots rules has no delay: NULL, which the crawl
+    # coalesces to CrawlConfig.default_delay in schedule_batch
+    assert rows[("unknown.example", "https://unknown.example/anything")]["crawl_delay"] is None
 
 
 def test_gate_parse_error_policy(spark):

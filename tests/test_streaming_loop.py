@@ -363,7 +363,7 @@ def test_crash_replay_mid_commit_reproduces_batch_crawl(spark, tmp_path, gate_mo
     workdir = str(tmp_path / "loop")
     for d in ("src", "out", "discovered"):
         os.makedirs(os.path.join(workdir, d), exist_ok=True)
-    seed_df = seed_frontier(spark, seeds, cfg).select(
+    seed_df = seed_frontier(spark, seeds).select(
         "url_hash", "url", "host", "priority", "depth", F.lit(0).alias("step")
     )
     _write_one_file(

@@ -7,11 +7,14 @@ Dataflow (SURVEY.md §3.4):
         --collect+broadcast--> RulesBroadcast
     candidates(host, url, ...)
         --robots_allowed UDF-> + allowed boolean     (narrow, no shuffle)
-        --broadcast join-----> + crawl_delay float   (native, no UDF)
+        --left join on host--> + crawl_delay double  (native, no UDF)
 
 The rules table is tiny relative to the frontier (one row per host), so
 it is broadcast to every executor once per rules version; the gate stage
-is shuffle-free.
+is shuffle-free, and the planner broadcasts the delay table, a local
+frame, from its size. The crawl joins delays itself, after its per-host
+top-k (``plans.superstep.schedule_batch``), and gates with
+``with_delay=False``.
 """
 
 from __future__ import annotations
@@ -72,8 +75,8 @@ class RulesBroadcast:
     to the driver is deliberate: a rules row is O(robots.txt size) and
     there is one per *host*, orders of magnitude smaller than the
     frontier; a torch-broadcast dict gives the gate UDF O(1) lookup with
-    zero join shuffle. For rules tables too big for one broadcast, shard
-    by host-hash and gate per shard (same interface).
+    zero join shuffle. For rules tables too big for one broadcast, use
+    ``RulesTable`` and ``gate_sharded``.
     """
 
     def __init__(self, spark: SparkSession, rules_df: DataFrame):
@@ -88,13 +91,12 @@ class RulesBroadcast:
         }
         self._spark = spark
         self.broadcast = spark.sparkContext.broadcast(table)
-        self.n_hosts = len(table)
         self._delay_df: Optional[DataFrame] = None
 
     def delay_df(self) -> DataFrame:
-        """Small (host, crawl_delay) DataFrame for native broadcast
-        joins, built once from the driver-side table and reused by
-        every superstep. It is a local frame (``sources.local``): its
+        """(host, crawl_delay) DataFrame, built once from the driver-side
+        table and reused by every superstep; small enough that the
+        planner broadcasts it. It is a local frame (``sources.local``): its
         rows sit in the plan as a LocalTableScan, so the per-step scan
         starts no Python worker, where a ``createDataFrame(list)`` frame
         re-ran a PythonRDD deserialize in every slice on every step."""
@@ -118,18 +120,17 @@ class RulesTable:
     """Distributed rules handle for huge rules tables (gate_sharded).
 
     Same role as RulesBroadcast but NOTHING touches the driver: the
-    rules stay a DataFrame, the gate runs as a cogroup on (host, salt),
-    and delays join as a regular column join (the planner broadcasts it
-    while it fits and shuffles past that). This is the 10^7-10^8-host
-    mode; RulesBroadcast stays the low-latency mode for rules tables
-    that fit one broadcast.
+    rules stay a DataFrame and the gate runs as a cogroup on (host,
+    salt). This is the 10^7-10^8-host mode; RulesBroadcast stays the
+    low-latency mode for rules tables that fit one broadcast.
     """
 
     def __init__(self, rules_df: DataFrame):
         self.rules_df = rules_df.cache()
 
-    def delay_frame(self) -> DataFrame:
-        """(host, crawl_delay) as a DataFrame — no driver collect."""
+    def delay_df(self) -> DataFrame:
+        """(host, crawl_delay) as a DataFrame — no driver collect. The
+        planner broadcasts it while it fits and shuffles past that."""
         return self.rules_df.select(
             "host", F.col("delay").cast("double").alias("crawl_delay")
         )
@@ -141,44 +142,33 @@ class RulesTable:
 def gate(
     candidates: DataFrame,
     rules: RulesBroadcast,
-    url_col: str = "url",
-    host_col: str = "host",
     with_delay: bool = True,
     on_parse_error: str = "disallow",
-    default_delay: Optional[float] = None,
 ) -> DataFrame:
-    """Annotate candidates with ``allowed`` (and ``crawl_delay``).
+    """Annotate (host, url, ...) candidates with ``allowed`` (and
+    ``crawl_delay``, NULL for a host without a delay).
 
     One narrow stage: the allowed UDF reads broadcast rules (no shuffle);
-    the delay column comes from an explicitly-broadcast tiny join.
-    Below the session's fan-out it runs the ``sizing.sized_fan_out``
-    count of tasks: one Python task for a small batch.
+    the delay column comes from a left join on ``rules.delay_df()``,
+    which the planner broadcasts from its size. Below the session's
+    fan-out it runs the ``sizing.sized_fan_out`` count of tasks: one
+    Python task for a small batch.
     """
     allowed = make_allowed_udf(rules.broadcast, on_parse_error=on_parse_error)
     n, full = sized_fan_out(candidates.sparkSession, candidates)
     if n < full:
         candidates = candidates.coalesce(n)
-    out = candidates.withColumn("allowed", allowed(F.col(host_col), F.col(url_col)))
+    out = candidates.withColumn("allowed", allowed(F.col("host"), F.col("url")))
     if with_delay:
-        delays = rules.delay_df()
-        if host_col != "host":
-            delays = delays.withColumnRenamed("host", host_col)
-        out = out.join(F.broadcast(delays), on=host_col, how="left")
-        if default_delay is not None:
-            out = out.withColumn(
-                "crawl_delay", F.coalesce("crawl_delay", F.lit(float(default_delay)))
-            )
+        out = out.join(rules.delay_df(), "host", "left")
     return out
 
 
 def gate_sharded(
     candidates: DataFrame,
     rules_df: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
     with_delay: bool = True,
     on_parse_error: str = "disallow",
-    default_delay: Optional[float] = None,
     n_salts: int = 8,
     agent_col: Optional[str] = None,
 ) -> DataFrame:
@@ -252,30 +242,23 @@ def gate_sharded(
         # (NUL cannot appear in a hostname)
         cache_key = key[0] if agent_col is None else f"{key[0]}\x00{key[1]}"
         out = cand.assign(
-            allowed=_host_allowed(
-                cache_key, entry, cand[url_col].to_numpy(), error_allows
-            )
+            allowed=_host_allowed(cache_key, entry, cand["url"].to_numpy(), error_allows)
         )
         if with_delay:
-            if delay is not None and delay == delay:  # not None, not NaN
-                d = float(delay)
-            elif default_delay is not None:
-                d = float(default_delay)
-            else:
-                d = None  # -> SQL NULL, matching gate()'s left join
-            out = out.assign(crawl_delay=d)
+            # not None, not NaN; else SQL NULL, matching gate()'s left join
+            known = delay is not None and delay == delay
+            out = out.assign(crawl_delay=float(delay) if known else None)
         return out
 
     n, full = sized_fan_out(candidates.sparkSession, candidates, rules_df)
     if n < full:
         n_salts = min(n_salts, n)
     salted = candidates.withColumn(
-        _SALT_COL, F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts)).cast("int")
+        _SALT_COL, F.pmod(F.xxhash64(F.col("url")), F.lit(n_salts)).cast("int")
     )
-    key_cols = [host_col] + ([agent_col] if agent_col is not None else [])
+    key_cols = ["host"] + ([agent_col] if agent_col is not None else [])
     rules_salted = rules_df.select(
-        host_col if host_col in rules_df.columns else F.col("host").alias(host_col),
-        *([agent_col] if agent_col is not None else []),
+        *key_cols,
         "rules",
         "delay",
         "parse_error",

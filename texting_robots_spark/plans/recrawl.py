@@ -23,11 +23,11 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.udfs import canonicalize_urls
 from ..operators.cuckoo import CuckooConfig, build_cuckoo, delete_cuckoo, probe_cuckoo
+from ..sizing import sized_shuffle_scope
 from ..sources.frontier_store import CODEC, FrontierStore
 from ..sources.local import local_frame
-from .superstep import _with_keys, sized_shuffle_scope
+from .superstep import _queued_rows, _url_frame
 
 __all__ = [
     "compact_frontier",
@@ -167,10 +167,7 @@ def schedule_recrawl(
     Runs inside sized_shuffle_scope over its inputs: the URLs, the
     store's key set, the cuckoo filters and the frontier.
     """
-    if isinstance(urls, DataFrame):
-        raw = urls.select(F.col(urls.columns[0]).alias("url"))
-    else:
-        raw = local_frame(spark, "url string", {"url": list(urls)})
+    raw = _url_frame(spark, urls)
     keys = store.read_keys(spark)
     filters = _read_cuckoo(spark, store)
     frontier = store.read_frontier(spark)
@@ -178,26 +175,7 @@ def schedule_recrawl(
         # three consumers below (known-inserted screen, MERGE, return
         # count): cache so the canonicalize kernel + dedup aggregate run
         # once (round 7)
-        rows = (
-            canonicalize_urls(raw)
-            .transform(_with_keys)
-            .select(
-                "url_hash",
-                "url",
-                "host",
-                F.lit(float(priority)).alias("priority"),
-                F.lit(0).alias("depth"),
-                F.lit("queued").alias("state"),
-                F.lit(0.0).alias("not_before"),
-            )
-            .groupBy("url_hash")
-            .agg(
-                *[
-                    F.min(c).alias(c)
-                    for c in ("url", "host", "priority", "depth", "state", "not_before")
-                ]
-            )
-        ).cache()
+        rows = _queued_rows(raw, priority).cache()
         # Screen before deleting. Deleting a never-inserted hash can
         # evict another URL's entry on a fingerprint collision (violating
         # delete_cuckoo's contract), so arbitrary user URLs are narrowed

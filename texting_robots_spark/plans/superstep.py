@@ -6,6 +6,7 @@ Python boundaries (the robots gate UDF and the canonicalize kernel):
     step_plan — shared by frontier_step and the streaming foreachBatch:
       queued rows, host eligible by politeness clock (blocked-host anti-join)
       -> per-host top-k window (priority desc, url_hash)   [shuffle: host]
+      -> crawl-delay left join onto the top-k slice (<= k rows per host)
       -> politeness schedule  fetch_time = t0 + (rank-1)*delay
       -> robots gate (broadcast rules, no shuffle; or the sharded cogroup)
       -> "fetch" = join to documents on the 8-byte url_hash key
@@ -25,6 +26,8 @@ Scale notes:
   shuffle, bounding any single window partition to k x n_map_partitions
   rows no matter how hot the host (see schedule_batch; replaced round
   3's manual salted two-level top-k — same bound, one shuffle fewer).
+  The delay table joins after the top-k, so the guard holds whichever
+  join strategy the planner picks for it.
 - AQE note: because the skew handling above is explicit, adaptive
   re-planning changes nothing in this plan while charging a stage
   materialization per shuffle (a step runs ~26 stages). Run the crawl
@@ -83,7 +86,6 @@ __all__ = [
     "eligible_slice",
     "schedule_batch",
     "window_group_limit_scope",
-    "sized_shuffle_scope",
     "StepPlan",
     "step_plan",
     "link_candidates",
@@ -189,32 +191,43 @@ def _with_keys(
     ).withColumn("host", _host_of(F.col(url_col)))
 
 
-def seed_frontier(spark: SparkSession, seeds, cfg: CrawlConfig) -> DataFrame:
-    """Canonicalized, deduped seed rows (state='queued', depth=0).
+def _url_frame(spark: SparkSession, urls) -> DataFrame:
+    """``urls`` as a one-column ``url`` frame. ``urls`` is an iterable of
+    URL strings (small lists; a generator is fine) OR a single-column
+    DataFrame of raw URLs — the distributed form: a 10^8-row input must
+    never round-trip through a driver-side Python list."""
+    if isinstance(urls, DataFrame):
+        return urls.select(F.col(urls.columns[0]).alias("url"))
+    return local_frame(spark, "url string", {"url": list(urls)})
 
-    ``seeds`` is an iterable of URL strings (small seed lists; a
-    generator is fine) OR a single-column DataFrame of raw URLs — the
-    distributed form: a 10^8-row seed set must never round-trip through
-    a driver-side Python list."""
-    if isinstance(seeds, DataFrame):
-        raw = seeds.select(F.col(seeds.columns[0]).alias("url"))
-    else:
-        raw = local_frame(spark, "url string", {"url": list(seeds)})
+
+def _queued_rows(
+    urls: DataFrame, priority: float = 1.0, base_hash: str = "xxhash64"
+) -> DataFrame:
+    """Raw ``url`` rows -> canonicalized frontier rows, one per url_hash
+    (min url and host), state='queued' at depth 0 and ``priority``."""
     return (
-        canonicalize_urls(raw)
-        .transform(_with_keys)
+        canonicalize_urls(urls)
+        .transform(lambda df: _with_keys(df, base_hash=base_hash))
         .groupBy("url_hash")
         .agg(F.min("url").alias("url"), F.min("host").alias("host"))
         .select(
             "url_hash",
             "url",
             "host",
-            F.lit(1.0).alias("priority"),
+            F.lit(float(priority)).alias("priority"),
             F.lit(0).alias("depth"),
             F.lit("queued").alias("state"),
             F.lit(0.0).alias("not_before"),
         )
     )
+
+
+def seed_frontier(spark: SparkSession, seeds) -> DataFrame:
+    """Canonicalized, deduped seed rows (state='queued', depth=0).
+    ``seeds`` is an iterable of URL strings or a single-column DataFrame
+    of raw URLs (see ``_url_frame``)."""
+    return _queued_rows(_url_frame(spark, seeds))
 
 
 def sitemap_seeds(rules_df: DataFrame, base_hash: str = "xxhash64") -> DataFrame:
@@ -228,21 +241,7 @@ def sitemap_seeds(rules_df: DataFrame, base_hash: str = "xxhash64") -> DataFrame
     ``base_hash='md5'`` is the DuckDB-replayable twin used by the
     driver's ``sitemap_seed_frontier`` oracle."""
     urls = rules_df.select(F.explode("sitemaps").alias("url"))
-    return (
-        canonicalize_urls(urls)
-        .transform(lambda df: _with_keys(df, base_hash=base_hash))
-        .groupBy("url_hash")
-        .agg(F.min("url").alias("url"), F.min("host").alias("host"))
-        .select(
-            "url_hash",
-            "url",
-            "host",
-            F.lit(1.0).alias("priority"),
-            F.lit(0).alias("depth"),
-            F.lit("queued").alias("state"),
-            F.lit(0.0).alias("not_before"),
-        )
-    )
+    return _queued_rows(urls, base_hash=base_hash)
 
 
 def init_crawl(
@@ -256,7 +255,7 @@ def init_crawl(
     build) so the canonicalize kernel and seed dedup run once, not twice.
     Runs inside sized_shuffle_scope over the seed frame."""
     _mark = _tracer()
-    frontier = seed_frontier(spark, seeds, cfg)
+    frontier = seed_frontier(spark, seeds)
     with sized_shuffle_scope(spark, frontier):
         frontier = frontier.cache()
         try:
@@ -270,10 +269,9 @@ def init_crawl(
 
 def schedule_batch(
     eligible: DataFrame,
-    delays: Optional[DataFrame],
+    delays: DataFrame,
     cfg: CrawlConfig,
     t0: float,
-    broadcast_delays: bool = True,
 ) -> DataFrame:
     """The scheduling stage of one superstep, over an already
     eligibility-filtered frontier slice: skew-guarded per-host top-k, crawl-
@@ -282,11 +280,10 @@ def schedule_batch(
     window logic over a frozen snapshot (the ``schedule_step`` query).
 
     ``eligible`` must carry (url_hash, host, priority); all other
-    columns pass through. ``delays`` is (host, crawl_delay) — pass
-    ``broadcast_delays=False`` when it may exceed broadcast size (the
-    sharded-rules mode) so the planner picks the join strategy.
+    columns pass through. ``delays`` is (host, crawl_delay), one row
+    per host; a host without a row gets ``cfg.default_delay``.
 
-    Output adds crawl_delay (default-coalesced), rank, allowance, and
+    Output adds rank, crawl_delay (default-coalesced), allowance, and
     fetch_time = t0 + (rank-1)*crawl_delay, keeping only rows with
     rank <= allowance.
 
@@ -300,18 +297,19 @@ def schedule_batch(
     rows no matter how deep its queue — the same bound round 3's manual
     (host, salt) two-level top-k provided, with ONE host shuffle
     instead of two ((host,salt) + (host)). The rewrite requires a
-    LITERAL rank bound, hence the redundant ``rank <= per_host_k``
-    conjunct next to the per-row ``rank <= allowance`` (allowance <=
-    per_host_k always). Both the map-side bound and the single-exchange
-    shape are pinned by tests/test_superstep.py's adversarial-skew plan
-    assertion.
+    LITERAL rank bound directly over the window, hence the
+    ``rank <= per_host_k`` filter before the per-row
+    ``rank <= allowance`` (allowance <= per_host_k always).
+
+    The delays join only that top-k slice (<= per_host_k rows per
+    host), so no join sits between the frontier and the window: the
+    planner picks the join strategy from size stats (a broadcast for a
+    small table, a shuffled join past autoBroadcastJoinThreshold) and
+    the guard holds either way. A host's rank does not depend on its
+    delay, so the rows are those of a join-then-rank. Both the map-side
+    bound and the single eligible-side exchange are pinned by
+    tests/test_superstep.py's adversarial-skew plan assertions.
     """
-    # delay joins in; allowance = how many fetches fit in this step at
-    # the host's crawl-delay (>=1: slower-than-step hosts advance
-    # next_allowed past the step instead of starving). RulesBroadcast:
-    # tiny driver-side delay table, explicit broadcast. RulesTable
-    # (sharded mode): delays stay a DataFrame and the planner picks the
-    # join strategy.
     # The InferWindowGroupLimit rewrite only fires when the literal rank
     # bound is <= spark.sql.optimizer.windowGroupLimitThreshold (default
     # 1000, verified on Spark 4.1.2): a per_host_k above it would
@@ -331,19 +329,18 @@ def schedule_batch(
             f"consuming action in window_group_limit_scope(spark, "
             f"per_host_k)."
         )
-    if delays is None:
-        delay_join = eligible.withColumn("crawl_delay", F.lit(None).cast("double"))
-    elif broadcast_delays:
-        delay_join = eligible.join(F.broadcast(delays), "host", "left")
-    else:
-        delay_join = eligible.join(delays, "host", "left")
     w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url_hash"))
+    top_k = eligible.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= F.lit(cfg.per_host_k)
+    )
+    # allowance = how many fetches fit in this step at the host's
+    # crawl-delay (>=1: slower-than-step hosts advance next_allowed past
+    # the step instead of starving)
     return (
-        delay_join
+        top_k.join(delays, "host", "left")
         .withColumn(
             "crawl_delay", F.coalesce("crawl_delay", F.lit(float(cfg.default_delay)))
         )
-        .withColumn("rank", F.row_number().over(w))
         .withColumn(
             "allowance",
             F.least(
@@ -354,10 +351,7 @@ def schedule_batch(
                 ).cast("int"),
             ),
         )
-        .where(
-            (F.col("rank") <= F.lit(cfg.per_host_k))
-            & (F.col("rank") <= F.col("allowance"))
-        )
+        .where(F.col("rank") <= F.col("allowance"))
         .withColumn("fetch_time", F.lit(t0) + (F.col("rank") - 1) * F.col("crawl_delay"))
     )
 
@@ -496,9 +490,13 @@ def eligible_slice(
     broadcast would OOM the driver/executors. host_state is
     parquet-backed (store.read_host_state), so the static planner
     broadcasts while the file sits under autoBroadcastJoinThreshold and
-    falls back to a shuffled join past it — the same dual-mode behavior
-    as RulesBroadcast/RulesTable, picked from size stats instead of a
-    forced hint (plan adaptivity pinned in tests/test_superstep.py)."""
+    falls back to a shuffled join past it, picked from size stats
+    instead of a forced hint, as schedule_batch's delay join is (plan
+    adaptivity pinned in tests/test_superstep.py). Unlike that join,
+    this one runs below schedule_batch's window: planned as a shuffled
+    join, its host exchange sits under the window and the map-side
+    WindowGroupLimit is lost, so a hot host's whole eligible queue is
+    shuffled."""
     eligible = frontier.where(
         (F.col("state") == "queued")
         & (F.col("not_before") <= F.lit(t0))
@@ -594,18 +592,14 @@ def step_plan(
     # No dedicated count job: the scheduled count rides the gate
     # Observation below and is collected by the first action over it —
     # the schedule is computed exactly once, inside the main pipeline.
-    sharded = isinstance(rules, RulesTable)
-    delays = rules.delay_frame() if sharded else rules.delay_df()
-    scheduled = schedule_batch(
-        eligible, delays, cfg, t0, broadcast_delays=not sharded
-    )
+    scheduled = schedule_batch(eligible, rules.delay_df(), cfg, t0)
 
     # --- 3. robots gate ----------------------------------------------------
     # fetched/disallowed counters — and, below the partition-count
     # threshold, the whole per-partition lineage — ride the plan as one
     # Observation: collected by the FIRST action that computes `gated`
     # (the cache fill), no dedicated aggregate jobs per step
-    if sharded:
+    if isinstance(rules, RulesTable):
         gated_raw = gate_sharded(
             scheduled,
             rules.rules_df,

@@ -388,10 +388,7 @@ class RulePattern:
         if "$" not in pattern:
             self._starred = collapsed.encode("utf-8")
             return
-        if len(collapsed) > _REGEX_BUDGET_CHARS:
-            raise RobotsParseError(
-                f"rule pattern exceeds regex compile budget: {pattern[:64]!r}..."
-            )
+        check_pattern_budget(pattern)
         body = re.escape(collapsed).replace("\\*", ".*").replace("\\$", r"\Z")
         self._regex = re.compile("^" + body)
 

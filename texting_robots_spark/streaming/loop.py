@@ -392,7 +392,7 @@ def run_stream_crawl(
     # consumed it, and the no-op keeps the resume path read-only on src
     seed_path = os.path.join(src, "step0.parquet")
     if not os.path.exists(seed_path):
-        seed_df = seed_frontier(spark, seeds, cfg).select(
+        seed_df = seed_frontier(spark, seeds).select(
             "url_hash", "url", "host", "priority", "depth", F.lit(0).alias("step")
         )
         _write_one_file(seed_df, os.path.join(workdir, "stage_seed"), seed_path)
