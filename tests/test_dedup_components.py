@@ -5,10 +5,18 @@ pins the full LSH->components pipeline against a DuckDB recursive-CTE
 closure; these tests pin the operator semantics directly: agreement
 with union-find ground truth, O(log n)-round chain convergence, input
 normalization, determinism under repartitioning and across fan-out, the
-max_iter warning, and the job and task budget of a small graph."""
+max_iter warning, and the job and task budget of a small graph.
+
+A graph that fits spark.sql.autoBroadcastJoinThreshold is resolved on
+the driver; the semantic tests run on both paths (the default threshold
+and -1, which forces the star-contraction rounds), and the tests about
+the rounds themselves pin -1."""
 
 import logging
 import random
+from contextlib import contextmanager
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -46,17 +54,48 @@ def _union_find_expected(edges):
     return out
 
 
+_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextmanager
+def _rounds_only(spark):
+    """The star-contraction rounds, whatever the graph's size."""
+    spark.conf.set(_THRESHOLD, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.unset(_THRESHOLD)
+
+
+@pytest.fixture
+def rounds(spark):
+    with _rounds_only(spark):
+        yield
+
+
+def _both_paths(spark, run):
+    """``run()`` at the session's threshold (the driver path for every
+    graph here) and at -1 (the rounds)."""
+    driver = run()
+    with _rounds_only(spark):
+        return [driver, run()]
+
+
+def _components(df):
+    return {r["node"]: r["component"] for r in connected_components(df).collect()}
+
+
 def test_connected_components_two_groups(spark):
     pairs = spark.createDataFrame(
         [("d2", "d1"), ("d2", "d3"), ("d4", "d3"), ("d5", "d4"), ("d8", "d9")],
         "id_a string, id_b string",
     )
-    got = {r["node"]: r["component"] for r in connected_components(pairs).collect()}
-    # transitive closure: d4/d5 reach d1 through the chain
-    assert got == {"d2": "d1", "d3": "d1", "d4": "d1", "d5": "d1", "d9": "d8"}
+    for got in _both_paths(spark, lambda: _components(pairs)):
+        # transitive closure: d4/d5 reach d1 through the chain
+        assert got == {"d2": "d1", "d3": "d1", "d4": "d1", "d5": "d1", "d9": "d8"}
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, rounds):
     """A 201-node path (worst case for naive min-label propagation —
     diameter 200) must resolve to ONE component within the default
     max_iter=25: star contraction is O(log n) rounds, so a chain like
@@ -78,8 +117,8 @@ def test_connected_components_matches_union_find(spark):
     ]
     edges = [(a, b) for a, b in edges if a != b]
     df = spark.createDataFrame(edges, "id_a string, id_b string")
-    got = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    assert got == _union_find_expected(edges)
+    for got in _both_paths(spark, lambda: _components(df)):
+        assert got == _union_find_expected(edges)
 
 
 def test_connected_components_normalizes_input(spark):
@@ -90,8 +129,8 @@ def test_connected_components_normalizes_input(spark):
         [("b", "a"), ("a", "b"), ("a", "a"), ("b", "c"), ("c", "b"), ("b", "c")],
         "id_a string, id_b string",
     )
-    got = {r["node"]: r["component"] for r in connected_components(messy).collect()}
-    assert got == {"b": "a", "c": "a"}
+    for got in _both_paths(spark, lambda: _components(messy)):
+        assert got == {"b": "a", "c": "a"}
 
 
 def test_resolve_duplicates_survivors(spark):
@@ -101,26 +140,31 @@ def test_resolve_duplicates_survivors(spark):
     pairs = spark.createDataFrame(
         [("d2", "d1"), ("d2", "d3"), ("d8", "d9")], "id_a string, id_b string"
     )
-    out = resolve_duplicates(docs, pairs)
-    rows = {r["doc_id"]: (r["component"], r["is_survivor"]) for r in out.collect()}
-    assert rows == {
-        "d1": ("d1", True),
-        "d2": ("d1", False),
-        "d3": ("d1", False),
-        "d7": ("d7", True),  # isolated doc survives as its own group
-        "d8": ("d8", True),
-        "d9": ("d8", False),
-    }
-    # exactly one survivor per component; survivors form the deduped corpus
-    per_comp = (
-        out.groupBy("component")
-        .agg(F.sum(F.col("is_survivor").cast("int")).alias("k"))
-        .collect()
-    )
-    assert all(r["k"] == 1 for r in per_comp)
+
+    def run():
+        out = resolve_duplicates(docs, pairs)
+        rows = {r["doc_id"]: (r["component"], r["is_survivor"]) for r in out.collect()}
+        # survivors per component; the survivors form the deduped corpus
+        per_comp = (
+            out.groupBy("component")
+            .agg(F.sum(F.col("is_survivor").cast("int")).alias("k"))
+            .collect()
+        )
+        return rows, per_comp
+
+    for rows, per_comp in _both_paths(spark, run):
+        assert rows == {
+            "d1": ("d1", True),
+            "d2": ("d1", False),
+            "d3": ("d1", False),
+            "d7": ("d7", True),  # isolated doc survives as its own group
+            "d8": ("d8", True),
+            "d9": ("d8", False),
+        }
+        assert all(r["k"] == 1 for r in per_comp)
 
 
-def test_connected_components_deterministic_under_repartition(spark):
+def test_connected_components_deterministic_under_repartition(spark, rounds):
     rnd = random.Random(3)
     edges = [
         (f"y{rnd.randrange(150):03d}", f"y{rnd.randrange(150):03d}")
@@ -154,7 +198,7 @@ def _chain(n):
     return [(f"n{i:04d}", f"n{i+1:04d}") for i in range(n)]
 
 
-def test_connected_components_warns_at_max_iter(spark, caplog):
+def test_connected_components_warns_at_max_iter(spark, caplog, rounds):
     """A 201-node chain cannot contract to stars in one round: the
     max_iter exit logs the warning instead of returning silently."""
     with caplog.at_level(logging.WARNING, logger=_LOGGER):
@@ -162,7 +206,7 @@ def test_connected_components_warns_at_max_iter(spark, caplog):
     assert any("did not converge" in r.getMessage() for r in caplog.records)
 
 
-def test_connected_components_converged_chain_logs_nothing(spark, caplog):
+def test_connected_components_converged_chain_logs_nothing(spark, caplog, rounds):
     with caplog.at_level(logging.WARNING, logger=_LOGGER):
         out = connected_components(_frame(spark, _chain(200))).collect()
     assert {r["component"] for r in out} == {"n0000"}
@@ -171,8 +215,8 @@ def test_connected_components_converged_chain_logs_nothing(spark, caplog):
 
 def test_connected_components_empty_pairs(spark, caplog):
     with caplog.at_level(logging.WARNING, logger=_LOGGER):
-        out = connected_components(_frame(spark, [])).collect()
-    assert out == []
+        outs = _both_paths(spark, lambda: connected_components(_frame(spark, [])).collect())
+    assert outs == [[], []]
     assert not [r for r in caplog.records if r.name == _LOGGER]
 
 
@@ -182,7 +226,7 @@ def test_connected_components_empty_pairs(spark, caplog):
 _CC_JOB_BUDGET = 20
 
 
-def test_connected_components_job_budget(spark):
+def test_connected_components_job_budget(spark, rounds):
     """A five-pair graph runs every stage as one task (the rounds sit in
     the sized fan-out) and stays within the job budget (the fingerprint
     rides each round's checkpoint job, with no aggregate job of its own)."""
@@ -203,7 +247,7 @@ def test_connected_components_job_budget(spark):
 def test_components_identical_sized_and_full_fan_out(spark):
     """The sized fan-out (one task per stage here) and the session's
     full fan-out (an advisory partition size of one byte) give the same
-    components and survivors."""
+    components and survivors, on both paths."""
     rnd = random.Random(5)
     edges = [
         (f"z{rnd.randrange(400):03d}", f"z{rnd.randrange(400):03d}")
@@ -217,11 +261,61 @@ def test_components_identical_sized_and_full_fan_out(spark):
         res = sorted(tuple(r) for r in resolve_duplicates(docs, pairs).collect())
         return comp, res
 
-    sized = run()
+    sized = _both_paths(spark, run)
     spark.conf.set(_ADVISORY, "1b")
     try:
-        full = run()
+        full = _both_paths(spark, run)
     finally:
         spark.conf.unset(_ADVISORY)
-    assert sized == full
-    assert sized[0] and len(sized[1]) == 400
+    assert sized[0] == sized[1] == full[0] == full[1]
+    assert sized[0][0] and len(sized[0][1]) == 400
+
+
+def test_small_graph_resolved_in_three_jobs(spark):
+    """At the session's threshold the five-pair graph is collected and
+    resolved on the driver: the edge checkpoint (two jobs under AQE)
+    and the collect, where the rounds run a job set per round. The
+    result is a driver frame (a LocalTableScan)."""
+    pairs = _frame(
+        spark, [("d2", "d1"), ("d2", "d3"), ("d4", "d3"), ("d5", "d4"), ("d8", "d9")]
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = dag.nextJobId()
+    comp = connected_components(pairs)
+    jobs = dag.nextJobId() - job0
+    assert jobs <= 3, jobs
+    assert "LocalTableScan" in comp._jdf.queryExecution().executedPlan().toString()
+    assert {r["node"]: r["component"] for r in comp.collect()} == {
+        "d2": "d1", "d3": "d1", "d4": "d1", "d5": "d1", "d9": "d8"
+    }
+
+
+def test_integer_ids_on_both_paths(spark):
+    """bigint ids order as numbers on both paths (as strings, "10"
+    would sort before "9"). The output keeps the id type."""
+    edges = [(10, 9), (9, 100), (7, 8)]
+    pairs = local_frame(
+        spark,
+        "id_a bigint, id_b bigint",
+        {"id_a": [a for a, _ in edges], "id_b": [b for _, b in edges]},
+    )
+
+    def run():
+        comp = connected_components(pairs)
+        return comp.schema.simpleString(), {r["node"]: r["component"] for r in comp.collect()}
+
+    for schema, got in _both_paths(spark, run):
+        assert schema == "struct<node:bigint,component:bigint>"
+        assert got == {10: 9, 100: 9, 8: 7}
+
+
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_max_iter_below_one_is_rejected(spark, max_iter):
+    """max_iter=0 returned the uncontracted edge list (a-b-c gave c -> b)
+    with only a warning; a small graph would now ignore it too."""
+    pairs = _frame(spark, [("a", "b"), ("b", "c")])
+    docs = local_frame(spark, "doc_id string", {"doc_id": ["a", "b", "c"]})
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components(pairs, max_iter=max_iter)
+    with pytest.raises(ValueError, match="max_iter"):
+        resolve_duplicates(docs, pairs, max_iter=max_iter)

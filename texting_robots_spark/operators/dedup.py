@@ -26,8 +26,10 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
 
 from ..sizing import sized_shuffle_scope
+from ..sources.local import local_frame
 
 __all__ = [
     "exact_dedup_groups",
@@ -94,18 +96,45 @@ def capped_bucket_pairs(
     columns — no new skew point; the per-bucket output is bounded by
     max(cap^2/2, m-1).
 
-    Plan shape (round 7): ``keyed`` is repartitioned on the bucket
-    columns ONCE before any consumer. Every downstream self-join /
-    size aggregate then reuses that single exchange (Spark's exchange
-    reuse; AQE stage reuse at runtime) instead of re-executing the
-    upstream pipeline per plan reference — the old shape recomputed
-    the full MinHash/SimHash signature pipeline once per join side
-    (2x uncapped, up to 4x capped; measured 4.5s -> 2.7s on the sf1.0
-    LSH pair line). The extra shuffle moves only the narrow
-    (id, buckets, carry) index rows — exactly the bucket-join shuffle
-    the docstring promises — never the document text."""
+    Eager: ``keyed`` is repartitioned on the bucket columns and
+    materialized once (``localCheckpoint``) at call time, before any
+    consumer. Every self-join side, size aggregate and star join then
+    reads that one copy, so the upstream MinHash/SimHash signature
+    pipeline runs once per call. Exchange reuse does not give this:
+    with AQE on, an exchange above a cached input (an
+    ``InMemoryRelation``) is planned, and run, once per join side. The
+    materialized rows are the narrow (id, buckets, carry) index — the
+    bucket-join shuffle the docstring promises — never the document
+    text."""
+    _check_cap(max_bucket_size, on_oversize)
+    return _bucket_pairs(
+        keyed.repartition(*bucket_cols).localCheckpoint(eager=True),
+        id_col,
+        bucket_cols,
+        carry,
+        max_bucket_size,
+        on_oversize,
+    )
+
+
+def _check_cap(max_bucket_size: Optional[int], on_oversize: str = "collapse") -> None:
+    if on_oversize not in ("collapse", "drop"):
+        raise ValueError(f"unknown on_oversize: {on_oversize!r}")
+    if max_bucket_size is not None and int(max_bucket_size) < 2:
+        raise ValueError(f"max_bucket_size must be >= 2, got {max_bucket_size}")
+
+
+def _bucket_pairs(
+    index: DataFrame,
+    id_col: str,
+    bucket_cols: Sequence[str],
+    carry: Tuple[str, ...],
+    max_bucket_size: Optional[int],
+    on_oversize: str,
+) -> DataFrame:
+    """capped_bucket_pairs over its materialized, bucket-partitioned
+    index."""
     buckets = list(bucket_cols)
-    keyed = keyed.repartition(*buckets)
 
     def _side(df: DataFrame, suffix: str) -> DataFrame:
         return df.select(
@@ -121,25 +150,21 @@ def capped_bucket_pairs(
     )
     if max_bucket_size is None:
         return (
-            _side(keyed, "a")
-            .join(_side(keyed, "b"), buckets)
+            _side(index, "a")
+            .join(_side(index, "b"), buckets)
             .where(F.col("id_a") < F.col("id_b"))
             .select(*out_cols)
             .distinct()
         )
-    if on_oversize not in ("collapse", "drop"):
-        raise ValueError(f"unknown on_oversize: {on_oversize!r}")
     cap = int(max_bucket_size)
-    if cap < 2:
-        raise ValueError(f"max_bucket_size must be >= 2, got {cap}")
     _LOG.info(
         "capped_bucket_pairs: buckets over %d members are %sd "
         "(capped edges carry via_representative=true)",
         cap,
         on_oversize,
     )
-    sizes = keyed.groupBy(*buckets).agg(F.count("*").alias("_bsz"))
-    sized = keyed.join(sizes, buckets)
+    sizes = index.groupBy(*buckets).agg(F.count("*").alias("_bsz"))
+    sized = index.join(sizes, buckets)
     small = sized.where(F.col("_bsz") <= cap)
     pairs = (
         _side(small, "a")
@@ -180,6 +205,17 @@ def capped_bucket_pairs(
 _MH_A = [0x9E3779B1 | 1, 0x85EBCA77 | 1, 0xC2B2AE3D | 1, 0x27D4EB2F | 1]
 _MH_B = [0x165667B1, 0xD3A2646C, 0xFD7046C5, 0xB55A4F09]
 _MERSENNE = (1 << 61) - 1
+
+
+def _check_lsh_shape(n_hashes: int, band_size: int) -> None:
+    """Reject a signature/band shape that would drop hashes: at most
+    one permutation per ``_MH_A`` constant, and whole bands only."""
+    if not 1 <= n_hashes <= len(_MH_A):
+        raise ValueError(f"n_hashes must be in [1, {len(_MH_A)}], got {n_hashes}")
+    if band_size < 1 or n_hashes % band_size:
+        raise ValueError(
+            f"band_size={band_size} must be >= 1 and divide n_hashes={n_hashes}"
+        )
 
 # single source of truth for the word-shingle width: shingles() and BOTH
 # minhash_signature base-hash branches derive from this, so the xxhash64
@@ -341,7 +377,10 @@ def lsh_band_index(
     (``incremental_lsh_candidates``), never re-shingling the archived
     corpus. With ``base_hash='md5'`` the bucket stays the raw band
     string (DuckDB-reproducible); production uses one more xxhash64
-    for an 8-byte bucket key."""
+    for an 8-byte bucket key. ``band_size`` must divide ``n_hashes``
+    (1 <= n_hashes <= 4), or ValueError: a partial band would drop
+    hashes."""
+    _check_lsh_shape(n_hashes, band_size)
     n_bands = n_hashes // band_size
 
     def _bucket(b: int) -> Column:
@@ -394,8 +433,11 @@ def minhash_lsh_candidates(
     per bucket (shuffle on the band hash, never a cross join) yields
     candidates; callers verify with ``jaccard_pairs``. With
     ``base_hash='md5'`` the bucket key stays the raw band string (wider
-    shuffle key, but DuckDB-reproducible end to end).
+    shuffle key, but DuckDB-reproducible end to end). The band index is
+    materialized once per call (see capped_bucket_pairs), so the
+    signature runs once. Shapes as in lsh_band_index.
     """
+    _check_lsh_shape(n_hashes, band_size)
     sig = minhash_signature(
         docs.select(id_col, text_col), text_col, n_hashes, base_hash
     )
@@ -598,11 +640,22 @@ def connected_components(
     near-dup chain (consecutive crawl snapshots) resolves in ~14
     rounds where naive min-label propagation needs 10^4. Per round the
     shuffle key is the node id, payload two ids per edge: O(edges)
-    bytes, no collect, no driver state beyond a convergence
-    fingerprint (count + hash-sum, an Observation on the round's
+    bytes; the rounds collect nothing and keep no driver state beyond a
+    convergence fingerprint (count + hash-sum, an Observation on the round's
     checkpoint, so a round is one job set with no separate aggregate
     job). Node ids order by their natural type ordering; any total
     order works — min is just a canonical representative.
+
+    A graph the planner would broadcast skips the rounds: when the
+    distinct edges (their count, observed on the edge checkpoint, times
+    the edge row's default size) fit
+    ``spark.sql.autoBroadcastJoinThreshold``, and the ids are strings
+    or integers (whose Python order is Spark's), the edges are
+    collected and resolved by union-find on the driver, and the result
+    is a driver-side ``local_frame``: one collect job instead of a job
+    set per round. The count is observed, not estimated — a cached
+    input's plan estimate can be stale. A threshold of -1, or a larger
+    graph, runs the rounds. ``max_iter`` must be >= 1 (ValueError).
 
     The rounds run inside sized_shuffle_scope over ``pairs``: a few
     thousand pairs run one task per stage, where a task, not a row, is
@@ -615,10 +668,13 @@ def connected_components(
     per-round skew (the representative's degree grows, which is
     exactly the AQE skew-join shape; the hot key carries 2 ids/row).
     """
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    spark = pairs.sparkSession
     # canonical undirected edges (hi, lo), self-loops dropped
     hi = F.greatest(F.col(src_col), F.col(dst_col)).alias("hi")
     lo = F.least(F.col(src_col), F.col(dst_col)).alias("lo")
-    with sized_shuffle_scope(pairs.sparkSession, pairs):
+    with sized_shuffle_scope(spark, pairs):
         # NOTE: checkpointed eagerly, before round 0. The lazy persist
         # this replaced left the pairs -> distinct subtree inside round
         # 0's plan: round 0's checkpoint ran 28 jobs to round 1's 7. On
@@ -631,12 +687,29 @@ def connected_components(
         # survivors: the round-7 finding that an eager fill loses (on
         # sf1.0, where the fill was a separate count job over a lazy
         # persist) does not hold for this shape at sf0.1 on 4 cores.
+        size = Observation()
         edges = (
             pairs.select(hi, lo)
             .where(F.col("hi") != F.col("lo"))
             .distinct()
+            .observe(size, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
+        id_type = edges.schema["hi"].dataType
+        threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        if (
+            isinstance(id_type, (ByteType, ShortType, IntegerType, LongType))
+            or id_type == StringType()
+        ) and size.get["n"] * edges._jdf.schema().defaultSize() <= threshold:
+            # on fleet_dedup's 3,591 pairs (seed 3, 4 cores) this takes
+            # the operator from 14 jobs to 3 and 1.58 s to 0.43 s
+            comp = _union_find(edges.collect())
+            t = id_type.simpleString()
+            return local_frame(
+                spark,
+                f"node {t}, component {t}",
+                {"node": list(comp), "component": list(comp.values())},
+            )
         prev_fp = None
         for _ in range(max_iter):
             # large-star(E): symmetrize; every center u points its LARGER
@@ -720,6 +793,26 @@ def connected_components(
     return edges.select(F.col("hi").alias("node"), F.col("lo").alias("component"))
 
 
+def _union_find(edges) -> dict:
+    """{node: min node of its component} for every node that is not
+    that minimum, over an iterable of (a, b) edges."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:  # the smaller root wins, so every root is its set's min
+            parent[max(ra, rb)] = min(ra, rb)
+    roots = {n: find(n) for n in parent}
+    return {n: r for n, r in roots.items() if n != r}
+
+
 def resolve_duplicates(
     docs: DataFrame,
     pairs: DataFrame,
@@ -791,21 +884,23 @@ def incremental_lsh_candidates(
     PERSIST the batch's index (the streaming dedup writes it as the next
     epoch) pass it here so shingling+hashing — the dominant per-batch
     cost — runs once instead of twice (round-7 ADVICE).
+
+    Eager like capped_bucket_pairs: the batch's index is shuffled on the
+    band keys and materialized once at call time, and BOTH consumers
+    (the new-vs-new self-join and the new-vs-base bucket join) read that
+    copy, so the batch's signature runs once whatever AQE plans.
     """
+    _check_lsh_shape(n_hashes, band_size)
+    _check_cap(max_bucket_size)
     if new_index is None:
         sig = minhash_signature(
             new_docs.select(id_col, text_col), text_col, n_hashes, base_hash
         )
         new_index = lsh_band_index(sig, id_col, n_hashes, band_size, base_hash)
-    # one shuffle on the band keys shared by BOTH consumers below (the
-    # new-vs-new self-join and the new-vs-base bucket join): exchange
-    # reuse computes the batch's signature pipeline once instead of once
-    # per plan reference. CollapseRepartition folds the copy
-    # capped_bucket_pairs adds on top, so there is exactly one shuffle.
-    new_index = new_index.repartition("band", "bucket")
+    new_index = new_index.repartition("band", "bucket").localCheckpoint(eager=True)
 
-    nn = capped_bucket_pairs(
-        new_index, id_col, ["band", "bucket"], max_bucket_size=max_bucket_size
+    nn = _bucket_pairs(
+        new_index, id_col, ["band", "bucket"], (), max_bucket_size, "collapse"
     )
     if "via_representative" not in nn.columns:
         nn = nn.withColumn("via_representative", F.lit(False))

@@ -2,11 +2,19 @@
 
 At 10^10 URLs the frontier cannot keep every fetched row hot forever:
 ``compact`` archives non-queued rows out of the working frontier and
-hands seen-ness to the per-partition filters. After compaction the
-filter is the ONLY record that a URL was seen — so scheduling a
-re-crawl requires *deleting* from the seen filter, which bloom bits
-cannot do. The cuckoo path (operators.cuckoo) supports exact-key
+builds per-partition cuckoo filters over every key it saw. Scheduling a
+re-crawl *deletes* the requeued keys from those filters, which bloom
+bits cannot do; the cuckoo path (operators.cuckoo) supports exact-key
 deletion with no false negatives for the remaining keys.
+
+The filters are NOT the store's record of what was seen. The archive
+stays in ``FrontierStore.read_keys``, the exact key set the crawl's
+seen check anti-joins against. The filters are a snapshot taken at the
+last compaction: keys a later step adds are not in them, and a second
+compaction rebuilds them from the hot frontier only, so the keys the
+first one archived drop out. ``dedup_candidates_cuckoo`` therefore
+passes such keys as fresh (ROADMAP item 2 (a)/(b), where an exact
+anti-join against ``read_keys`` is to replace it).
 
 Flow:
     compact(store)            frontier rows state != 'queued' -> archive/
@@ -114,8 +122,13 @@ def dedup_candidates_cuckoo(
     candidates: DataFrame,
     cfg: CuckooConfig,
 ) -> DataFrame:
-    """Post-compaction seen-check: cuckoo probe replaces the bloom +
+    """Post-compaction seen-check: cuckoo probe in place of the bloom +
     frontier anti-join (the frontier no longer holds archived keys).
+
+    Exact only for the keys of the last compaction: the filters miss
+    keys that steps added after it, and, after a second compaction, the
+    keys the first one archived, though ``read_keys`` holds both. Such
+    candidates pass as fresh (ROADMAP item 2 (a)/(b)).
 
     Returns a lazy frame, so sized_shuffle_scope cannot size it: the
     caller's action plans it, at the session's fan-out."""

@@ -37,7 +37,9 @@ Scale notes:
   jobs/crawl_job.py / perfbench scope the setting to the crawl this way.
 - fan-out: every store-backed entry point (init_crawl, frontier_step,
   refresh_step, recrawl's compact_frontier and schedule_recrawl) and the
-  dedup connected_components rounds run inside sized_shuffle_scope, and
+  dedup connected_components rounds run inside sized_shuffle_scope (a
+  component graph that fits spark.sql.autoBroadcastJoinThreshold skips
+  the rounds: union-find on the driver over its collected edges), and
   both gates put the same count into their plan (the rule is in
   sizing.py: ceil(estimated bytes / the advisory partition size),
   clamped to [1, the session's value]). A small step (a few hundred

@@ -1,8 +1,13 @@
-"""One fan-out rule for crawl steps, recrawl, connected components and
-both robots gates: ``ceil(sum of the inputs' size estimates /
+"""One fan-out rule for crawl steps, recrawl, the connected-components
+rounds and both robots gates: ``ceil(sum of the inputs' size estimates /
 spark.sql.adaptive.advisoryPartitionSizeInBytes)``, clamped to ``[1,
 spark.sql.shuffle.partitions]``. Outputs depend only on keys, never on
-partitioning (north_rule). Imports nothing from the package."""
+partitioning (north_rule). Imports nothing from the package.
+
+The rule decides a fan-out, never whether work leaves the cluster:
+connected_components resolves a graph on the driver only from its
+observed edge count against spark.sql.autoBroadcastJoinThreshold, since
+an estimate read here can be stale on a cached input."""
 
 from __future__ import annotations
 
