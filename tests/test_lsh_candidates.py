@@ -101,3 +101,23 @@ def test_incremental_lsh_computes_the_batch_signature_once(spark, cap):
     finally:
         new.unpersist()
     assert stages == 1
+
+
+def test_capped_incremental_lsh_reads_a_lazy_base_once(spark):
+    """With a cap, the base side's per-bucket size and representative
+    come from the same read of the base index as the bucket join: a
+    lazy base index over cached documents computes its signature in one
+    map stage, where an aggregate joined back to the base ran it twice."""
+    docs = _docs(spark)
+    old = docs.where(docs.doc_id.endswith("0")).repartition(_DOC_SLICES).cache()
+    old.count()
+    base = lsh_band_index(minhash_signature(old))
+    new = docs.where(~docs.doc_id.endswith("0"))
+    try:
+        stages = _signature_stages(
+            spark,
+            lambda: incremental_lsh_candidates(new, base, max_bucket_size=3).count(),
+        )
+    finally:
+        old.unpersist()
+    assert stages == 1

@@ -123,9 +123,10 @@ def test_compact_dedup_index_crash_recovery(spark, tmp_path):
 
     from texting_robots_spark.streaming.dedup import (
         _STAGING_PREFIX,
+        _is_complete,
+        _mark_committed,
         _recover_compaction,
     )
-    from texting_robots_spark.streaming.loop import _is_complete, _mark_committed
 
     wd = str(tmp_path / "sdx")
     src = os.path.join(wd, "src")

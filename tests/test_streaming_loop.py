@@ -4,6 +4,7 @@ batch crawl exactly: same (url_hash, fetch_time) fetch set across both
 steps AND the same discovered-URL set (NOTES_r2 caveat 5 closed)."""
 
 import os
+import re
 import time
 from types import SimpleNamespace
 
@@ -17,7 +18,11 @@ from texting_robots_spark.operators.gate import (
     build_rules,
 )
 from texting_robots_spark.operators.seen import BloomConfig
-from texting_robots_spark.plans.superstep import CrawlConfig, run_crawl
+from texting_robots_spark.plans.superstep import (
+    CrawlConfig,
+    run_crawl,
+    seed_frontier,
+)
 from texting_robots_spark.sources.frontier_store import FrontierStore
 from texting_robots_spark.sources.synth import (
     synth_documents_df,
@@ -25,7 +30,12 @@ from texting_robots_spark.sources.synth import (
     synth_universe,
 )
 from texting_robots_spark.streaming import loop
-from texting_robots_spark.streaming.loop import run_stream_crawl
+from texting_robots_spark.streaming.loop import (
+    CAND_DDL,
+    _write_one_file,
+    make_batch_processor,
+    run_stream_crawl,
+)
 
 
 @pytest.mark.parametrize(
@@ -92,8 +102,8 @@ def test_stream_crawl_loop_matches_batch_crawl(
         workdir=str(tmp_path / "loop"),
     )
     assert res["steps"] == 2
-    # the query is stateless: admission rides the exact seen log, so
-    # the checkpoint holds no state store
+    # the query is stateless: admission rides the store's exact key
+    # set, so the checkpoint holds no state store
     assert not (tmp_path / "loop" / "ckpt" / "state").exists()
     out = spark.read.parquet(res["out"])
     got_fetch = {
@@ -149,10 +159,10 @@ def test_stream_crawl_exact_backstop_survives_tiny_bloom(spark, tmp_path):
     """Adversarial bloom sizing: 256 bits per partition over hundreds of
     URLs guarantees heavy false-positive rates in the BATCH step's
     bloom prefilter. The batch step's exact key-set backstop must
-    still rescue every false positive: the stream, whose exact seen
-    log is the seen-set with no bloom in front of it, is the ground
-    truth here, and the batch crawl must reproduce its fetch set and
-    discovered set bit-for-bit."""
+    still rescue every false positive: the stream, whose store writes
+    no bloom, so its exact key set is the seen-set with no filter in
+    front of it, is the ground truth here, and the batch crawl must
+    reproduce its fetch set and discovered set bit-for-bit."""
     documents, robots, seeds = synth_universe(
         n_hosts=10, n_docs=200, n_seeds=16, seed=11
     )
@@ -275,7 +285,7 @@ def test_stream_crawl_restart_resumes_from_checkpoint(spark, tmp_path, monkeypat
     assert set(got) == batch_fetch
 
     # round-5 ADVICE: a resume whose target is ALREADY met must return
-    # immediately from the durable epoch markers — no stream start, no
+    # immediately from the store's manifest — no stream start, no
     # timeout_sec wait (the old shape blocked the full timeout because
     # no batch was left to fire the completion sentinel)
     import time as _time
@@ -291,41 +301,59 @@ def test_stream_crawl_restart_resumes_from_checkpoint(spark, tmp_path, monkeypat
     assert _time.time() - t_start < 20.0
 
 
-@pytest.mark.parametrize("gate_mode", ["broadcast", "sharded"])
-def test_crash_replay_mid_commit_reproduces_batch_crawl(spark, tmp_path, gate_mode):
-    """Crash-injection proof of full-batch idempotence (round-4 ADVICE +
-    VERDICT r5 item: the epoch redesign must be DEMONSTRATED, not
-    reasoned). Drives the real foreachBatch function directly via
-    make_batch_processor and kills it mid-commit at every fail_after
-    point:
+def _seeded_workdir(spark, workdir, seeds):
+    """A stream workdir as run_stream_crawl leaves it before its first
+    batch: the seed candidate file in src/."""
+    for d in ("src", "out", "discovered"):
+        os.makedirs(os.path.join(workdir, d), exist_ok=True)
+    seed_df = seed_frontier(spark, seeds).select(
+        "url_hash", "url", "host", "priority", "depth", F.lit(0).alias("step")
+    )
+    _write_one_file(
+        seed_df,
+        os.path.join(workdir, "stage_seed"),
+        os.path.join(workdir, "src", "step0.parquet"),
+    )
 
-    - batch 0 crashes after its seen, then its out (the exact round-4
-      hazard window: 'between the seen append and the pending swap'),
-      then its feedback write;
-    - batch 1 crashes AFTER its pending write but BEFORE host_state —
-      so its replay must ignore its own half-committed epoch=1 pending
-      dir and re-read epoch=0 — and then after its host_state write.
+
+def _candidate_file(spark, workdir, step):
+    """Batch ``step`` as the stream delivers it: one candidate file."""
+    return spark.read.schema(CAND_DDL).parquet(
+        os.path.join(workdir, "src", f"step{step}.parquet")
+    )
+
+
+def _store_step(workdir):
+    return FrontierStore(os.path.join(workdir, "store")).meta().get("step", -1)
+
+
+@pytest.mark.parametrize("gate_mode", ["broadcast", "sharded"])
+def test_crash_replay_mid_commit_reproduces_batch_crawl(
+    spark, tmp_path, monkeypatch, gate_mode
+):
+    """Crash-injection proof of full-batch idempotence (round-4 ADVICE +
+    VERDICT r5 item: the replay design must be DEMONSTRATED, not
+    reasoned). Drives the real foreachBatch function directly via
+    make_batch_processor and kills it at every fail_after point and
+    inside the store's commit:
+
+    - batch 0 crashes after its out, then its feedback write, then
+      inside commit_step BEFORE the manifest rename (the delta and
+      host_state files are written, the manifest still names step -1),
+      then after its commit — whose replay must return at once;
+    - batch 1 crashes inside commit_step before the manifest rename,
+      then right AFTER it (the store already records step 1, so the
+      replay must not commit the step a second time).
 
     Each crash is followed by a replay under the SAME batch_id (what
     foreachBatch does), and the final out/ + discovered sets must equal
     the batch crawl's EXACTLY — including row COUNTS, which the round-4
     shape fails (append-mode out/ duplicates the crashed attempt's
     fetched rows). Each batch is the raw candidate file, exactly what
-    the stream delivers, and admission rides on the epoch-partitioned
-    exact seen log, the surface under test. Parametrized over both gate
-    modes: the sharded cogroup gate's replay behavior must match the
-    broadcast gate's."""
-    import os
-
-    import pytest
-
-    from texting_robots_spark.plans.superstep import seed_frontier
-    from texting_robots_spark.streaming.loop import (
-        CAND_DDL,
-        _write_one_file,
-        make_batch_processor,
-    )
-
+    the stream delivers, and admission rides on the store's exact key
+    set, the surface under test. Parametrized over both gate modes: the
+    sharded cogroup gate's replay behavior must match the broadcast
+    gate's."""
     documents, robots, seeds = synth_universe(
         n_hosts=10, n_docs=200, n_seeds=16, seed=7
     )
@@ -361,16 +389,7 @@ def test_crash_replay_mid_commit_reproduces_batch_crawl(spark, tmp_path, gate_mo
 
     # manual loop with injected crashes + same-id replays
     workdir = str(tmp_path / "loop")
-    for d in ("src", "out", "discovered"):
-        os.makedirs(os.path.join(workdir, d), exist_ok=True)
-    seed_df = seed_frontier(spark, seeds).select(
-        "url_hash", "url", "host", "priority", "depth", F.lit(0).alias("step")
-    )
-    _write_one_file(
-        seed_df,
-        os.path.join(workdir, "stage_seed"),
-        os.path.join(workdir, "src", "step0.parquet"),
-    )
+    _seeded_workdir(spark, workdir, seeds)
     state: dict = {}
 
     stream_rules = (
@@ -385,23 +404,35 @@ def test_crash_replay_mid_commit_reproduces_batch_crawl(spark, tmp_path, gate_mo
             state=state, fail_after=fail_after,
         )
 
-    def load(step):
-        return spark.read.schema(CAND_DDL).parquet(
-            os.path.join(workdir, "src", f"step{step}.parquet")
-        )
+    write_manifest = FrontierStore._write_manifest
+
+    def crash_in_commit(batch, batch_id, after_rename):
+        # one crash inside commit_step, at its manifest write
+        def crash(self, manifest):
+            monkeypatch.setattr(FrontierStore, "_write_manifest", write_manifest)
+            if after_rename:
+                write_manifest(self, manifest)
+            raise RuntimeError("injected crash in commit_step")
+
+        monkeypatch.setattr(FrontierStore, "_write_manifest", crash)
+        with pytest.raises(RuntimeError, match="injected crash in commit_step"):
+            proc()(batch, batch_id)
+        assert _store_step(workdir) == (batch_id if after_rename else batch_id - 1)
 
     # every fail_after point, each attempt a same-id replay of the last
-    b0 = load(0)
-    for phase in ("seen", "out", "feedback"):
+    b0 = _candidate_file(spark, workdir, 0)
+    for phase in ("out", "feedback"):
         with pytest.raises(RuntimeError, match=f"injected crash after {phase}"):
             proc(fail_after=phase)(b0, 0)
+    crash_in_commit(b0, 0, after_rename=False)
+    with pytest.raises(RuntimeError, match="injected crash after commit"):
+        proc(fail_after="commit")(b0, 0)
     proc()(b0, 0)  # foreachBatch replay: same batch_id
-    b1 = load(1)
-    for phase in ("pending", "host_state"):
-        with pytest.raises(RuntimeError, match=f"injected crash after {phase}"):
-            proc(fail_after=phase)(b1, 1)
+    b1 = _candidate_file(spark, workdir, 1)
+    crash_in_commit(b1, 1, after_rename=False)
+    crash_in_commit(b1, 1, after_rename=True)
     proc()(b1, 1)
-    assert state["done"] == 2
+    assert state["done"] == 2 and _store_step(workdir) == 1
 
     out = spark.read.parquet(os.path.join(workdir, "out"))
     got = [(r["url_hash"], round(r["fetch_time"], 6)) for r in out.collect()]
@@ -419,11 +450,55 @@ def test_crash_replay_mid_commit_reproduces_batch_crawl(spark, tmp_path, gate_mo
     assert discovered == batch_urls
 
 
+def test_stream_seen_check_reads_a_bounded_set_of_files(spark, tmp_path, monkeypatch):
+    """A batch's seen check reads the store's compacted key set: over
+    more than two compaction cycles, no batch's key read spans more
+    than compact_every + 1 snapshot directories (the base and its delta
+    chain), where a one-file-per-batch seen log would grow by one file
+    each batch. The stream keeps no epoch table of its own besides
+    out/."""
+    documents, robots, seeds = synth_universe(
+        n_hosts=10, n_docs=200, n_seeds=16, seed=7
+    )
+    docs_df = synth_documents_df(spark, documents).cache()
+    robots_df = synth_robots_df(spark, robots)
+    cfg = CrawlConfig(per_host_k=3, step_seconds=10.0, default_delay=2.0)
+    rules = RulesBroadcast(spark, build_rules(robots_df, cfg.agent))
+    workdir = str(tmp_path / "loop")
+    _seeded_workdir(spark, workdir, seeds)
+    compact_every = FrontierStore(os.path.join(workdir, "store")).compact_every
+    n_steps = 2 * compact_every + 1
+
+    reads = []
+    read_keys = FrontierStore.read_keys
+
+    def recording_read_keys(self, *args, **kwargs):
+        keys = read_keys(self, *args, **kwargs)
+        reads.append(keys.inputFiles())
+        return keys
+
+    monkeypatch.setattr(FrontierStore, "read_keys", recording_read_keys)
+    proc = make_batch_processor(spark, docs_df, rules, cfg, workdir, n_steps)
+    for b in range(n_steps):
+        proc(_candidate_file(spark, workdir, b), b)
+    assert _store_step(workdir) == n_steps - 1
+    assert len(reads) == n_steps
+
+    def snapshot_dirs(files):
+        return {re.search(r"/snapshots/(v\d+)/", f).group(1) for f in files}
+
+    assert len(snapshot_dirs(reads[-1])) <= compact_every + 1
+    assert max(len(snapshot_dirs(r)) for r in reads) <= compact_every + 1
+    for table in ("seen", "pending", "host_state"):
+        assert not os.path.exists(os.path.join(workdir, table))
+
+
 def test_prior_epoch_paths_exclude_own_and_later_epochs(spark, tmp_path):
-    """Crash-replay safety of the seen log (round-3 ADVICE, medium): a
-    replayed micro-batch runs under the SAME batchId, so the anti-join
-    read set must exclude its own epoch partition (its possibly-half-
-    committed rows) — otherwise the replay drops its own URLs forever.
+    """Crash-replay safety of the streaming dedup's epoch tables
+    (round-3 ADVICE, medium): a replayed micro-batch runs under the
+    SAME batchId, so its read set must exclude its own epoch partition
+    (its possibly-half-committed rows) — otherwise the replay drops its
+    own rows forever.
     Completeness is keyed on the _COMMITTED marker (round-5 ADVICE —
     part-file presence only worked for empty frames via SPARK-23271's
     schema-only file): a dir with parquet but no marker (crash between
@@ -432,7 +507,7 @@ def test_prior_epoch_paths_exclude_own_and_later_epochs(spark, tmp_path):
     overwrite."""
     import os
 
-    from texting_robots_spark.streaming.loop import (
+    from texting_robots_spark.streaming.dedup import (
         _mark_committed,
         _prior_epoch_paths,
     )

@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
+from pyspark.sql.window import Window
 
 from ..sizing import sized_shuffle_scope
 from ..sources.local import local_frame
@@ -908,11 +909,17 @@ def incremental_lsh_candidates(
 
     base = base_index.select(F.col(id_col).alias("__base_id"), "band", "bucket")
     if max_bucket_size is not None:
-        stats = base.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("__n"), F.min("__base_id").alias("__rep")
-        )
+        # the bucket's size and min id as a window: the base is read
+        # once (a lazy index computes its signature once) and leaves
+        # partitioned on the bucket join's keys
+        bucket = Window.partitionBy("band", "bucket")
         base = (
-            base.join(stats, ["band", "bucket"])
+            base.withColumns(
+                {
+                    "__n": F.count(F.lit(1)).over(bucket),
+                    "__rep": F.min("__base_id").over(bucket),
+                }
+            )
             .where(
                 (F.col("__n") <= max_bucket_size)
                 | (F.col("__base_id") == F.col("__rep"))

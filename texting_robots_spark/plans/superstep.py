@@ -13,10 +13,12 @@ Python boundaries (the robots gate UDF and the canonicalize kernel):
       -> posexplode spans -> link extraction -> canonicalize -> url_hash
       -> in-batch dedup (groupBy url_hash)                 [shuffle: hash]
       -> host_state' = host_state merged with this step's politeness advance
-    frontier_step only (the store-backed seen set and commit):
+    frontier_step only (the bloom-fronted seen set):
       -> bloom probe (cogroup, partition-aligned)
       -> exact anti-join for maybe_seen remainder          [shuffle: hash]
-      -> MERGE INTO frontier, bloom increment, metrics, lineage, checkpoint
+    commit_updates — shared by frontier_step and the streaming foreachBatch:
+      -> MERGE INTO frontier (delta + host_state), checkpoint
+    frontier_step only: bloom increment, metrics, lineage
 
 Scale notes:
 - the only per-host shuffle is the scheduling window; hosts are Zipf-
@@ -94,6 +96,7 @@ __all__ = [
     "refresh_priorities",
     "apply_indegree_refresh",
     "refresh_step",
+    "commit_updates",
     "frontier_step",
     "run_crawl",
 ]
@@ -171,6 +174,24 @@ class CrawlConfig:
     # increments — fetched content is never re-scanned.
     refresh_every: Optional[int] = None
     refresh_alpha: float = 0.5
+
+    def __post_init__(self):
+        # each of these would stall the crawl without an error: nothing
+        # scheduled (k < 1, depth < 0), a clock that never advances past
+        # a host's first fetch (step <= 0), a negative politeness gap,
+        # or a refresh cadence of 0 that reads as off
+        if self.per_host_k < 1:
+            raise ValueError(f"per_host_k must be >= 1, got {self.per_host_k}")
+        if self.step_seconds <= 0:
+            raise ValueError(f"step_seconds must be > 0, got {self.step_seconds}")
+        if self.default_delay < 0:
+            raise ValueError(f"default_delay must be >= 0, got {self.default_delay}")
+        if self.max_depth < 0:
+            raise ValueError(f"max_depth must be >= 0, got {self.max_depth}")
+        if self.refresh_every is not None and self.refresh_every < 1:
+            raise ValueError(
+                f"refresh_every must be >= 1 when set, got {self.refresh_every}"
+            )
 
 
 def _host_of(url_col) -> F.Column:
@@ -575,9 +596,11 @@ def step_plan(
     streaming candidates — at the virtual clock ``t0 = step *
     step_seconds``: eligibility, schedule, gate, fetch, link candidates
     and the politeness advance. The batch superstep and the streaming
-    loop both call it (inside ``window_group_limit_scope``), so their
-    crawl order is one code path; each driver keeps only its own state:
-    the store's seen set and commit, or the stream's epoch tables.
+    loop both call it (inside ``window_group_limit_scope`` and
+    ``sized_shuffle_scope``), so their crawl order is one code path, and
+    both commit the result through ``commit_updates`` to a
+    FrontierStore; they differ only in where the step's new rows come
+    from (the step's own links, or the stream's candidate file).
 
     ``rows`` carries (url_hash, url, host, priority, depth, state,
     not_before); ``host_state`` is (host, next_allowed) or None.
@@ -690,6 +713,54 @@ def step_plan(
     return StepPlan(gated, obs, candidates, state_updates)
 
 
+def commit_updates(
+    spark: SparkSession,
+    store: FrontierStore,
+    gated: DataFrame,
+    queued: DataFrame,
+    step: int,
+    n_updates: int,
+    host_state: DataFrame,
+    filters_increment=None,
+) -> None:
+    """Commit one crawl step to ``store`` as step ``step``: the rows of
+    ``gated`` (a ``step_plan``'s scheduled rows) as fetched or
+    disallowed, ``queued`` (the rows the step adds as queued; none may
+    share a url_hash with ``gated`` — commit_step's one-row-per-key
+    invariant) and ``host_state``. frontier_step and the streaming
+    crawl's micro-batches both commit through here.
+
+    ``n_updates`` — the update set's row count, or an upper bound, from
+    counters already on the driver — sizes the delta at ~64k rows per
+    file instead of always n_buckets files (guide §6, round 7): a
+    7k-row sandbox delta lands as 1 file, and every later merge-on-read
+    lists 1 file per delta, while a 10^7-row batch still fans out to
+    the full n_buckets. coalesce only (never a shuffle), over the
+    step's cached slices; no cache and no action besides the commit's
+    own writes."""
+    cols = ("url_hash", "url", "host", "priority", "depth")
+    done = gated.where(F.col("allowed")).select(
+        *cols,
+        F.lit("fetched").alias("state"),
+        (F.col("fetch_time") + F.col("crawl_delay")).alias("not_before"),
+    )
+    denied = gated.where(~F.col("allowed")).select(
+        *cols,
+        F.lit("disallowed").alias("state"),
+        F.lit(float("inf")).alias("not_before"),
+    )
+    updates = (
+        done.unionByName(denied)
+        .unionByName(queued)
+        .coalesce(max(1, min(store.n_buckets, (n_updates >> 16) + 1)))
+    )
+    # DELTA commit: O(batch) rows per step; the store compacts to a full
+    # base every compact_every steps (merge-on-read in between)
+    store.commit_step(
+        spark, updates, filters_increment, meta={"step": step}, host_state=host_state
+    )
+
+
 def frontier_step(
     spark: SparkSession,
     store: FrontierStore,
@@ -790,29 +861,7 @@ def _frontier_step_impl(
         .cache()
     )
 
-    # --- 8. state updates + MERGE + bloom increment -------------------------
-    done = gated.where(F.col("allowed")).select(
-        "url_hash",
-        "url",
-        "host",
-        "priority",
-        "depth",
-        F.lit("fetched").alias("state"),
-        (F.col("fetch_time") + F.col("crawl_delay")).alias("not_before"),
-    )
-    denied = gated.where(~F.col("allowed")).select(
-        "url_hash",
-        "url",
-        "host",
-        "priority",
-        "depth",
-        F.lit("disallowed").alias("state"),
-        F.lit(float("inf")).alias("not_before"),
-    )
-    # the three-way union would otherwise write 3-4x shuffle.partitions
-    # tiny files per step; the delta file count itself is decided AFTER
-    # the step counts are known (below) — data-adaptive, not a constant
-    updates = done.unionByName(denied).unionByName(new_rows)
+    # --- 8. bloom increment (the update set is built by commit_updates) ---
     # DEFERRED bloom maintenance (r6): non-compacting steps write no
     # filter increment at all — their new keys ride the delta-key
     # anti-join above until compaction. On the step whose commit WILL
@@ -857,28 +906,17 @@ def _frontier_step_impl(
     n_fetched = int(vals["f"] or 0)
     n_disallowed = n_scheduled - n_fetched
     n_new = int(obs_new.get["n"] or 0)
-    # Data-adaptive delta file sizing (guide §6, round 7): the step
-    # counts are already on the driver (Observation counters fired with
-    # the materializing count above), so target ~64k rows per delta
-    # file instead of always writing n_buckets files — a 7k-row sandbox
-    # delta lands as 1 file (and every later merge-on-read lists 1 file
-    # per delta), while a 10^7-row production batch still fans out to
-    # the full n_buckets. coalesce only (never a shuffle), over the
-    # step's already-cached slices.
-    n_updates = n_scheduled + n_new
-    updates = updates.coalesce(
-        max(1, min(store.n_buckets, (n_updates >> 16) + 1))
-    )
-    # DELTA commit: per-step write cost is O(batch) rows, not a
-    # full-frontier rewrite; the store compacts to a full base every
-    # compact_every steps (merge-on-read in between), and the one bloom
-    # increment per compaction cycle rides that commit.
-    store.commit_step(
+    # the counts are on the driver now (Observation counters fired with
+    # the materializing count above): they size the delta files
+    commit_updates(
         spark,
-        updates,
+        store,
+        gated,
+        new_rows,
+        step,
+        n_scheduled + n_new,
+        plan.host_state,
         filters_increment,
-        meta={"step": step},
-        host_state=plan.host_state,
     )
     _mark("commit_step")
     if n_scheduled > 0:

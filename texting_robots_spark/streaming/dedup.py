@@ -13,12 +13,11 @@ This is the rolling-crawl dedup (operators/dedup.py:
 incremental_lsh_candidates) mounted on Structured Streaming: per
 micro-batch cost is O(batch) signature work plus one bucket join
 against the stored index — archived document TEXT is never re-read,
-only its fixed-width band index. Replay-idempotent by the same
-epoch discipline as streaming/loop.py: every artifact lands under
-epoch=<batchId> with a _COMMITTED marker written last, a replayed
-batch reads only epochs STRICTLY below its id and atomically
-overwrites its own, so a crash anywhere leaves the next attempt
-seeing exactly what the first saw.
+only its fixed-width band index. Replay-idempotent by epoch
+discipline: every artifact lands under epoch=<batchId> with a
+_COMMITTED marker written last, a replayed batch reads only epochs
+STRICTLY below its id and atomically overwrites its own, so a crash
+anywhere leaves the next attempt seeing exactly what the first saw.
 
 Batching-invariance: the UNION of emitted pairs, read as undirected
 edges, equals the full-corpus ``minhash_lsh_candidates`` output no
@@ -31,7 +30,7 @@ from __future__ import annotations
 
 import glob
 import os
-from typing import Optional
+from typing import List, Optional
 
 from pyspark.sql import SparkSession
 
@@ -41,11 +40,46 @@ from ..operators.dedup import (
     minhash_signature,
 )
 from ..sources.local import local_frame
-from .loop import _is_complete, _mark_committed, _prior_epoch_paths
 
 __all__ = ["run_stream_dedup", "compact_dedup_index", "DOC_DDL"]
 
 DOC_DDL = "doc_id string, text string"
+
+_COMMIT_MARKER = "_COMMITTED"
+
+
+def _mark_committed(epoch_dir: str) -> None:
+    """Write the epoch-local commit marker AFTER the parquet write.
+    Completeness used to be inferred from part-file presence, which
+    only worked for empty DataFrames because Spark happens to write a
+    schema-only part file (SPARK-23271) — an implementation detail. The
+    marker makes "this epoch is fully written" explicit (round-5
+    ADVICE): it is the last file created, so a crash anywhere inside
+    the epoch write leaves no marker and the dir is never selected."""
+    with open(os.path.join(epoch_dir, _COMMIT_MARKER), "w"):
+        pass
+
+
+def _is_complete(epoch_dir: str) -> bool:
+    return os.path.exists(os.path.join(epoch_dir, _COMMIT_MARKER))
+
+
+def _epoch(epoch_dir: str) -> int:
+    return int(os.path.basename(epoch_dir).split("=", 1)[1])
+
+
+def _prior_epoch_paths(table_dir: str, batch_id: float) -> List[str]:
+    """Complete epoch partitions STRICTLY below ``batch_id``, in epoch
+    order. A replayed micro-batch (foreachBatch re-runs a failed batch
+    under the same id) must never read its own epoch's half-committed
+    rows — excluding ``epoch=batch_id`` (and anything later) makes the
+    read/write sets disjoint and the replay lossless. Completeness is
+    keyed on the _COMMITTED marker, not part-file presence."""
+    return [
+        d
+        for d in sorted(glob.glob(os.path.join(table_dir, "epoch=*")), key=_epoch)
+        if _epoch(d) < batch_id and _is_complete(d)
+    ]
 
 
 def run_stream_dedup(
@@ -206,15 +240,11 @@ def compact_dedup_index(spark: SparkSession, workdir: str) -> int:
 
     index = os.path.join(workdir, "index")
     _recover_compaction(index)
-    epochs = sorted(
-        (d for d in glob.glob(os.path.join(index, "epoch=*")) if _is_complete(d)),
-        key=lambda d: int(os.path.basename(d).split("=", 1)[1]),
-    )
+    epochs = _prior_epoch_paths(index, float("inf"))
     if len(epochs) < 2:
         return 0
     target = epochs[-1]
-    target_id = os.path.basename(target).split("=", 1)[1]
-    staging = os.path.join(index, _STAGING_PREFIX + target_id)
+    staging = os.path.join(index, f"{_STAGING_PREFIX}{_epoch(target)}")
     shutil.rmtree(staging, ignore_errors=True)
     # reads epochs, writes staging — input dirs untouched, so no
     # localCheckpoint materialization is needed anymore

@@ -1,54 +1,53 @@
 """Self-feeding streaming crawl: the stream DISCOVERS URLs.
 
-Round-2's streaming layer replayed pre-computed eligible sets; this
-module closes the loop (NOTES_r2 caveat 5). Architecture:
+Architecture — micro-batch b is crawl step b of a FrontierStore at
+``<workdir>/store``, committed through the batch step's commit path:
 
     candidate files (src/)  ->  readStream
         -> foreachBatch:
-             anti-join against the SEEN log (epochs < batchId)
-             union with the PENDING side table (politeness leftovers)
+             admit the candidates the store has not seen (anti-join
+               against store.read_keys) as queued rows
              -> superstep.step_plan     [the batch superstep's step core:
-                                         eligibility, schedule, gate,
-                                         fetch, link candidates,
-                                         politeness advance]
-             -> fetched rows written to out/
+                over the store's         eligibility, schedule, gate,
+                frontier + those rows,   fetch, link candidates,
+                with its host_state      politeness advance]
+             -> fetched rows written to out/epoch=b
              -> NEW candidate file written back into src/   <-- feedback
+             -> superstep.commit_updates: the update set and host_state
+                committed as the store's step b
 
 One micro-batch == one crawl step (maxFilesPerTrigger=1; every step
 produces exactly one candidate file, url_hash-unique because
 seed_frontier and link_candidates both group by url_hash). The query
 is stateless: it keeps no Structured Streaming state store and runs no
-stateful operator. The URL-seen set is the ``seen/`` log, one parquet
-file of admitted url_hashes per epoch, and every candidate is
-anti-joined against it exactly; per-host politeness state and the
-unscheduled-leftover ("pending") set are side parquet tables swapped
-atomically per batch, exactly the batch superstep's host_state
-mechanics.
+stateful operator. The store is the crawl's state: its exact key set
+is the URL-seen set, its queued rows are the politeness leftovers, and
+its host_state is the per-host politeness clock. It compacts every
+``compact_every`` steps, so a batch's seen check reads at most
+``compact_every`` + 1 snapshot directories however long the crawl
+runs. The store writes no bloom filters (no init_crawl: it starts
+empty at step -1, and batch 0 admits the seed file), so the seen check
+is the exact anti-join alone.
 
 Semantics match run_crawl step for step: both drivers build the step
-with the same ``step_plan`` call, so a 2-step batch crawl and this loop
-produce the identical (url_hash, fetch_time) fetch set AND the
-identical discovered-URL set (pinned in pytest). What stays here is
-what the stream keeps instead of a frontier store: the seen log, the
-pending/host_state epochs and the feedback file.
+with the same ``step_plan`` call and commit it with the same
+``commit_updates`` call, so a 2-step batch crawl and this loop produce
+the identical (url_hash, fetch_time) fetch set AND the identical
+discovered-URL set (pinned in pytest). The batch crawl admits step b's
+links when it commits b, checked against the keys it had before that
+commit; the stream admits them at the start of b+1, against the keys
+after b's commit. b's commit adds only keys the store already held
+(its scheduled rows), so both admit the same rows, and the stream's
+unscheduled queued rows are the batch frontier's.
 
-Scale notes: the seen log is O(discovered URLs) 8-byte keys;
-pending/host_state are O(frontier backlog) and O(active hosts) parquet
-tables; the feedback file is O(per-step discoveries). No bloom sits in
-front of the seen anti-join: every maybe-seen row would still need the
-exact check against the whole log, so a prefilter cannot save the
-key-side scan, only trim the batch-sized probe side.
+Crash-replay safety — keyed on the store's manifest (foreachBatch
+replays a failed batch under the SAME id, and batch ids resume from
+the checkpoint after a driver restart):
 
-Crash-replay safety — EVERY batch artifact is keyed on the batchId
-(round 5; foreachBatch replays a failed batch under the SAME id, and
-batchIds resume from the checkpoint after a driver restart):
-
-- reads come only from epochs STRICTLY BELOW the current batch (seen
-  anti-join; pending/host_state from the latest complete predecessor
-  epoch), writes go only to ``<table>/epoch=<batchId>`` with
-  overwrite — read and write sets are disjoint directories, so a
-  replayed batch recomputes from exactly the pre-crash inputs and its
-  rewrites are idempotent;
+- a batch whose step the manifest already records returns at once;
+- any other batch reads only the committed store, and its commit is
+  its last write and atomic (commit_step renames the manifest last),
+  so a replay recomputes from exactly the pre-crash inputs;
 - the virtual clock is ``t0 = batchId * step_seconds`` — NOT an
   in-memory step counter, which would reset to 0 on restart while the
   checkpoint resumes batchIds mid-sequence (round-4 ADVICE);
@@ -58,19 +57,9 @@ batchIds resume from the checkpoint after a driver restart):
 - the feedback file name is derived from the batchId, and moving a
   file over an existing path replaces it atomically.
 
-Superseded pending/host_state epochs (< batchId-1) are pruned at the
-end of each batch — a replay of batch b only ever reads epoch b-1 —
-so the directory listing stays O(1) over long crawls. The seen log
-keeps one small file of NEW hashes per epoch (the exact-membership
-record), so its listing grows by one file per step.
-
-Every epoch table is read with its schema passed explicitly, as the
-frontier store reads its own: the loop owns the layout, so no batch
-pays a footer read per prior epoch to infer one.
-
 The whole per-batch step is built by ``make_batch_processor`` —
 module-level so the crash-injection test drives it directly with a
-simulated mid-commit failure + same-id replay (fail_after).
+simulated mid-batch failure + same-id replay (fail_after).
 """
 
 from __future__ import annotations
@@ -86,20 +75,19 @@ from pyspark.sql import functions as F
 
 from ..plans.superstep import (
     CrawlConfig,
+    commit_updates,
     seed_frontier,
     step_plan,
     window_group_limit_scope,
 )
-from ..sources.frontier_store import HOST_STATE_DDL
+from ..sizing import sized_shuffle_scope
+from ..sources.frontier_store import FrontierStore
 
 __all__ = ["run_stream_crawl", "make_batch_processor", "CAND_DDL"]
 
-# pending rows are admitted candidates: the candidate columns minus step
-PENDING_DDL = (
-    "url_hash long, url string, host string, priority double, depth int"
+CAND_DDL = (
+    "url_hash long, url string, host string, priority double, depth int, step int"
 )
-CAND_DDL = PENDING_DDL + ", step int"
-SEEN_DDL = "url_hash long"
 
 
 def _write_one_file(df: DataFrame, stage_dir: str, dest: str) -> None:
@@ -113,74 +101,6 @@ def _write_one_file(df: DataFrame, stage_dir: str, dest: str) -> None:
     shutil.rmtree(stage_dir, ignore_errors=True)
 
 
-_COMMIT_MARKER = "_COMMITTED"
-
-
-def _mark_committed(epoch_dir: str) -> None:
-    """Write the epoch-local commit marker AFTER the parquet write.
-    Completeness used to be inferred from part-file presence, which
-    only worked for empty DataFrames because Spark happens to write a
-    schema-only part file (SPARK-23271) — an implementation detail. The
-    marker makes "this epoch is fully written" explicit (round-5
-    ADVICE): it is the last file created, so a crash anywhere inside
-    the epoch write leaves no marker and the dir is never selected."""
-    with open(os.path.join(epoch_dir, _COMMIT_MARKER), "w"):
-        pass
-
-
-def _is_complete(epoch_dir: str) -> bool:
-    return os.path.exists(os.path.join(epoch_dir, _COMMIT_MARKER))
-
-
-def _epoch(epoch_dir: str) -> int:
-    return int(os.path.basename(epoch_dir).split("=", 1)[1])
-
-
-def _prior_epoch_paths(table_dir: str, batch_id: float) -> List[str]:
-    """Complete epoch partitions STRICTLY below ``batch_id``, in epoch
-    order. A replayed micro-batch (foreachBatch re-runs a failed batch
-    under the same id) must never anti-join against its own epoch's
-    half-committed rows — excluding ``epoch=batch_id`` (and anything
-    later) makes the read/write sets disjoint and the replay lossless.
-    Completeness is keyed on the _COMMITTED marker, not part-file
-    presence."""
-    return [
-        d
-        for d in sorted(glob.glob(os.path.join(table_dir, "epoch=*")), key=_epoch)
-        if _epoch(d) < batch_id and _is_complete(d)
-    ]
-
-
-def _latest_epoch_path(table_dir: str, batch_id: float) -> Optional[str]:
-    """The most recent COMPLETE epoch partition strictly below
-    ``batch_id`` — how a batch reads its predecessor's pending/
-    host_state checkpoint. Its own epoch (a crashed attempt's
-    half-state) and unmarked dirs (crash between the parquet write and
-    the _COMMITTED marker) are never candidates, so a replay sees
-    exactly what the first attempt saw."""
-    prior = _prior_epoch_paths(table_dir, batch_id)
-    return prior[-1] if prior else None
-
-
-def _completed_steps(workdir: str) -> int:
-    """Number of fully-committed crawl steps in ``workdir``, read from
-    the durable epoch markers (host_state is the LAST per-batch epoch
-    write, so its highest committed epoch is the last completed batch).
-    Lets a resumed run whose target is already met return immediately
-    instead of waiting out the stream timeout (round-5 ADVICE)."""
-    last = _latest_epoch_path(os.path.join(workdir, "host_state"), float("inf"))
-    return 0 if last is None else _epoch(last) + 1
-
-
-def _prune_epochs(table_dir: str, below: int) -> None:
-    """Drop superseded epoch partitions (< ``below``): batch b only
-    ever reads epoch b-1, so older pending/host_state checkpoints are
-    dead weight and the listing stays O(1) over long crawls."""
-    for d in glob.glob(os.path.join(table_dir, "epoch=*")):
-        if _epoch(d) < below:
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def make_batch_processor(
     spark: SparkSession,
     docs: DataFrame,
@@ -191,148 +111,122 @@ def make_batch_processor(
     state: Optional[dict] = None,
     fail_after: Optional[str] = None,
 ):
-    """Build the foreachBatch function for one crawl step. Module-level
-    (not a closure private to run_stream_crawl) so the crash-injection
-    test can drive batches directly: construct with ``fail_after`` set
-    to one of {"seen", "out", "feedback", "pending", "host_state"} to
-    raise RIGHT AFTER that write commits — simulating a crash
-    mid-batch — then replay the SAME batch_id through a non-failing
-    processor, exactly what foreachBatch does after a failure.
+    """Build the foreachBatch function: batch b runs crawl step b of
+    the store at ``<workdir>/store`` and commits it as that store's
+    step b. Module-level (not a closure private to run_stream_crawl) so
+    the crash-injection test can drive batches directly: construct with
+    ``fail_after`` set to one of {"out", "feedback", "commit"} to raise
+    RIGHT AFTER that write — simulating a crash mid-batch — then replay
+    the SAME batch_id through a non-failing processor, exactly what
+    foreachBatch does after a failure.
 
-    Every read comes from epochs < batch_id, every write goes to
-    ``<table>/epoch=<batch_id>`` with overwrite, and the virtual clock
-    is ``batch_id * step_seconds`` — see the module docstring for why
-    each of these is load-bearing for replay/restart idempotence."""
+    A batch whose step the store's manifest already records returns at
+    once; any other batch reads only the committed store, writes its
+    batch-keyed files with overwrite, and commits last; the virtual
+    clock is ``batch_id * step_seconds`` — see the module docstring for
+    why each of these is load-bearing for replay/restart idempotence."""
     src = os.path.join(workdir, "src")
     out = os.path.join(workdir, "out")
-    pending_dir = os.path.join(workdir, "pending")
-    hstate_dir = os.path.join(workdir, "host_state")
-    seen_dir = os.path.join(workdir, "seen")
     discovered = os.path.join(workdir, "discovered")
+    store = FrontierStore(os.path.join(workdir, "store"))
     if state is None:
         state = {}
 
     def _fail(phase: str) -> None:
         if fail_after == phase:
-            raise RuntimeError(f"injected crash after {phase} write (test hook)")
+            raise RuntimeError(f"injected crash after {phase} (test hook)")
 
-    def _process_body(batch_df: DataFrame, batch_id: int) -> None:
-        # admission: the batch's candidates minus every url_hash an
-        # earlier epoch admitted — the exact seen-set, one path for
-        # every row. The batch is one url_hash-unique candidate file,
-        # so nothing needs deduping within it.
+    def _step(batch_df: DataFrame, batch_id: int) -> None:
+        frontier = store.read_frontier(spark).drop("partition_salt")
         fresh = batch_df.select("url_hash", "url", "host", "priority", "depth")
-        prior_epochs = _prior_epoch_paths(seen_dir, batch_id)
-        if prior_epochs:
-            fresh = fresh.join(
-                spark.read.schema(SEEN_DDL).parquet(*prior_epochs),
-                "url_hash",
-                "left_anti",
+        # the batch superstep's conf scopes, over the whole step: the
+        # skew guard and the sized fan-out are read when the actions
+        # run, and must not leak into other queries on the session
+        with window_group_limit_scope(spark, cfg.per_host_k), sized_shuffle_scope(
+            spark, frontier, fresh, docs
+        ):
+            # admission: the batch's candidates minus every url_hash the
+            # store holds — the exact seen-set. The batch is one
+            # url_hash-unique candidate file, so nothing needs deduping
+            # within it. Candidates carry no per-row politeness hold;
+            # hosts whose clock exceeds t0 sit out inside step_plan and
+            # their rows stay queued in the store.
+            admitted = (
+                fresh.join(store.read_keys(spark), "url_hash", "left_anti")
+                .withColumns({"state": F.lit("queued"), "not_before": F.lit(0.0)})
+                .cache()
             )
-        fresh = fresh.cache()
-        plan = None
-        try:
-            # record this batch's admissions BEFORE they can re-enter
-            # the loop via feedback (epoch overwrite = replay-idempotent)
-            fresh.select("url_hash").coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(seen_dir, f"epoch={batch_id}")
-            )
-            _mark_committed(os.path.join(seen_dir, f"epoch={batch_id}"))
-            _fail("seen")
-            prev_pending = _latest_epoch_path(pending_dir, batch_id)
-            if prev_pending:
-                cands = (
-                    spark.read.schema(PENDING_DDL)
-                    .parquet(prev_pending)
-                    .unionByName(fresh)
+            plan = None
+            try:
+                # fills the cache both the step and the commit read
+                n_admitted = admitted.count()
+                # the step core at the virtual clock of the DURABLE
+                # batch_id: an in-memory step counter resets on driver
+                # restart while the checkpoint resumes batch ids
+                # mid-sequence, silently rewinding politeness time
+                plan = step_plan(
+                    frontier.unionByName(admitted),
+                    store.read_host_state(spark),
+                    docs,
+                    rules,
+                    cfg,
+                    batch_id,
                 )
-            else:
-                cands = fresh
-            prev_hs = _latest_epoch_path(hstate_dir, batch_id)
-            host_state = (
-                spark.read.schema(HOST_STATE_DDL).parquet(prev_hs)
-                if prev_hs
-                else None
-            )
-            # the step core at the virtual clock of the DURABLE batch_id:
-            # an in-memory step counter resets on driver restart while
-            # the checkpoint resumes batch ids mid-sequence, silently
-            # rewinding politeness time. Candidates are queued rows that
-            # carry no per-row politeness hold; hosts whose clock
-            # exceeds t0 sit out inside step_plan and stay pending.
-            plan = step_plan(
-                cands.withColumns(
-                    {"state": F.lit("queued"), "not_before": F.lit(0.0)}
-                ),
-                host_state,
-                docs,
-                rules,
-                cfg,
-                batch_id,
-            )
-            # fetched rows out (the crawl-order artifact): per-epoch
-            # overwrite — a replayed batch can never append duplicates
-            plan.gated.where(F.col("allowed")).select(
-                "url_hash", "url", "host", "depth", "fetch_time",
-                F.lit(batch_id).alias("step"),
-            ).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(out, f"epoch={batch_id}")
-            )
-            _fail("out")
-            # feedback: the canonical link candidates; the next batch's
-            # seen anti-join drops everything already admitted, so this
-            # file may feed zero fresh rows — the NEXT batch still
-            # fires (one file = one step) and schedules the backlog
-            feedback = plan.candidates.select(
-                "url_hash", "url", "host", "priority", "depth",
-                F.lit(batch_id + 1).alias("step"),
-            )
-            # intermediate feedback goes back into the stream source
-            # (the loop); the FINAL step's discoveries land beside it —
-            # part of the discovered-URL set but must not trigger a
-            # batch past n_steps (a trigger racing query.stop() fails
-            # the query)
-            dest = src if batch_id + 1 < n_steps else discovered
-            _write_one_file(
-                feedback,
-                os.path.join(workdir, f"stage_fb{batch_id}"),
-                os.path.join(dest, f"step{batch_id + 1}.parquet"),
-            )
-            _fail("feedback")
-            # pending' = candidates not scheduled this step (gated holds
-            # every scheduled row; leftovers keep priority/depth and
-            # retry next step — batch §8)
-            cands.join(
-                plan.gated.select("url_hash"), "url_hash", "left_anti"
-            ).write.mode("overwrite").parquet(
-                os.path.join(pending_dir, f"epoch={batch_id}")
-            )
-            _mark_committed(os.path.join(pending_dir, f"epoch={batch_id}"))
-            _fail("pending")
-            plan.host_state.write.mode("overwrite").parquet(
-                os.path.join(hstate_dir, f"epoch={batch_id}")
-            )
-            _mark_committed(os.path.join(hstate_dir, f"epoch={batch_id}"))
-            _fail("host_state")
-        finally:
-            fresh.unpersist()
-            if plan is not None:
-                plan.gated.unpersist()
-        # this batch is fully committed; epochs < batch_id-1 can no
-        # longer be read by any future (re)attempt
-        _prune_epochs(pending_dir, batch_id - 1)
-        _prune_epochs(hstate_dir, batch_id - 1)
-        state["done"] = batch_id + 1  # completion sentinel (stop-safety)
+                # fetched rows out (the crawl-order artifact): per-epoch
+                # overwrite — a replayed batch can never append duplicates
+                plan.gated.where(F.col("allowed")).select(
+                    "url_hash", "url", "host", "depth", "fetch_time",
+                    F.lit(batch_id).alias("step"),
+                ).coalesce(1).write.mode("overwrite").parquet(
+                    os.path.join(out, f"epoch={batch_id}")
+                )
+                _fail("out")
+                # feedback: the canonical link candidates; the next
+                # batch's admission drops everything the store holds, so
+                # this file may feed zero fresh rows — the NEXT batch
+                # still fires (one file = one step) and schedules the
+                # backlog. Intermediate feedback goes back into the
+                # stream source (the loop); the FINAL step's discoveries
+                # land beside it — part of the discovered-URL set but
+                # must not trigger a batch past n_steps (a trigger
+                # racing query.stop() fails the query)
+                feedback = plan.candidates.select(
+                    "url_hash", "url", "host", "priority", "depth",
+                    F.lit(batch_id + 1).alias("step"),
+                )
+                dest = src if batch_id + 1 < n_steps else discovered
+                _write_one_file(
+                    feedback,
+                    os.path.join(workdir, f"stage_fb{batch_id}"),
+                    os.path.join(dest, f"step{batch_id + 1}.parquet"),
+                )
+                _fail("feedback")
+                # the admitted rows this step did not schedule stay
+                # queued; a scheduled one enters the delta once, as
+                # fetched or disallowed. The step's Observation fired
+                # with the out write; with the admitted count it bounds
+                # the delta's rows.
+                commit_updates(
+                    spark,
+                    store,
+                    plan.gated,
+                    admitted.join(
+                        plan.gated.select("url_hash"), "url_hash", "left_anti"
+                    ),
+                    batch_id,
+                    int(plan.obs.get["n"] or 0) + n_admitted,
+                    plan.host_state,
+                )
+                _fail("commit")
+            finally:
+                admitted.unpersist()
+                if plan is not None:
+                    plan.gated.unpersist()
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # the batch superstep's conf scope, over the whole batch body:
-        # schedule_batch's skew guard needs it in effect when the
-        # batch's ACTIONS run, and it must not leak into other queries
-        # on the session (round-5 ADVICE). Micro-batches keep the
-        # session's shuffle fan-out: they plan in the stream's session,
-        # and the batch superstep's sized_shuffle_scope does not apply.
-        with window_group_limit_scope(spark, cfg.per_host_k):
-            _process_body(batch_df, batch_id)
+        if int(store.meta().get("step", -1)) < batch_id:
+            _step(batch_df, batch_id)
+        state["done"] = batch_id + 1  # completion sentinel (stop-safety)
 
     return _process
 
@@ -364,13 +258,13 @@ def run_stream_crawl(
     n_steps — it fixes which step's feedback lands in discovered/)
     continues a stopped crawl from the Structured Streaming checkpoint:
     batch ids resume where they left off, the seed file is written only
-    once, and every per-batch artifact is epoch-keyed on the durable
-    batchId (see module docstring). ``stop_after`` stops the query once
-    the crawl has completed that many steps IN TOTAL — it composes with
-    resume ("run to step k now, continue later"); a resumed session
-    whose target is already met returns immediately (the durable epoch
-    markers say how many steps committed — no stream is started and no
-    timeout is paid; round-5 ADVICE)."""
+    once, and every batch commits to the store as the step of its
+    durable batchId (see module docstring). ``stop_after`` stops the
+    query once the crawl has completed that many steps IN TOTAL — it
+    composes with resume ("run to step k now, continue later"); a
+    resumed session whose target is already met returns immediately
+    (the store's manifest says how many steps committed — no stream is
+    started and no timeout is paid; round-5 ADVICE)."""
     src = os.path.join(workdir, "src")
     out = os.path.join(workdir, "out")
     ckpt = os.path.join(workdir, "ckpt")
@@ -380,10 +274,11 @@ def run_stream_crawl(
     os.makedirs(discovered, exist_ok=True)
     dirs = {"out": out, "src": src, "discovered": discovered}
 
-    # resume fast-path: if the durable epoch markers already record the
+    # resume fast-path: if the store's manifest already records the
     # target as met, don't start (and then time out) an idle stream
     target = n_steps if stop_after is None else min(int(stop_after), n_steps)
-    already = _completed_steps(workdir)
+    store = FrontierStore(os.path.join(workdir, "store"))
+    already = int(store.meta().get("step", -1)) + 1
     if already >= target:
         return {**dirs, "steps": already}
 
@@ -455,5 +350,5 @@ def run_stream_crawl(
     if failed:
         raise state["error"]
     # absolute completed steps: the in-memory sentinel when batches ran
-    # this session, else what the durable markers already held
+    # this session, else what the store's manifest already held
     return {**dirs, "steps": max(state.get("done", 0), already)}
