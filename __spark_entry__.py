@@ -93,8 +93,9 @@ def _interleaved_docs_from_sf(spark: SparkSession, sf_dir: str):
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: 3 crawl supersteps (robots gate, politeness, bloom dedup,
-    link extraction, MERGE) over the sf0.001-derived interleaved corpus.
+    """Flagship: 3 crawl supersteps (robots gate, politeness, exact
+    seen-set dedup, link extraction, MERGE) over the sf0.001-derived
+    interleaved corpus.
     Returns the reproducible crawl order."""
     import tempfile
 
@@ -995,8 +996,9 @@ def _superstep_one_step(spark, sf_dir):
 
     The iterative crawl (``crawl_superstep``) can't be SQL, but one step
     over a frozen frontier is: the same ``schedule_batch`` /
-    ``gate`` / ``extract_links`` / ``link_candidates`` / ``probe_bloom``
-    code paths ``frontier_step`` runs (plans/superstep.py), with three
+    ``gate`` / ``extract_links`` / ``link_candidates`` code paths
+    ``frontier_step`` runs (plans/superstep.py), plus the library's
+    ``probe_bloom`` in front of the exact anti-join, with three
     deterministic choices that make DuckDB able to replay it exactly:
 
     - robots.txt bodies contain only literal-prefix rules (Disallow
@@ -1131,8 +1133,8 @@ def _superstep_one_step(spark, sf_dir):
 
 def _crawl_two_steps(spark, sf_dir):
     """Two FULL ``run_crawl`` supersteps against a real FrontierStore —
-    seed snapshot, delta commits, bloom build + increments, host-state
-    checkpoints, merge-on-read reads — hash-oracled on the terminal
+    seed snapshot, delta commits, the exact key-set seen check,
+    host-state checkpoints, merge-on-read reads — hash-oracled on the terminal
     frontier. This oracles the ITERATIVE engine path itself (the thing
     ``crawl_superstep`` runs rows-only), made DuckDB-replayable by
     construction:
@@ -1222,33 +1224,21 @@ def _crawl_two_steps(spark, sf_dir):
 
 
 def _recrawl_requeue(spark, sf_dir):
-    """The FULL recrawl/cuckoo path (plans/recrawl.py, operators/
-    cuckoo.py) — the one first-class component round 4 left outside the
-    DuckDB hash signal — run end-to-end against a real FrontierStore and
-    hash-oracled:
+    """The FULL recrawl path (plans/recrawl.py) — the one first-class
+    component round 4 left outside the DuckDB hash signal — run
+    end-to-end against a real FrontierStore and hash-oracled:
 
         write_snapshot (queued+fetched universe)
-          -> compact_frontier   (archive non-queued; build cuckoo over
-                                 EVERY key, zero-drop checked)
-          -> schedule_recrawl   (cuckoo-DELETE the refetch hashes,
-                                 MERGE fresh queued rows)
-          -> dedup_candidates_cuckoo (post-compaction seen-check)
+          -> compact_frontier   (archive non-queued, queued-only snapshot)
+          -> schedule_recrawl   (MERGE fresh queued rows for the refetch
+                                 URLs)
+          -> dedup_candidates   (post-compaction seen-check: exact
+                                 anti-join against the store's key set
+                                 minus the requeued keys)
 
-    Deterministic by construction, so DuckDB replays it without knowing
-    cuckoo internals:
-    - deleting a genuinely-inserted key always succeeds and probing a
-      still-inserted key is always true (no false negatives), so the
-      delete set == the refetch set and still-archived/still-queued
-      candidates are always screened out;
-    - the only probabilistic surface is a false POSITIVE on a
-      never-inserted or deleted key (~1.2e-4/probe at 16-bit tags,
-      8 slots); the filter hash chain is seeded RNG-free from the
-      url_hash (cuckoo.py), so for the FIXED testdata universe the
-      probe outcomes are bit-reproducible — verified FP-free at
-      sf0.001/0.01/0.1 (a true collision would surface as a stable,
-      diagnosable hash mismatch, not flakiness);
-    - compaction zero-drop is load-bound (<=625 keys/partition vs 16k
-      slots at sf0.1) and compact_frontier RAISES on any drop.
+    Every step is an exact set operation, so DuckDB replays it
+    directly: the fresh set is the requeued keys plus the never-seen
+    /new/ URLs.
 
     Output: 'archived' rows (the compacted-away fetched set), the
     'frontier' after requeue (original queued + requeued rows at
@@ -1256,10 +1246,9 @@ def _recrawl_requeue(spark, sf_dir):
     + never-seen /new/ URLs pass; still-seen keys screened)."""
     import tempfile
 
-    from texting_robots_spark.operators.cuckoo import CuckooConfig
     from texting_robots_spark.plans.recrawl import (
         compact_frontier,
-        dedup_candidates_cuckoo,
+        dedup_candidates,
         schedule_recrawl,
     )
     from texting_robots_spark.sources.frontier_store import FrontierStore
@@ -1295,14 +1284,12 @@ def _recrawl_requeue(spark, sf_dir):
         base.select(
             "url_hash", "url", "host", "priority", "depth", "state", "not_before"
         ),
-        filters=None,
         meta={"step": 0},
     )
-    ccfg = CuckooConfig(n_partitions=8, n_buckets=1 << 12)
-    compact_frontier(spark, store, ccfg)
+    compact_frontier(spark, store)
     refetch_pred = (F.col("state") == "fetched") & (F.col("doc_id") % 5 == 1)
     refetch = [r["url"] for r in base.where(refetch_pred).select("url").collect()]
-    schedule_recrawl(spark, store, refetch, ccfg, priority=2.0)
+    schedule_recrawl(spark, store, refetch, priority=2.0)
     cand = (
         base.where(refetch_pred)
         .select("url", "host")
@@ -1319,7 +1306,7 @@ def _recrawl_requeue(spark, sf_dir):
         )
         .withColumn("url_hash", F.xxhash64("url"))
     )
-    fresh = dedup_candidates_cuckoo(spark, store, cand, ccfg)
+    fresh = dedup_candidates(spark, store, cand)
     _nd = F.lit(None).cast("double")
     _nl = F.lit(None).cast("long")
     _ns = F.lit(None).cast("string")

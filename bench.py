@@ -10,8 +10,9 @@ Components (per-query seconds in "queries", derived rates in "rates"):
 - robots_allow_1m:     1,000,000 allow-checks through the broadcast-rules
                        gate UDF (reference main.rs:25-53 does 1M checks).
 - crawl_3_supersteps:  3 full frontier supersteps (gate + politeness +
-                       fetch join + link extraction + bloom dedup + MERGE
-                       + checkpoint) over a 20k-doc synthetic universe.
+                       fetch join + link extraction + exact seen-set dedup
+                       + MERGE + checkpoint) over a 20k-doc synthetic
+                       universe.
 - sf queries:          representative operator queries over the
                        $SPARK_GRAFT_SF_DIR tables (agg, window, joins,
                        dedup, similarity).
@@ -224,18 +225,14 @@ def main():
     rates["frontier_urls_processed"] = n_processed
 
     # --- recrawl cycle over the store the crawl just produced -----------
-    # archive-compaction (cuckoo seen-set build over every key), cuckoo
-    # deletion + re-queue of 2k previously-fetched URLs, and the
-    # post-compaction candidate probe — the full deletable-seen-set path
-    # (plans/recrawl.py, operators/cuckoo.py)
-    from texting_robots_spark.operators.cuckoo import CuckooConfig
+    # archive-compaction, re-queue of 2k previously-fetched URLs, and
+    # the post-compaction exact seen check (plans/recrawl.py)
     from texting_robots_spark.plans.recrawl import (
         compact_frontier,
-        dedup_candidates_cuckoo,
+        dedup_candidates,
         schedule_recrawl,
     )
 
-    ccfg = CuckooConfig(n_partitions=cpus, n_buckets=1 << 12)
     refetch = [
         r["url"]
         for r in store.read_frontier(spark)
@@ -246,9 +243,9 @@ def main():
     ]
     cand_probe = store.read_frontier(spark).select("url_hash").limit(20000)
     t0 = time.time()
-    cstats = compact_frontier(spark, store, ccfg)
-    n_requeued = schedule_recrawl(spark, store, refetch, ccfg)
-    n_fresh = dedup_candidates_cuckoo(spark, store, cand_probe, ccfg).count()
+    cstats = compact_frontier(spark, store)
+    n_requeued = schedule_recrawl(spark, store, refetch)
+    n_fresh = dedup_candidates(spark, store, cand_probe).count()
     dt = time.time() - t0
     queries["recrawl_cycle"] = round(dt, 3)
     rates["recrawl_archived"] = cstats["archived"]

@@ -36,7 +36,6 @@ def main() -> None:
     ap.add_argument("--per-host-k", type=int, default=64)
     ap.add_argument("--step-seconds", type=float, default=600.0)
     ap.add_argument("--bloom-partitions", type=int, default=32)
-    ap.add_argument("--bloom-bits", type=int, default=1 << 22)
     ap.add_argument(
         "--gate-mode",
         choices=("broadcast", "sharded"),
@@ -76,9 +75,7 @@ def main() -> None:
         agent=args.agent,
         per_host_k=args.per_host_k,
         step_seconds=args.step_seconds,
-        bloom=BloomConfig(
-            n_partitions=args.bloom_partitions, n_bits=args.bloom_bits, n_hashes=4
-        ),
+        bloom=BloomConfig(n_partitions=args.bloom_partitions),
     )
     store = FrontierStore(args.store, n_buckets=args.bloom_partitions)
     rules = None

@@ -78,7 +78,7 @@ def test_insert_many_matches_sequential_insert():
 
 
 def test_probe_cuckoo_rederives_a_foreign_partition_id(spark):
-    """link_candidates clustered for a bloom of P partitions carries
+    """Candidates clustered for a bloom of P partitions carry
     partition_id = pmod(url_hash, P). A cuckoo config with another
     partition count must still probe every key in its own filter (no
     false negatives), and the caller's column passes through."""
@@ -88,7 +88,11 @@ def test_probe_cuckoo_rederives_a_foreign_partition_id(spark):
         [(f"https://h{i % 7}.example/p/{i}", 0) for i in range(600)],
         "url string, depth int",
     )
-    cands = link_candidates(links, cluster_partitions=4)
+    cands = (
+        link_candidates(links)
+        .withColumn("partition_id", F.pmod("url_hash", F.lit(4)).cast("int"))
+        .repartition("partition_id")
+    )
     cfg = CuckooConfig(n_partitions=3, n_buckets=1 << 10)
     filters = build_cuckoo(cands, cfg).cache()
     probed = probe_cuckoo(cands, filters, cfg)

@@ -29,6 +29,7 @@ DDL = (
     "url_hash long, url string, host string, priority double, depth int, "
     "state string, not_before double"
 )
+_COLS = [c.split()[0] for c in DDL.split(", ")]
 
 
 def _expected(n_deltas):
@@ -97,3 +98,28 @@ def test_delta_ddl_is_frontier_minus_salt():
     frontier = StructType.fromDDL(FRONTIER_DDL)
     delta = StructType.fromDDL(DELTA_DDL)
     assert list(delta) == [f for f in frontier if f.name != "partition_salt"]
+
+
+def test_small_base_writes_one_file(spark, tmp_path):
+    """A full base sizes its file count from its input, capped at
+    n_buckets: a few-hundred-row store compacts to one base file (not
+    one per bucket), and the salt column still holds pmod(url_hash,
+    n_buckets)."""
+    import glob
+
+    from texting_robots_spark.sources.local import local_frame
+
+    def frame(i):
+        rows = _rows(i, n=150, overlap=150)
+        return local_frame(
+            spark, DDL, {c: [r[k] for r in rows] for k, c in enumerate(_COLS)}
+        )
+
+    store = FrontierStore(str(tmp_path / "store"), n_buckets=8, compact_every=1)
+    store.write_snapshot(frame(0))
+    store.commit_step(spark, frame(1))  # compacts: a 300-row base
+    base = store._snap_dir(store._read_manifest()["base"], "frontier")
+    assert len(glob.glob(f"{base}/*.parquet")) == 1
+    salts = store.read_frontier(spark).select("url_hash", "partition_salt").collect()
+    assert len(salts) == 300
+    assert all(r["partition_salt"] == r["url_hash"] % 8 for r in salts)

@@ -175,6 +175,47 @@ def test_read_keys_is_column_pruned_union(spark, tmp_path):
     assert {r["url_hash"] for r in keys.collect()} == merged
 
 
+def test_frontier_step_runs_one_seen_set_anti_join(spark, tmp_path, monkeypatch):
+    """Every crawl step finds its new rows with exactly one url_hash
+    anti-join, against store.read_keys: on the seed step, on the step
+    that compacts, and on the step after it. A prefilter in front of it
+    would add a second (its maybe-seen remainder, or the delta chain)."""
+    from texting_robots_spark.plans import superstep as ss
+    from texting_robots_spark.sources.frontier_store import FrontierStore
+    from texting_robots_spark.sources.synth import (
+        synth_documents_df,
+        synth_robots_df,
+        synth_universe,
+    )
+
+    counts = []
+    commit = ss.commit_updates
+
+    def capture(spark_, store, gated, queued, *args, **kwargs):
+        # a cached plan prints its nodes twice; a node is one distinct line
+        joins = {
+            re.sub(r"^\(\d+\) ", "", line.strip(" +-:*"))
+            for line in _plan(queued).splitlines()
+            if "LeftAnti" in line
+        }
+        counts.append(sum("[url_hash" in j for j in joins))
+        return commit(spark_, store, gated, queued, *args, **kwargs)
+
+    monkeypatch.setattr(ss, "commit_updates", capture)
+    documents, robots, seeds = synth_universe(n_hosts=5, n_docs=80, n_seeds=8, seed=3)
+    store = FrontierStore(str(tmp_path / "store"), n_buckets=4, compact_every=2)
+    ss.run_crawl(
+        spark,
+        store,
+        synth_documents_df(spark, documents),
+        synth_robots_df(spark, robots),
+        seeds,
+        ss.CrawlConfig(per_host_k=4, step_seconds=10.0),
+        n_steps=3,
+    )
+    assert counts == [1, 1, 1]
+
+
 # physical operators that run a Python evaluation over their rows
 _PYTHON_NODE = re.compile(
     r"\b(?:ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|"
@@ -203,10 +244,9 @@ def test_link_candidates_canonicalize_in_one_python_pass(spark):
         [("https://A.example/x", 0), ("/relative", 1), (None, 2)],
         "url string, depth int",
     )
-    for cluster in (None, 4):
-        out = link_candidates(links, cluster_partitions=cluster)
-        assert len(_python_nodes(_plan(out))) == 1, _plan(out)
-        assert [r["url"] for r in out.collect()] == ["https://a.example/x"]
+    out = link_candidates(links)
+    assert len(_python_nodes(_plan(out))) == 1, _plan(out)
+    assert [r["url"] for r in out.collect()] == ["https://a.example/x"]
 
 
 def test_seed_frontier_one_python_pass_and_no_rdd_scan(spark):
@@ -222,16 +262,14 @@ def test_seed_frontier_one_python_pass_and_no_rdd_scan(spark):
 def test_schedule_recrawl_rows_one_python_pass(spark, tmp_path, monkeypatch):
     """The requeue rows schedule_recrawl merges into the frontier come
     from a local frame through exactly one canonicalize node."""
-    from texting_robots_spark.operators.cuckoo import CuckooConfig
     from texting_robots_spark.plans.recrawl import compact_frontier, schedule_recrawl
     from texting_robots_spark.plans.superstep import CrawlConfig, init_crawl
     from texting_robots_spark.sources.frontier_store import FrontierStore
 
-    ck = CuckooConfig(n_partitions=2, n_buckets=1 << 8)
     store = FrontierStore(str(tmp_path / "s"), n_buckets=2)
     urls = [f"https://h{i}.example/p" for i in range(6)]
     init_crawl(spark, store, urls, CrawlConfig())
-    compact_frontier(spark, store, ck)
+    compact_frontier(spark, store)
     plans = []
     merge = FrontierStore.merge_frontier
 
@@ -240,7 +278,7 @@ def test_schedule_recrawl_rows_one_python_pass(spark, tmp_path, monkeypatch):
         return merge(frontier, rows)
 
     monkeypatch.setattr(FrontierStore, "merge_frontier", staticmethod(capture))
-    assert schedule_recrawl(spark, store, urls[:3] + ["nope"], ck) == 3
+    assert schedule_recrawl(spark, store, urls[:3] + ["nope"]) == 3
     (plan,) = plans
     assert len(_python_nodes(plan)) == 1, plan
     assert "ExistingRDD" not in plan, plan

@@ -155,58 +155,6 @@ def test_stream_crawl_rejects_docs_url_hash_off_convention(spark, tmp_path):
     assert str(stream_err.value) == str(batch_err.value)
 
 
-def test_stream_crawl_exact_backstop_survives_tiny_bloom(spark, tmp_path):
-    """Adversarial bloom sizing: 256 bits per partition over hundreds of
-    URLs guarantees heavy false-positive rates in the BATCH step's
-    bloom prefilter. The batch step's exact key-set backstop must
-    still rescue every false positive: the stream, whose store writes
-    no bloom, so its exact key set is the seen-set with no filter in
-    front of it, is the ground truth here, and the batch crawl must
-    reproduce its fetch set and discovered set bit-for-bit."""
-    documents, robots, seeds = synth_universe(
-        n_hosts=10, n_docs=200, n_seeds=16, seed=11
-    )
-    docs_df = synth_documents_df(spark, documents).cache()
-    robots_df = synth_robots_df(spark, robots)
-    cfg = CrawlConfig(
-        agent="TRSBot",
-        per_host_k=3,
-        step_seconds=10.0,
-        default_delay=2.0,
-        bloom=BloomConfig(n_partitions=4, n_bits=1 << 8, n_hashes=4),
-    )
-    rules = RulesBroadcast(spark, build_rules(robots_df, cfg.agent))
-
-    store = FrontierStore(str(tmp_path / "crawl"), n_buckets=4)
-    run_crawl(spark, store, docs_df, robots_df, seeds, cfg, n_steps=2, rules=rules)
-    frontier = store.read_frontier(spark).cache()
-    batch_fetched = {
-        r["url_hash"]
-        for r in frontier.where(F.col("state") == "fetched")
-        .select("url_hash")
-        .collect()
-    }
-    batch_urls = {r["url_hash"] for r in frontier.select("url_hash").collect()}
-
-    res = run_stream_crawl(
-        spark, docs_df, rules, seeds, cfg, n_steps=2,
-        workdir=str(tmp_path / "loop"),
-    )
-    assert res["steps"] == 2
-    got_fetched = {
-        r["url_hash"] for r in spark.read.parquet(res["out"]).collect()
-    }
-    assert got_fetched == batch_fetched
-    discovered = {
-        r["url_hash"]
-        for r in spark.read.schema(
-            "url_hash long, url string, host string, priority double, "
-            "depth int, step int"
-        ).parquet(res["src"], res["discovered"]).collect()
-    }
-    assert discovered == batch_urls
-
-
 def test_stream_crawl_restart_resumes_from_checkpoint(spark, tmp_path, monkeypatch):
     """Driver-restart resume (north rule: resumable from checkpoint):
     run ONE step of a 3-step crawl, stop the query, then start a NEW

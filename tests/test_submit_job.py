@@ -40,7 +40,6 @@ def test_spark_submit_pyfiles_crawl_job(tmp_path):
             "--n-hosts", "8",
             "--n-seeds", "12",
             "--bloom-partitions", "4",
-            "--bloom-bits", str(1 << 16),
         ],
         capture_output=True,
         text=True,
@@ -74,7 +73,6 @@ def test_spark_submit_pyfiles_crawl_job(tmp_path):
             "--n-hosts", "8",
             "--n-seeds", "12",
             "--bloom-partitions", "4",
-            "--bloom-bits", str(1 << 16),
         ],
         capture_output=True,
         text=True,

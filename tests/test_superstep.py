@@ -468,10 +468,9 @@ def test_refresh_every_in_crawl_loop(spark, universe, tmp_path):
     """cfg.refresh_every wires the link-graph priority refresh into
     run_crawl (round-4 VERDICT #8): the refreshed crawl is
     deterministic across runs, actually re-weights queued priorities
-    vs the unrefreshed crawl, and the refresh snapshot carries the
-    bloom filters + host_state forward (write_snapshot resets the
-    delta chain — dropping them would silently lose seen-ness and
-    politeness state)."""
+    vs the unrefreshed crawl, and the refresh snapshot carries
+    host_state forward (write_snapshot resets the delta chain —
+    dropping it would silently lose politeness state)."""
     _, _, seeds, docs_df, robots_df = universe
 
     def run(tag, refresh_every, n_steps):
@@ -520,8 +519,7 @@ def test_refresh_every_in_crawl_loop(spark, universe, tmp_path):
     }
     changed = {k for k in sr if sr[k] != sp[k]}
     assert changed and all(sr[k][0] == "queued" for k in changed)
-    # seen-set + politeness state survive the refresh snapshot
-    assert s_r.read_filters(spark) is not None
+    # politeness state survives the refresh snapshot
     assert s_r.read_host_state(spark) is not None
 
 
@@ -559,42 +557,6 @@ def test_refresh_priorities_indegree_and_passthrough(spark):
     assert got["https://a.example/x"] == (round(0.5 * 0.4 + 0.5 * 0.75, 6), "queued")
     assert got["https://b.example/y"] == (round(0.5 * 0.8, 6), "queued")
     assert got["https://c.example/z"] == (0.2, "fetched")
-
-
-def test_refresh_step_folds_delta_keys_into_bloom(spark, universe, tmp_path):
-    """Deferred bloom increments + refresh (round-7 ADVICE, high):
-    refresh_step snapshots mid-delta-chain, and write_snapshot resets
-    the chain — so the carried filters must fold in the uncompacted
-    deltas' keys (base filters cover base keys only under the r6
-    deferral policy). A base-only carry would make every URL the deltas
-    added probe definitely-new next step and re-queue over fetched
-    rows. The invariant: after ANY refresh snapshot, every frontier key
-    probes maybe_seen."""
-    from texting_robots_spark.operators.seen import probe_bloom
-
-    _, _, seeds, docs_df, robots_df = universe
-    cfg = CrawlConfig(
-        agent="TRSBot",
-        per_host_k=4,
-        step_seconds=10.0,
-        default_delay=0.5,
-        bloom=BloomConfig(n_partitions=8, n_bits=1 << 16, n_hashes=4),
-        refresh_every=1,  # refresh fires with exactly one pending delta
-    )
-    # compact_every=4 (default) > refresh_every: the refresh always
-    # snapshots mid-chain — the ADVICE scenario
-    store = FrontierStore(str(tmp_path / "rb"), n_buckets=8)
-    run_crawl(spark, store, docs_df, robots_df, seeds, cfg, n_steps=2)
-    assert store.pending_deltas() == 0  # refresh snapshot reset the chain
-    filters = store.read_filters(spark)
-    assert filters is not None
-    keys = store.read_frontier(spark).select("url_hash")
-    missed = (
-        probe_bloom(keys, filters, cfg.bloom)
-        .where(~F.col("maybe_seen"))
-        .count()
-    )
-    assert missed == 0  # delta-added keys are covered post-refresh
 
 
 _SHUFFLE = "spark.sql.shuffle.partitions"

@@ -1,10 +1,11 @@
 """Partitioned cuckoo-filter seen-set — the deletable bloom alternative.
 
-Used where the URL-seen set must support deletion (scheduled re-crawl:
-removing a URL makes it eligible for fetching again). Same partitioning
-contract as the bloom path (``partition_id = pmod(url_hash, P)``), same
-applyInPandas/cogroup plumbing, so the superstep can swap filters without
-changing shuffle shape.
+A library operator with no engine caller: the crawl's seen set is the
+store's exact key set, and re-crawl (plans/recrawl.py) queues URLs
+again without deleting anything from a filter. It serves a caller whose
+approximate seen set must support deletion. Same partitioning contract
+as the bloom path (``partition_id = pmod(url_hash, P)``), same
+applyInPandas/cogroup plumbing.
 
 Per partition: ``n_buckets`` (power of two) x ``slots_per_bucket`` slots
 of 16-bit fingerprints (0 = empty). Standard cuckoo-filter scheme
@@ -235,9 +236,9 @@ def probe_cuckoo(
 
     The cogroup keys on its own ``pmod(hash, cfg.n_partitions)`` column.
     A ``partition_id`` the candidates already carry is plain data here:
-    it may be taken modulo another partition count (``link_candidates``
-    clusters on the bloom's), and probing by it would look keys up in
-    the wrong filter, a false negative."""
+    it may be taken modulo another partition count (a frame clustered
+    for a bloom filter's), and probing by it would look keys up in the
+    wrong filter, a false negative."""
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
     )

@@ -1,8 +1,11 @@
 """Partitioned bloom-filter URL-seen set + anti-join dedup.
 
-The frontier's "have we seen this URL" check is the engine's giant
-distinct. At 10^10 URLs a global ``dropDuplicates``/anti-join against the
-full frontier is a massive shuffle every superstep, so the scale path is:
+A library operator: the crawl itself (plans/superstep.py) answers
+"seen?" with one exact anti-join against the store's key set
+(FrontierStore.read_keys), because a prefilter never saves that
+key-side scan and its Python build and probe tasks cost more than the
+rows it trims at the engine's scale. What this module offers, for a
+caller whose key set is too large to scan per batch:
 
 1. partition-stable bloom filters keyed by ``partition_id =
    pmod(url_hash, P)`` — numpy bit arrays built/probed with
@@ -14,10 +17,8 @@ full frontier is a massive shuffle every superstep, so the scale path is:
 
 Sizing at design scale: 10^10 URLs at 1% FPR needs ~9.6 bits/URL ≈ 12 GB
 of filter bits; across 4096 partitions that is ~3 MB per partition —
-comfortably within one task's memory, co-partitioned with the
-url_hash-bucketed frontier so build/probe shuffles align with the
-frontier's own partitioning. Deletion (re-crawl) would swap in a cuckoo
-filter per partition behind the same interface.
+comfortably within one task's memory. Bloom bits support no deletion;
+operators/cuckoo.py is the deletable variant over the same partitioning.
 
 Everything is deterministic: hash mixing is splitmix64 on the already
 deterministic xxhash64(url) — no RNG, no time.
@@ -78,9 +79,8 @@ def with_partition_id(df: DataFrame, cfg: BloomConfig, hash_col: str = "url_hash
     """Key ``df`` by the filter partition: pmod(hash, n_partitions).
 
     A pre-existing ``partition_id`` column is REUSED as-is (round 7):
-    callers that already clustered on it (link_candidates'
-    ``cluster_partitions`` path) keep their hash-partitioning, so the
-    build/probe cogroup needs no further exchange. Contract: such a
+    callers that already clustered on it keep their hash-partitioning,
+    so the build/probe cogroup needs no further exchange. Contract: such a
     column must hold exactly ``pmod(hash_col, n_partitions)`` for THIS
     config — re-deriving it here would mint a fresh attribute and
     silently discard the upstream partitioning."""

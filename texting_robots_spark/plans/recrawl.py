@@ -1,27 +1,24 @@
-"""Re-crawl + frontier compaction — where the cuckoo filter earns its keep.
+"""Re-crawl + frontier compaction over the store's exact key set.
 
 At 10^10 URLs the frontier cannot keep every fetched row hot forever:
-``compact`` archives non-queued rows out of the working frontier and
-builds per-partition cuckoo filters over every key it saw. Scheduling a
-re-crawl *deletes* the requeued keys from those filters, which bloom
-bits cannot do; the cuckoo path (operators.cuckoo) supports exact-key
-deletion with no false negatives for the remaining keys.
+``compact_frontier`` moves the non-queued rows out of the working
+frontier into the store's archive. The archive's url_hash column stays
+in ``FrontierStore.read_keys``, the exact key set every seen check
+anti-joins against, so an archived URL stays seen with no filter beside
+the store. ``schedule_recrawl`` makes URLs crawlable again by MERGEing
+fresh 'queued' rows into the frontier; the next superstep fetches them,
+politeness intact.
 
-The filters are NOT the store's record of what was seen. The archive
-stays in ``FrontierStore.read_keys``, the exact key set the crawl's
-seen check anti-joins against. The filters are a snapshot taken at the
-last compaction: keys a later step adds are not in them, and a second
-compaction rebuilds them from the hot frontier only, so the keys the
-first one archived drop out. ``dedup_candidates_cuckoo`` therefore
-passes such keys as fresh (ROADMAP item 2 (a)/(b), where an exact
-anti-join against ``read_keys`` is to replace it).
+``dedup_candidates`` is the post-compaction seen check. Its rule: a key
+is seen iff it is in ``read_keys`` and is not both archived and queued
+in the hot frontier. The keys it passes are the never-seen ones and the
+requeued ones, which schedule_recrawl queued precisely so that they are
+fetched again.
 
 Flow:
-    compact(store)            frontier rows state != 'queued' -> archive/
-                              seen-set = cuckoo filters (built from ALL keys)
-    schedule_recrawl(urls)    delete url hashes from the cuckoo filters and
-                              insert fresh 'queued' rows -> next superstep
-                              fetches them again, politeness intact
+    compact_frontier(store)       frontier rows state != 'queued' -> archive/
+    schedule_recrawl(urls)        MERGE fresh 'queued' rows into the frontier
+    dedup_candidates(candidates)  candidates minus the seen keys
 """
 
 from __future__ import annotations
@@ -31,7 +28,6 @@ import os
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cuckoo import CuckooConfig, build_cuckoo, delete_cuckoo, probe_cuckoo
 from ..sizing import sized_shuffle_scope
 from ..sources.frontier_store import CODEC, FrontierStore
 from ..sources.local import local_frame
@@ -41,100 +37,83 @@ __all__ = [
     "compact_frontier",
     "stale_archived",
     "schedule_recrawl",
+    "dedup_candidates",
     "dedup_candidates_cuckoo",
 ]
 
 
-def compact_frontier(
-    spark: SparkSession, store: FrontierStore, cfg: CuckooConfig
-) -> dict:
-    """Archive non-queued rows; seen-ness moves to cuckoo filters.
+def compact_frontier(spark: SparkSession, store: FrontierStore, cfg=None) -> dict:
+    """Archive the non-queued rows and snapshot the queued ones.
 
-    Writes: archive parquet (append), new snapshot whose frontier holds
-    only queued rows, and cuckoo filters covering EVERY url_hash ever
-    seen (queued + archived). Returns counts. Runs inside
-    sized_shuffle_scope over the frontier, so the fan-out of the cuckoo
-    build and of the archive write follows the frontier's size.
+    Writes: archive parquet (append), then a new snapshot whose frontier
+    holds only queued rows. Returns the counts. Runs inside
+    sized_shuffle_scope over the frontier, so the fan-out of the archive
+    write follows the frontier's size.
+
+    ``cfg`` (a CuckooConfig) is ignored, and ``"dropped"`` is always 0:
+    nothing approximate is built, so no key can be dropped. Both keep
+    the benchmark's call shape until its change (ROADMAP item 4) retires
+    them.
     """
     frontier = store.read_frontier(spark)
     with sized_shuffle_scope(spark, frontier):
         # The reconstructed frontier (merge-on-read: base + delta chain +
-        # latest-wins window) has three consumers below — the cuckoo
-        # build, the archive write, and the queued-only snapshot. Cache
-        # it so the reconstruction runs once instead of once per
-        # consumer (round 7: the uncached shape recomputed the
-        # union+window per consumer and dominated the recrawl cycle's
-        # wall time).
+        # latest-wins window) has two consumers below — the archive
+        # write and the queued-only snapshot. Cache it so the
+        # reconstruction runs once instead of once per consumer.
         frontier = frontier.cache()
-        queued = frontier.where(F.col("state") == "queued")
-        # both counts ride the archive write: observed on the cached
-        # frontier before the state filter, so no count job of their own
-        counts = Observation()
-        done = frontier.observe(
-            counts,
-            F.count_if(F.col("state") == "queued").alias("queued"),
-            F.count_if(F.col("state") != "queued").alias("archived"),
-        ).where(F.col("state") != "queued")
-        # Build + CHECK the filters BEFORE any destructive write: a
-        # dropped key would be a silent false negative on every later
-        # probe (a seen URL re-entering the frontier), and a retry after
-        # a partial compact would rebuild filters from the
-        # already-compacted (queued-only) frontier, permanently losing
-        # the archived keys' seen-ness. Failing here leaves the old
-        # snapshot, archive, and filters intact so the caller can resize
-        # CuckooConfig and simply call again.
-        filters = build_cuckoo(frontier.select("url_hash"), cfg).cache()
         try:
-            n_dropped = filters.agg(F.sum("n_dropped")).collect()[0][0] or 0
-            if n_dropped:
-                raise ValueError(
-                    f"cuckoo filter over capacity: {n_dropped} keys dropped — "
-                    f"increase CuckooConfig.n_buckets or n_partitions"
-                )
-            done.write.mode("append").option("compression", CODEC).parquet(
-                store.archive_dir
-            )
-            n_q, n_a = counts.get["queued"], counts.get["archived"]
+            # both counts ride the archive write: observed on the cached
+            # frontier before the state filter, so no count job of their own
+            counts = Observation()
+            frontier.observe(
+                counts,
+                F.count_if(F.col("state") == "queued").alias("queued"),
+                F.count_if(F.col("state") != "queued").alias("archived"),
+            ).where(F.col("state") != "queued").write.mode("append").option(
+                "compression", CODEC
+            ).parquet(store.archive_dir)
             store.write_snapshot(
-                queued, filters=None, meta={**store.meta(), "compacted": True}
-            )
-            # cuckoo filters live beside the snapshot's bloom slot
-            filters.write.mode("overwrite").option("compression", CODEC).parquet(
-                os.path.join(store.root, "cuckoo_filters")
+                frontier.where(F.col("state") == "queued"),
+                meta={**store.meta(), "compacted": True},
             )
         finally:
-            filters.unpersist()
             frontier.unpersist()
-    return {"queued": n_q, "archived": n_a, "dropped": int(n_dropped)}
+    return {"queued": counts.get["queued"], "archived": counts.get["archived"], "dropped": 0}
 
 
-def _read_cuckoo(spark: SparkSession, store: FrontierStore) -> DataFrame:
-    from ..operators.cuckoo import CUCKOO_DDL
-
-    return spark.read.schema(CUCKOO_DDL).parquet(
-        os.path.join(store.root, "cuckoo_filters")
-    )
-
-
-def dedup_candidates_cuckoo(
-    spark: SparkSession,
-    store: FrontierStore,
-    candidates: DataFrame,
-    cfg: CuckooConfig,
+def dedup_candidates(
+    spark: SparkSession, store: FrontierStore, candidates: DataFrame
 ) -> DataFrame:
-    """Post-compaction seen-check: cuckoo probe in place of the bloom +
-    frontier anti-join (the frontier no longer holds archived keys).
-
-    Exact only for the keys of the last compaction: the filters miss
-    keys that steps added after it, and, after a second compaction, the
-    keys the first one archived, though ``read_keys`` holds both. Such
-    candidates pass as fresh (ROADMAP item 2 (a)/(b)).
+    """``candidates`` (any frame with a ``url_hash`` column) minus the
+    keys the store has seen, by the rule in the module docstring: the
+    store's key set minus the requeued keys (queued in the hot frontier
+    and in the archive), anti-joined exactly.
 
     Returns a lazy frame, so sized_shuffle_scope cannot size it: the
     caller's action plans it, at the session's fan-out."""
-    filters = _read_cuckoo(spark, store)
-    probed = probe_cuckoo(candidates, filters, cfg)
-    return probed.where(~F.col("maybe_seen")).drop("maybe_seen")
+    seen = store.read_keys(spark)
+    if os.path.exists(store.archive_dir):
+        requeued = (
+            store.read_frontier(spark)
+            .where(F.col("state") == "queued")
+            .select("url_hash")
+            .join(
+                spark.read.schema("url_hash long").parquet(store.archive_dir),
+                "url_hash",
+                "left_semi",
+            )
+        )
+        seen = seen.join(requeued, "url_hash", "left_anti")
+    return candidates.join(seen, "url_hash", "left_anti")
+
+
+def dedup_candidates_cuckoo(
+    spark: SparkSession, store: FrontierStore, candidates: DataFrame, cfg=None
+) -> DataFrame:
+    """``dedup_candidates``; ``cfg`` is ignored. The benchmark's call
+    shape, kept until the benchmark change (ROADMAP item 4) retires it."""
+    return dedup_candidates(spark, store, candidates)
 
 
 def stale_archived(
@@ -162,14 +141,13 @@ def schedule_recrawl(
     spark: SparkSession,
     store: FrontierStore,
     urls,  # iterable of str | single-column DataFrame of raw URLs
-    cfg: CuckooConfig,
+    cfg=None,
     priority: float = 2.0,
 ) -> int:
-    """Make previously-fetched URLs crawlable again.
-
-    Deletes their hashes from the cuckoo seen-set and MERGEs fresh
-    'queued' rows into the frontier (upsert on url_hash, so rows still
-    present in the hot frontier are reset rather than duplicated).
+    """Make previously-fetched URLs crawlable again: MERGE fresh
+    'queued' rows at ``priority`` into the frontier (upsert on url_hash,
+    so rows still present in the hot frontier are reset rather than
+    duplicated) and snapshot. Returns the number of rows queued.
 
     ``urls`` is an iterable of URL strings (small operator-supplied
     sets) OR a single-column DataFrame of raw URLs — the distributed
@@ -177,55 +155,20 @@ def schedule_recrawl(
     never round-trip through a driver-side Python list. Both paths
     produce identical rows (pinned in tests/test_recrawl.py).
 
-    Runs inside sized_shuffle_scope over its inputs: the URLs, the
-    store's key set, the cuckoo filters and the frontier.
+    ``cfg`` (a CuckooConfig) is accepted and ignored, for the
+    benchmark's call shape until the benchmark change (ROADMAP item 4)
+    retires it. Runs inside sized_shuffle_scope over the URLs and the
+    frontier.
     """
     raw = _url_frame(spark, urls)
-    keys = store.read_keys(spark)
-    filters = _read_cuckoo(spark, store)
     frontier = store.read_frontier(spark)
-    with sized_shuffle_scope(spark, raw, keys, filters, frontier):
-        # three consumers below (known-inserted screen, MERGE, return
-        # count): cache so the canonicalize kernel + dedup aggregate run
-        # once (round 7)
+    with sized_shuffle_scope(spark, raw, frontier):
+        # two consumers below (MERGE, return count): cache so the
+        # canonicalize kernel + dedup aggregate run once
         rows = _queued_rows(raw, priority).cache()
-        # Screen before deleting. Deleting a never-inserted hash can
-        # evict another URL's entry on a fingerprint collision (violating
-        # delete_cuckoo's contract), so arbitrary user URLs are narrowed
-        # two ways: (1) a semi-join against the set of hashes KNOWN to
-        # have been inserted (store.read_keys: frontier + archive — the
-        # filter was built from exactly these), and (2) a probe, which
-        # skips hashes already deleted by an earlier recrawl. The probe
-        # alone would not suffice — its false positives (fingerprint
-        # collisions) still pass — but combined with the known-inserted
-        # join only genuinely-inserted keys reach delete_cuckoo; the
-        # residual risk is a same-fingerprint collision BETWEEN two
-        # inserted keys, which delete handles by removing one copy per
-        # insert.
-        # no distinct on the semi-join's right side: semi-join semantics
-        # dedup it for free, and the distinct was a whole extra shuffle
-        # of the frontier+archive key set (round 7)
-        inserted = rows.select("url_hash").join(keys, "url_hash", "left_semi")
-        present = (
-            probe_cuckoo(inserted, filters, cfg)
-            .where(F.col("maybe_seen"))
-            .select("url_hash")
-        )
-        updated = delete_cuckoo(filters, present, cfg)
-        updated.write.mode("overwrite").option("compression", CODEC).parquet(
-            os.path.join(store.root, "cuckoo_filters_next")
-        )
-        # atomic-ish swap via rename (same idea as the manifest commit)
-        import shutil
-
-        shutil.rmtree(os.path.join(store.root, "cuckoo_filters"))
-        os.replace(
-            os.path.join(store.root, "cuckoo_filters_next"),
-            os.path.join(store.root, "cuckoo_filters"),
-        )
         try:
             merged = FrontierStore.merge_frontier(frontier, rows)
-            store.write_snapshot(merged, filters=None, meta=store.meta())
+            store.write_snapshot(merged, meta=store.meta())
             return rows.count()
         finally:
             rows.unpersist()

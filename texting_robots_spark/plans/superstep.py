@@ -13,12 +13,11 @@ Python boundaries (the robots gate UDF and the canonicalize kernel):
       -> posexplode spans -> link extraction -> canonicalize -> url_hash
       -> in-batch dedup (groupBy url_hash)                 [shuffle: hash]
       -> host_state' = host_state merged with this step's politeness advance
-    frontier_step only (the bloom-fronted seen set):
-      -> bloom probe (cogroup, partition-aligned)
-      -> exact anti-join for maybe_seen remainder          [shuffle: hash]
+    frontier_step only (the seen set):
+      -> one exact anti-join against store.read_keys       [shuffle: hash]
     commit_updates — shared by frontier_step and the streaming foreachBatch:
       -> MERGE INTO frontier (delta + host_state), checkpoint
-    frontier_step only: bloom increment, metrics, lineage
+    frontier_step only: metrics, lineage
 
 Scale notes:
 - the only per-host shuffle is the scheduling window; hosts are Zipf-
@@ -32,7 +31,7 @@ Scale notes:
   join strategy the planner picks for it.
 - AQE note: because the skew handling above is explicit, adaptive
   re-planning changes nothing in this plan while charging a stage
-  materialization per shuffle (a step runs ~26 stages). Run the crawl
+  materialization per shuffle (a step runs ~19 stages). Run the crawl
   with spark.sql.adaptive.enabled=false (interleaved A/B at sandbox
   scale: AQE off wins every pair, ~20-25% wall, bit-identical output);
   re-enable AQE for ad-hoc queries in the same session. bench.py /
@@ -78,7 +77,11 @@ from ..operators.gate import (
     gate_sharded,
 )
 from ..operators.links import extract_links
-from ..operators.seen import BloomConfig, build_bloom, probe_bloom
+from ..operators.seen import BloomConfig
+# kept a module global only because perfbench/wl_crawl.py:LAZY_CALLS
+# patches it under --trace 1; the benchmark change (ROADMAP item 4)
+# retires it
+from ..operators.seen import probe_bloom  # noqa: F401
 from ..sizing import sized_shuffle_scope
 from ..sources.frontier_store import FrontierStore
 from ..sources.local import local_frame
@@ -163,6 +166,8 @@ class CrawlConfig:
     step_seconds: float = 60.0
     default_delay: float = 0.25
     max_depth: int = 50
+    # only its n_partitions is read: the lineage partition count. The
+    # benchmark change (ROADMAP item 4) retires the field
     bloom: BloomConfig = field(default_factory=BloomConfig)
     on_parse_error: str = "disallow"
     # link-graph priority refresh cadence: every k supersteps, re-weight
@@ -273,21 +278,16 @@ def init_crawl(
     seeds,  # iterable of str | DataFrame of raw URLs (see seed_frontier)
     cfg: CrawlConfig,
 ) -> int:
-    """Write snapshot v0: seed frontier + its bloom filter. The seed
-    frontier is cached across its two consumers (frontier write + bloom
-    build) so the canonicalize kernel and seed dedup run once, not twice.
-    Runs inside sized_shuffle_scope over the seed frame."""
+    """Write snapshot v0: the seed frontier, and no seen filter — the
+    store's key set is the crawl's seen set. Runs inside
+    sized_shuffle_scope over the seed frame. ``cfg`` is not read; the
+    benchmark passes it (ROADMAP item 4)."""
     _mark = _tracer()
     frontier = seed_frontier(spark, seeds)
     with sized_shuffle_scope(spark, frontier):
-        frontier = frontier.cache()
-        try:
-            filters = build_bloom(frontier, cfg.bloom)
-            v = store.write_snapshot(frontier, filters, meta={"step": -1})
-            _mark("init_crawl (seed+bloom+snapshot)")
-            return v
-        finally:
-            frontier.unpersist()
+        v = store.write_snapshot(frontier, meta={"step": -1})
+        _mark("init_crawl (seed+snapshot)")
+        return v
 
 
 def schedule_batch(
@@ -379,46 +379,19 @@ def schedule_batch(
     )
 
 
-def link_candidates(
-    links: DataFrame,
-    base_hash: str = "xxhash64",
-    cluster_partitions: Optional[int] = None,
-) -> DataFrame:
+def link_candidates(links: DataFrame, base_hash: str = "xxhash64") -> DataFrame:
     """(url, depth) link rows -> canonical, in-batch-deduped frontier
     candidates: canonicalize, drop non-absolute, key by url_hash, keep
     min url/host and min parent depth + 1, priority = 1/(1+depth).
     Shared by the batch superstep and the streaming crawl loop so both
     derive bit-identical candidate sets. ``base_hash='md5'`` swaps the
     url_hash expression for the DuckDB-reproducible 60-bit variant (the
-    ``superstep_one_step`` driver oracle); production stays xxhash64.
-
-    ``cluster_partitions`` (round 7): when set to the bloom config's
-    ``n_partitions``, it is the modulus of ``partition_id =
-    pmod(url_hash, P)``, and the dedup aggregate is pre-clustered on
-    that column — one exchange that BOTH the dedup groupBy
-    (partition_id is functionally dependent on url_hash, so grouping by
-    the pair is the same grouping) and the downstream bloom-probe
-    cogroup then satisfy, instead of one url_hash exchange for the
-    dedup plus a second partition_id exchange for the probe. It sets
-    only the modulus: the exchange has ``spark.sql.shuffle.partitions``
-    tasks, the step's fan-out (sized_shuffle_scope), and the probe's
-    filter side is shuffled to match. The output carries the extra
-    ``partition_id`` column, which ``probe_bloom``/``with_partition_id``
-    reuse as-is. Same rows, same values, one candidate-set shuffle fewer
-    per superstep."""
-    keyed = canonicalize_urls(links.select("url", "depth")).transform(
-        lambda df: _with_keys(df, base_hash=base_hash)
-    )
-    if cluster_partitions:
-        keyed = keyed.withColumn(
-            "partition_id",
-            F.pmod(F.col("url_hash"), F.lit(int(cluster_partitions))).cast("int"),
-        ).repartition("partition_id")
-        grouped = keyed.groupBy("partition_id", "url_hash")
-    else:
-        grouped = keyed.groupBy("url_hash")
+    ``superstep_one_step`` driver oracle); production stays xxhash64."""
     return (
-        grouped.agg(
+        canonicalize_urls(links.select("url", "depth"))
+        .transform(lambda df: _with_keys(df, base_hash=base_hash))
+        .groupBy("url_hash")
+        .agg(
             F.min("url").alias("url"),
             F.min("host").alias("host"),
             (F.min("depth") + 1).alias("depth"),
@@ -564,7 +537,7 @@ class StepPlan(NamedTuple):
     # every scheduled row plus its ``allowed`` flag; cached and observed
     gated: DataFrame
     # fires with the first action over ``gated``: n (scheduled), f
-    # (fetched) and, up to _OBS_LINEAGE_MAX bloom partitions, the
+    # (fetched) and, up to _OBS_LINEAGE_MAX lineage partitions, the
     # per-partition lineage arrays larr/aarr
     obs: Observation
     # canonical, in-batch-deduped links of the fetched documents
@@ -574,7 +547,7 @@ class StepPlan(NamedTuple):
 
 
 # Per-partition lineage counters ride the gate Observation as TWO
-# array-valued columns up to this many bloom partitions (round 7;
+# array-valued columns up to this many lineage partitions (round 7;
 # previously 2 x n_partitions scalar columns = 64 F.expr py4j calls and
 # 64 analyzer-visible aggregates per step — the array form is one parse
 # per side and collapses the plan-build cost to O(1) columns). Past it
@@ -590,7 +563,6 @@ def step_plan(
     rules,  # RulesBroadcast | RulesTable (sharded, broadcast-free)
     cfg: CrawlConfig,
     step: int,
-    cluster_partitions: Optional[int] = None,
 ) -> StepPlan:
     """Build one crawl step over ``rows`` — the frontier rows, or
     streaming candidates — at the virtual clock ``t0 = step *
@@ -603,11 +575,9 @@ def step_plan(
     from (the step's own links, or the stream's candidate file).
 
     ``rows`` carries (url_hash, url, host, priority, depth, state,
-    not_before); ``host_state`` is (host, next_allowed) or None.
-    ``cluster_partitions`` pre-clusters the candidates for the bloom
-    probe (see link_candidates). The stage functions are called through
-    this module's globals, which is where perfbench's ``--trace 1``
-    wraps them to time plan building."""
+    not_before); ``host_state`` is (host, next_allowed) or None. The
+    stage functions are called through this module's globals, which is
+    where perfbench's ``--trace 1`` wraps them to time plan building."""
     t0 = step * cfg.step_seconds
 
     # --- 1. eligible queued rows (politeness clock per host) -------------
@@ -640,6 +610,8 @@ def step_plan(
         F.sum(F.col("allowed").cast("long")).alias("f"),
         F.count(F.lit(1)).alias("n"),
     ]
+    # the lineage partition count P; the bloom config holds it until the
+    # benchmark change (ROADMAP item 4) retires CrawlConfig.bloom
     P = cfg.bloom.n_partitions
     if P <= _OBS_LINEAGE_MAX:
         l_terms = ",".join(
@@ -694,7 +666,7 @@ def step_plan(
     links = extract_links(
         fetched_docs.select("doc_id", "depth", "spans"), passthrough=("depth",)
     )
-    candidates = link_candidates(links, cluster_partitions=cluster_partitions)
+    candidates = link_candidates(links)
 
     # --- 6. politeness advance ---------------------------------------------
     # from the rows actually scheduled, not the cap. It stays a DataFrame
@@ -721,7 +693,6 @@ def commit_updates(
     step: int,
     n_updates: int,
     host_state: DataFrame,
-    filters_increment=None,
 ) -> None:
     """Commit one crawl step to ``store`` as step ``step``: the rows of
     ``gated`` (a ``step_plan``'s scheduled rows) as fetched or
@@ -756,9 +727,7 @@ def commit_updates(
     )
     # DELTA commit: O(batch) rows per step; the store compacts to a full
     # base every compact_every steps (merge-on-read in between)
-    store.commit_step(
-        spark, updates, filters_increment, meta={"step": step}, host_state=host_state
-    )
+    store.commit_step(spark, updates, meta={"step": step}, host_state=host_state)
 
 
 def frontier_step(
@@ -795,23 +764,11 @@ def _frontier_step_impl(
     meta = store.meta()
     step = int(meta.get("step", -1)) + 1
 
-    filters = store.read_filters(spark)
     host_state = store.read_host_state(spark)  # (host, next_allowed) or None
     _mark("snapshot reads")
 
     # --- 1-6. step_plan: eligible -> schedule -> gate -> fetch -> links ---
-    # pre-cluster the candidate dedup on the bloom partition key so the
-    # dedup groupBy and the probe cogroup share ONE exchange (round 7;
-    # see link_candidates) — only when the bloom path will consume it
-    plan = step_plan(
-        frontier,
-        host_state,
-        docs,
-        rules,
-        cfg,
-        step,
-        cluster_partitions=cfg.bloom.n_partitions if filters is not None else None,
-    )
+    plan = step_plan(frontier, host_state, docs, rules, cfg, step)
     gated, candidates = plan.gated, plan.candidates
     if cfg.refresh_every:
         # record this step's in-degree increment for the periodic
@@ -823,32 +780,17 @@ def _frontier_step_impl(
             os.path.join(store.root, "indeg", f"step={step}")
         )
 
-    # --- 7. seen-set dedup: bloom prefilter + exact anti-join --------------
-    # the exact check probes the frontier's KEY SET (store.read_keys:
-    # base + delta url_hash columns, no merge-on-read join chain — at
-    # scale a single-column parquet scan, not k anti-joins of full rows).
-    # Bloom increments are DEFERRED to compaction (r6): the base filters
-    # cover keys up to the base snapshot only, so bloom-negative
-    # candidates additionally anti-join the delta chain's key columns —
-    # O(compact_every x batch) rows, a native column scan — instead of
-    # every step paying a python bloom-build stage plus a filter write.
-    seen_keys = store.read_keys(spark)
-    pending = store.pending_deltas()
-    if filters is not None:
-        probed = probe_bloom(candidates, filters, cfg.bloom)
-        definite_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-        if pending:
-            definite_new = definite_new.join(
-                store.read_keys(spark, deltas_only=True), "url_hash", "left_anti"
-            )
-        maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-        confirmed_new = maybe.join(seen_keys, "url_hash", "left_anti")
-        new_rows = definite_new.unionByName(confirmed_new)
-    else:
-        new_rows = candidates.join(seen_keys, "url_hash", "left_anti")
+    # --- 7. seen-set dedup: one exact anti-join ----------------------------
+    # against the store's KEY SET (store.read_keys: base + delta + archive
+    # url_hash columns, no merge-on-read join chain — at scale a
+    # single-column parquet scan). No approximate prefilter: it could
+    # only trim the probe side, since every step past the seed has
+    # maybe-seen candidates that need this scan anyway, and its Python
+    # build and probe tasks cost more than the rows it would trim.
     obs_new = Observation()
     new_rows = (
-        new_rows.select(
+        candidates.join(store.read_keys(spark), "url_hash", "left_anti")
+        .select(
             "url_hash",
             "url",
             "host",
@@ -861,34 +803,7 @@ def _frontier_step_impl(
         .cache()
     )
 
-    # --- 8. bloom increment (the update set is built by commit_updates) ---
-    # DEFERRED bloom maintenance (r6): non-compacting steps write no
-    # filter increment at all — their new keys ride the delta-key
-    # anti-join above until compaction. On the step whose commit WILL
-    # compact, one catch-up increment covers every key the chain added
-    # since the base (prior delta keys + this step's new rows; done/
-    # denied keys were queued before, so base bloom + delta keys already
-    # cover them). Lazy: resolved by commit_step AFTER the delta write
-    # fires the observations.
-    compact_due = pending + 1 >= store.compact_every
-
-    def filters_increment():
-        if not compact_due or filters is None:
-            # no base bloom -> never write a partial-coverage increment
-            # (a filters table that misses base keys would let the probe
-            # mark seen URLs definite-new); the no-bloom mode stays pure
-            # anti-join end to end
-            return None
-        uncovered = new_rows.select("url_hash")
-        if pending:
-            uncovered = uncovered.unionByName(
-                store.read_keys(spark, deltas_only=True)
-            )
-        elif int(obs_new.get["n"] or 0) == 0:
-            return None
-        return build_bloom(uncovered, cfg.bloom)
-
-    # --- 9. metrics, lineage, checkpoint ------------------------------------
+    # --- 8. metrics, lineage, checkpoint ------------------------------------
     _mark("plan built")
     # Materialize the step's caches BEFORE committing: one count over
     # new_rows computes the whole schedule+gate+fetch+links+seen
@@ -916,7 +831,6 @@ def _frontier_step_impl(
         step,
         n_scheduled + n_new,
         plan.host_state,
-        filters_increment,
     )
     _mark("commit_step")
     if n_scheduled > 0:
@@ -938,7 +852,7 @@ def _frontier_step_impl(
         else:
             # wide-partition configs: one groupBy-collect over the
             # cached gate output (n_partitions result rows —
-            # driver-small at any bloom width)
+            # driver-small at any partition count)
             pid = F.pmod(F.col("url_hash"), F.lit(cfg.bloom.n_partitions))
             lineage = (
                 gated.groupBy(pid.cast("int").alias("partition_id"))
@@ -1001,13 +915,13 @@ def refresh_step(spark: SparkSession, store: FrontierStore, cfg: CrawlConfig) ->
     """Periodic link-graph priority refresh inside the crawl loop
     (cfg.refresh_every): sum the per-step in-degree increments
     frontier_step recorded, apply ``apply_indegree_refresh`` to the
-    frontier, and snapshot. The bloom filters and host_state are
-    carried into the new snapshot (write_snapshot resets the delta
-    chain, so dropping them would lose seen-ness and politeness state —
-    same carry-forward as commit_step's compaction). One map-side-
-    combinable sum + one join on the store's own bucketing key: no
-    content re-scan, no window, no skew point. Runs inside
-    sized_shuffle_scope over the increments and the frontier."""
+    frontier, and snapshot. host_state is carried into the new snapshot
+    (write_snapshot resets the delta chain, so dropping it would lose
+    politeness state — same carry-forward as commit_step's compaction);
+    the seen set needs no carry, as the snapshot holds every frontier
+    key. One map-side-combinable sum + one join on the store's own
+    bucketing key: no content re-scan, no window, no skew point. Runs
+    inside sized_shuffle_scope over the increments and the frontier."""
     path = os.path.join(store.root, "indeg")
     if not os.path.exists(path):
         return
@@ -1016,31 +930,10 @@ def refresh_step(spark: SparkSession, store: FrontierStore, cfg: CrawlConfig) ->
     with sized_shuffle_scope(spark, increments, frontier):
         indeg = increments.groupBy("url_hash").agg(F.sum("n_refs").alias("indeg"))
         refreshed = apply_indegree_refresh(frontier, indeg, cfg.refresh_alpha)
-        filters = store.read_filters(spark)
-        if filters is not None:
-            from ..operators.seen import merge_bloom
-
-            if store.pending_deltas():
-                # Deferred-increment catch-up (round-7 ADVICE, high):
-                # under the r6 deferral policy the carried filters cover
-                # BASE keys only, and write_snapshot resets the delta
-                # chain — so the uncompacted deltas' keys must fold into
-                # the bloom here (mirroring commit_step's compaction
-                # catch-up) or the next frontier_step probes them
-                # definitely-new and re-queues already-fetched URLs over
-                # their fetched rows.
-                filters = merge_bloom(
-                    filters,
-                    build_bloom(store.read_keys(spark, deltas_only=True), cfg.bloom),
-                )
-            else:
-                filters = merge_bloom(filters, filters.limit(0))  # one row/partition
         store.write_snapshot(
-            refreshed,
-            filters,
-            meta=store.meta(),
-            host_state=store.read_host_state(spark),
+            refreshed, meta=store.meta(), host_state=store.read_host_state(spark)
         )
+
 
 def crawl_order(spark: SparkSession, store: FrontierStore) -> DataFrame:
     """The reproducible crawl order: fetched rows sorted by the virtual

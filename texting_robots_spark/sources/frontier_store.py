@@ -11,12 +11,18 @@ catalog — no caller changes.
 
 Layout under ``root/``:
     manifest.json                  {"current": N, "meta": {...}}
-    snapshots/v000N/frontier/      parquet, bucketed by pmod(url_hash, P)
-    snapshots/v000N/filters/       bloom filter bits (FILTERS_DDL)
+    snapshots/v000N/frontier/      full base, parquet, salted by
+                                   pmod(url_hash, n_buckets)
+    snapshots/v000N/delta/         one step's updated rows
+    snapshots/v000N/host_state/    per-host politeness clock
     metrics/                       append-only per-step metrics parquet
     lineage/                       append-only per-partition lineage
     archive/                       rows compacted out of the frontier
                                    (plans.recrawl.compact_frontier)
+
+The url_hash columns of the base, the deltas and the archive
+(``read_keys``) are the crawl's exact seen set; the store keeps no
+approximate filter beside them.
 """
 
 from __future__ import annotations
@@ -29,6 +35,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sizing import sized_fan_out
 from .local import local_frame
 
 __all__ = ["FrontierStore", "FRONTIER_DDL"]
@@ -46,11 +53,11 @@ HOST_STATE_DDL = "host string, next_allowed double"
 # the store owns its layout, so per-read parquet schema inference — a
 # driver-side footer read on every file of every snapshot table, paid
 # three tables x every superstep — is pure overhead (guide §6/§7.3).
-# Every store write, and plans/recrawl.py's archive and cuckoo writes,
-# use zstd: the crawl is measured byte-bound (BENCH/BASELINE.md
-# host-ceiling analysis) and every store write is on the step's critical
-# path — zstd deltas measured ~6% off the bench crawl line vs snappy,
-# and the gap widens wherever storage bandwidth is the scarcer resource.
+# Every store write, and plans/recrawl.py's archive write, use zstd:
+# the crawl is measured byte-bound (BENCH/BASELINE.md host-ceiling
+# analysis) and every store write is on the step's critical path — zstd
+# deltas measured ~6% off the bench crawl line vs snappy, and the gap
+# widens wherever storage bandwidth is the scarcer resource.
 CODEC = "zstd"
 
 
@@ -60,15 +67,8 @@ class FrontierStore:
     reconstructed frontier is rewritten as a new full base. This is the
     parquet equivalent of Iceberg's merge-on-read with periodic
     compaction — per-step write cost is O(batch), not O(frontier).
-
-    Bloom filter increments are DEFERRED to the compaction cadence (r6):
-    the base snapshot's filters cover base keys only, readers anti-join
-    the delta chain's key columns for the uncovered slice
-    (read_keys(deltas_only=True)), and the commit that triggers
-    compaction carries one catch-up increment. A per-step increment
-    would cost a python bloom-build stage plus a filter write on every
-    commit; deferral makes that one stage per compact_every steps and
-    cuts per-step write amplification."""
+    ``n_buckets`` caps the file count of a full base; a small base
+    writes fewer files (see write_snapshot)."""
 
     def __init__(
         self,
@@ -104,12 +104,6 @@ class FrontierStore:
     def current_version(self) -> int:
         return self._read_manifest()["current"]
 
-    def pending_deltas(self) -> int:
-        """Number of deltas committed since the last full base — the
-        length of the merge-on-read chain. ``pending_deltas() + 1 >=
-        compact_every`` means the NEXT commit_step will compact."""
-        return len(self._read_manifest().get("deltas", []))
-
     def meta(self) -> dict:
         return self._read_manifest().get("meta", {})
 
@@ -120,7 +114,6 @@ class FrontierStore:
     def write_snapshot(
         self,
         frontier: DataFrame,
-        filters: Optional[DataFrame] = None,
         meta: Optional[dict] = None,
         host_state: Optional[DataFrame] = None,
     ) -> int:
@@ -129,14 +122,21 @@ class FrontierStore:
 
         # bucket the frontier by url_hash so seen-checks and merges are
         # co-partitioned across supersteps (stable partitioning = no
-        # avoidable shuffle on the next read)
+        # avoidable shuffle on the next read). The file count follows
+        # the base's size, capped at n_buckets: every later read_keys and
+        # read_frontier lists these files, so a few-hundred-row base
+        # lands as one file, not n_buckets tiny ones
+        n_files = min(
+            self.n_buckets, sized_fan_out(frontier.sparkSession, frontier)[0]
+        )
+
         def _frontier_write():
             (
                 frontier.withColumn(
                     "partition_salt",
                     F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int"),
                 )
-                .repartition(self.n_buckets, "partition_salt")
+                .repartition(n_files, "partition_salt")
                 .write.mode("overwrite")
                 .option("compression", CODEC)
                 .parquet(self._snap_dir(version, "frontier"))
@@ -144,30 +144,22 @@ class FrontierStore:
 
         # politeness token-bucket (host_state): one row per ACTIVE host
         # — a real table, not manifest JSON, so 10^7-host crawls
-        # checkpoint without a driver-side blob. The three tables land
-        # in independent directories under an uncommitted version, so
-        # their writes run concurrently from driver threads (same
-        # overlap as commit_step's delta+host_state pair); the manifest
-        # commit below happens only after ALL succeed.
-        side_writes = []
-        if filters is not None:
-            side_writes.append(
-                lambda: filters.write.mode("overwrite")
-                .option("compression", CODEC)
-                .parquet(self._snap_dir(version, "filters"))
-            )
+        # checkpoint without a driver-side blob. The two tables land in
+        # independent directories under an uncommitted version, so their
+        # writes run concurrently from driver threads (same overlap as
+        # commit_step's delta+host_state pair); the manifest commit below
+        # happens only after both succeed.
         if host_state is not None:
-            side_writes.append(
-                lambda: host_state.write.mode("overwrite")
-                .option("compression", CODEC)
-                .parquet(self._snap_dir(version, "host_state"))
-            )
-        if side_writes:
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(1 + len(side_writes)) as pool:
-                futures = [pool.submit(_frontier_write)] + [
-                    pool.submit(w) for w in side_writes
+            with ThreadPoolExecutor(2) as pool:
+                futures = [
+                    pool.submit(_frontier_write),
+                    pool.submit(
+                        lambda: host_state.write.mode("overwrite")
+                        .option("compression", CODEC)
+                        .parquet(self._snap_dir(version, "host_state"))
+                    ),
                 ]
                 for f in futures:
                     f.result()
@@ -187,19 +179,13 @@ class FrontierStore:
         self,
         spark: SparkSession,
         updates: DataFrame,
-        filters_increment=None,
         meta: Optional[dict] = None,
         host_state: Optional[DataFrame] = None,
     ) -> int:
         """Commit one superstep as a DELTA: only the updated/new frontier
-        rows and the bloom increment are written. Reads reconstruct
-        base + deltas; every ``compact_every`` deltas the reconstruction
-        is rewritten as a new full base (amortized O(batch) per step).
-
-        ``filters_increment`` may be a DataFrame or a zero-arg callable
-        resolved AFTER the delta write — so callers can consult
-        Observation counters collected by that write (e.g. skip the bloom
-        increment entirely when the step discovered no new URLs).
+        rows (and host_state) are written. Reads reconstruct base +
+        deltas; every ``compact_every`` deltas the reconstruction is
+        rewritten as a new full base (amortized O(batch) per step).
 
         INVARIANT: ``updates`` must hold each url_hash at most once (the
         superstep's update set is groupBy(url_hash)-deduped by
@@ -216,8 +202,6 @@ class FrontierStore:
         # the caller already cached (the superstep materializes the step
         # caches before committing) — run them concurrently from two
         # driver threads so the commit pays one write latency, not two.
-        # Only the filters increment must WAIT for the delta write: its
-        # callable may consult Observation counters that action fires.
         def _delta_write():
             updates.write.mode("overwrite").option("compression", CODEC).parquet(
                 self._snap_dir(version, "delta")
@@ -236,16 +220,10 @@ class FrontierStore:
                 d.result()
                 _mark("delta write")
                 h.result()
+                _mark("host_state write")
         else:
             _delta_write()
             _mark("delta write")
-        if callable(filters_increment):
-            filters_increment = filters_increment()
-        if filters_increment is not None:
-            filters_increment.write.mode("overwrite").option(
-                "compression", CODEC
-            ).parquet(self._snap_dir(version, "filters"))
-        _mark("side writes (filters/host_state)")
         manifest["current"] = version
         manifest.setdefault("base", -1)
         manifest.setdefault("deltas", []).append(version)
@@ -253,18 +231,11 @@ class FrontierStore:
             manifest["meta"] = meta
         self._write_manifest(manifest)
         if len(manifest["deltas"]) >= self.compact_every:
-            # compaction: materialize and rewrite as a full base; the
-            # filters are OR-merged into one row per partition
-            from ..operators.seen import merge_bloom  # local import, no cycle
-
-            full = self.read_frontier(spark)
-            filters = self.read_filters(spark)
-            if filters is not None:
-                filters = merge_bloom(
-                    filters, filters.limit(0)
-                )  # one row per partition
+            # compaction: materialize and rewrite as a full base
             self.write_snapshot(
-                full, filters, meta=manifest.get("meta"), host_state=self.read_host_state(spark)
+                self.read_frontier(spark),
+                meta=manifest.get("meta"),
+                host_state=self.read_host_state(spark),
             )
             _mark("compaction")
         return version
@@ -321,9 +292,10 @@ class FrontierStore:
             .drop("_rn", "_v")
         )
 
-    def read_keys(self, spark: SparkSession, deltas_only: bool = False) -> DataFrame:
+    def read_keys(self, spark: SparkSession) -> DataFrame:
         """Every url_hash the store has seen: the frontier's (base +
-        deltas) and, after a recrawl compaction, the archive's.
+        deltas) and, after a recrawl compaction, the archive's — the
+        crawl's exact seen set.
 
         Membership-only view for seen-checks: deltas UPSERT rows and
         never delete keys, and compaction moves rows from the base to
@@ -332,23 +304,12 @@ class FrontierStore:
         merge-on-read join chain. The scan is column-pruned to url_hash
         (at scale: one parquet column instead of k anti-joins over full
         rows). May contain duplicates; fine for anti-join/semi-join
-        probes.
-
-        ``deltas_only=True`` returns just the keys the delta chain added
-        since the base (never the archive's) — the slice the base bloom
-        filters do NOT cover under the deferred-increment policy (see
-        commit_step): the superstep anti-joins its bloom-negative
-        candidates against this small set, and compaction builds one
-        catch-up bloom increment from it. O(compact_every x batch) rows by construction."""
+        probes."""
         manifest = self._read_manifest()
         base = manifest.get("base", manifest["current"])
-        paths = (
-            []
-            if deltas_only or base < 0
-            else [self._snap_dir(base, "frontier")]
-        )
+        paths = [] if base < 0 else [self._snap_dir(base, "frontier")]
         paths += [self._snap_dir(d, "delta") for d in manifest.get("deltas", [])]
-        if not deltas_only and os.path.exists(self.archive_dir):
+        if os.path.exists(self.archive_dir):
             paths.append(self.archive_dir)
         if not paths:
             return local_frame(spark, "url_hash long")
@@ -357,23 +318,14 @@ class FrontierStore:
         # partition_salt column never has to line up with the deltas)
         return spark.read.schema("url_hash long").parquet(*paths)
 
-    def read_filters(self, spark: SparkSession) -> Optional[DataFrame]:
-        """Base filters plus all delta increments (union of rows; the
-        bloom probe ORs multiple rows per partition, so increments need
-        no eager merge — compaction collapses them)."""
-        manifest = self._read_manifest()
-        base = manifest.get("base", manifest["current"])
-        versions = ([base] if base >= 0 else []) + manifest.get("deltas", [])
-        paths = [
-            self._snap_dir(v, "filters")
-            for v in versions
-            if os.path.exists(self._snap_dir(v, "filters"))
-        ]
-        if not paths:
-            return None
+    def read_filters(self, spark: SparkSession) -> DataFrame:
+        """An empty bloom-filter table (FILTERS_DDL): the store keeps no
+        filters. No engine code reads it; it stays for the benchmark's
+        ``seen.bloom_fpr`` probe, which then reads 0, until the
+        benchmark change (ROADMAP item 4) retires it."""
         from ..operators.seen import FILTERS_DDL
 
-        return spark.read.schema(FILTERS_DDL).parquet(*paths)
+        return local_frame(spark, FILTERS_DDL)
 
     def read_host_state(self, spark: SparkSession) -> Optional[DataFrame]:
         """The most recent snapshot/delta that carries a host_state table

@@ -25,9 +25,9 @@ is the URL-seen set, its queued rows are the politeness leftovers, and
 its host_state is the per-host politeness clock. It compacts every
 ``compact_every`` steps, so a batch's seen check reads at most
 ``compact_every`` + 1 snapshot directories however long the crawl
-runs. The store writes no bloom filters (no init_crawl: it starts
-empty at step -1, and batch 0 admits the seed file), so the seen check
-is the exact anti-join alone.
+runs. The store starts empty at step -1 (no init_crawl), and batch 0
+admits the seed file; the seen check is the batch step's exact
+anti-join against the store's key set.
 
 Semantics match run_crawl step for step: both drivers build the step
 with the same ``step_plan`` call and commit it with the same
