@@ -3,6 +3,10 @@ correct (latest-wins MERGE semantics) and cheap (one shuffle regardless
 of chain depth — the union+window read), and compaction must be a pure
 re-materialization (identical logical content, reset chain)."""
 
+import os
+
+import pytest
+
 from pyspark.sql import functions as F
 
 from texting_robots_spark.sources.frontier_store import FrontierStore
@@ -123,3 +127,69 @@ def test_small_base_writes_one_file(spark, tmp_path):
     salts = store.read_frontier(spark).select("url_hash", "partition_salt").collect()
     assert len(salts) == 300
     assert all(r["partition_salt"] == r["url_hash"] % 8 for r in salts)
+
+
+def test_crashed_compaction_leaves_no_orphan_base(spark, tmp_path, monkeypatch):
+    """A crash inside a compacting commit, after the delta's manifest
+    rename and before the compaction's, leaves the compaction's base in
+    the uncommitted snapshots/v<current+1>. The next commit reuses that
+    version number, so it must start from an empty directory: after one
+    resumed step no version holds a frontier/ that no manifest named as
+    a base, and the store reads exactly as a store that never crashed."""
+
+    def step(i):
+        hosts = [(f"h{k}.example", float(i)) for k in range(7)]
+        return (
+            spark.createDataFrame(_rows(i), DDL),
+            spark.createDataFrame(hosts, "host string, next_allowed double"),
+        )
+
+    crashed = FrontierStore(str(tmp_path / "crashed"), n_buckets=4, compact_every=2)
+    clean = FrontierStore(str(tmp_path / "clean"), n_buckets=4, compact_every=2)
+    for store in (crashed, clean):
+        rows, hosts = step(0)
+        store.write_snapshot(rows, host_state=hosts)
+        rows, hosts = step(1)
+        store.commit_step(spark, rows, host_state=hosts)
+
+    write_manifest = FrontierStore._write_manifest
+    calls = []
+
+    def crash_in_compaction(self, manifest):
+        calls.append(manifest["current"])
+        if len(calls) == 2:  # 1: the delta's rename, 2: the compaction's
+            raise RuntimeError("injected crash in compaction")
+        write_manifest(self, manifest)
+
+    monkeypatch.setattr(FrontierStore, "_write_manifest", crash_in_compaction)
+    rows, hosts = step(2)
+    with pytest.raises(RuntimeError, match="injected crash in compaction"):
+        crashed.commit_step(spark, rows, host_state=hosts)
+    monkeypatch.setattr(FrontierStore, "_write_manifest", write_manifest)
+    orphan = crashed._snap_dir(crashed.current_version() + 1, "frontier")
+    assert os.path.isdir(orphan)  # the crash point is reached
+    clean.commit_step(spark, rows, host_state=hosts)
+
+    resumed = FrontierStore(crashed.root, n_buckets=4, compact_every=2)
+    for store in (resumed, clean):
+        rows, hosts = step(3)
+        store.commit_step(spark, rows, host_state=hosts)
+
+    manifest = resumed._read_manifest()
+    snapshots = os.path.join(resumed.root, "snapshots")
+    bases = {
+        int(v[1:])
+        for v in os.listdir(snapshots)
+        if os.path.isdir(os.path.join(snapshots, v, "frontier"))
+    }
+    assert bases == {0, manifest["base"]}  # v0 and the resumed compaction
+
+    def content(store):
+        frontier = store.read_frontier(spark).drop("partition_salt")
+        return (
+            sorted(map(tuple, frontier.collect())),
+            {r["url_hash"] for r in store.read_keys(spark).collect()},
+            sorted(map(tuple, store.read_host_state(spark).collect())),
+        )
+
+    assert content(resumed) == content(clean)

@@ -250,21 +250,31 @@ def test_link_candidates_canonicalize_in_one_python_pass(spark):
 
 
 def test_seed_frontier_one_python_pass_and_no_rdd_scan(spark):
-    """A seed list becomes a LocalTableScan (no PythonRDD deserialize
-    behind it) feeding exactly one canonicalize node."""
+    """A seed list is canonicalized on the driver: its plan is a
+    LocalTableScan with no Python node and no PythonRDD deserialize
+    behind it. A one-column seed DataFrame still runs exactly one
+    canonicalize node."""
     from texting_robots_spark.plans.superstep import seed_frontier
+    from texting_robots_spark.sources.local import local_frame
 
-    plan = _plan(seed_frontier(spark, ["https://a.example/", "nope"]))
-    assert len(_python_nodes(plan)) == 1, plan
+    seeds = ["https://a.example/", "nope"]
+    plan = _plan(seed_frontier(spark, seeds))
+    assert not _python_nodes(plan), plan
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    frame = local_frame(spark, "raw_url string", {"raw_url": seeds})
+    plan = _plan(seed_frontier(spark, frame))
+    assert len(_python_nodes(plan)) == 1, plan
 
 
 def test_schedule_recrawl_rows_one_python_pass(spark, tmp_path, monkeypatch):
-    """The requeue rows schedule_recrawl merges into the frontier come
-    from a local frame through exactly one canonicalize node."""
+    """The requeue rows schedule_recrawl merges into the frontier: a URL
+    list plans no Python node and no RDD scan (it is canonicalized on
+    the driver); a one-column DataFrame runs exactly one canonicalize
+    node."""
     from texting_robots_spark.plans.recrawl import compact_frontier, schedule_recrawl
     from texting_robots_spark.plans.superstep import CrawlConfig, init_crawl
     from texting_robots_spark.sources.frontier_store import FrontierStore
+    from texting_robots_spark.sources.local import local_frame
 
     store = FrontierStore(str(tmp_path / "s"), n_buckets=2)
     urls = [f"https://h{i}.example/p" for i in range(6)]
@@ -278,10 +288,14 @@ def test_schedule_recrawl_rows_one_python_pass(spark, tmp_path, monkeypatch):
         return merge(frontier, rows)
 
     monkeypatch.setattr(FrontierStore, "merge_frontier", staticmethod(capture))
-    assert schedule_recrawl(spark, store, urls[:3] + ["nope"]) == 3
-    (plan,) = plans
-    assert len(_python_nodes(plan)) == 1, plan
-    assert "ExistingRDD" not in plan, plan
+    requeue = urls[:3] + ["nope"]
+    assert schedule_recrawl(spark, store, requeue) == 3
+    frame = local_frame(spark, "url string", {"url": requeue})
+    assert schedule_recrawl(spark, store, frame) == 3
+    from_list, from_frame = plans
+    assert not _python_nodes(from_list), from_list
+    assert "ExistingRDD" not in from_list, from_list
+    assert len(_python_nodes(from_frame)) == 1, from_frame
 
 
 def test_driver_built_frames_are_local_table_scans(spark, tmp_path):

@@ -441,6 +441,99 @@ def test_seed_frontier_dataframe_equals_list(spark):
     assert from_gen == from_list  # any iterable, not only a list
 
 
+# URLs off canonicalize_urls_batch's one-regex fast path, each of which
+# a driver-side and a kernel-side canonicalize must treat alike
+ODD_URLS = [
+    "https://A.EXAMPLE/Path",  # uppercase host
+    "http://a.example:80/x",  # default ports
+    "https://a.example:443/x",
+    "https://user:pw@a.example/x",  # userinfo
+    "https://bücher.example/x",  # IDNA host
+    "https://a.example/a/./b/../c",  # dot segments
+    "https://a.example/a/%2e/b/%2E%2E/c",
+    "  https://a.example/ws  ",  # surrounding whitespace
+    "https://a.example/a\nb",  # embedded newline
+    "https://a.example/q?b=2&a=1#f",  # unsorted query, fragment
+    "/relative/x",  # dropped: relative
+    "mailto:someone@a.example",  # dropped: not http(s)
+    None,  # dropped
+]
+
+
+@pytest.mark.parametrize("odd", ODD_URLS, ids=repr)
+def test_seed_frontier_driver_path_equals_kernel_path(spark, odd):
+    """A seed list is canonicalized on the driver, a seed DataFrame by
+    the canonicalize kernel; both give the same rows, and the URLs are
+    those of the per-row ``canonicalize_url``."""
+    from texting_robots_spark.plans.superstep import seed_frontier
+    from texting_robots_spark.urltools import canonicalize_url
+
+    seeds = [odd, "https://z.example/plain"]
+    from_list = sorted(map(tuple, seed_frontier(spark, seeds).collect()))
+    seeds_df = spark.createDataFrame([(u,) for u in seeds], "raw_url string")
+    from_df = sorted(map(tuple, seed_frontier(spark, seeds_df).collect()))
+    assert from_list == from_df
+    expected = {canonicalize_url(u) for u in seeds if u is not None} - {None}
+    assert {r[1] for r in from_list} == expected
+
+
+def test_schedule_recrawl_driver_path_equals_kernel_path(spark, tmp_path):
+    """schedule_recrawl queues the same rows from a URL list
+    (canonicalized on the driver) as from a DataFrame of the same URLs
+    (the canonicalize kernel), odd URLs included."""
+    from texting_robots_spark.plans.recrawl import schedule_recrawl
+    from texting_robots_spark.plans.superstep import init_crawl
+
+    seeds = ["https://a.example/x", "https://z.example/plain"]
+    urls_df = spark.createDataFrame([(u,) for u in ODD_URLS], "url string")
+    got = []
+    for tag, urls in (("list", ODD_URLS), ("df", urls_df)):
+        store = FrontierStore(str(tmp_path / tag), n_buckets=2)
+        init_crawl(spark, store, seeds, CrawlConfig())
+        n = schedule_recrawl(spark, store, urls)
+        frontier = store.read_frontier(spark).drop("partition_salt")
+        got.append((n, sorted(map(tuple, frontier.collect()))))
+    assert got[0] == got[1]
+    assert got[0][0] == 8  # 10 URLs canonicalize, to 8 distinct ones
+
+
+URL_ENTRIES = ["seed_frontier", "init_crawl", "schedule_recrawl"]
+
+
+def _url_entry_rejects(spark, tmp_path, entry, urls):
+    """``entry`` raises TypeError for ``urls`` and writes nothing."""
+    from texting_robots_spark.plans.recrawl import schedule_recrawl
+    from texting_robots_spark.plans.superstep import init_crawl, seed_frontier
+
+    store = FrontierStore(str(tmp_path / "s"), n_buckets=2)
+    with pytest.raises(TypeError):
+        if entry == "seed_frontier":
+            seed_frontier(spark, urls)
+        elif entry == "init_crawl":
+            init_crawl(spark, store, urls, CrawlConfig())
+        else:
+            schedule_recrawl(spark, store, urls)
+    assert store.current_version() == -1
+
+
+@pytest.mark.parametrize(
+    "bare", ["https://a.example/p", b"https://a.example/p"], ids=["str", "bytes"]
+)
+@pytest.mark.parametrize("entry", URL_ENTRIES)
+def test_bare_string_urls_are_rejected(spark, tmp_path, entry, bare):
+    """A bare str/bytes is not an iterable of URLs: read as one, each of
+    its characters fails to canonicalize and the call queues nothing,
+    silently."""
+    _url_entry_rejects(spark, tmp_path, entry, bare)
+
+
+@pytest.mark.parametrize("entry", URL_ENTRIES)
+def test_non_string_url_item_is_rejected(spark, tmp_path, entry):
+    """An item that is not a string is an error, not a URL that does
+    not canonicalize."""
+    _url_entry_rejects(spark, tmp_path, entry, ["https://a.example/p", 42])
+
+
 @pytest.mark.parametrize(
     "field, value",
     [

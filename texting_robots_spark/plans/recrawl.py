@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..sizing import sized_shuffle_scope
 from ..sources.frontier_store import CODEC, FrontierStore
 from ..sources.local import local_frame
-from .superstep import _queued_rows, _url_frame
+from .superstep import _queued_rows
 
 __all__ = [
     "compact_frontier",
@@ -150,22 +150,25 @@ def schedule_recrawl(
     duplicated) and snapshot. Returns the number of rows queued.
 
     ``urls`` is an iterable of URL strings (small operator-supplied
-    sets) OR a single-column DataFrame of raw URLs — the distributed
-    form: a TTL-driven recrawl of 10^8 stale URLs (``stale_archived``) must
-    never round-trip through a driver-side Python list. Both paths
-    produce identical rows (pinned in tests/test_recrawl.py).
+    sets), canonicalized on the driver with no Python worker, OR a
+    single-column DataFrame of raw URLs, canonicalized by the
+    ``canonicalize_urls`` kernel — the distributed form: a TTL-driven
+    recrawl of 10^8 stale URLs (``stale_archived``) must never
+    round-trip through a driver-side Python list. Both paths produce
+    identical rows (pinned in tests/test_recrawl.py); a bare string
+    raises TypeError.
 
     ``cfg`` (a CuckooConfig) is accepted and ignored, for the
     benchmark's call shape until the benchmark change (ROADMAP item 4)
     retires it. Runs inside sized_shuffle_scope over the URLs and the
     frontier.
     """
-    raw = _url_frame(spark, urls)
+    rows = _queued_rows(spark, urls, priority)
     frontier = store.read_frontier(spark)
-    with sized_shuffle_scope(spark, raw, frontier):
+    with sized_shuffle_scope(spark, rows, frontier):
         # two consumers below (MERGE, return count): cache so the
-        # canonicalize kernel + dedup aggregate run once
-        rows = _queued_rows(raw, priority).cache()
+        # dedup aggregate (and a DataFrame's canonicalize kernel) run once
+        rows = rows.cache()
         try:
             merged = FrontierStore.merge_frontier(frontier, rows)
             store.write_snapshot(merged, meta=store.meta())

@@ -1,7 +1,11 @@
 """The frontier superstep — one crawl round as a single declarative plan.
 
 Shape per step (SURVEY.md §3.4), all DataFrame-native except two
-Python boundaries (the robots gate UDF and the canonicalize kernel):
+Python boundaries (the robots gate UDF and the canonicalize kernel over
+the step's links). A URL list already on the driver (init_crawl's
+seeds, schedule_recrawl's requeue list) is canonicalized on the driver
+and planned as a local frame, so crawl set-up starts no Python worker;
+only a DataFrame of URLs goes through the canonicalize kernel.
 
     step_plan — shared by frontier_step and the streaming foreachBatch:
       queued rows, host eligible by politeness clock (blocked-host anti-join)
@@ -64,6 +68,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import List, NamedTuple, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -85,6 +90,7 @@ from ..operators.seen import probe_bloom  # noqa: F401
 from ..sizing import sized_shuffle_scope
 from ..sources.frontier_store import FrontierStore
 from ..sources.local import local_frame
+from ..urltools import canonicalize_urls_batch
 
 __all__ = [
     "CrawlConfig",
@@ -219,24 +225,32 @@ def _with_keys(
     ).withColumn("host", _host_of(F.col(url_col)))
 
 
-def _url_frame(spark: SparkSession, urls) -> DataFrame:
-    """``urls`` as a one-column ``url`` frame. ``urls`` is an iterable of
-    URL strings (small lists; a generator is fine) OR a single-column
-    DataFrame of raw URLs — the distributed form: a 10^8-row input must
-    never round-trip through a driver-side Python list."""
-    if isinstance(urls, DataFrame):
-        return urls.select(F.col(urls.columns[0]).alias("url"))
-    return local_frame(spark, "url string", {"url": list(urls)})
-
-
 def _queued_rows(
-    urls: DataFrame, priority: float = 1.0, base_hash: str = "xxhash64"
+    spark: SparkSession, urls, priority: float = 1.0, base_hash: str = "xxhash64"
 ) -> DataFrame:
-    """Raw ``url`` rows -> canonicalized frontier rows, one per url_hash
-    (min url and host), state='queued' at depth 0 and ``priority``."""
+    """Raw URLs -> canonicalized frontier rows, one per url_hash (min url
+    and host), state='queued' at depth 0 and ``priority``.
+
+    ``urls`` is an iterable of URL strings (small lists; a generator is
+    fine), canonicalized here on the driver into a local frame, so the
+    plan has no Python node; OR a one-column DataFrame of raw URLs, the
+    distributed form (a 10^8-row input must never round-trip through a
+    driver-side list), canonicalized by the ``canonicalize_urls``
+    kernel. Both give the same rows; a bare ``str``/``bytes`` is
+    rejected rather than read as an iterable of characters."""
+    if isinstance(urls, DataFrame):
+        canon = canonicalize_urls(urls.select(F.col(urls.columns[0]).alias("url")))
+    elif isinstance(urls, (str, bytes)):
+        raise TypeError(
+            f"urls: an iterable of URLs or a DataFrame, not {type(urls).__name__}"
+        )
+    else:
+        # a non-string item raises here (pyarrow's ArrowTypeError is a TypeError)
+        raw = pa.array(list(urls), pa.string()).to_pylist()
+        canonical = [u for u in canonicalize_urls_batch(raw) if u is not None]
+        canon = local_frame(spark, "url string", {"url": canonical})
     return (
-        canonicalize_urls(urls)
-        .transform(lambda df: _with_keys(df, base_hash=base_hash))
+        canon.transform(lambda df: _with_keys(df, base_hash=base_hash))
         .groupBy("url_hash")
         .agg(F.min("url").alias("url"), F.min("host").alias("host"))
         .select(
@@ -253,9 +267,10 @@ def _queued_rows(
 
 def seed_frontier(spark: SparkSession, seeds) -> DataFrame:
     """Canonicalized, deduped seed rows (state='queued', depth=0).
-    ``seeds`` is an iterable of URL strings or a single-column DataFrame
-    of raw URLs (see ``_url_frame``)."""
-    return _queued_rows(_url_frame(spark, seeds))
+    ``seeds`` is an iterable of URL strings, canonicalized on the
+    driver, or a one-column DataFrame of raw URLs, canonicalized by the
+    kernel (see ``_queued_rows``); a bare string raises TypeError."""
+    return _queued_rows(spark, seeds)
 
 
 def sitemap_seeds(rules_df: DataFrame, base_hash: str = "xxhash64") -> DataFrame:
@@ -269,7 +284,7 @@ def sitemap_seeds(rules_df: DataFrame, base_hash: str = "xxhash64") -> DataFrame
     ``base_hash='md5'`` is the DuckDB-replayable twin used by the
     driver's ``sitemap_seed_frontier`` oracle."""
     urls = rules_df.select(F.explode("sitemaps").alias("url"))
-    return _queued_rows(urls, base_hash=base_hash)
+    return _queued_rows(rules_df.sparkSession, urls, base_hash=base_hash)
 
 
 def init_crawl(
@@ -279,9 +294,11 @@ def init_crawl(
     cfg: CrawlConfig,
 ) -> int:
     """Write snapshot v0: the seed frontier, and no seen filter — the
-    store's key set is the crawl's seen set. Runs inside
-    sized_shuffle_scope over the seed frame. ``cfg`` is not read; the
-    benchmark passes it (ROADMAP item 4)."""
+    store's key set is the crawl's seen set. A seed list is
+    canonicalized on the driver, so the write starts no Python worker;
+    a seed DataFrame goes through the canonicalize kernel (see
+    ``_queued_rows``). Runs inside sized_shuffle_scope over the seed
+    rows. ``cfg`` is not read; the benchmark passes it (ROADMAP item 4)."""
     _mark = _tracer()
     frontier = seed_frontier(spark, seeds)
     with sized_shuffle_scope(spark, frontier):

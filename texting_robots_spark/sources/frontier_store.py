@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 from typing import Optional
 
@@ -107,8 +108,19 @@ class FrontierStore:
     def meta(self) -> dict:
         return self._read_manifest().get("meta", {})
 
-    def _snap_dir(self, version: int, what: str) -> str:
+    def _snap_dir(self, version: int, what: str = "") -> str:
         return os.path.join(self.root, "snapshots", f"v{version:06d}", what)
+
+    def _next_version(self, current: int) -> int:
+        """``current + 1``, its directory emptied first. A version above
+        the manifest's current one is uncommitted by construction, so
+        whatever it holds was left by a crashed commit (a compaction's
+        base whose manifest rename never ran) and must not outlive the
+        commit that reuses the number."""
+        path = self._snap_dir(current + 1)
+        if os.path.exists(path):
+            shutil.rmtree(path)
+        return current + 1
 
     # -- snapshots --------------------------------------------------------
     def write_snapshot(
@@ -118,7 +130,7 @@ class FrontierStore:
         host_state: Optional[DataFrame] = None,
     ) -> int:
         """Write the next snapshot and commit the manifest (checkpoint)."""
-        version = self.current_version() + 1
+        version = self._next_version(self.current_version())
 
         # bucket the frontier by url_hash so seen-checks and merges are
         # co-partitioned across supersteps (stable partitioning = no
@@ -197,7 +209,7 @@ class FrontierStore:
 
         _mark = _tracer()
         manifest = self._read_manifest()
-        version = manifest["current"] + 1
+        version = self._next_version(manifest["current"])
         # the delta and host_state writes are independent jobs over data
         # the caller already cached (the superstep materializes the step
         # caches before committing) — run them concurrently from two
