@@ -992,32 +992,27 @@ def _arith_docs_full(keyed_docs, n):
 def _superstep_one_step(spark, sf_dir):
     """One FULL superstep dataflow — schedule -> robots gate -> fetch
     join -> span link extraction -> canonicalize -> in-batch dedup ->
-    bloom probe + exact anti-join -> update rows — hash-oracled.
+    exact seen-set anti-join -> update rows — hash-oracled.
 
     The iterative crawl (``crawl_superstep``) can't be SQL, but one step
     over a frozen frontier is: the same ``schedule_batch`` /
     ``gate`` / ``extract_links`` / ``link_candidates`` code paths
-    ``frontier_step`` runs (plans/superstep.py), plus the library's
-    ``probe_bloom`` in front of the exact anti-join, with three
-    deterministic choices that make DuckDB able to replay it exactly:
+    ``frontier_step`` runs (plans/superstep.py), then the candidates
+    anti-joined on the frontier's url_hash, with two deterministic
+    choices that make DuckDB able to replay it exactly:
 
     - robots.txt bodies contain only literal-prefix rules (Disallow
       /p/<d>, Allow /p/<d><d>, Crawl-delay), so the gate's longest-match
       precedence (reference minregex.rs literal tier) is a CASE over
       starts_with;
     - url_hash is the md5-derived 60-bit variant end to end (the
-      md5-twin convention, operators/dedup.py:base_hash_expr);
-    - the bloom prefilter has no false negatives and every maybe_seen
-      row goes through the exact anti-join, so new_rows == plain
-      anti-join — which is exactly what the oracle replays (this pins
-      the no-false-negative property every round).
+      md5-twin convention, operators/dedup.py:base_hash_expr).
 
     Output: the step's complete update set (fetched / disallowed /
     queued-new rows) with politeness not_before arithmetic."""
     from texting_robots_spark.operators.dedup import base_hash_expr
     from texting_robots_spark.operators.gate import RulesBroadcast, build_rules, gate
     from texting_robots_spark.operators.links import extract_links
-    from texting_robots_spark.operators.seen import BloomConfig, build_bloom, probe_bloom
     from texting_robots_spark.plans.superstep import (
         CrawlConfig,
         link_candidates,
@@ -1081,7 +1076,6 @@ def _superstep_one_step(spark, sf_dir):
         step_seconds=10.0,
         default_delay=0.25,
         max_depth=3,
-        bloom=BloomConfig(n_partitions=8, n_bits=1 << 16, n_hashes=4),
     )
     rules = RulesBroadcast(spark, build_rules(robots_raw, cfg.agent))
     t0 = 10.0
@@ -1099,12 +1093,9 @@ def _superstep_one_step(spark, sf_dir):
         fetched_docs.select("doc_id", "depth", "spans"), passthrough=("depth",)
     )
     candidates = link_candidates(links, base_hash="md5")
-    filters = build_bloom(frontier.select("url_hash"), cfg.bloom)
-    probed = probe_bloom(candidates, filters, cfg.bloom)
-    definite_new = probed.where(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = maybe.join(frontier.select("url_hash"), "url_hash", "left_anti")
-    new_rows = definite_new.unionByName(confirmed_new).select(
+    new_rows = candidates.join(
+        frontier.select("url_hash"), "url_hash", "left_anti"
+    ).select(
         F.lit("queued").alias("state"),
         "url",
         "host",
@@ -2501,9 +2492,8 @@ def oracle_sql() -> dict[str, str]:
             -- one full superstep replayed in SQL: schedule window ->
             -- literal-prefix robots gate (longest-match: the longer
             -- Allow /p/dd.dd prefix beats Disallow /p/dd) -> fetch ->
-            -- link spans -> candidate dedup -> exact anti-join (the
-            -- Spark side runs the bloom prefilter, which has no false
-            -- negatives, so its new_rows set equals this anti-join)
+            -- link spans -> candidate dedup -> exact anti-join on the
+            -- frontier's url_hash (the Spark side runs the same join)
             WITH f AS (
                 SELECT doc_id,
                        CAST(doc_id AS VARCHAR) AS sd,

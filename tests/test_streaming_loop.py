@@ -440,50 +440,3 @@ def test_stream_seen_check_reads_a_bounded_set_of_files(spark, tmp_path, monkeyp
     for table in ("seen", "pending", "host_state"):
         assert not os.path.exists(os.path.join(workdir, table))
 
-
-def test_prior_epoch_paths_exclude_own_and_later_epochs(spark, tmp_path):
-    """Crash-replay safety of the streaming dedup's epoch tables
-    (round-3 ADVICE, medium): a replayed micro-batch runs under the
-    SAME batchId, so its read set must exclude its own epoch partition
-    (its possibly-half-committed rows) — otherwise the replay drops its
-    own rows forever.
-    Completeness is keyed on the _COMMITTED marker (round-5 ADVICE —
-    part-file presence only worked for empty frames via SPARK-23271's
-    schema-only file): a dir with parquet but no marker (crash between
-    the write and the marker) and an empty dir (crash between mkdir and
-    any commit) are both skipped, and re-writing an epoch is idempotent
-    overwrite."""
-    import os
-
-    from texting_robots_spark.streaming.dedup import (
-        _mark_committed,
-        _prior_epoch_paths,
-    )
-
-    seen = str(tmp_path / "seen")
-    df = spark.range(5).select(F.col("id").alias("url_hash"))
-    for epoch in (0, 1, 3):
-        d = os.path.join(seen, f"epoch={epoch}")
-        df.write.mode("overwrite").parquet(d)
-        _mark_committed(d)
-    os.makedirs(os.path.join(seen, "epoch=2"))  # crashed before commit
-    # crashed AFTER the parquet write but BEFORE the marker: incomplete
-    df.write.mode("overwrite").parquet(os.path.join(seen, "epoch=4"))
-
-    # batch 5 replaying: must see ONLY epochs 0, 1, 3 — not the empty
-    # dir (2), not the unmarked dir (4)
-    got = _prior_epoch_paths(seen, 5)
-    assert [os.path.basename(p) for p in got] == ["epoch=0", "epoch=1", "epoch=3"]
-    # batch 3 replaying: its own epoch is excluded even though marked
-    got = _prior_epoch_paths(seen, 3)
-    assert [os.path.basename(p) for p in got] == ["epoch=0", "epoch=1"]
-    # first batch: nothing prior
-    assert _prior_epoch_paths(seen, 0) == []
-    # epoch overwrite is idempotent: same rows after a double write
-    # (and the overwrite drops the stale marker until re-marked)
-    d1 = os.path.join(seen, "epoch=1")
-    df.write.mode("overwrite").parquet(d1)
-    assert _prior_epoch_paths(seen, 2) == [os.path.join(seen, "epoch=0")]
-    _mark_committed(d1)
-    rows = spark.read.parquet(*_prior_epoch_paths(seen, 2)).count()
-    assert rows == 10  # epochs 0+1, 5 rows each — no append duplication

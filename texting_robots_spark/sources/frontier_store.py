@@ -7,7 +7,9 @@ atomically renamed JSON manifest: every superstep produces a new
 immutable snapshot directory, the manifest points at the current version,
 and resume = read the manifest. Swapping in Iceberg replaces ``merge``'s
 read-modify-write with a real MERGE INTO and the manifest with the
-catalog — no caller changes.
+catalog — no caller changes. The manifest and the version directories
+are ``VersionedTable``, which the streaming dedup's band index
+(streaming/dedup.py) commits through as well.
 
 Layout under ``root/``:
     manifest.json                  {"current": N, "meta": {...}}
@@ -39,7 +41,7 @@ from pyspark.sql import functions as F
 from ..sizing import sized_fan_out
 from .local import local_frame
 
-__all__ = ["FrontierStore", "FRONTIER_DDL"]
+__all__ = ["FrontierStore", "VersionedTable", "FRONTIER_DDL"]
 
 FRONTIER_DDL = (
     "url_hash long, url string, host string, priority double, depth int, "
@@ -60,30 +62,22 @@ HOST_STATE_DDL = "host string, next_allowed double"
 # deltas measured ~6% off the bench crawl line vs snappy, and the gap
 # widens wherever storage bandwidth is the scarcer resource.
 CODEC = "zstd"
+# versions between two compactions (VersionedTable.compact_every)
+COMPACT_EVERY = 4
 
 
-class FrontierStore:
-    """``compact_every`` controls the delta-snapshot cadence: a superstep
-    commits only its UPDATED rows as a delta; after that many deltas the
-    reconstructed frontier is rewritten as a new full base. This is the
-    parquet equivalent of Iceberg's merge-on-read with periodic
-    compaction — per-step write cost is O(batch), not O(frontier).
-    ``n_buckets`` caps the file count of a full base; a small base
-    writes fewer files (see write_snapshot)."""
+class VersionedTable:
+    """Immutable version directories under ``root/snapshots`` and an
+    atomically renamed JSON manifest naming the committed ones: a
+    version above the manifest's ``current`` is uncommitted, so resume
+    = read the manifest. ``compact_every`` is the cadence at which a
+    subclass rewrites its growing chain of versions as one."""
 
-    def __init__(
-        self,
-        root: str,
-        n_buckets: int = 32,
-        compact_every: int = 4,
-    ):
+    def __init__(self, root: str, compact_every: int = COMPACT_EVERY):
         self.root = root
-        self.archive_dir = os.path.join(root, "archive")
-        self.n_buckets = n_buckets
         self.compact_every = compact_every
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
 
-    # -- manifest ---------------------------------------------------------
     @property
     def _manifest_path(self) -> str:
         return os.path.join(self.root, "manifest.json")
@@ -121,6 +115,26 @@ class FrontierStore:
         if os.path.exists(path):
             shutil.rmtree(path)
         return current + 1
+
+
+class FrontierStore(VersionedTable):
+    """``compact_every`` controls the delta-snapshot cadence: a superstep
+    commits only its UPDATED rows as a delta; after that many deltas the
+    reconstructed frontier is rewritten as a new full base. This is the
+    parquet equivalent of Iceberg's merge-on-read with periodic
+    compaction — per-step write cost is O(batch), not O(frontier).
+    ``n_buckets`` caps the file count of a full base; a small base
+    writes fewer files (see write_snapshot)."""
+
+    def __init__(
+        self,
+        root: str,
+        n_buckets: int = 32,
+        compact_every: int = COMPACT_EVERY,
+    ):
+        super().__init__(root, compact_every)
+        self.archive_dir = os.path.join(root, "archive")
+        self.n_buckets = n_buckets
 
     # -- snapshots --------------------------------------------------------
     def write_snapshot(
@@ -252,15 +266,13 @@ class FrontierStore:
             _mark("compaction")
         return version
 
-    def read_frontier(self, spark: SparkSession, version: Optional[int] = None) -> DataFrame:
+    def read_frontier(self, spark: SparkSession) -> DataFrame:
         manifest = self._read_manifest()
-        v = manifest["current"] if version is None else version
+        v = manifest["current"]
         if v < 0:
             return local_frame(spark, FRONTIER_DDL)
         base = manifest.get("base", v)
-        deltas = [d for d in manifest.get("deltas", []) if d <= v]
-        if version is not None and version == base:
-            deltas = []
+        deltas = manifest.get("deltas", [])
         if base < 0:
             full = local_frame(spark, FRONTIER_DDL)
         else:
